@@ -915,8 +915,8 @@ object PipelineEntries {
         .orderBy(col("source"))
     }),
 
-    // Native-expression path end-to-end over transcripts (the production
-    // aggregate path is oracle-gated too, not just the udaf path).
+    // Native-expression path end-to-end over transcripts (the row-hash
+    // key convention is oracle-gated too, not just the byte-key one).
     "q26_native_sketch" -> ((s, dir) => {
       import s.implicits._
       val t = Transcripts.load(s, dir).cache()

@@ -557,28 +557,33 @@ object SparkEntry {
       // that their merge order cannot change the blob.
       val t = Transcripts.load(s, dir).cache()
       val k = 256
-      val blob13F = graft.spark.Par.overlapped(
-        t.repartition(13, col("turn_idx"))
-          .agg(bottomKSampleAgg(k)(col("conv_id"))).head.getAs[Array[Byte]](0))
-      val blob = t.agg(bottomKSampleAgg(k)(col("conv_id"))).head.getAs[Array[Byte]](0)
-      val stable = java.util.Arrays.equals(blob, blob13F())
-      val sample = SketchCodec.decodeBottomK(blob).sample
-        .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
-      val convs = t.select(col("conv_id")).distinct().cache()
-      val nConv = convs.count()
-      val sampleDf = sample.toSeq.toDF("conv_id")
-      val exist = sampleDf.join(convs, "conv_id").count() == sample.length
-      // uniformity: share of even-user conversations, sample vs population
-      val isEven = expr("CAST(SUBSTRING(conv_id, 2) AS BIGINT) % 2 = 0")
-      val popEven = convs.filter(isEven).count().toDouble / math.max(nConv, 1L)
-      val sampEven = sampleDf.filter(isEven).count().toDouble / math.max(sample.length, 1)
-      convs.unpersist()
-      t.unpersist()
-      val sigma = math.sqrt(popEven * (1 - popEven) / math.max(sample.length, 1))
-      val uniformOk = math.abs(sampEven - popEven) <= 5 * sigma + 1e-9
-      Seq((nConv, sample.length.toLong, stable, exist, uniformOk))
-        .toDF("n_conv", "sample_size", "parallelism_invariant",
-          "all_sampled_exist", "uniform_ok")
+      // a failed direct build waits the overlapped build out quietly (no
+      // orphan job on the shared session); t is released on every path
+      try {
+        val blob13F = graft.spark.Par.overlapped(
+          t.repartition(13, col("turn_idx"))
+            .agg(bottomKSampleAgg(k)(col("conv_id"))).head.getAs[Array[Byte]](0))
+        val blob =
+          try t.agg(bottomKSampleAgg(k)(col("conv_id"))).head.getAs[Array[Byte]](0)
+          catch { case e: Throwable => graft.spark.Par.quietly(blob13F); throw e }
+        val stable = java.util.Arrays.equals(blob, blob13F())
+        val sample = SketchCodec.decodeBottomK(blob).sample
+          .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
+        val convs = t.select(col("conv_id")).distinct().cache()
+        val nConv = convs.count()
+        val sampleDf = sample.toSeq.toDF("conv_id")
+        val exist = sampleDf.join(convs, "conv_id").count() == sample.length
+        // uniformity: share of even-user conversations, sample vs population
+        val isEven = expr("CAST(SUBSTRING(conv_id, 2) AS BIGINT) % 2 = 0")
+        val popEven = convs.filter(isEven).count().toDouble / math.max(nConv, 1L)
+        val sampEven = sampleDf.filter(isEven).count().toDouble / math.max(sample.length, 1)
+        convs.unpersist()
+        val sigma = math.sqrt(popEven * (1 - popEven) / math.max(sample.length, 1))
+        val uniformOk = math.abs(sampEven - popEven) <= 5 * sigma + 1e-9
+        Seq((nConv, sample.length.toLong, stable, exist, uniformOk))
+          .toDF("n_conv", "sample_size", "parallelism_invariant",
+            "all_sampled_exist", "uniform_ok")
+      } finally t.unpersist()
     }),
 
     // Streaming shapes, oracle-gated (north rule: batch/stream
@@ -701,7 +706,7 @@ object SparkEntry {
     // must show zero false negatives and disjoint-key FPR within its
     // margin. Per-pair kernel margins live in BloomSketchSpec's matrix;
     // here each pair gets the statistical 3σ-over-binomial gate at
-    // 1.10·p (FNV is a weaker mixer than the avalanche hashes). The udaf
+    // 1.10·p (FNV is a weaker mixer than the avalanche hashes). The byte-key
     // pair path (functions.bloomAggPair) keeps its own coverage in
     // SparkAggSpec.
     "q34_bloom_hasher_pairs" -> ((s, dir) => {

@@ -4,83 +4,24 @@ import graft.core._
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Mergeable sketch aggregators — the Spark-native re-expression of the
-  * reference's insert/union lifecycle (`/root/reference/src/
-  * km_bloom_filter.rs:308–318` insert, 184–194 union):
-  * Spark's partial aggregation (per-partition `reduce`) IS the reference's
-  * insert loop; the shuffle-crossing `merge` IS the reference's union.
-  * Buffers are the core sketch objects held in ObjectHashAggregate's
-  * object buffer (kryo-encoded only when a buffer actually crosses the
-  * wire), outputs are codec bytes in a BinaryType column.
-  *
-  * Input convention: a canonical key encoding as Array[Byte]
-  * (see functions.sketchKey) so one aggregator serves any column tuple.
-  */
-class BloomAggregator(capacity: Long, fpp: Double, seeded: Boolean = false,
-    hashers: KMHashPair = KMHashPair.XxMurmur)
-    extends Aggregator[Array[Byte], BloomSketch, Array[Byte]] {
-  override def zero: BloomSketch =
-    if (seeded) SeededBloomSketch(capacity, fpp)
-    else KMBloomSketch(capacity, fpp, hashers)
-  override def reduce(b: BloomSketch, key: Array[Byte]): BloomSketch = {
+// The two sketch builds with no native Catalyst aggregate, as udaf
+// Aggregators over canonical key bytes (functions.sketchKey; null keys
+// skipped): `reduce` is the reference's insert loop
+// (km_bloom_filter.rs:308–318), `merge` its union (184–194). Buffers are
+// kryo-encoded only when they cross the wire.
+
+/** Per-index seeded Bloom filter (the reference's `SeededBloomFilter`). */
+class SeededBloomAggregator(capacity: Long, fpp: Double)
+    extends Aggregator[Array[Byte], SeededBloomSketch, Array[Byte]] {
+  override def zero: SeededBloomSketch = SeededBloomSketch(capacity, fpp)
+  override def reduce(b: SeededBloomSketch, key: Array[Byte]): SeededBloomSketch = {
     if (key != null) b.insert(key)
     b
   }
-  override def merge(a: BloomSketch, b: BloomSketch): BloomSketch = a.unionInPlace(b)
-  override def finish(b: BloomSketch): Array[Byte] = SketchCodec.encodeBloom(b)
-  override def bufferEncoder: Encoder[BloomSketch] = Encoders.kryo[BloomSketch]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-class HllAggregator(p: Int = HLLSketch.DefaultP)
-    extends Aggregator[Array[Byte], HLLSketch, Array[Byte]] {
-  override def zero: HLLSketch = HLLSketch(p)
-  override def reduce(b: HLLSketch, key: Array[Byte]): HLLSketch = {
-    if (key != null) b.update(key)
-    b
-  }
-  override def merge(a: HLLSketch, b: HLLSketch): HLLSketch = a.mergeInPlace(b)
-  override def finish(b: HLLSketch): Array[Byte] = SketchCodec.encodeHll(b)
-  override def bufferEncoder: Encoder[HLLSketch] = Encoders.kryo[HLLSketch]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-class CmsAggregator(eps: Double, delta: Double)
-    extends Aggregator[Array[Byte], CMSSketch, Array[Byte]] {
-  override def zero: CMSSketch = CMSSketch(eps, delta)
-  override def reduce(b: CMSSketch, key: Array[Byte]): CMSSketch = {
-    if (key != null) b.update(key)
-    b
-  }
-  override def merge(a: CMSSketch, b: CMSSketch): CMSSketch = a.mergeInPlace(b)
-  override def finish(b: CMSSketch): Array[Byte] = SketchCodec.encodeCms(b)
-  override def bufferEncoder: Encoder[CMSSketch] = Encoders.kryo[CMSSketch]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-class TDigestAggregator(compression: Double = TDigestSketch.DefaultCompression)
-    extends Aggregator[java.lang.Double, TDigestSketch, Array[Byte]] {
-  override def zero: TDigestSketch = TDigestSketch(compression)
-  override def reduce(b: TDigestSketch, v: java.lang.Double): TDigestSketch = {
-    if (v != null) b.update(v.doubleValue())
-    b
-  }
-  override def merge(a: TDigestSketch, b: TDigestSketch): TDigestSketch = a.mergeInPlace(b)
-  override def finish(b: TDigestSketch): Array[Byte] = SketchCodec.encodeTDigest(b)
-  override def bufferEncoder: Encoder[TDigestSketch] = Encoders.kryo[TDigestSketch]
-  override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-}
-
-class KllAggregator(k: Int = KLLSketch.DefaultK)
-    extends Aggregator[java.lang.Double, KLLSketch, Array[Byte]] {
-  override def zero: KLLSketch = KLLSketch(k)
-  override def reduce(b: KLLSketch, v: java.lang.Double): KLLSketch = {
-    if (v != null) b.update(v.doubleValue())
-    b
-  }
-  override def merge(a: KLLSketch, b: KLLSketch): KLLSketch = a.mergeInPlace(b)
-  override def finish(b: KLLSketch): Array[Byte] = SketchCodec.encodeKll(b)
-  override def bufferEncoder: Encoder[KLLSketch] = Encoders.kryo[KLLSketch]
+  override def merge(a: SeededBloomSketch, b: SeededBloomSketch): SeededBloomSketch =
+    a.unionInPlace(b)
+  override def finish(b: SeededBloomSketch): Array[Byte] = SketchCodec.encodeBloom(b)
+  override def bufferEncoder: Encoder[SeededBloomSketch] = Encoders.kryo[SeededBloomSketch]
   override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
 

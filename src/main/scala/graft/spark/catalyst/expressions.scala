@@ -2,27 +2,29 @@ package graft.spark.catalyst
 
 import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst sketch aggregates — the production path.
+/** Native Catalyst sketch aggregates — the one aggregation surface.
   *
-  * Why not the `Aggregator`/udaf layer (graft.spark.SketchAggregators)?
-  * That path materializes a canonical STRING key per row (concat_ws +
-  * UTF-8 encode) and round-trips the input through a row encoder. These
-  * expressions instead hash the raw Catalyst values straight out of the
-  * InternalRow — zero per-row allocation beyond UTF8String byte access —
-  * exactly how Spark's own `xxhash64`/`hash` expressions walk their
-  * children. Buffers live as plain objects in ObjectHashAggregate and
+  * Keys are hashed straight from the raw Catalyst values in the
+  * InternalRow, exactly how Spark's own `xxhash64`/`hash` expressions walk
+  * their children. The byte-key builders of graft.spark.functions are the
+  * same aggregates over ONE binary `sketchKey` column: RowHasher folds a
+  * single BINARY child to exactly the kernels' `hashers.h1/h2(bytes)` and
+  * `xxHash64(bytes, 0)`, so those blobs equal a core bulk insert of the
+  * bytes. Buffers live as plain objects in ObjectHashAggregate and
   * serialize through the graft codec only when crossing the shuffle.
   *
-  * Hash-convention note: sketches built here carry KeyMode.RowHash in the
-  * codec header; byte-key probes refuse them (and vice versa) — the two
-  * conventions are not bit-compatible and mixing them would silently
-  * violate the zero-false-negative contract.
+  * Hash-convention note: Bloom and CMS blobs carry the aggregate's
+  * `keyMode` (KeyMode.Bytes or KeyMode.RowHash) in the codec header; each
+  * probe surface refuses the other convention — the two are not
+  * bit-compatible, and mixing them would silently violate the
+  * zero-false-negative contract.
   */
 object RowHasher {
   /** Null marker folded into the hash chain (also embedded as a literal
@@ -37,69 +39,56 @@ object RowHasher {
     * default pair reproduces the original hardwired (xxHash64,
     * murmur3_64) chain bit-for-bit. Returns (h1, h2). */
   def hashPair(children: Seq[Expression], row: InternalRow,
-      pair: RegisteredKMHashPair): (Long, Long) = {
-    val a1 = pair.algo1
-    val a2 = pair.algo2
-    var h1 = pair.seed1
-    var h2 = pair.seed2
+      pair: RegisteredKMHashPair): (Long, Long) =
+    fold(children, row, pair.algo1, pair.seed1, pair.algo2, pair.seed2)
+
+  /** Single 64-bit hash (the HLL/theta/CMS item hash): h1 of the default
+    * pair, folded alone — the pair's second algorithm never runs. */
+  def hash64(children: Seq[Expression], row: InternalRow): Long =
+    fold(children, row, KMHashPair.XxMurmur.algo1, KMHashPair.XxMurmur.seed1, null, 0L)._1
+
+  /** Each child's value becomes bytes (strings, binary, anything else
+    * via its string form) or one long (integral, boolean, float bits,
+    * the null tag), folded through `a1` and, unless null, `a2`. */
+  private def fold(children: Seq[Expression], row: InternalRow,
+      a1: HashAlgo, seed1: Long, a2: HashAlgo, seed2: Long): (Long, Long) = {
+    var h1 = seed1
+    var h2 = seed2
     var i = 0
     while (i < children.length) {
       val e = children(i)
       val v = e.eval(row)
-      if (v == null) {
-        h1 = a1.hashLong(NullTag, h1)
-        h2 = a2.hashLong(NullTag, h2)
+      var b: Array[Byte] = null
+      var l = NullTag
+      if (v != null) e.dataType match {
+        case StringType => b = v.asInstanceOf[UTF8String].getBytes
+        case BinaryType => b = v.asInstanceOf[Array[Byte]]
+        case LongType | IntegerType | ShortType | ByteType | DateType |
+            TimestampType | TimestampNTZType =>
+          l = v match {
+            case x: java.lang.Long => x.longValue()
+            case x: java.lang.Integer => x.longValue()
+            case x: java.lang.Short => x.longValue()
+            case x: java.lang.Byte => x.longValue()
+            case x => x.toString.toLong
+          }
+        case BooleanType => l = if (v.asInstanceOf[Boolean]) 1L else 0L
+        case DoubleType => l = java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
+        case FloatType =>
+          l = java.lang.Double.doubleToLongBits(v.asInstanceOf[Float].toDouble)
+        case _ => b = UTF8String.fromString(v.toString).getBytes
+      }
+      if (b != null) {
+        h1 = a1(b, h1)
+        if (a2 != null) h2 = a2(b, h2)
       } else {
-        e.dataType match {
-          case StringType =>
-            val b = v.asInstanceOf[UTF8String].getBytes
-            h1 = a1(b, h1)
-            h2 = a2(b, h2)
-          case BinaryType =>
-            val b = v.asInstanceOf[Array[Byte]]
-            h1 = a1(b, h1)
-            h2 = a2(b, h2)
-          case LongType | IntegerType | ShortType | ByteType | DateType |
-              TimestampType | TimestampNTZType =>
-            val l = v match {
-              case x: java.lang.Long => x.longValue()
-              case x: java.lang.Integer => x.longValue()
-              case x: java.lang.Short => x.longValue()
-              case x: java.lang.Byte => x.longValue()
-              case x => x.toString.toLong
-            }
-            h1 = a1.hashLong(l, h1)
-            h2 = a2.hashLong(l, h2)
-          case BooleanType =>
-            val l = if (v.asInstanceOf[Boolean]) 1L else 0L
-            h1 = a1.hashLong(l, h1)
-            h2 = a2.hashLong(l, h2)
-          case DoubleType =>
-            val l = java.lang.Double.doubleToLongBits(v.asInstanceOf[Double])
-            h1 = a1.hashLong(l, h1)
-            h2 = a2.hashLong(l, h2)
-          case FloatType =>
-            val l = java.lang.Double.doubleToLongBits(v.asInstanceOf[Float].toDouble)
-            h1 = a1.hashLong(l, h1)
-            h2 = a2.hashLong(l, h2)
-          case _ =>
-            val b = UTF8String.fromString(v.toString).getBytes
-            h1 = a1(b, h1)
-            h2 = a2(b, h2)
-        }
+        h1 = a1.hashLong(l, h1)
+        if (a2 != null) h2 = a2.hashLong(l, h2)
       }
       i += 1
     }
     (h1, h2)
   }
-
-  /** Default-pair chain (back-compat signature). */
-  def hashPair(children: Seq[Expression], row: InternalRow): (Long, Long) =
-    hashPair(children, row, KMHashPair.XxMurmur)
-
-  /** Single 64-bit hash (the HLL/CMS item hash): h1 of the default pair. */
-  def hash64(children: Seq[Expression], row: InternalRow): Long =
-    hashPair(children, row)._1
 }
 
 abstract class SketchAggBase[T] extends TypedImperativeAggregate[T] {
@@ -107,23 +96,68 @@ abstract class SketchAggBase[T] extends TypedImperativeAggregate[T] {
   override def dataType: DataType = BinaryType
 }
 
+object SketchAggBase {
+  /** A numeric column value as the quantile sketches' double. */
+  def numeric(v: Any): Double = v match {
+    case d: java.lang.Double => d.doubleValue()
+    case f: java.lang.Float => f.doubleValue()
+    case l: java.lang.Long => l.doubleValue()
+    case i: java.lang.Integer => i.doubleValue()
+    case x => x.toString.toDouble
+  }
+}
+
+/** Aggregates over a tuple of key columns. Bound column references are
+  * read straight from the input row; computed keys (functions.sketchKey)
+  * go through one generated projection, as Spark's ScalaAggregator
+  * evaluates its inputs, instead of interpreted `eval` per row. */
+abstract class KeyedSketchAgg[T] extends SketchAggBase[T] {
+  def keys: Seq[Expression]
+  override def children: Seq[Expression] = keys
+
+  @transient private lazy val projection: MutableProjection =
+    if (keys.forall(_.isInstanceOf[BoundReference])) null
+    else MutableProjection.create(keys)
+
+  /** The expressions RowHasher folds over [[keyRow]]. */
+  @transient protected lazy val hashedKeys: IndexedSeq[Expression] =
+    if (projection == null) keys.toIndexedSeq
+    else keys.zipWithIndex.map { case (k, i) => BoundReference(i, k.dataType, k.nullable) }
+      .toIndexedSeq
+
+  protected def keyRow(input: InternalRow): InternalRow =
+    if (projection == null) input else projection(input)
+
+  /** KeyMode.Bytes hashes exactly one BINARY child, so its blobs equal a
+    * core bulk insert of those bytes (the byte-key probes' contract). */
+  protected def checkKeys(keyMode: Byte): TypeCheckResult =
+    if (keyMode != SketchCodec.KeyMode.Bytes || keys.map(_.dataType) == Seq(BinaryType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName in byte-key mode takes exactly one binary key column, got " +
+        keys.map(_.dataType.catalogString).mkString("(", ", ", ")"))
+}
+
 /** §2.1 #1–#12 as one Catalyst aggregate: zero = construct, update =
   * insert (KM double hashing), merge = union, eval = codec bytes.
   * `hasherId` selects the registered KM hash pair — the production-path
   * analogue of the reference's `KMBloomFilter<H1, H2>::new`
   * (km_bloom_filter.rs:46–48); the id travels in the codec header, so
-  * cross-pair merges are rejected and probes verify the pair. */
+  * cross-pair merges are rejected and probes verify the pair. `keyMode`
+  * is the codec's key-convention tag: KeyMode.Bytes (one binary key,
+  * functions.bloomAgg) or KeyMode.RowHash (any key tuple). */
 case class BloomSketchAgg(
     keys: Seq[Expression],
     capacity: Long,
     fpp: Double,
     hasherId: Byte = 0,
+    keyMode: Byte = SketchCodec.KeyMode.RowHash,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAggBase[KMBloomSketch] {
+  extends KeyedSketchAgg[KMBloomSketch] {
 
-  override def children: Seq[Expression] = keys
   override def prettyName: String = "graft_bloom_agg"
+  override def checkInputDataTypes(): TypeCheckResult = checkKeys(keyMode)
 
   @transient private lazy val pair = KMHashPair.byId(hasherId)
 
@@ -131,7 +165,7 @@ case class BloomSketchAgg(
     KMBloomSketch(capacity, fpp, pair)
 
   override def update(b: KMBloomSketch, input: InternalRow): KMBloomSketch = {
-    val (h1, h2) = RowHasher.hashPair(keys, input, pair)
+    val (h1, h2) = RowHasher.hashPair(hashedKeys, keyRow(input), pair)
     b.insertHashes(h1, h2)
     b
   }
@@ -141,11 +175,9 @@ case class BloomSketchAgg(
     b
   }
 
-  override def eval(b: KMBloomSketch): Any =
-    SketchCodec.encodeBloom(b, SketchCodec.KeyMode.RowHash)
+  override def eval(b: KMBloomSketch): Any = SketchCodec.encodeBloom(b, keyMode)
 
-  override def serialize(b: KMBloomSketch): Array[Byte] =
-    SketchCodec.encodeBloom(b, SketchCodec.KeyMode.RowHash)
+  override def serialize(b: KMBloomSketch): Array[Byte] = SketchCodec.encodeBloom(b, keyMode)
 
   override def deserialize(bytes: Array[Byte]): KMBloomSketch =
     SketchCodec.decodeBloom(bytes).asInstanceOf[KMBloomSketch]
@@ -439,14 +471,13 @@ case class HllSketchAgg(
     p: Int = HLLSketch.DefaultP,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAggBase[HLLSketch] {
+  extends KeyedSketchAgg[HLLSketch] {
 
-  override def children: Seq[Expression] = keys
   override def prettyName: String = "graft_hll_agg"
 
   override def createAggregationBuffer(): HLLSketch = HLLSketch(p)
   override def update(b: HLLSketch, input: InternalRow): HLLSketch = {
-    b.updateHash(RowHasher.hash64(keys, input))
+    b.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
     b
   }
   override def merge(b: HLLSketch, o: HLLSketch): HLLSketch = b.mergeInPlace(o)
@@ -469,14 +500,13 @@ case class ThetaSketchAgg(
     k: Int = ThetaSketch.DefaultK,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAggBase[ThetaSketch] {
+  extends KeyedSketchAgg[ThetaSketch] {
 
-  override def children: Seq[Expression] = keys
   override def prettyName: String = "graft_theta_agg"
 
   override def createAggregationBuffer(): ThetaSketch = ThetaSketch(k)
   override def update(b: ThetaSketch, input: InternalRow): ThetaSketch = {
-    b.updateHash(RowHasher.hash64(keys, input))
+    b.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
     b
   }
   override def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.mergeInPlace(o)
@@ -659,28 +689,28 @@ case class MgSketchAgg(
     copy(key = c.head)
 }
 
-/** §2.2 count–min as a native aggregate. */
+/** §2.2 count–min as a native aggregate; `keyMode` as in
+  * [[BloomSketchAgg]] (KeyMode.Bytes: functions.cmsAgg). */
 case class CmsSketchAgg(
     keys: Seq[Expression],
     eps: Double,
     delta: Double,
+    keyMode: Byte = SketchCodec.KeyMode.RowHash,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAggBase[CMSSketch] {
+  extends KeyedSketchAgg[CMSSketch] {
 
-  override def children: Seq[Expression] = keys
   override def prettyName: String = "graft_cms_agg"
+  override def checkInputDataTypes(): TypeCheckResult = checkKeys(keyMode)
 
   override def createAggregationBuffer(): CMSSketch = CMSSketch(eps, delta)
   override def update(b: CMSSketch, input: InternalRow): CMSSketch = {
-    b.updateHash(RowHasher.hash64(keys, input))
+    b.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
     b
   }
   override def merge(b: CMSSketch, o: CMSSketch): CMSSketch = b.mergeInPlace(o)
-  override def eval(b: CMSSketch): Any =
-    SketchCodec.encodeCms(b, SketchCodec.KeyMode.RowHash)
-  override def serialize(b: CMSSketch): Array[Byte] =
-    SketchCodec.encodeCms(b, SketchCodec.KeyMode.RowHash)
+  override def eval(b: CMSSketch): Any = SketchCodec.encodeCms(b, keyMode)
+  override def serialize(b: CMSSketch): Array[Byte] = SketchCodec.encodeCms(b, keyMode)
   override def deserialize(bytes: Array[Byte]): CMSSketch = SketchCodec.decodeCms(bytes)
   override def withNewMutableAggBufferOffset(o: Int): CmsSketchAgg =
     copy(mutableAggBufferOffset = o)
@@ -732,13 +762,7 @@ case class TDigestSketchAgg(
   override def createAggregationBuffer(): TDigestSketch = TDigestSketch(compression)
   override def update(b: TDigestSketch, input: InternalRow): TDigestSketch = {
     val v = value.eval(input)
-    if (v != null) b.update(v match {
-      case d: java.lang.Double => d.doubleValue()
-      case f: java.lang.Float => f.doubleValue()
-      case l: java.lang.Long => l.doubleValue()
-      case i: java.lang.Integer => i.doubleValue()
-      case x => x.toString.toDouble
-    })
+    if (v != null) b.update(SketchAggBase.numeric(v))
     b
   }
   override def merge(b: TDigestSketch, o: TDigestSketch): TDigestSketch = b.mergeInPlace(o)
@@ -767,13 +791,7 @@ case class KllSketchAgg(
   override def createAggregationBuffer(): KLLSketch = KLLSketch(k)
   override def update(b: KLLSketch, input: InternalRow): KLLSketch = {
     val v = value.eval(input)
-    if (v != null) b.update(v match {
-      case d: java.lang.Double => d.doubleValue()
-      case f: java.lang.Float => f.doubleValue()
-      case l: java.lang.Long => l.doubleValue()
-      case i: java.lang.Integer => i.doubleValue()
-      case x => x.toString.toDouble
-    })
+    if (v != null) b.update(SketchAggBase.numeric(v))
     b
   }
   override def merge(b: KLLSketch, o: KLLSketch): KLLSketch = b.mergeInPlace(o)

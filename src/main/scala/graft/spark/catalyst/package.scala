@@ -12,10 +12,10 @@ package object catalyst {
     B.aggColumn(BloomSketchAgg(keys.map(B.expression(_)), capacity, fpp))
 
   /** Native build with an INJECTED registered hash pair — the reference's
-    * `KMBloomFilter<H1, H2>` genericity (km_bloom_filter.rs:46–48) at
-    * production speed (the udaf twin is functions.bloomAggPair). Custom
-    * (unregistered) pairs cannot cross the shuffle codec and are
-    * rejected here. */
+    * `KMBloomFilter<H1, H2>` genericity (km_bloom_filter.rs:46–48) over
+    * the raw key columns (functions.bloomAggPair is the same aggregate
+    * over one byte key). Custom (unregistered) pairs cannot cross the
+    * shuffle codec and are rejected here. */
   def bloomAggNativePair(capacity: Long, fpp: Double,
       pair: graft.core.KMHashPair)(keys: Column*): Column =
     B.aggColumn(BloomSketchAgg(keys.map(B.expression(_)), capacity, fpp,
@@ -95,7 +95,7 @@ package object catalyst {
     B.column(CosineArgmaxTwoLevel(B.expression(embedding), centroidIds,
       centroids, coarseK, probes))
 
-  private def registeredId(pair: graft.core.KMHashPair): Byte = {
+  private[spark] def registeredId(pair: graft.core.KMHashPair): Byte = {
     require(pair.id >= 0,
       s"hash pair '$pair' is not registered — only KMHashPair.registered " +
         "pairs can cross the shuffle codec (give the pair a stable id)")
@@ -168,7 +168,7 @@ package object catalyst {
     *   stage 2: the per-shard blobs fold EXECUTOR-SIDE via sketchMergeAgg —
     *            one merged row ever exists, nothing per-shard reaches the
     *            driver.
-    * All agg columns must produce codec blobs (udaf or native path; key
+    * All agg columns must produce codec blobs (byte-key or row-hash; key
     * conventions are preserved per column). Returns the one-row frame of
     * merged blobs under the given names. Because sketch union is
     * commutative/associative, ANY shard column yields the identical blob

@@ -1,7 +1,10 @@
 package graft.spark
 
 import graft.core._
-import org.apache.spark.sql.{Column, SparkSession}
+import graft.spark.catalyst.{BloomSketchAgg, CmsSketchAgg, HllSketchAgg}
+import org.apache.spark.sql.{Column, SparkSession, GraftSqlBridge => B}
+import org.apache.spark.sql.catalyst.expressions.{Expression, IsNotNull}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentHashMap
 
@@ -11,9 +14,10 @@ import java.util.concurrent.ConcurrentHashMap
   * Scalar functions are Scala UDFs over BinaryType sketch blobs; a
   * per-executor decode cache keeps per-row probes from re-decoding the
   * same multi-KB blob (the common case: one sketch value joined or
-  * broadcast against millions of probe rows). Aggregations are
-  * `functions.udaf`-wrapped Aggregators → ObjectHashAggregate with
-  * partial/final merge (= reference insert/union).
+  * broadcast against millions of probe rows). Aggregations are the
+  * graft.spark.catalyst aggregates over one binary key (KeyMode.Bytes) →
+  * ObjectHashAggregate with partial/final merge (= reference
+  * insert/union); seeded Bloom and counting filters use SketchAggregators.
   */
 object functions {
 
@@ -21,36 +25,51 @@ object functions {
     * string, joined by  (never appears in the testdata keys), UTF-8.
     * Codegen'd built-ins end-to-end — no UDF on the hot path before the
     * aggregate. Nulls map to a dedicated tag — concat_ws SKIPS nulls,
-    * which would make (null,"x") collide with ("x",null). */
+    * which would make (null,"x") collide with ("x",null). The outer
+    * coalesce never fires: it tells the optimizer the key is not null, so
+    * the aggregates' null-key FILTER folds away instead of re-evaluating
+    * the key per row. */
   def sketchKey(cols: Column*): Column =
-    encode(concat_ws("",
-      cols.map(c => coalesce(c.cast("string"), lit("NULL"))): _*), "UTF-8")
+    coalesce(encode(concat_ws("",
+      cols.map(c => coalesce(c.cast("string"), lit("NULL"))): _*), "UTF-8"),
+      lit(Array.emptyByteArray))
 
   // ------------------------------------------------------- aggregations
+  /** A native aggregate over one BINARY key, null keys skipped by the
+    * aggregate's FILTER (WHERE key IS NOT NULL) — the native aggregates
+    * themselves fold a null key into the hash as a tag. */
+  private def byteKeyAgg(key: Column)(agg: Expression => AggregateFunction): Column = {
+    val k = B.expression(key)
+    B.column(agg(k).toAggregateExpression(isDistinct = false, filter = Some(IsNotNull(k))))
+  }
+
   def bloomAgg(capacity: Long, fpp: Double)(key: Column): Column =
-    udaf(new BloomAggregator(capacity, fpp)).apply(key)
+    bloomAggPair(capacity, fpp, KMHashPair.XxMurmur)(key)
 
   def bloomSeededAgg(capacity: Long, fpp: Double)(key: Column): Column =
-    udaf(new BloomAggregator(capacity, fpp, seeded = true)).apply(key)
+    udaf(new SeededBloomAggregator(capacity, fpp)).apply(key)
 
   /** KM Bloom aggregation with an INJECTED hash pair — the reference's
     * `KMBloomFilter<H1, H2>` genericity (km_bloom_filter.rs:46–48) as a
     * constructor argument. The pair id travels in the blob, so probes
-    * decode the right pair and cross-pair merges are rejected. */
+    * decode the right pair and cross-pair merges are rejected; custom
+    * (unregistered) pairs cannot cross the shuffle codec and are
+    * rejected here. */
   def bloomAggPair(capacity: Long, fpp: Double, hashers: KMHashPair)(key: Column): Column =
-    udaf(new BloomAggregator(capacity, fpp, seeded = false, hashers)).apply(key)
+    byteKeyAgg(key)(k => BloomSketchAgg(Seq(k), capacity, fpp,
+      catalyst.registeredId(hashers), SketchCodec.KeyMode.Bytes))
 
   def hllAgg(key: Column, p: Int = HLLSketch.DefaultP): Column =
-    udaf(new HllAggregator(p)).apply(key)
+    byteKeyAgg(key)(k => HllSketchAgg(Seq(k), p))
 
   def cmsAgg(eps: Double, delta: Double)(key: Column): Column =
-    udaf(new CmsAggregator(eps, delta)).apply(key)
+    byteKeyAgg(key)(k => CmsSketchAgg(Seq(k), eps, delta, SketchCodec.KeyMode.Bytes))
 
   def tdigestAgg(v: Column, compression: Double = TDigestSketch.DefaultCompression): Column =
-    udaf(new TDigestAggregator(compression)).apply(v)
+    catalyst.tdigestAggNative(v, compression)
 
   def kllAgg(v: Column, k: Int = KLLSketch.DefaultK): Column =
-    udaf(new KllAggregator(k)).apply(v)
+    catalyst.kllAggNative(v, k)
 
   /** Counting-Bloom aggregation over a SIGNED stream (key, multiplicity):
     * positive multiplicities insert, negative retract — the DELETION
@@ -99,15 +118,24 @@ object functions {
   /** Probe a sketch column (per-shard sketch tables). For probing ONE
     * sketch against a big table prefer [[bloomProbe]] (broadcast form). */
   def bloomMightContain(sketch: Column, key: Column): Column =
-    udf((s: Array[Byte], k: Array[Byte]) =>
-      if (s == null || k == null) false
-      else { requireBytesMode(s); bloomOf(s).mightContain(k) }).apply(sketch, key)
+    udf(bloomMightContainBlob _).apply(sketch, key)
 
   /** Byte-key probes are only valid against byte-key-built sketches —
-    * probing a native row-hash sketch here would be silent zero-FN loss. */
+    * probing a native row-hash sketch here would be silent zero-FN loss.
+    * The Column API and the SQL names share these guarded kernels. */
   private def requireBytesMode(blob: Array[Byte]): Unit =
     require(SketchCodec.bloomKeyMode(blob) == SketchCodec.KeyMode.Bytes,
       "sketch was built with native row-hash keys; probe it with graft.spark.catalyst")
+
+  private def bloomMightContainBlob(s: Array[Byte], k: Array[Byte]): Boolean =
+    if (s == null || k == null) false
+    else { requireBytesMode(s); bloomOf(s).mightContain(k) }
+
+  private def cmsEstimateBlob(s: Array[Byte], k: Array[Byte]): Long = {
+    require(SketchCodec.cmsKeyMode(s) == SketchCodec.KeyMode.Bytes,
+      "CMS was built with native row-hash keys; query it with graft.spark.catalyst")
+    cmsOf(s).estimate(k)
+  }
 
   /** Broadcast-style probe: decode once on the driver, ship the decoded
     * sketch in the UDF closure (classic Bloom semi-join reduction). */
@@ -296,11 +324,7 @@ object functions {
       .apply(sketch)
 
   def cmsEstimate(sketch: Column, key: Column): Column =
-    udf((s: Array[Byte], k: Array[Byte]) => {
-      require(SketchCodec.cmsKeyMode(s) == SketchCodec.KeyMode.Bytes,
-        "CMS was built with native row-hash keys; query it with graft.spark.catalyst")
-      cmsOf(s).estimate(k)
-    }).apply(sketch, key)
+    udf(cmsEstimateBlob _).apply(sketch, key)
 
   def cmsTotalCount(sketch: Column): Column =
     udf((s: Array[Byte]) => cmsOf(s).totalCount).apply(sketch)
@@ -319,13 +343,19 @@ object functions {
     * takes the common defaults. */
   def registerAll(spark: SparkSession, defaultCapacity: Long = 1000000L,
       defaultFpp: Double = 0.001): Unit = {
-    spark.udf.register("bloom_agg", udaf(new BloomAggregator(defaultCapacity, defaultFpp)))
-    spark.udf.register("hll_agg", udaf(new HllAggregator()))
-    spark.udf.register("cms_agg", udaf(new CmsAggregator(0.001, 0.01)))
-    spark.udf.register("tdigest_agg", udaf(new TDigestAggregator()))
-    spark.udf.register("kll_agg", udaf(new KllAggregator()))
-    spark.udf.register("bloom_might_contain",
-      (s: Array[Byte], k: Array[Byte]) => s != null && k != null && bloomOf(s).mightContain(k))
+    Seq[(String, Column => Column)](
+      "bloom_agg" -> bloomAgg(defaultCapacity, defaultFpp),
+      "hll_agg" -> (hllAgg(_)),
+      "cms_agg" -> cmsAgg(0.001, 0.01),
+      "tdigest_agg" -> (tdigestAgg(_)),
+      "kll_agg" -> (kllAgg(_))
+    ).foreach { case (name, agg) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, args => {
+        require(args.length == 1, s"$name takes one argument")
+        B.expression(agg(B.column(args.head)))
+      }, "scala_udf")
+    }
+    spark.udf.register("bloom_might_contain", bloomMightContainBlob _)
     spark.udf.register("bloom_element_count", (s: Array[Byte]) => bloomOf(s).approximateElementCount)
     spark.udf.register("bloom_fpp", (s: Array[Byte]) => bloomOf(s).approximateCurrentFpp)
     spark.udf.register("bloom_union",
@@ -333,7 +363,7 @@ object functions {
     spark.udf.register("bloom_intersect",
       (x: Array[Byte], y: Array[Byte]) => mergeBlobs(x, y, intersect = true))
     spark.udf.register("hll_estimate", (s: Array[Byte]) => math.round(hllOf(s).estimate))
-    spark.udf.register("cms_estimate", (s: Array[Byte], k: Array[Byte]) => cmsOf(s).estimate(k))
+    spark.udf.register("cms_estimate", cmsEstimateBlob _)
     spark.udf.register("tdigest_quantile",
       (s: Array[Byte], q: Double) => tdigestOf(s).quantile(q))
     spark.udf.register("kll_quantile", (s: Array[Byte], q: Double) => kllOf(s).quantile(q))

@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** What deletion support costs: the counting filter's two-byte-arrays
-  * buffer and per-cell saturating merge against the plain bit filter on
-  * the SAME udaf path (byte keys, kryo buffers), plus the native
-  * codegen'd bloom aggregate as the production reference point. Four
-  * global builds over the same expanded transcript keys:
-  *   bloom_native  — bloomAggNative (the production bit-filter path)
-  *   bloom_udaf    — gf.bloomAgg     (apples-to-apples udaf baseline)
+  * buffer and per-cell saturating merge (udaf, kryo buffers) against the
+  * plain bit filter over the SAME byte keys, plus the row-hash bloom
+  * aggregate as the multi-column reference point. Four global builds
+  * over the same expanded transcript keys:
+  *   bloom_native  — bloomAggNative (row-hash keys)
+  *   bloom_udaf    — gf.bloomAgg     (the same byte keys as cbfAgg)
   *   cbf_insert    — gf.cbfAgg, +1 rows only
   *   cbf_retract   — gf.cbfAgg, the q58 shape (all rows +1, the ~20%
   *                   error-turn rows again at −1: 1.2× the input rows)

@@ -117,6 +117,30 @@ class NativeAggSpec extends AnyFunSuite {
       Seq((nativeSketch, byteSketch)).toDF("a", "b")
         .select(gf.bloomUnion($"a", $"b")).collect())
     assert(e3 != null)
+    // both surfaces build through the same aggregate classes, so the
+    // header's KeyMode is all that keeps them apart: every cross probe,
+    // Bloom and CMS, fails with the guard's IllegalArgumentException
+    def guardIae(body: => Any, msg: String): Unit = {
+      def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+      val ex = intercept[Exception](body)
+      assert(chain(ex).exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains(msg)), s"expected IllegalArgumentException '$msg', got ${chain(ex)}")
+    }
+    val nativeCms = df.agg(cmsAggNative(0.01, 0.01)($"k")).head.getAs[Array[Byte]](0)
+    val byteCms = df.agg(gf.cmsAgg(0.01, 0.01)(gf.sketchKey($"k"))).head.getAs[Array[Byte]](0)
+    assert(SketchCodec.bloomKeyMode(byteSketch) === SketchCodec.KeyMode.Bytes)
+    assert(SketchCodec.cmsKeyMode(byteCms) === SketchCodec.KeyMode.Bytes)
+    assert(SketchCodec.cmsKeyMode(nativeCms) === SketchCodec.KeyMode.RowHash)
+    guardIae(df.filter(gf.bloomProbe(nativeSketch)(gf.sketchKey($"k"))).count(),
+      "built with native row-hash keys")
+    guardIae(df.filter(gf.bloomMightContain(lit(nativeSketch), gf.sketchKey($"k"))).count(),
+      "built with native row-hash keys")
+    guardIae(df.filter(bloomMightContainNative(lit(byteSketch), $"k")).count(),
+      "built with byte keys")
+    guardIae(df.select(gf.cmsEstimate(lit(nativeCms), gf.sketchKey($"k"))).collect(),
+      "built with native row-hash keys")
+    guardIae(df.select(cmsEstimateNative(lit(byteCms), $"k")).collect(),
+      "built with byte keys")
   }
 
   test("native aggregates survive grouped aggregation with many groups") {

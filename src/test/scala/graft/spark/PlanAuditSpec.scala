@@ -67,6 +67,20 @@ class PlanAuditSpec extends AnyFunSuite {
       s"no partial aggregate below the exchange:\n$plan")
   }
 
+  test("byte-key gf.*Agg builds plan as the native graft aggregates, not a ScalaAggregator") {
+    import graft.spark.{functions => gf}
+    val t = Transcripts.load(spark, sf)
+    val df = t.groupBy(col("role")).agg(
+      gf.bloomAgg(1000L, 0.01)(gf.sketchKey(col("conv_id"), col("turn_idx"))),
+      gf.hllAgg(gf.sketchKey(col("conv_id"))),
+      gf.cmsAgg(0.01, 0.01)(gf.sketchKey(col("tool"))))
+    val plan = planOf(df)
+    Seq("graft_bloom_agg", "graft_hll_agg", "graft_cms_agg").foreach { agg =>
+      assert(plan.contains(agg), s"$agg missing from the plan:\n$plan")
+    }
+    assert(!plan.contains("ScalaAggregator"), s"udaf aggregator in the plan:\n$plan")
+  }
+
   test("sharded global build: repartition-by-shard feeds the grouped agg, " +
       "merge stage sees blobs only (no full-size buffer per input partition)") {
     val t = Transcripts.load(spark, sf)

@@ -38,6 +38,36 @@ class SparkAggSpec extends AnyFunSuite {
     val bulk = KMBloomSketch(cap, 0.001)
     keys.foreach(k => bulk.insert(k))
     assert(one === bulk, "Spark aggregation != core bulk insert")
+    // byte for byte, including the KeyMode.Bytes header tag
+    val bulkBlob = SketchCodec.encodeBloom(bulk, SketchCodec.KeyMode.Bytes)
+    val blob = keys.toDF("k").agg(gf.bloomAgg(cap, 0.001)(gf.sketchKey(col("k"))))
+      .head.getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(blob, bulkBlob), "gf.bloomAgg blob != encoded bulk insert")
+    // a null key (q04's when() mask) is skipped, not hashed as a tag
+    val withNull = (keys.map(Option(_)) :+ None).toDF("k").repartition(3)
+      .agg(gf.bloomAgg(cap, 0.001)(when(col("k").isNotNull, gf.sketchKey(col("k")))))
+      .head.getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(withNull, bulkBlob), "a null key changed the Bloom blob")
+    // every registered hash pair: the pair's build ≡ its core bulk insert
+    KMHashPair.registered.foreach { pair =>
+      val pb = KMBloomSketch(cap, 0.001, pair)
+      keys.foreach(k => pb.insert(k))
+      val built = keys.toDF("k").repartition(4)
+        .agg(gf.bloomAggPair(cap, 0.001, pair)(gf.sketchKey(col("k")))).head.getAs[Array[Byte]](0)
+      assert(java.util.Arrays.equals(built, SketchCodec.encodeBloom(pb, SketchCodec.KeyMode.Bytes)),
+        s"bloomAggPair($pair) != core bulk insert")
+    }
+    // a computed key expression (projected once per row) builds the same
+    // blob as that key pre-projected into plain columns
+    import graft.spark.catalyst.bloomAggNative
+    val rows = keys.zipWithIndex
+    val computed = rows.toDF("k", "i")
+      .agg(bloomAggNative(cap, 0.001)(concat(col("k"), lit("#")), col("i") * 2))
+      .head.getAs[Array[Byte]](0)
+    val preProjected = rows.map { case (k, i) => (k + "#", i * 2) }.toDF("a", "b")
+      .agg(bloomAggNative(cap, 0.001)(col("a"), col("b"))).head.getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(computed, preProjected),
+      "computed key expression diverged from the pre-projected key")
   }
 
   test("HLL / CMS UDAFs: state identical across partitionings") {
@@ -53,6 +83,34 @@ class SparkAggSpec extends AnyFunSuite {
     assert(cms(1) === cms(13))
     assert(math.abs(hll(13).estimate - 5000) <= 3 * hll(13).relativeStandardError * 5000 + 1)
     assert(cms(13).totalCount === 30000L)
+    // byte for byte ≡ core bulk insert (CMS with its KeyMode.Bytes tag)
+    val bulkHll = HLLSketch()
+    val bulkCms = CMSSketch(0.001, 0.01)
+    keys.foreach { k => bulkHll.update(k.getBytes("UTF-8")); bulkCms.update(k.getBytes("UTF-8")) }
+    val hllBlob = SketchCodec.encodeHll(bulkHll)
+    val cmsBlob = SketchCodec.encodeCms(bulkCms, SketchCodec.KeyMode.Bytes)
+    val direct = keys.toDF("k").agg(gf.hllAgg(gf.sketchKey(col("k"))),
+      gf.cmsAgg(0.001, 0.01)(gf.sketchKey(col("k")))).head
+    assert(java.util.Arrays.equals(direct.getAs[Array[Byte]](0), hllBlob), "hllAgg != bulk")
+    assert(java.util.Arrays.equals(direct.getAs[Array[Byte]](1), cmsBlob), "cmsAgg != bulk")
+    // a null key leaves both blobs unchanged
+    val masked = when(col("k").isNotNull, gf.sketchKey(col("k")))
+    val withNull = (keys.map(Option(_)) :+ None).toDF("k").repartition(5)
+      .agg(gf.hllAgg(masked), gf.cmsAgg(0.001, 0.01)(masked)).head
+    assert(java.util.Arrays.equals(withNull.getAs[Array[Byte]](0), hllBlob),
+      "a null key changed the HLL blob")
+    assert(java.util.Arrays.equals(withNull.getAs[Array[Byte]](1), cmsBlob),
+      "a null key changed the CMS blob")
+    // computed key expressions ≡ the same keys pre-projected (hash64 path)
+    import graft.spark.catalyst.{cmsAggNative, hllAggNative}
+    val computed = keys.toDF("k")
+      .agg(hllAggNative(upper(col("k"))), cmsAggNative(0.001, 0.01)(upper(col("k")))).head
+    val preProjected = keys.map(_.toUpperCase).toDF("u")
+      .agg(hllAggNative(col("u")), cmsAggNative(0.001, 0.01)(col("u"))).head
+    (0 until 2).foreach { i =>
+      assert(java.util.Arrays.equals(computed.getAs[Array[Byte]](i),
+        preProjected.getAs[Array[Byte]](i)), s"computed key diverged (column $i)")
+    }
   }
 
   test("t-digest / KLL UDAFs: estimates within bound regardless of partitioning") {

@@ -921,10 +921,11 @@ object PipelineEntries {
       import s.implicits._
       val t = Transcripts.load(s, dir).cache()
       val n = t.count()
-      // sharded two-stage build (see catalyst.shardedSketchBlobs): full-
-      // size Bloom buffers exist once per shard, shard blobs fold
-      // executor-side. Sharding on conv_id keeps the per-shard
-      // countDistinct(conv_id) partition-disjoint, so stage 2 SUMs it.
+      // sharded build, kept two-stage on purpose (catalyst.
+      // shardedSketchBlobs is the one-exchange shape): the exact
+      // countDistinct(conv_id) needs a per-shard stage. Sharding on
+      // conv_id keeps it partition-disjoint, so stage 2 SUMs it while
+      // sketchMergeAgg folds the per-shard blobs executor-side.
       val shard = saltBucket(16, col("conv_id"))
       val row = t.select(col("conv_id"), col("turn_idx"))
         .repartition(16, shard)

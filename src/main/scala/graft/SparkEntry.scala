@@ -28,12 +28,13 @@ object SparkEntry {
     * (CheckpointedBuild.NumShards = 256 at the 10^12-turn sizing). */
   private val BuildShards = 16
 
-  /** Global sketch blob(s) over transcripts via the SHARDED two-stage
-    * path (graft.spark.catalyst.shardedSketchBlobs): full-size Bloom
-    * buffers exist once per shard — never once per input partition — and
-    * shard blobs merge executor-side; only the final merged row reaches
-    * the driver. Projects to the named columns first so the shard shuffle
-    * carries key bytes, not whole rows. */
+  /** Global sketch blob(s) over transcripts via the SHARDED path
+    * (graft.spark.catalyst.shardedSketchBlobs): full-size Bloom buffers
+    * exist once per shard — never once per input partition — and each
+    * shard's partial buffer merges straight into the final blob
+    * executor-side; only the final merged row reaches the driver.
+    * Projects to the named columns first so the shard shuffle carries
+    * key bytes, not whole rows. */
   private def shardedBlobRow(t: DataFrame, cols: Seq[String],
       aggs: (String, Column)*): org.apache.spark.sql.Row =
     graft.spark.catalyst.shardedSketchBlobs(
@@ -432,19 +433,22 @@ object SparkEntry {
       val signed = t.select(key2("conv_id", "turn_idx").as("k"), lit(1L).as("m"))
         .unionByName(t.filter(bad)
           .select(key2("conv_id", "turn_idx").as("k"), lit(-1L).as("m")))
-      // r07: SHARDED two-stage builds (the q01/q26 shape) instead of
-      // global aggs. The global `signed.agg(cbfAgg)` allocated one
-      // full-size DENSE counting buffer (1 B/cell ⇒ ~51.7 MB at sf0.1's
-      // cap) PER INPUT PARTITION and funneled every partial through ONE
-      // reducer — measured as 8.1 s of GC on the bench's cold run.
-      // Sharding on the key co-locates each key's +1/−1 rows, full-size
-      // buffers exist once per shard, and the per-shard blobs (sparse —
-      // each shard holds ~1/16 of the keys) fold executor-side via
-      // sketchMergeAgg. Counting-cell addition is commutative and
-      // key-partitioned, so the merged cells — and the encoded blob —
-      // are BIT-IDENTICAL to the global build's (the same union law the
-      // q03 gate pins for the bit filter; inc_cbf_eq pins the counting
-      // merge). The direct comparandum build is sharded identically.
+      // r07: SHARDED builds (the q01 shape) instead of a bare global
+      // agg. The bare `signed.agg(cbfAgg)` allocated one full-size DENSE
+      // counting buffer (1 B/cell, ~14.4 cells per unit of capacity) PER
+      // INPUT PARTITION and funneled every partial through ONE reducer —
+      // measured as 8.1 s of GC on the bench's cold run. The explicit
+      // shard repartition (on the key, so each key's +1/−1 rows
+      // co-locate) bounds full-size buffers to one per shard, and each
+      // shard's partial buffer merges straight into the final blob. This
+      // udaf's buffer is kryo, not codec, so the shards cross the final
+      // exchange dense; that is no slower than finishing each shard in
+      // its own stage, whose blobs the final step decoded to dense anyway.
+      // Counting-cell addition is commutative, so the merged cells — and
+      // the encoded blob — are BIT-IDENTICAL to the bare global build's
+      // (the same union law the q03 gate pins for the bit filter;
+      // inc_cbf_eq pins the counting merge). The direct comparandum
+      // build is sharded identically.
       val cbfBlob = graft.spark.catalyst.shardedSketchBlobs(
         signed, BuildShards, col("k"))(
         "cbf" -> gf.cbfAgg(cap(n), P)(col("k"), col("m")))

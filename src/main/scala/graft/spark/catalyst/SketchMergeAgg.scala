@@ -42,10 +42,7 @@ case class SketchMergeAgg(
     b
   }
 
-  override def merge(b: Holder, o: Holder): Holder = {
-    o.encoded.foreach(b.merge)
-    b
-  }
+  override def merge(b: Holder, o: Holder): Holder = b.merge(o)
 
   override def eval(b: Holder): Any = b.encoded.orNull
 
@@ -74,64 +71,74 @@ object SketchMergeAgg {
     private var keyMode: Byte = 0
     private var sketch: AnyRef = _
 
+    /** Union one codec blob in; the decoded sketch is owned by this holder. */
     def merge(bytes: Array[Byte]): Unit = {
       val t = SketchCodec.typeOf(bytes)
-      if (sketch == null) {
-        typeId = t
-        t match {
-          case SketchCodec.TypeId.Bloom =>
-            keyMode = SketchCodec.bloomKeyMode(bytes)
-            sketch = SketchCodec.decodeBloom(bytes)
-          case SketchCodec.TypeId.Hll => sketch = SketchCodec.decodeHll(bytes)
-          case SketchCodec.TypeId.Cms =>
-            keyMode = SketchCodec.cmsKeyMode(bytes)
-            sketch = SketchCodec.decodeCms(bytes)
-          case SketchCodec.TypeId.TDigest => sketch = SketchCodec.decodeTDigest(bytes)
-          case SketchCodec.TypeId.Kll => sketch = SketchCodec.decodeKll(bytes)
-          case SketchCodec.TypeId.Theta => sketch = SketchCodec.decodeTheta(bytes)
-          case SketchCodec.TypeId.BottomK => sketch = SketchCodec.decodeBottomK(bytes)
-          case SketchCodec.TypeId.Mg => sketch = SketchCodec.decodeMg(bytes)
-          case SketchCodec.TypeId.WeightedBottomK =>
-            sketch = SketchCodec.decodeWeightedBottomK(bytes)
-          case SketchCodec.TypeId.CountingBloom =>
-            keyMode = SketchCodec.countingBloomKeyMode(bytes)
-            sketch = SketchCodec.decodeCountingBloom(bytes)
-          case other => throw new IllegalArgumentException(s"unknown sketch type $other")
-        }
-      } else {
-        require(t == typeId, s"cannot merge sketch type $t into $typeId")
-        t match {
-          case SketchCodec.TypeId.Bloom =>
-            require(SketchCodec.bloomKeyMode(bytes) == keyMode,
-              "cannot merge Bloom sketches built with different key conventions")
-            sketch.asInstanceOf[BloomSketch].unionInPlace(SketchCodec.decodeBloom(bytes))
-          case SketchCodec.TypeId.Hll =>
-            sketch.asInstanceOf[HLLSketch].mergeInPlace(SketchCodec.decodeHll(bytes))
-          case SketchCodec.TypeId.Cms =>
-            require(SketchCodec.cmsKeyMode(bytes) == keyMode,
-              "cannot merge CMS sketches built with different key conventions")
-            sketch.asInstanceOf[CMSSketch].mergeInPlace(SketchCodec.decodeCms(bytes))
-          case SketchCodec.TypeId.TDigest =>
-            sketch.asInstanceOf[TDigestSketch].mergeInPlace(SketchCodec.decodeTDigest(bytes))
-          case SketchCodec.TypeId.Kll =>
-            sketch.asInstanceOf[KLLSketch].mergeInPlace(SketchCodec.decodeKll(bytes))
-          case SketchCodec.TypeId.Theta =>
-            sketch.asInstanceOf[ThetaSketch].mergeInPlace(SketchCodec.decodeTheta(bytes))
-          case SketchCodec.TypeId.BottomK =>
-            sketch.asInstanceOf[BottomKSketch].mergeInPlace(SketchCodec.decodeBottomK(bytes))
-          case SketchCodec.TypeId.Mg =>
-            sketch.asInstanceOf[MGSketch].mergeInPlace(SketchCodec.decodeMg(bytes))
-          case SketchCodec.TypeId.WeightedBottomK =>
-            sketch.asInstanceOf[WeightedBottomKSketch]
-              .mergeInPlace(SketchCodec.decodeWeightedBottomK(bytes))
-          case SketchCodec.TypeId.CountingBloom =>
-            require(SketchCodec.countingBloomKeyMode(bytes) == keyMode,
-              "cannot merge counting filters built with different key conventions")
-            // per-cell saturating add — associative + commutative, so the
-            // counting filter is in the bit-identity club alongside Bloom
-            sketch.asInstanceOf[CountingBloomSketch]
-              .mergeInPlace(SketchCodec.decodeCountingBloom(bytes))
-        }
+      val (km, decoded): (Byte, AnyRef) = t match {
+        case SketchCodec.TypeId.Bloom =>
+          (SketchCodec.bloomKeyMode(bytes), SketchCodec.decodeBloom(bytes))
+        case SketchCodec.TypeId.Hll => (0, SketchCodec.decodeHll(bytes))
+        case SketchCodec.TypeId.Cms =>
+          (SketchCodec.cmsKeyMode(bytes), SketchCodec.decodeCms(bytes))
+        case SketchCodec.TypeId.TDigest => (0, SketchCodec.decodeTDigest(bytes))
+        case SketchCodec.TypeId.Kll => (0, SketchCodec.decodeKll(bytes))
+        case SketchCodec.TypeId.Theta => (0, SketchCodec.decodeTheta(bytes))
+        case SketchCodec.TypeId.BottomK => (0, SketchCodec.decodeBottomK(bytes))
+        case SketchCodec.TypeId.Mg => (0, SketchCodec.decodeMg(bytes))
+        case SketchCodec.TypeId.WeightedBottomK =>
+          (0, SketchCodec.decodeWeightedBottomK(bytes))
+        case SketchCodec.TypeId.CountingBloom =>
+          (SketchCodec.countingBloomKeyMode(bytes), SketchCodec.decodeCountingBloom(bytes))
+        case other => throw new IllegalArgumentException(s"unknown sketch type $other")
+      }
+      if (sketch == null) { typeId = t; keyMode = km; sketch = decoded }
+      else union(t, km, decoded)
+    }
+
+    /** Union another holder's sketch in without a codec round-trip and
+      * return the merged holder. An empty holder returns `o` itself:
+      * Spark keeps whatever `merge` returns as the buffer, and `o` is a
+      * freshly deserialized buffer that is dropped after the merge. */
+    def merge(o: Holder): Holder =
+      if (sketch == null) o
+      else {
+        if (o.sketch != null) union(o.typeId, o.keyMode, o.sketch)
+        this
+      }
+
+    private def union(t: Byte, km: Byte, other: AnyRef): Unit = {
+      require(t == typeId, s"cannot merge sketch type $t into $typeId")
+      t match {
+        case SketchCodec.TypeId.Bloom =>
+          require(km == keyMode,
+            "cannot merge Bloom sketches built with different key conventions")
+          sketch.asInstanceOf[BloomSketch].unionInPlace(other.asInstanceOf[BloomSketch])
+        case SketchCodec.TypeId.Hll =>
+          sketch.asInstanceOf[HLLSketch].mergeInPlace(other.asInstanceOf[HLLSketch])
+        case SketchCodec.TypeId.Cms =>
+          require(km == keyMode,
+            "cannot merge CMS sketches built with different key conventions")
+          sketch.asInstanceOf[CMSSketch].mergeInPlace(other.asInstanceOf[CMSSketch])
+        case SketchCodec.TypeId.TDigest =>
+          sketch.asInstanceOf[TDigestSketch].mergeInPlace(other.asInstanceOf[TDigestSketch])
+        case SketchCodec.TypeId.Kll =>
+          sketch.asInstanceOf[KLLSketch].mergeInPlace(other.asInstanceOf[KLLSketch])
+        case SketchCodec.TypeId.Theta =>
+          sketch.asInstanceOf[ThetaSketch].mergeInPlace(other.asInstanceOf[ThetaSketch])
+        case SketchCodec.TypeId.BottomK =>
+          sketch.asInstanceOf[BottomKSketch].mergeInPlace(other.asInstanceOf[BottomKSketch])
+        case SketchCodec.TypeId.Mg =>
+          sketch.asInstanceOf[MGSketch].mergeInPlace(other.asInstanceOf[MGSketch])
+        case SketchCodec.TypeId.WeightedBottomK =>
+          sketch.asInstanceOf[WeightedBottomKSketch]
+            .mergeInPlace(other.asInstanceOf[WeightedBottomKSketch])
+        case SketchCodec.TypeId.CountingBloom =>
+          require(km == keyMode,
+            "cannot merge counting filters built with different key conventions")
+          // per-cell saturating add — associative + commutative, so the
+          // counting filter is in the bit-identity club alongside Bloom
+          sketch.asInstanceOf[CountingBloomSketch]
+            .mergeInPlace(other.asInstanceOf[CountingBloomSketch])
       }
     }
 

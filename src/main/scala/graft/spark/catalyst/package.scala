@@ -156,40 +156,36 @@ package object catalyst {
   def sketchMergeAgg(blob: Column): Column =
     B.aggColumn(SketchMergeAgg(B.expression(blob)))
 
-  /** Two-stage sharded build of GLOBAL (full-config) sketch blobs — the
-    * shape every one-blob build must take at 10^12 turns:
-    *   stage 1: rows co-locate by a hash shard (repartition first, so the
-    *            grouped partial aggregation sees ONE group per task and the
-    *            number of live full-size buffers tracks the CHOSEN shard
-    *            count, never the input partition count — a bare
-    *            `df.agg(bloomAgg(...))` allocates a full-size buffer per
-    *            input partition and funnels every merge through one
-    *            reducer: measured 0.11 scaling efficiency, BENCH.md);
-    *   stage 2: the per-shard blobs fold EXECUTOR-SIDE via sketchMergeAgg —
-    *            one merged row ever exists, nothing per-shard reaches the
-    *            driver.
+  /** Sharded build of GLOBAL (full-config) sketch blobs — the shape
+    * every one-blob build must take at 10^12 turns: rows go to a hash
+    * shard through an explicit `repartition(shards, …)`, so the
+    * global aggregate's partial step keeps ONE full-size buffer per
+    * shard, never one per input partition (a bare `df.agg(bloomAgg(...))`
+    * allocates a full-size buffer per input partition and funnels every
+    * merge through one reducer: measured 0.11 scaling efficiency,
+    * BENCH.md). Each shard's partial buffer is encoded once and crosses
+    * the one exchange to the final step, which decodes it once, unions
+    * it in and encodes the result once — one merged row ever exists,
+    * nothing per-shard reaches the driver.
     * All agg columns must produce codec blobs (byte-key or row-hash; key
     * conventions are preserved per column). Returns the one-row frame of
-    * merged blobs under the given names. Because sketch union is
-    * commutative/associative, ANY shard column yields the identical blob
-    * (reference union law, km_bloom_filter.rs:184–194). */
+    * blobs under the given names. Because sketch union is
+    * commutative/associative, ANY shard column yields the blob a one-shot
+    * `df.agg(…)` builds, byte for byte (reference union law,
+    * km_bloom_filter.rs:184–194; Agarwal et al., "Mergeable Summaries"). */
   def shardedSketchBlobs(df: DataFrame, shards: Int, shardOn: Column)(
       aggs: (String, Column)*): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error}
-    val shard = saltBucket(shards, shardOn)
-    val stage1 = aggs.map { case (nm, c) => c.as(nm) }
-    // zero stage-1 groups (empty input) would merge to null — surface
-    // that as a meaningful error HERE, once, instead of an NPE in every
-    // caller's decode/probe
-    val stage2 = aggs.map { case (nm, _) =>
-      coalesce(sketchMergeAgg(col(nm)),
-        raise_error(lit(s"sharded build '$nm' over an empty input produced no sketch")))
+    import org.apache.spark.sql.functions.{count, lit, raise_error, when}
+    // a global aggregate over zero rows still yields a row of empty
+    // sketches — surface that as a meaningful error HERE, once, instead
+    // of a silently empty filter in every caller's probe
+    val rows = count(lit(1))
+    val cols = aggs.map { case (nm, c) =>
+      when(rows > 0, c)
+        .otherwise(raise_error(lit(s"sharded build '$nm' over an empty input produced no sketch")))
         .as(nm)
     }
-    df.repartition(shards, shard)
-      .groupBy(shard.as("__graft_shard"))
-      .agg(stage1.head, stage1.tail: _*)
-      .agg(stage2.head, stage2.tail: _*)
+    df.repartition(shards, saltBucket(shards, shardOn)).agg(cols.head, cols.tail: _*)
   }
 
   /** Probe a SHARD TABLE of row-hash Bloom filters WITHOUT ever merging

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * booleans, so `PlanDump` cannot show the substantive change. This
   * dumps `explain("formatted")` of the INTERNAL aggregation both ways —
   * the pre-r07 global `signed.agg(cbfAgg)` (one dense counting buffer
-  * per input partition, single final reducer) and the r07 sharded
-  * two-stage `shardedSketchBlobs` shape (one Exchange
-  * hashpartitioning(k), full-size buffers once per shard, executor-side
-  * sketchMergeAgg fold) — over the SAME `signed` relation q58 builds
+  * per input partition, single final reducer) and the sharded
+  * `shardedSketchBlobs` shape (one REPARTITION_BY_NUM exchange on the
+  * key's shard, one partial buffer per shard, then one exchange into the
+  * final merge) — over the SAME `signed` relation q58 builds
   * (SparkEntry.scala q58_cbf_retraction, kept in sync by hand).
   * Usage: runMain graft.tools.Q58InternalPlanDump <sfDir> [tag]
   */
@@ -52,7 +52,7 @@ object Q58InternalPlanDump {
     dump("q58_cbf_retraction_internal_before.txt", globalAgg,
       "pre-r07 shape: global agg(cbfAgg) — dense partial buffer per input partition, one final reducer")
     dump("q58_cbf_retraction_internal_after.txt", sharded,
-      "r07 shape: shardedSketchBlobs — one Exchange hashpartitioning(k), per-shard grouped partials, executor-side sketchMergeAgg fold")
+      "sharded shape: shardedSketchBlobs — REPARTITION_BY_NUM on the key's shard, one partial buffer per shard, one exchange into the final merge")
     spark.stop()
   }
 }

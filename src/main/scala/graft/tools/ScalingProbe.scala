@@ -150,9 +150,8 @@ object ScalingProbe {
       val m = new MetricsAgg
       s.sparkContext.addSparkListener(m)
       val wall = sketchBuild(s, benchInput, turns)
-      // let straggler task-end events drain before reading the accumulator
-      Thread.sleep(500)
-      s.sparkContext.removeSparkListener(m)
+      // stop() drains the listener bus, straggler task-end events
+      // included, before it returns: read the totals only after it
       s.stop()
       val burn = burnSecs(cpus)
       def line(tag: String, sm: StageM): String = {

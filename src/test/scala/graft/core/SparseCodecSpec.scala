@@ -272,6 +272,49 @@ class SparseCodecSpec extends AnyFunSuite {
     assert(back.bits === s.bits)
   }
 
+  test("Bloom blob length is the smallest of the three layouts around the offset-list/dense crossover") {
+    // naive sizes: header(6), dense body, sparse header(28) + body
+    def varintLen(v: Long): Int = math.max(1, (64 - java.lang.Long.numberOfLeadingZeros(v) + 6) / 7)
+    def layoutMin(s: BloomSketch): Int = {
+      val w = s.bits.words
+      val ones = (0L until s.bits.numBits).filter(s.bits.get)
+      val offset = 28 + 4 + ones.zip(0L +: ones).map { case (p, q) => varintLen(p - q) }.sum
+      var rle = 28; var i = 0
+      while (i < w.length) {
+        val z = w.indexWhere(_ != 0L, i) match { case -1 => w.length - i; case j => j - i }
+        i += z
+        if (i < w.length) {
+          val lit = w.indexWhere(_ == 0L, i) match { case -1 => w.length - i; case j => j - i }
+          rle += varintLen(z) + varintLen(lit) + 8 * lit
+          i += lit
+        }
+      }
+      6 + Seq(3 + 16 + 4 + 8 + 8 * w.length, offset, rle).min
+    }
+    def check(s: BloomSketch, what: String): Unit = {
+      val blob = SketchCodec.encodeBloom(s)
+      assert(blob.length === layoutMin(s), what)
+      val back = SketchCodec.decodeBloom(blob)
+      assert(back.bits === s.bits && back.config === s.config, s"$what: round-trip")
+    }
+    // evenly spaced bits (1-byte deltas): the offset list beats dense by
+    // one byte at popcount 8·words − 2 and ties it (dense wins) at − 1
+    val cfg = BloomConfig(2000, 0.01)
+    val nW = ((cfg.totalBits + 63) / 64).toInt
+    for (ones <- 8 * nW - 4 to 8 * nW + 2) {
+      val bits = BitArray(cfg.totalBits)
+      (0 until ones).foreach(i => bits.set(i * cfg.totalBits / ones))
+      check(new KMBloomSketch(cfg, bits, KMHashPair.XxMurmur), s"$ones evenly spaced bits")
+    }
+    // hashed fills crossing the same crossover
+    val s = KMBloomSketch(cfg)
+    var i = 0
+    while (s.bits.countOnes < 8L * nW + 40) {
+      s.insert(s"key-$i".getBytes("UTF-8")); i += 1
+      if (s.bits.countOnes >= 8L * nW - 40) check(s, s"$i hashed keys")
+    }
+  }
+
   test("describe renders sparse blobs; corrupt sparse blobs fail loudly") {
     val h = hllOf(0 until 50)
     assert(SketchCodec.describe(SketchCodec.encodeHll(h)).contains("HLLSketch"))

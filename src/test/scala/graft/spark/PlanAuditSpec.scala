@@ -87,18 +87,29 @@ class PlanAuditSpec extends AnyFunSuite {
     val df = shardedSketchBlobs(t.select(col("conv_id"), col("turn_idx")), 8, col("conv_id"))(
       "sk" -> bloomAggNative(1000L, 0.01)(col("conv_id"), col("turn_idx")))
     val plan = planOf(df)
+    val lines = plan.linesIterator.toIndexedSeq
     // the row shuffle is the EXPLICIT repartition (shard count chosen by
     // the caller), not an aggregation ENSURE_REQUIREMENTS exchange — that
     // is what bounds live full-size buffers to the shard count
-    val rep = plan.indexOf("REPARTITION_BY_NUM")
+    val rep = lines.indexWhere(_.contains("REPARTITION_BY_NUM"))
     assert(rep >= 0, s"no explicit shard repartition:\n$plan")
-    // below the repartition: only the scan/projection — the per-shard
-    // grouped aggregate (where full-size buffers live) sits ABOVE it
-    val aggBelowRep = plan.indexOf("ObjectHashAggregate", rep)
-    assert(aggBelowRep < 0, s"aggregate below the shard repartition:\n$plan")
-    // the second stage (sketch_merge_agg) must also plan partial+final,
-    // so only merged blobs cross the last exchange
-    assert(plan.contains("graft_sketch_merge_agg"), s"no merge stage:\n$plan")
+    // below the repartition: only the scan/projection — the partial
+    // aggregate (where full-size buffers live) sits ABOVE it
+    assert(!lines.drop(rep).exists(_.contains("ObjectHashAggregate")),
+      s"aggregate below the shard repartition:\n$plan")
+    // exactly one exchange above it, and what crosses it is the partial
+    // aggregate's output (one buffer per shard), not rows or shard blobs
+    val above = lines.take(rep)
+    val exchanges = above.indices.filter(i => above(i).contains("Exchange "))
+    assert(exchanges.size == 1, s"expected one exchange above the shard repartition:\n$plan")
+    val between = above.drop(exchanges.head + 1)
+    assert(between.nonEmpty && between.forall(l =>
+        l.contains("ObjectHashAggregate") && l.contains("partial_graft_bloom_agg")),
+      s"not only a partial aggregate between the two exchanges:\n$plan")
+    assert(above.take(exchanges.head).exists(_.contains("ObjectHashAggregate")),
+      s"no final aggregate above the last exchange:\n$plan")
+    // the shard buffers merge in that final aggregate: no blob re-fold
+    assert(!plan.contains("graft_sketch_merge_agg"), s"second merge stage:\n$plan")
   }
 
   test("multi-way dim join plans as broadcast, not shuffle join") {

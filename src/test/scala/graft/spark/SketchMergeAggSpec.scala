@@ -84,6 +84,66 @@ class SketchMergeAggSpec extends AnyFunSuite {
     assert(out.isNullAt(0))
   }
 
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("holder merge: mixed types and Bloom key modes from different partitions are rejected") {
+    import spark.implicits._
+    import graft.spark.{functions => gf}
+    val df = (0 until 100).map(i => s"k$i").toDF("k")
+    val hll = df.agg(hllAggNative($"k")).head.getAs[Array[Byte]](0)
+    val rowHash = df.agg(bloomAggNative(100L, 0.01)($"k")).head.getAs[Array[Byte]](0)
+    val byteKey = df.agg(gf.bloomAgg(100L, 0.01)(gf.sketchKey($"k"))).head.getAs[Array[Byte]](0)
+    // one blob per partition: each partial buffer holds a single sketch,
+    // so the mismatch can only surface where the final step merges them
+    def mergeAcross(a: Array[Byte], b: Array[Byte]): Seq[String] = messages(intercept[Exception](
+      spark.createDataset(spark.sparkContext.parallelize(Seq(a, b), 2)).toDF("s")
+        .agg(sketchMergeAgg($"s")).collect()))
+    assert(mergeAcross(hll, rowHash).exists(_.contains("cannot merge sketch type")))
+    assert(mergeAcross(rowHash, byteKey).exists(_.contains("different key conventions")))
+  }
+
+  test("holder merge unions decoded sketches; an empty buffer takes the other holder") {
+    def keys(r: Range): Seq[Array[Byte]] = r.map(i => s"key-$i".getBytes("UTF-8"))
+    // (blob of 0..49, blob of 50..99) per codec type
+    def blobs(r: Range): Seq[Array[Byte]] = {
+      val bloom = KMBloomSketch(1000L, 0.01); val hll = HLLSketch()
+      val cms = CMSSketch(0.01, 0.01); val theta = ThetaSketch(16)
+      val bk = BottomKSketch(16); val wbk = WeightedBottomKSketch(16)
+      val mg = MGSketch(8); val cbf = CountingBloomSketch(1000L, 0.01)
+      val kll = KLLSketch(16); val td = TDigestSketch(20.0)
+      keys(r).zip(r).foreach { case (k, i) =>
+        bloom.insert(k); hll.update(k); cms.update(k); theta.update(k)
+        bk.update(k); wbk.update(k, 1.0 + i % 3); mg.update(k); cbf.insert(k)
+        kll.update(i.toDouble); td.update(i.toDouble)
+      }
+      Seq(SketchCodec.encodeBloom(bloom), SketchCodec.encodeHll(hll),
+        SketchCodec.encodeCms(cms), SketchCodec.encodeTheta(theta),
+        SketchCodec.encodeBottomK(bk), SketchCodec.encodeWeightedBottomK(wbk),
+        SketchCodec.encodeMg(mg), SketchCodec.encodeCountingBloom(cbf),
+        SketchCodec.encodeKll(kll), SketchCodec.encodeTDigest(td))
+    }
+    def holderOf(bs: Array[Byte]*): SketchMergeAgg.Holder = {
+      val h = new SketchMergeAgg.Holder
+      bs.foreach(h.merge(_))
+      h
+    }
+    val agg = SketchMergeAgg(org.apache.spark.sql.catalyst.expressions.Literal(null,
+      org.apache.spark.sql.types.BinaryType))
+    blobs(0 until 50).zip(blobs(50 until 100)).foreach { case (a, b) =>
+      val t = SketchCodec.typeOf(a)
+      val o = holderOf(a)
+      assert(agg.merge(new SketchMergeAgg.Holder, o) eq o, s"type $t: empty buffer copies")
+      val h = holderOf(a)
+      assert(agg.merge(h, new SketchMergeAgg.Holder) eq h, s"type $t: empty input replaces")
+      val m = agg.merge(h, holderOf(b))
+      assert(m eq h, s"type $t: non-empty buffer is not merged in place")
+      assert(m.encoded.get.sameElements(holderOf(a, b).encoded.get),
+        s"type $t: holder merge differs from the blob merge")
+    }
+    assert(agg.merge(new SketchMergeAgg.Holder, new SketchMergeAgg.Holder).encoded.isEmpty)
+  }
+
   test("SQL: per-shard blobs rolled up with graft_sketch_merge_agg") {
     GraftExtensions.register(spark)
     import spark.implicits._

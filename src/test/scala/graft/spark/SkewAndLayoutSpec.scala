@@ -128,6 +128,35 @@ class SkewAndLayoutSpec extends AnyFunSuite {
       s"unexpected failure: ${messages(ex).mkString(" | ")}")
   }
 
+  test("sharded build blobs are byte-equal to a one-shot agg at any shard count") {
+    import graft.spark.catalyst._
+    import graft.spark.{functions => gf}
+    import spark.implicits._
+    val turns = (0 until 6000).map(i => (s"c${i % 5}", i, s"t${i % 3}"))
+      .toDF("conv_id", "turn_idx", "tool").repartition(6)
+    val key = gf.sketchKey(col("conv_id"), col("turn_idx"))
+    // signed counting-filter stream: every turn +1, every 7th retracted
+    val signed = turns.withColumn("m", lit(1L))
+      .unionByName(turns.filter(col("turn_idx") % 7 === 0).withColumn("m", lit(-1L)))
+      .withColumn("k", key)
+    val aggs: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+      "rowHash" -> bloomAggNative(8000L, 0.01)(col("conv_id"), col("turn_idx")),
+      "bloom" -> gf.bloomAgg(8000L, 0.01)(col("k")),
+      "hll" -> gf.hllAgg(col("k")),
+      "cms" -> gf.cmsAgg(0.01, 0.01)(gf.sketchKey(col("tool"))),
+      "cbf" -> gf.cbfAgg(8000L, 0.01)(col("k"), col("m")))
+    val oneShot = signed.agg(aggs.head._2.as(aggs.head._1),
+      aggs.tail.map { case (nm, c) => c.as(nm) }: _*).head
+    // 5 distinct conv_ids: 64 shards leaves most shards empty
+    for (shards <- Seq(1, 4, 64)) {
+      val sharded = shardedSketchBlobs(signed, shards, col("conv_id"))(aggs: _*).head
+      aggs.foreach { case (nm, _) =>
+        assert(sharded.getAs[Array[Byte]](nm).sameElements(oneShot.getAs[Array[Byte]](nm)),
+          s"$nm differs from the one-shot build at $shards shards")
+      }
+    }
+  }
+
   test("bucket-directory layout: probe routing prunes partitions at the scan") {
     val dir = Files.createTempDirectory("graft_layout").toString + "/transcripts"
     val t = Transcripts.load(spark, "/root/testdata/sf0.001")

@@ -40,6 +40,18 @@ object SparkEntry {
     graft.spark.catalyst.shardedSketchBlobs(
       t.select(cols.map(col): _*), BuildShards, col(cols.head))(aggs: _*).head
 
+  /** q58's retraction set: the error turns (~20% of rows). */
+  private def errorTurn: Column = col("tool") === "error"
+
+  /** q58's signed relation (k, m): every turn inserts (+1) and every
+    * error turn retracts (−1), keyed by key2(conv_id, turn_idx) — each
+    * retracted key inserted exactly once and retracted exactly once.
+    * Also dumped by graft.tools.Q58InternalPlanDump. */
+  private[graft] def q58Signed(t: DataFrame): DataFrame = {
+    val k = key2("conv_id", "turn_idx").as("k")
+    t.select(k, lit(1L).as("m")).unionByName(t.filter(errorTurn).select(k, lit(-1L).as("m")))
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_bloom_membership")(spark, "/root/testdata/sf0.001")
@@ -411,9 +423,9 @@ object SparkEntry {
 
     // Counting Bloom with DELETION (round 6) — the one membership
     // operation neither reference variant offers (insert-only by design;
-    // lib.rs:180–234 has no remove). Signed-stream shape: every turn key
-    // inserts (+1); every turn of a conversation that ever errored
-    // retracts (−1) — a retraction matches its insert exactly, the Fan
+    // lib.rs:180–234 has no remove). Signed-stream shape (q58Signed):
+    // every turn key inserts (+1); every error turn retracts (−1) — a
+    // retraction matches its insert exactly, the Fan
     // et al. "Summary Cache" contract. ONE aggregation pass over the
     // signed union (retractions may arrive before their inserts across
     // partitions — the two-filter buffer absorbs any order). Gates:
@@ -427,12 +439,6 @@ object SparkEntry {
       import s.implicits._
       val t = Transcripts.load(s, dir).cache()
       val n = t.count()
-      // retraction set: the error turns themselves (~20% of rows) — each
-      // key inserted exactly once (+1) and retracted exactly once (−1)
-      val bad = col("tool") === "error"
-      val signed = t.select(key2("conv_id", "turn_idx").as("k"), lit(1L).as("m"))
-        .unionByName(t.filter(bad)
-          .select(key2("conv_id", "turn_idx").as("k"), lit(-1L).as("m")))
       // r07: SHARDED builds (the q01 shape) instead of a bare global
       // agg. The bare `signed.agg(cbfAgg)` allocated one full-size DENSE
       // counting buffer (1 B/cell, ~14.4 cells per unit of capacity) PER
@@ -440,30 +446,29 @@ object SparkEntry {
       // measured as 8.1 s of GC on the bench's cold run. The explicit
       // shard repartition (on the key, so each key's +1/−1 rows
       // co-locate) bounds full-size buffers to one per shard, and each
-      // shard's partial buffer merges straight into the final blob. This
-      // udaf's buffer is kryo, not codec, so the shards cross the final
-      // exchange dense; that is no slower than finishing each shard in
-      // its own stage, whose blobs the final step decoded to dense anyway.
+      // shard's partial buffer merges straight into the final blob. The
+      // buffer crosses that exchange as its two codec blobs, so a shard's
+      // sparse partial filters travel sparse.
       // Counting-cell addition is commutative, so the merged cells — and
       // the encoded blob — are BIT-IDENTICAL to the bare global build's
       // (the same union law the q03 gate pins for the bit filter;
       // inc_cbf_eq pins the counting merge). The direct comparandum
       // build is sharded identically.
       val cbfBlob = graft.spark.catalyst.shardedSketchBlobs(
-        signed, BuildShards, col("k"))(
+        q58Signed(t), BuildShards, col("k"))(
         "cbf" -> gf.cbfAgg(cap(n), P)(col("k"), col("m")))
         .head.getAs[Array[Byte]]("cbf")
-      val directBlob = shardedBlobRow(t.filter(!bad), Seq("conv_id", "turn_idx"),
+      val directBlob = shardedBlobRow(t.filter(!errorTurn), Seq("conv_id", "turn_idx"),
         "sk" -> gf.bloomAgg(cap(n), P)(key2("conv_id", "turn_idx")))
         .getAs[Array[Byte]]("sk")
       // ONE probe pass over the raw table: kept/retracted counts and both
       // probe tallies in a single aggregation
       val hit = gf.cbfProbe(cbfBlob)(key2("conv_id", "turn_idx"))
       val r = t.agg(
-        sum(when(!bad, 1L).otherwise(0L)).as("n_kept"),
-        sum(when(bad, 1L).otherwise(0L)).as("n_gone"),
-        sum(when(!bad && hit, 1L).otherwise(0L)).as("kept_hits"),
-        sum(when(bad && hit, 1L).otherwise(0L)).as("fp")).head
+        sum(when(!errorTurn, 1L).otherwise(0L)).as("n_kept"),
+        sum(when(errorTurn, 1L).otherwise(0L)).as("n_gone"),
+        sum(when(!errorTurn && hit, 1L).otherwise(0L)).as("kept_hits"),
+        sum(when(errorTurn && hit, 1L).otherwise(0L)).as("fp")).head
       val (nKept, nGone) = (r.getAs[Long]("n_kept"), r.getAs[Long]("n_gone"))
       val fprOk = r.getAs[Long]("fp") <=
         nGone * P * 1.05 + 3 * math.sqrt(nGone * P) + 1

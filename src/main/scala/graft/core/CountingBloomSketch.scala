@@ -25,9 +25,10 @@ package graft.core
   *    absorbs), so any Spark partial/final merge tree yields the same
   *    state. Remove does NOT commute with merge across filters (deleting
   *    in shard A an element inserted in shard B under-flows A's cells);
-  *    the distributed retraction shape is the SIGNED aggregation in
-  *    `graft.spark.functions.cbfAgg`, which sums signed multiplicities
-  *    exactly per cell and clamps once at finalization.
+  *    the distributed retraction shape is the SIGNED aggregation
+  *    (`graft.spark.functions.cbfAgg` on `catalyst.CbfSketchAgg`), which
+  *    adds inserts and retractions into two separate filters and
+  *    subtracts once at finalization ([[subtractInPlace]]).
   *  - `mightContain` = all k cells non-zero (short-circuit on first zero,
   *    the km_bloom_filter.rs:326–333 probe shape).
   */
@@ -118,7 +119,7 @@ final class CountingBloomSketch(val config: BloomConfig,
   }
 
   /** Per-cell FLOORED subtraction — the finalization step of the signed
-    * aggregation path (`graft.spark.functions.cbfAgg`): inserts and
+    * aggregation path (`catalyst.CbfSketchAgg`): inserts and
     * retractions are aggregated into two separate filters (each a
     * commutative monoid under saturating add, so any merge tree is
     * legal), and the net filter is computed ONCE here. Exact whenever
@@ -185,18 +186,13 @@ final class CountingBloomSketch(val config: BloomConfig,
 object CountingBloomSketch {
   def apply(capacity: Long, fpp: Double): CountingBloomSketch =
     apply(BloomConfig(capacity, fpp))
-  def apply(config: BloomConfig): CountingBloomSketch = {
+  def apply(capacity: Long, fpp: Double, hashers: KMHashPair): CountingBloomSketch =
+    apply(BloomConfig(capacity, fpp), hashers)
+  def apply(config: BloomConfig, hashers: KMHashPair = KMHashPair.XxMurmur): CountingBloomSketch = {
     // 1 byte/cell: a JVM byte array caps one filter at 2^31 cells
     // (capacity ≈ 1.5·10^8 at p=0.001). Beyond that, shard — the q35
     // membership shape — exactly as the BIT filters already must at
     // 10^12 keys (a single dense m would be petabytes anyway).
-    require(config.totalBits <= Int.MaxValue,
-      s"counting filter of ${config.totalBits} cells exceeds one array; " +
-        "shard the build (see sharded membership, SURVEY §7.5)")
-    new CountingBloomSketch(config, new Array[Byte](config.totalBits.toInt))
-  }
-  def apply(capacity: Long, fpp: Double, hashers: KMHashPair): CountingBloomSketch = {
-    val config = BloomConfig(capacity, fpp)
     require(config.totalBits <= Int.MaxValue,
       s"counting filter of ${config.totalBits} cells exceeds one array; " +
         "shard the build (see sharded membership, SURVEY §7.5)")

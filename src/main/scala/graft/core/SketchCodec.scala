@@ -20,7 +20,7 @@ object SketchCodec {
     * false ⇒ false negatives), so the codec records it and probe paths
     * enforce it. */
   object KeyMode {
-    /** caller-encoded canonical bytes (functions.sketchKey / UDAF path) */
+    /** caller-encoded canonical bytes (functions.sketchKey, the gf.* builds) */
     val Bytes: Byte = 0
     /** native row-hash (graft.spark.catalyst expressions) */
     val RowHash: Byte = 1

@@ -105,12 +105,24 @@ object SketchAggBase {
     case i: java.lang.Integer => i.doubleValue()
     case x => x.toString.toDouble
   }
+
+  /** A string or binary key value as its bytes. */
+  def keyBytes(v: Any): Array[Byte] = v match {
+    case s: UTF8String => s.getBytes
+    case a: Array[Byte] => a
+  }
+
+  def stringOrBinaryKey(name: String, key: Expression): TypeCheckResult = key.dataType match {
+    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$name takes a string or binary key column, got ${other.catalogString}")
+  }
 }
 
 /** Aggregates over a tuple of key columns. Bound column references are
   * read straight from the input row; computed keys (functions.sketchKey)
-  * go through one generated projection, as Spark's ScalaAggregator
-  * evaluates its inputs, instead of interpreted `eval` per row. */
+  * go through one generated projection instead of interpreted `eval` per
+  * row. */
 abstract class KeyedSketchAgg[T] extends SketchAggBase[T] {
   def keys: Seq[Expression]
   override def children: Seq[Expression] = keys
@@ -188,6 +200,128 @@ case class BloomSketchAgg(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BloomSketchAgg =
     copy(keys = c)
+}
+
+/** The reference's per-index seeded Bloom filter (`SeededBloomFilter`,
+  * seeded_bloom_filter.rs:13–17, 205–230) over ONE binary key
+  * (functions.bloomSeededAgg): update = insert(bytes), merge = union,
+  * eval = codec bytes under KeyMode.Bytes. */
+case class SeededBloomSketchAgg(
+    keys: Seq[Expression],
+    capacity: Long,
+    fpp: Double,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends KeyedSketchAgg[SeededBloomSketch] {
+
+  override def prettyName: String = "graft_bloom_seeded_agg"
+  override def checkInputDataTypes(): TypeCheckResult = checkKeys(SketchCodec.KeyMode.Bytes)
+
+  override def createAggregationBuffer(): SeededBloomSketch = SeededBloomSketch(capacity, fpp)
+
+  override def update(b: SeededBloomSketch, input: InternalRow): SeededBloomSketch = {
+    val k = hashedKeys(0).eval(keyRow(input))
+    if (k != null) b.insert(k.asInstanceOf[Array[Byte]])
+    b
+  }
+
+  override def merge(b: SeededBloomSketch, o: SeededBloomSketch): SeededBloomSketch =
+    b.unionInPlace(o)
+  override def eval(b: SeededBloomSketch): Any = SketchCodec.encodeBloom(b)
+  override def serialize(b: SeededBloomSketch): Array[Byte] = SketchCodec.encodeBloom(b)
+  override def deserialize(bytes: Array[Byte]): SeededBloomSketch =
+    SketchCodec.decodeBloom(bytes).asInstanceOf[SeededBloomSketch]
+  override def withNewMutableAggBufferOffset(o: Int): SeededBloomSketchAgg =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): SeededBloomSketchAgg =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): SeededBloomSketchAgg =
+    copy(keys = c)
+}
+
+/** Counting-Bloom aggregation over a SIGNED stream of (binary key, long
+  * multiplicity): multiplicity > 0 inserts, < 0 retracts, 0 or null is
+  * skipped (functions.cbfAgg). Inserts and retractions accumulate into
+  * two separate counting filters — each a commutative monoid under
+  * saturating per-cell add, so partial/final merges are legal in any tree
+  * order and a retraction seen BEFORE its insert (routine across
+  * partitions) can never floor a cell — and the net filter is computed
+  * once at eval via floored subtraction (CountingBloomSketch.
+  * subtractInPlace; Fan et al., "Summary Cache"). Exact (and collapse-to-
+  * bit-filter bit-exact) whenever no cell accumulates 255 hits on either
+  * side. The buffer crosses the shuffle as the two codec blobs,
+  * length-framed, so sparse partials travel sparse. */
+case class CbfSketchAgg(
+    key: Expression,
+    multiplicity: Expression,
+    capacity: Long,
+    fpp: Double,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends KeyedSketchAgg[(CountingBloomSketch, CountingBloomSketch)] {
+
+  private type Buf = (CountingBloomSketch, CountingBloomSketch)
+
+  // the multiplicity rides through the same projection as the key
+  override def keys: Seq[Expression] = Seq(key, multiplicity)
+  override def prettyName: String = "graft_cbf_agg"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (key.dataType == BinaryType && multiplicity.dataType == LongType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName takes (binary key, long multiplicity), got " +
+        s"(${key.dataType.catalogString}, ${multiplicity.dataType.catalogString})")
+
+  override def createAggregationBuffer(): Buf =
+    (CountingBloomSketch(capacity, fpp), CountingBloomSketch(capacity, fpp))
+
+  override def update(b: Buf, input: InternalRow): Buf = {
+    val row = keyRow(input)
+    val k = hashedKeys(0).eval(row)
+    val m = hashedKeys(1).eval(row)
+    val mult = if (m == null) 0L else m.asInstanceOf[Long]
+    if (k != null && mult != 0L) {
+      val key = k.asInstanceOf[Array[Byte]]
+      val target = if (mult > 0L) b._1 else b._2
+      // hash the key ONCE — repeated insert(key) would re-run both base
+      // hashes per multiplicity step. The loop is also capped at 255:
+      // cells saturate there, so iteration n>255 is a provable no-op
+      // (any touched cell is already 255 either way), and the cap makes
+      // a pathological multiplicity (10^12, or Long.MinValue whose abs
+      // is negative) finite instead of a hang.
+      val h1 = target.hashers.h1(key)
+      val h2 = target.hashers.h2(key)
+      var i = 0L
+      val n = math.min(255L, if (mult > 0L) mult else -math.max(mult, -255L))
+      while (i < n) { target.insertHashes(h1, h2); i += 1 }
+    }
+    b
+  }
+
+  override def merge(b: Buf, o: Buf): Buf = (b._1.mergeInPlace(o._1), b._2.mergeInPlace(o._2))
+
+  override def eval(b: Buf): Any = SketchCodec.encodeCountingBloom(b._1.subtractInPlace(b._2))
+
+  override def serialize(b: Buf): Array[Byte] = {
+    val ins = SketchCodec.encodeCountingBloom(b._1)
+    val ret = SketchCodec.encodeCountingBloom(b._2)
+    java.nio.ByteBuffer.allocate(4 + ins.length + ret.length)
+      .putInt(ins.length).put(ins).put(ret).array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Buf = {
+    val n = java.nio.ByteBuffer.wrap(bytes).getInt()
+    (SketchCodec.decodeCountingBloom(java.util.Arrays.copyOfRange(bytes, 4, 4 + n)),
+      SketchCodec.decodeCountingBloom(java.util.Arrays.copyOfRange(bytes, 4 + n, bytes.length)))
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): CbfSketchAgg =
+    copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): CbfSketchAgg =
+    copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CbfSketchAgg =
+    copy(key = c(0), multiplicity = c(1))
 }
 
 /** Per-instance decode memo used by both the interpreted and codegen'd
@@ -537,26 +671,14 @@ case class BottomKSampleAgg(
   override def children: Seq[Expression] = Seq(key)
   override def prettyName: String = "graft_bottomk_sample_agg"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    key.dataType match {
-      case StringType | BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName takes a string or binary key column, got ${other.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    SketchAggBase.stringOrBinaryKey(prettyName, key)
 
   override def createAggregationBuffer(): BottomKSketch = BottomKSketch(k)
 
   override def update(b: BottomKSketch, input: InternalRow): BottomKSketch = {
     val v = key.eval(input)
-    if (v != null) {
-      val bytes = v match {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.getBytes
-        case a: Array[Byte] => a
-      }
-      b.update(bytes)
-    }
+    if (v != null) b.update(SketchAggBase.keyBytes(v))
     b
   }
 
@@ -615,11 +737,7 @@ case class WeightedBottomKSampleAgg(
       require(w != null,
         "weighted bottom-k weight is null for a non-null key — the weight " +
           "must be finite and > 0 (a non-numeric value cast to double yields null)")
-      val bytes = v match {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.getBytes
-        case a: Array[Byte] => a
-      }
-      b.update(bytes, w.asInstanceOf[Double])
+      b.update(SketchAggBase.keyBytes(v), w.asInstanceOf[Double])
     }
     b
   }
@@ -654,26 +772,14 @@ case class MgSketchAgg(
   override def children: Seq[Expression] = Seq(key)
   override def prettyName: String = "graft_mg_agg"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    key.dataType match {
-      case StringType | BinaryType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName takes a string or binary key column, got ${other.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult =
+    SketchAggBase.stringOrBinaryKey(prettyName, key)
 
   override def createAggregationBuffer(): MGSketch = MGSketch(k)
 
   override def update(b: MGSketch, input: InternalRow): MGSketch = {
     val v = key.eval(input)
-    if (v != null) {
-      val bytes = v match {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.getBytes
-        case a: Array[Byte] => a
-      }
-      b.update(bytes)
-    }
+    if (v != null) b.update(SketchAggBase.keyBytes(v))
     b
   }
 

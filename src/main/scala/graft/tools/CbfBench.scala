@@ -5,12 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** What deletion support costs: the counting filter's two-byte-arrays
-  * buffer and per-cell saturating merge (udaf, kryo buffers) against the
+  * buffer and per-cell saturating merge (codec-encoded buffers) against the
   * plain bit filter over the SAME byte keys, plus the row-hash bloom
   * aggregate as the multi-column reference point. Four global builds
   * over the same expanded transcript keys:
   *   bloom_native  — bloomAggNative (row-hash keys)
-  *   bloom_udaf    — gf.bloomAgg     (the same byte keys as cbfAgg)
+  *   bloom_bytes   — gf.bloomAgg     (the same byte keys as cbfAgg)
   *   cbf_insert    — gf.cbfAgg, +1 rows only
   *   cbf_retract   — gf.cbfAgg, the q58 shape (all rows +1, the ~20%
   *                   error-turn rows again at −1: 1.2× the input rows)
@@ -58,7 +58,7 @@ object CbfBench {
       t.agg(bloomAggNative(cap, P)(col("conv_id"), col("turn_idx")).as("sk"))
         .head.getAs[Array[Byte]]("sk")
     }
-    val direct = time("bloom_udaf", n) {
+    val direct = time("bloom_bytes", n) {
       t.filter(!bad).agg(gf.bloomAgg(cap, P)(key).as("sk"))
         .head.getAs[Array[Byte]]("sk")
     }

@@ -44,15 +44,13 @@ object PlanReport {
       .head.getAs[Array[Byte]](0)
 
     show("Sharded sketch build (the 10^12-turn shape)",
-      "ObjectHashAggregate runs PARTIAL below the exchange (per-partition\n" +
-        "insert loop = reference `insert`), the exchange ships binary sketch\n" +
-        "state, FINAL merge = reference `union`. One shuffle total.") {
-      t.select(col("conv_id"), col("turn_idx"), col("tool"),
-          pmod(xxhash64(col("conv_id")), lit(8)).as("shard"))
-        .repartition(col("shard"))
-        .groupBy(col("shard"))
-        .agg(bloomAggNative(1000L, 0.001)(col("conv_id"), col("turn_idx")).as("bloom"),
-          hllAggNative(col("conv_id")).as("hll"))
+      "`shardedSketchBlobs`: the REPARTITION_BY_NUM exchange routes rows to\n" +
+        "their shard, the PARTIAL ObjectHashAggregate keeps one buffer per\n" +
+        "shard (insert loop = reference `insert`), one exchange ships those\n" +
+        "binary buffers to the FINAL merge (= reference `union`).") {
+      shardedSketchBlobs(t.select(col("conv_id"), col("turn_idx")), 8, col("conv_id"))(
+        "bloom" -> bloomAggNative(1000L, 0.001)(col("conv_id"), col("turn_idx")),
+        "hll" -> hllAggNative(col("conv_id")))
     }
 
     show("Bloom probe as filter (semi-join reduction)",

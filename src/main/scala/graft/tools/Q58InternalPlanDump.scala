@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * `shardedSketchBlobs` shape (one REPARTITION_BY_NUM exchange on the
   * key's shard, one partial buffer per shard, then one exchange into the
   * final merge) — over the SAME `signed` relation q58 builds
-  * (SparkEntry.scala q58_cbf_retraction, kept in sync by hand).
+  * (SparkEntry.q58Signed).
   * Usage: runMain graft.tools.Q58InternalPlanDump <sfDir> [tag]
   */
 object Q58InternalPlanDump {
@@ -32,10 +32,7 @@ object Q58InternalPlanDump {
     val t = graft.spark.Transcripts.load(spark, sfDir)
     val n = t.count()
     val cap = math.max(n, 1000L)
-    val key = gf.sketchKey(col("conv_id"), col("turn_idx"))
-    val bad = col("tool") === "error"
-    val signed = t.select(key.as("k"), lit(1L).as("m"))
-      .unionByName(t.filter(bad).select(key.as("k"), lit(-1L).as("m")))
+    val signed = graft.SparkEntry.q58Signed(t)
     val globalAgg = signed.agg(gf.cbfAgg(cap, P)(col("k"), col("m")))
     val sharded = graft.spark.catalyst.shardedSketchBlobs(
       signed, 16, col("k"))("cbf" -> gf.cbfAgg(cap, P)(col("k"), col("m")))

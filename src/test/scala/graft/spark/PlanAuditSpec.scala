@@ -73,9 +73,12 @@ class PlanAuditSpec extends AnyFunSuite {
     val df = t.groupBy(col("role")).agg(
       gf.bloomAgg(1000L, 0.01)(gf.sketchKey(col("conv_id"), col("turn_idx"))),
       gf.hllAgg(gf.sketchKey(col("conv_id"))),
-      gf.cmsAgg(0.01, 0.01)(gf.sketchKey(col("tool"))))
+      gf.cmsAgg(0.01, 0.01)(gf.sketchKey(col("tool"))),
+      gf.bloomSeededAgg(1000L, 0.01)(gf.sketchKey(col("conv_id"), col("turn_idx"))),
+      gf.cbfAgg(1000L, 0.01)(gf.sketchKey(col("conv_id")), col("turn_idx")))
     val plan = planOf(df)
-    Seq("graft_bloom_agg", "graft_hll_agg", "graft_cms_agg").foreach { agg =>
+    Seq("graft_bloom_agg", "graft_hll_agg", "graft_cms_agg", "graft_bloom_seeded_agg",
+        "graft_cbf_agg").foreach { agg =>
       assert(plan.contains(agg), s"$agg missing from the plan:\n$plan")
     }
     assert(!plan.contains("ScalaAggregator"), s"udaf aggregator in the plan:\n$plan")

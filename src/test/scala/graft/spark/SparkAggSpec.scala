@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.core._
 import graft.spark.{functions => gf}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,6 +48,21 @@ class SparkAggSpec extends AnyFunSuite {
       .agg(gf.bloomAgg(cap, 0.001)(when(col("k").isNotNull, gf.sketchKey(col("k")))))
       .head.getAs[Array[Byte]](0)
     assert(java.util.Arrays.equals(withNull, bulkBlob), "a null key changed the Bloom blob")
+    // the seeded variant (gf.bloomSeededAgg): ≡ core bulk insert byte for
+    // byte, at 1 and 16 partitions, and a null key leaves it unchanged
+    val seededBulk = SeededBloomSketch(cap, 0.001)
+    keys.foreach(k => seededBulk.insert(k))
+    val seededBulkBlob = SketchCodec.encodeBloom(seededBulk)
+    def seeded(rows: Seq[Option[String]], parts: Int): Array[Byte] =
+      rows.toDF("k").repartition(parts)
+        .agg(gf.bloomSeededAgg(cap, 0.001)(when(col("k").isNotNull, gf.sketchKey(col("k")))))
+        .head.getAs[Array[Byte]](0)
+    Seq(1, 16).foreach { parts =>
+      assert(java.util.Arrays.equals(seeded(keys.map(Option(_)), parts), seededBulkBlob),
+        s"gf.bloomSeededAgg blob != encoded seeded bulk insert at $parts partitions")
+    }
+    assert(java.util.Arrays.equals(seeded(keys.map(Option(_)) :+ None, 3), seededBulkBlob),
+      "a null key changed the seeded Bloom blob")
     // every registered hash pair: the pair's build ≡ its core bulk insert
     KMHashPair.registered.foreach { pair =>
       val pb = KMBloomSketch(cap, 0.001, pair)
@@ -478,6 +493,20 @@ class SparkAggSpec extends AnyFunSuite {
     val b16 = signedBlob(16)
     assert(java.util.Arrays.equals(b1, b16),
       "signed counting agg must be merge-tree independent (retracts can precede inserts)")
+    // ≡ the core sequential build: inserts filter, retractions filter,
+    // one floored subtract
+    val plus = CountingBloomSketch(cap, 0.001)
+    val minus = CountingBloomSketch(cap, 0.001)
+    rows.foreach { case (k, m) => (if (m > 0) plus else minus).insert(k) }
+    assert(java.util.Arrays.equals(b1, SketchCodec.encodeCountingBloom(plus.subtractInPlace(minus))),
+      "gf.cbfAgg blob != core inserts-minus-retractions build")
+    // a null multiplicity skips its row, as a zero one does
+    val withNullMult = (rows.map { case (k, m) => (k, Option(m)) } ++
+        Seq(("k-null", None), ("k-zero", Some(0L))))
+      .toDF("k", "m").repartition(3)
+      .agg(gf.cbfAgg(cap, 0.001)(encode(col("k"), "UTF-8"), col("m")))
+      .head.getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(withNullMult, b1), "a null or zero multiplicity changed the blob")
     // snapshot algebra: separate insert/delete aggregates composed with
     // cbfSubtract must equal the one-pass signed build byte-for-byte
     val ins = rows.filter(_._2 > 0).toDF("k", "m")
@@ -517,5 +546,79 @@ class SparkAggSpec extends AnyFunSuite {
       s"SELECT cbf_subtract(cbf, cbf) AS z FROM cbf_tbl").head.getAs[Array[Byte]]("z")
     assert(SketchCodec.decodeCountingBloom(viaSql).countNonZero === 0L,
       "x subtract x must zero every cell")
+    // SQL cbf_agg: the signed two-argument form ≡ the Column API build;
+    // the one-argument form is plain insertion
+    val sqlSigned = spark.sql("SELECT cbf_agg(encode(k, 'UTF-8'), m) FROM cbf_rows")
+      .head.getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(sqlSigned, b1), "SQL cbf_agg(k, m) != gf.cbfAgg")
+    val sqlInsert = spark.sql("SELECT cbf_agg(encode(k, 'UTF-8')) FROM cbf_rows WHERE m > 0")
+      .head.getAs[Array[Byte]](0)
+    assert(java.util.Arrays.equals(sqlInsert, ins), "SQL cbf_agg(k) != gf.cbfAgg insert build")
+  }
+
+  test("counting Bloom: a 3M-capacity signed build completes at the default kryo buffer max") {
+    import spark.implicits._
+    // two full-size filters of ~43M one-byte cells per buffer: the buffer
+    // crosses the exchange as codec blobs (sparse here), never through
+    // kryo, whose default 64m spark.kryoserializer.buffer.max they exceed
+    assert(!spark.sparkContext.getConf.contains("spark.kryoserializer.buffer.max"))
+    val rows = (0 until 4000).map(i => (s"big-$i", if (i % 5 == 0) -1L else 1L)) ++
+      (0 until 4000 by 5).map(i => (s"big-$i", 1L))
+    val cap = 3000000L
+    val blob = rows.toDF("k", "m").repartition(2)
+      .agg(gf.cbfAgg(cap, 0.001)(encode(col("k"), "UTF-8"), col("m")))
+      .head.getAs[Array[Byte]](0)
+    val plus = CountingBloomSketch(cap, 0.001)
+    val minus = CountingBloomSketch(cap, 0.001)
+    rows.foreach { case (k, m) => (if (m > 0) plus else minus).insert(k) }
+    assert(java.util.Arrays.equals(blob, SketchCodec.encodeCountingBloom(plus.subtractInPlace(minus))),
+      "3M-capacity gf.cbfAgg blob != core build")
+  }
+
+  test("every scalar maps a null blob to null (probes: false), Column API and SQL alike") {
+    import spark.implicits._
+    gf.registerAll(spark)
+    val df = Seq((null: Array[Byte], "key".getBytes("UTF-8"))).toDF("s", "k")
+    df.createOrReplaceTempView("null_blob_v")
+    val s = col("s")
+    val k = col("k")
+    // (Column API, SQL name or null when the scalar has no SQL form,
+    //  SQL arguments, expected value)
+    val cases = Seq[(Column, String, String, Any)](
+      (gf.bloomMightContain(s, k), "bloom_might_contain", "s, k", false),
+      (gf.bloomElementCount(s), "bloom_element_count", "s", null),
+      (gf.bloomFpp(s), "bloom_fpp", "s", null),
+      (gf.bloomUnion(s, s), "bloom_union", "s, s", null),
+      (gf.bloomIntersect(s, s), "bloom_intersect", "s, s", null),
+      (gf.hllEstimate(s), "hll_estimate", "s", null),
+      (gf.hllMerge(s, s), null, "", null),
+      (gf.cmsEstimate(s, k), "cms_estimate", "s, k", null),
+      (gf.cmsTotalCount(s), null, "", null),
+      (gf.tdigestQuantile(s, 0.5), "tdigest_quantile", "s, 0.5", null),
+      (gf.kllQuantile(s, 0.5), "kll_quantile", "s, 0.5", null),
+      (gf.kllRank(s, 1.0), null, "", null),
+      (gf.thetaEstimate(s), "theta_estimate", "s", null),
+      (gf.thetaUnion(s, s), "theta_union", "s, s", null),
+      (gf.thetaIntersect(s, s), "theta_intersect", "s, s", null),
+      (gf.thetaDifference(s, s), "theta_difference", "s, s", null),
+      (gf.sketchDescribe(s), "sketch_describe", "s", null),
+      (gf.bottomKSampleStrings(s), "bottomk_sample_strings", "s", null),
+      (gf.bottomKSampleBytes(s), null, "", null),
+      (gf.weightedSampleStrings(s), "weighted_sample_strings", "s", null),
+      (gf.mgHeavyHitters(s), null, "", null),
+      (gf.mgErrorBound(s), null, "", null),
+      (gf.cbfMightContain(s, k), "cbf_might_contain", "s, k", false),
+      (gf.cbfToBloom(s), "cbf_to_bloom", "s", null),
+      (gf.cbfElementCount(s), "cbf_element_count", "s", null),
+      (gf.cbfSubtract(s, s), "cbf_subtract", "s, s", null),
+      (gf.cbfMerge(s, s), "cbf_merge", "s, s", null))
+    cases.foreach { case (c, name, args, expected) =>
+      val viaColumn = df.select(c).head.get(0)
+      assert(viaColumn == expected, s"Column API $c: $viaColumn")
+      if (name != null) {
+        val viaSql = spark.sql(s"SELECT $name($args) FROM null_blob_v").head.get(0)
+        assert(viaSql == expected, s"SQL $name: $viaSql")
+      }
+    }
   }
 }

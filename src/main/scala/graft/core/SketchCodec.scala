@@ -20,7 +20,10 @@ object SketchCodec {
     * false ⇒ false negatives), so the codec records it and probe paths
     * enforce it. */
   object KeyMode {
-    /** caller-encoded canonical bytes (functions.sketchKey, the gf.* builds) */
+    /** caller-encoded canonical bytes: the gf.* builds hash the UTF-8 of
+      * the key columns cast to string, joined by 0x01, a null column as
+      * `\u0002NULL\u0003` (functions.sketchKey, one catalyst.SketchKey
+      * expression; malformed UTF-8 replaced by U+FFFD as encode() does) */
     val Bytes: Byte = 0
     /** native row-hash (graft.spark.catalyst expressions) */
     val RowHash: Byte = 1
@@ -161,34 +164,35 @@ object SketchCodec {
     val w = s.bits.words
     val nW = w.length
 
-    // measure all three layouts (one pass each, O(words) + O(ones))
+    // measure all three layouts in one word-level pass: within a word
+    // every offset-list delta is < 64 (one varint byte), so only each
+    // nonzero word's first set bit needs a real varint size; a word-RLE
+    // group is sized when its literal run ends
     val densePayload = 3 + 16 + 4 + 8 + 8 * nW
     var offsetBody = 4
     var ones = 0
-    var prevPos = 0L
+    var lastPos = 0L
+    var rleBody = 0
+    var zeroRun = 0L
+    var litRun = 0
     var wi = 0
     while (wi < nW) {
-      var bits = w(wi)
-      while (bits != 0L) {
-        val pos = wi.toLong * 64 + java.lang.Long.numberOfTrailingZeros(bits)
-        offsetBody += varintSize(if (ones == 0) pos else pos - prevPos)
-        prevPos = pos
-        ones += 1
-        bits &= bits - 1
+      val word = w(wi)
+      if (word != 0L) {
+        val first = wi.toLong * 64 + java.lang.Long.numberOfTrailingZeros(word)
+        val c = java.lang.Long.bitCount(word)
+        offsetBody += varintSize(if (ones == 0) first else first - lastPos) + c - 1
+        ones += c
+        lastPos = wi.toLong * 64 + 63 - java.lang.Long.numberOfLeadingZeros(word)
+        if (litRun == 0) { rleBody += varintSize(zeroRun); zeroRun = 0 }
+        litRun += 1
+      } else {
+        if (litRun > 0) { rleBody += varintSize(litRun.toLong) + 8 * litRun; litRun = 0 }
+        zeroRun += 1
       }
       wi += 1
     }
-    var rleBody = 0
-    wi = 0
-    while (wi < nW) {
-      var z = 0L
-      while (wi < nW && w(wi) == 0L) { z += 1; wi += 1 }
-      if (wi < nW) {
-        var lit = 0L
-        while (wi < nW && w(wi) != 0L) { lit += 1; wi += 1 }
-        rleBody += varintSize(z) + varintSize(lit) + 8 * lit.toInt
-      }
-    }
+    if (litRun > 0) rleBody += varintSize(litRun.toLong) + 8 * litRun
     val sparseHeader = 3 + 16 + 8 + 1
     val offsetPayload = sparseHeader + offsetBody
     val rlePayload = sparseHeader + rleBody
@@ -202,7 +206,7 @@ object SketchCodec {
       val bb = writer(TypeId.Bloom, offsetPayload, BloomSparseVersion)
       putSparseHeader(bb, 0)
       bb.putInt(ones)
-      prevPos = 0L
+      var prevPos = 0L
       var first = true
       wi = 0
       while (wi < nW) {
@@ -257,11 +261,16 @@ object SketchCodec {
     val hasherId = if (versionOf(bytes) >= 2) bb.get() else 0: Byte
     val capacity = bb.getLong()
     val fpp = bb.getDouble()
+    val cfg = BloomConfig(capacity, fpp)
+    // every length field is checked before it sizes an allocation, so a
+    // length-inflated blob fails here instead of with OutOfMemoryError
     val bits =
       // >= 3, not == 4: early round-5 builds stamped sparse Bloom v3
       // (Bloom never emitted v3 dense, so the byte is unambiguous)
       if (versionOf(bytes) >= SparseVersion) {
         val numBits = bb.getLong()
+        require(numBits == cfg.totalBits && ((numBits + 63) >>> 6) <= Int.MaxValue,
+          s"corrupt Bloom blob: config says ${cfg.totalBits} bits, header has $numBits")
         val nWords = ((numBits + 63) >>> 6).toInt
         val words = new Array[Long](nWords)
         bb.get() match {
@@ -290,12 +299,14 @@ object SketchCodec {
       } else {
         val nWords = bb.getInt()
         val numBits = bb.getLong()
+        require(nWords >= 0 && nWords <= bb.remaining / 8 && numBits >= 0 &&
+            nWords == ((numBits + 63) >>> 6),
+          s"corrupt dense Bloom blob: $nWords words for $numBits bits in ${bb.remaining} bytes")
         val words = new Array[Long](nWords)
         var i = 0
         while (i < nWords) { words(i) = bb.getLong(); i += 1 }
         BitArray.fromWords(words, numBits)
       }
-    val cfg = BloomConfig(capacity, fpp)
     require(cfg.totalBits == bits.numBits,
       s"corrupt Bloom blob: config says ${cfg.totalBits} bits, payload has ${bits.numBits}")
     variant match {

@@ -14,10 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Keys are hashed straight from the raw Catalyst values in the
   * InternalRow, exactly how Spark's own `xxhash64`/`hash` expressions walk
   * their children. The byte-key builders of graft.spark.functions are the
-  * same aggregates over ONE binary `sketchKey` column: RowHasher folds a
-  * single BINARY child to exactly the kernels' `hashers.h1/h2(bytes)` and
-  * `xxHash64(bytes, 0)`, so those blobs equal a core bulk insert of the
-  * bytes. Buffers live as plain objects in ObjectHashAggregate and
+  * same aggregates over ONE binary `sketchKey` column — a single
+  * non-nullable [[SketchKey]] expression that writes the key bytes once,
+  * compiled into the aggregate's key projection, so the null-key FILTER
+  * folds away. RowHasher folds a single BINARY child to exactly the
+  * kernels' `hashers.h1/h2(bytes)` and `xxHash64(bytes, 0)`, so those
+  * blobs equal a core bulk insert of the bytes. Buffers live as plain objects in ObjectHashAggregate and
   * serialize through the graft codec only when crossing the shuffle.
   *
   * Hash-convention note: Bloom and CMS blobs carry the aggregate's

@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.core._
 import graft.spark.catalyst.{BloomSketchAgg, CbfSketchAgg, CmsSketchAgg, HllSketchAgg,
-  SeededBloomSketchAgg}
+  SeededBloomSketchAgg, SketchKey}
 import org.apache.spark.sql.{Column, SparkSession, GraftSqlBridge => B}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, IsNotNull, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
@@ -25,18 +25,23 @@ import java.util.concurrent.ConcurrentHashMap
   */
 object functions {
 
-  /** Canonical binary key encoding for any column tuple: columns cast to
-    * string, joined by  (never appears in the testdata keys), UTF-8.
-    * Codegen'd built-ins end-to-end — no UDF on the hot path before the
-    * aggregate. Nulls map to a dedicated tag — concat_ws SKIPS nulls,
-    * which would make (null,"x") collide with ("x",null). The outer
-    * coalesce never fires: it tells the optimizer the key is not null, so
-    * the aggregates' null-key FILTER folds away instead of re-evaluating
-    * the key per row. */
+  /** Canonical binary key of a column tuple, built by ONE codegen'd
+    * expression (catalyst.SketchKey) that writes each part's bytes once:
+    *   - each column is cast to string (kept at the Column level, so the
+    *     analyzer resolves time zones); a cast of an integral column is
+    *     written as its decimal digits without building a string;
+    *   - a null part is `\u0002NULL\u0003`, so (null, "x") and ("x", null)
+    *     stay distinct;
+    *   - parts are joined by 0x01 (never in the testdata keys); zero
+    *     columns give the empty key.
+    * The bytes are the UTF-8 of that string, checked in one pass over the
+    * whole key: malformed UTF-8 inside a part (a binary column cast to
+    * string) becomes U+FFFD exactly as `encode(…, 'UTF-8')` makes it, so
+    * the bytes equal the former `encode(concat_ws(…), 'UTF-8')` key for
+    * every input. The key is never null, so the aggregates' null-key
+    * FILTER folds away. */
   def sketchKey(cols: Column*): Column =
-    coalesce(encode(concat_ws("",
-      cols.map(c => coalesce(c.cast("string"), lit("NULL"))): _*), "UTF-8"),
-      lit(Array.emptyByteArray))
+    B.column(SketchKey(cols.map(c => B.expression(c.cast("string")))))
 
   // ------------------------------------------------------- aggregations
   /** A native aggregate over one BINARY key, null keys skipped by the

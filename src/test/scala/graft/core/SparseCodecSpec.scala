@@ -272,25 +272,27 @@ class SparseCodecSpec extends AnyFunSuite {
     assert(back.bits === s.bits)
   }
 
-  test("Bloom blob length is the smallest of the three layouts around the offset-list/dense crossover") {
-    // naive sizes: header(6), dense body, sparse header(28) + body
-    def varintLen(v: Long): Int = math.max(1, (64 - java.lang.Long.numberOfLeadingZeros(v) + 6) / 7)
-    def layoutMin(s: BloomSketch): Int = {
-      val w = s.bits.words
-      val ones = (0L until s.bits.numBits).filter(s.bits.get)
-      val offset = 28 + 4 + ones.zip(0L +: ones).map { case (p, q) => varintLen(p - q) }.sum
-      var rle = 28; var i = 0
-      while (i < w.length) {
-        val z = w.indexWhere(_ != 0L, i) match { case -1 => w.length - i; case j => j - i }
-        i += z
-        if (i < w.length) {
-          val lit = w.indexWhere(_ == 0L, i) match { case -1 => w.length - i; case j => j - i }
-          rle += varintLen(z) + varintLen(lit) + 8 * lit
-          i += lit
-        }
+  // naive per-layout sizes: header(6), dense body, sparse header(28) + body
+  private def varintLen(v: Long): Int =
+    math.max(1, (64 - java.lang.Long.numberOfLeadingZeros(v) + 6) / 7)
+  private def layoutMin(s: BloomSketch): Int = {
+    val w = s.bits.words
+    val ones = (0L until s.bits.numBits).filter(s.bits.get)
+    val offset = 28 + 4 + ones.zip(0L +: ones).map { case (p, q) => varintLen(p - q) }.sum
+    var rle = 28; var i = 0
+    while (i < w.length) {
+      val z = w.indexWhere(_ != 0L, i) match { case -1 => w.length - i; case j => j - i }
+      i += z
+      if (i < w.length) {
+        val lit = w.indexWhere(_ == 0L, i) match { case -1 => w.length - i; case j => j - i }
+        rle += varintLen(z) + varintLen(lit) + 8 * lit
+        i += lit
       }
-      6 + Seq(3 + 16 + 4 + 8 + 8 * w.length, offset, rle).min
     }
+    6 + Seq(3 + 16 + 4 + 8 + 8 * w.length, offset, rle).min
+  }
+
+  test("Bloom blob length is the smallest of the three layouts around the offset-list/dense crossover") {
     def check(s: BloomSketch, what: String): Unit = {
       val blob = SketchCodec.encodeBloom(s)
       assert(blob.length === layoutMin(s), what)
@@ -313,6 +315,65 @@ class SparseCodecSpec extends AnyFunSuite {
       s.insert(s"key-$i".getBytes("UTF-8")); i += 1
       if (s.bits.countOnes >= 8L * nW - 40) check(s, s"$i hashed keys")
     }
+  }
+
+  test("one-pass layout sizing: random filters encode to the smallest layout, losslessly") {
+    // fills from empty to dense, with runs of solid and empty words mixed
+    // in so every layout wins somewhere; the first set bit sits anywhere
+    val rnd = new scala.util.Random(5L)
+    // 300 words: a varint literal count of 2 bytes, so an all-nonzero
+    // filter ties RLE with dense (below 128 words RLE always wins by 1 B)
+    val cfg = BloomConfig(2000, 0.01)
+    val chosen = collection.mutable.Set.empty[Int]
+    for (trial <- 0 until 600) {
+      val bits = BitArray(cfg.totalBits)
+      val density = rnd.nextDouble() * (if (rnd.nextBoolean()) 1.0 else rnd.nextDouble())
+      val runs = rnd.nextInt(3) // 0: no runs; 1: solid runs; 2: solid and empty runs
+      var b = 0L
+      while (b < cfg.totalBits) {
+        rnd.nextInt(60) match {
+          case 0 if runs > 0 => // solid run
+            val end = math.min(cfg.totalBits, b + rnd.nextInt(2400))
+            while (b < end) { bits.set(b); b += 1 }
+          case 1 if runs > 1 => b += rnd.nextInt(6000) // empty run
+          case _ => if (rnd.nextDouble() < density) bits.set(b); b += 1
+        }
+      }
+      val s = new KMBloomSketch(cfg, bits, KMHashPair.XxMurmur)
+      val blob = SketchCodec.encodeBloom(s)
+      assert(blob.length === layoutMin(s), s"trial $trial: not the smallest layout")
+      chosen += (if (blob(5) == 2) 2 else blob(33).toInt)
+      assert(SketchCodec.decodeBloom(blob).bits === s.bits, s"trial $trial: round-trip")
+    }
+    assert(chosen === Set(0, 1, 2), s"random filters did not reach every layout: $chosen")
+  }
+
+  test("length-inflated Bloom blobs fail with the codec's error before allocating") {
+    def le(blob: Array[Byte], at: Int, v: Long, width: Int): Array[Byte] = {
+      val b = blob.clone()
+      (0 until width).foreach(i => b(at + i) = (v >>> (8 * i)).toByte)
+      b
+    }
+    // the length field sits after header(6), variant/keyMode/hasherId(3),
+    // capacity(8) and fpp(8): dense nWords (4 bytes), sparse numBits (8)
+    val dense = SketchCodec.encodeBloom(bloomOf(3000, 0 until 3000))
+    assert(dense(5) === 2)
+    for (n <- Seq(Int.MaxValue.toLong, 1L << 28, -1L, Int.MinValue.toLong)) {
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeBloom(le(dense, 25, n, 4)))
+      assert(e.getMessage.contains("corrupt"), s"dense nWords=$n: ${e.getMessage}")
+    }
+    val sparse = SketchCodec.encodeBloom(bloomOf(100000, 0 until 100))
+    assert(sparse(5) === 4)
+    for (n <- Seq(64L * Int.MaxValue, Long.MaxValue, 1L << 40, -1L, 64L * 100000)) {
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeBloom(le(sparse, 25, n, 8)))
+      assert(e.getMessage.contains("corrupt"), s"sparse numBits=$n: ${e.getMessage}")
+    }
+    // capacity (offset 9) and numBits inflated consistently, past what one
+    // Long array can index
+    val huge = BloomConfig(1L << 40, 0.001).totalBits
+    val e = intercept[IllegalArgumentException](SketchCodec.decodeBloom(
+      le(le(sparse, 9, 1L << 40, 8), 25, huge, 8)))
+    assert(e.getMessage.contains("corrupt"), e.getMessage)
   }
 
   test("describe renders sparse blobs; corrupt sparse blobs fail loudly") {

@@ -149,4 +149,50 @@ class CodegenParitySpec extends AnyFunSuite {
       assert(probed >= 1L)
     } finally spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
   }
+  test("SketchKey: generated code = interpreted eval on random rows of every part type") {
+    // pure Catalyst: the same bound expression through eval and through a
+    // Janino-compiled projection; random string parts include malformed
+    // UTF-8 (the bytes a binary column cast to string carries)
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val types = Seq(StringType, ByteType, ShortType, IntegerType, LongType, DoubleType,
+      DecimalType(12, 3), BooleanType, DateType, TimestampType, BinaryType)
+    val rnd = new scala.util.Random(20261018L)
+    def value(t: DataType): Any = t match {
+      case StringType => UTF8String.fromBytes(Array.fill(rnd.nextInt(6))(
+        if (rnd.nextInt(4) == 0) rnd.nextInt(256).toByte else (32 + rnd.nextInt(90)).toByte))
+      case BinaryType => Array.fill(rnd.nextInt(4))(rnd.nextInt(256).toByte)
+      case ByteType => rnd.nextInt(256).toByte
+      case ShortType => rnd.nextInt(65536).toShort
+      case IntegerType => if (rnd.nextBoolean()) rnd.nextInt() else rnd.nextInt(21) - 10
+      case LongType => rnd.nextInt(4) match {
+        case 0 => Long.MinValue
+        case 1 => Long.MaxValue
+        case _ => rnd.nextLong() >> rnd.nextInt(64)
+      }
+      case DoubleType => rnd.nextGaussian() * 1e6
+      case d: DecimalType => org.apache.spark.sql.types.Decimal(BigDecimal(rnd.nextInt(), 3), 12, 3)
+      case BooleanType => rnd.nextBoolean()
+      case DateType => rnd.nextInt(40000) - 20000
+      case TimestampType => rnd.nextLong() >> 12
+    }
+    val children = types.zipWithIndex.map { case (t, i) =>
+      Cast(BoundReference(i, t, nullable = true), StringType, Some("UTC"))
+    }
+    for (arity <- Seq(0, 1, 2, types.length)) {
+      val parts = if (arity == 0) Seq.empty else
+        (0 until arity).map(j => children((j * 7 + arity) % children.length))
+      val key = catalyst.SketchKey(parts)
+      val generated = GenerateUnsafeProjection.generate(Seq(key))
+      for (_ <- 0 until 2000) {
+        val row = new GenericInternalRow(types.map(t =>
+          if (rnd.nextInt(6) == 0) null else value(t)).toArray[Any])
+        val interpreted = key.eval(row).asInstanceOf[Array[Byte]]
+        val compiled = generated(row).getBinary(0)
+        assert(compiled.toSeq === interpreted.toSeq, s"arity $arity differs on $row")
+      }
+    }
+  }
 }

@@ -84,6 +84,20 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("ScalaAggregator"), s"udaf aggregator in the plan:\n$plan")
   }
 
+  test("byte-key build plan evaluates one key expression: no concat_ws/encode, no key FILTER") {
+    import graft.spark.{functions => gf}
+    val t = Transcripts.load(spark, sf)
+    val df = t.agg(
+      gf.bloomAgg(1000L, 0.01)(gf.sketchKey(col("conv_id"), col("turn_idx"))).as("b"),
+      gf.hllAgg(gf.sketchKey(col("conv_id"))).as("h"),
+      gf.cmsAgg(0.01, 0.01)(gf.sketchKey(col("tool"))).as("c"))
+    val plan = planOf(df)
+    assert(plan.contains("graft_sketch_key"), s"key expression missing from the plan:\n$plan")
+    Seq("concat_ws", "encode(", "FILTER").foreach { s =>
+      assert(!plan.contains(s), s"$s in the byte-key build plan:\n$plan")
+    }
+  }
+
   test("sharded global build: repartition-by-shard feeds the grouped agg, " +
       "merge stage sees blobs only (no full-size buffer per input partition)") {
     val t = Transcripts.load(spark, sf)

@@ -672,7 +672,7 @@ object PipelineEntries {
       val rowF = graft.spark.Par.overlapped(d.agg(
         countDistinct(col("text")).as("cd_text"),
         countDistinct(xxhash64(col("text"))).as("cd_fp")).head)
-      val sketch = shardedSketchBlobs(d.select(col("doc_id"), col("text")), 8, col("doc_id"))(
+      val sketch = shardedSketchBlobs(d.select(col("text")), 8)(
         "sk" -> bloomAggNative(math.max(n, 1000L), 0.001)(col("text")))
         .head.getAs[Array[Byte]]("sk")
       val zeroFn = d.filter(bloomMightContainNative(lit(sketch), col("text"))).count() == n
@@ -922,10 +922,11 @@ object PipelineEntries {
       val t = Transcripts.load(s, dir).cache()
       val n = t.count()
       // sharded build, kept two-stage on purpose (catalyst.
-      // shardedSketchBlobs is the one-exchange shape): the exact
-      // countDistinct(conv_id) needs a per-shard stage. Sharding on
-      // conv_id keeps it partition-disjoint, so stage 2 SUMs it while
-      // sketchMergeAgg folds the per-shard blobs executor-side.
+      // shardedSketchBlobs is the shape without a row shuffle): the exact
+      // countDistinct(conv_id) needs a per-shard stage over rows routed
+      // by conv_id. That routing keeps it partition-disjoint, so stage 2
+      // SUMs it while sketchMergeAgg folds the per-shard blobs
+      // executor-side.
       val shard = saltBucket(16, col("conv_id"))
       val row = t.select(col("conv_id"), col("turn_idx"))
         .repartition(16, shard)

@@ -29,16 +29,17 @@ object SparkEntry {
   private val BuildShards = 16
 
   /** Global sketch blob(s) over transcripts via the SHARDED path
-    * (graft.spark.catalyst.shardedSketchBlobs): full-size Bloom buffers
-    * exist once per shard — never once per input partition — and each
-    * shard's partial buffer merges straight into the final blob
+    * (graft.spark.catalyst.shardedSketchBlobs): the input is coalesced to
+    * at most BuildShards tasks, no row is shuffled, full-size Bloom
+    * buffers exist once per task — never once per input partition — and
+    * each partial buffer merges straight into the final blob
     * executor-side; only the final merged row reaches the driver.
-    * Projects to the named columns first so the shard shuffle carries
-    * key bytes, not whole rows. */
+    * Projects to the named columns first so the scan below the coalesce
+    * reads the key columns only. */
   private def shardedBlobRow(t: DataFrame, cols: Seq[String],
       aggs: (String, Column)*): org.apache.spark.sql.Row =
     graft.spark.catalyst.shardedSketchBlobs(
-      t.select(cols.map(col): _*), BuildShards, col(cols.head))(aggs: _*).head
+      t.select(cols.map(col): _*), BuildShards)(aggs: _*).head
 
   /** q58's retraction set: the error turns (~20% of rows). */
   private def errorTurn: Column = col("tool") === "error"
@@ -443,19 +444,20 @@ object SparkEntry {
       // agg. The bare `signed.agg(cbfAgg)` allocated one full-size DENSE
       // counting buffer (1 B/cell, ~14.4 cells per unit of capacity) PER
       // INPUT PARTITION and funneled every partial through ONE reducer —
-      // measured as 8.1 s of GC on the bench's cold run. The explicit
-      // shard repartition (on the key, so each key's +1/−1 rows
-      // co-locate) bounds full-size buffers to one per shard, and each
-      // shard's partial buffer merges straight into the final blob. The
-      // buffer crosses that exchange as its two codec blobs, so a shard's
-      // sparse partial filters travel sparse.
+      // measured as 8.1 s of GC on the bench's cold run. Coalescing the
+      // input to BuildShards tasks bounds full-size buffers to one per
+      // task with no row shuffle, and each partial buffer merges straight
+      // into the final blob. A key's +1 and −1 rows need not meet in one
+      // task: CbfSketchAgg keeps the insert and retract filters apart and
+      // subtracts once, at eval. The buffer crosses the one exchange as
+      // its two codec blobs, so a task's sparse partial filters travel
+      // sparse.
       // Counting-cell addition is commutative, so the merged cells — and
       // the encoded blob — are BIT-IDENTICAL to the bare global build's
       // (the same union law the q03 gate pins for the bit filter;
       // inc_cbf_eq pins the counting merge). The direct comparandum
       // build is sharded identically.
-      val cbfBlob = graft.spark.catalyst.shardedSketchBlobs(
-        q58Signed(t), BuildShards, col("k"))(
+      val cbfBlob = graft.spark.catalyst.shardedSketchBlobs(q58Signed(t), BuildShards)(
         "cbf" -> gf.cbfAgg(cap(n), P)(col("k"), col("m")))
         .head.getAs[Array[Byte]]("cbf")
       val directBlob = shardedBlobRow(t.filter(!errorTurn), Seq("conv_id", "turn_idx"),

@@ -99,6 +99,14 @@ object SketchCodec {
 
   private def versionOf(bytes: Array[Byte]): Byte = bytes(5)
 
+  /** A sparse body cannot bound the logical size its header declares, so
+    * a header inflated past the heap is refused here, typed, instead of
+    * failing the allocation with OutOfMemoryError. */
+  private def requireHeapFits(size: Long, what: String): Unit = {
+    val heap = Runtime.getRuntime.maxMemory
+    require(size <= heap, s"corrupt $what blob: declares $size bytes, more than the $heap-byte heap")
+  }
+
   /** Sniff the sketch type of an encoded blob without decoding it. */
   def typeOf(bytes: Array[Byte]): Byte = {
     require(bytes.length >= 6, "truncated sketch blob")
@@ -272,6 +280,7 @@ object SketchCodec {
         require(numBits == cfg.totalBits && ((numBits + 63) >>> 6) <= Int.MaxValue,
           s"corrupt Bloom blob: config says ${cfg.totalBits} bits, header has $numBits")
         val nWords = ((numBits + 63) >>> 6).toInt
+        requireHeapFits(8L * nWords, "Bloom")
         val words = new Array[Long](nWords)
         bb.get() match {
           case 0 => // offset-list
@@ -384,6 +393,7 @@ object SketchCodec {
   def decodeHll(bytes: Array[Byte]): HLLSketch = {
     val bb = reader(bytes, TypeId.Hll)
     val p = bb.getInt()
+    require(p >= 4 && p <= 18, s"corrupt HLL blob: precision $p outside [4,18]")
     val regs = new Array[Byte](1 << p)
     // v1 is dense; v3 is sparse; v2 is AMBIGUOUS (one build stamped v2
     // on dense payloads, another briefly wrote sparse payloads as v2) —
@@ -459,11 +469,16 @@ object SketchCodec {
     val d = bb.getInt()
     val w = bb.getInt()
     val total = bb.getLong()
-    val counters = new Array[Long](d * w)
+    val n = d.toLong * w
+    require(d > 0 && w > 0 && n <= Int.MaxValue, s"corrupt CMS blob: $d x $w counters")
+    requireHeapFits(8 * n, "CMS")
     // v1 dense, v3 sparse, v2 length-disambiguated (see decodeHll)
-    val denseLen = 6 + 1 + 4 + 4 + 8 + 8 * counters.length
+    val denseLen = 6 + 1 + 4 + 4 + 8 + 8 * n
     val sparse = versionOf(bytes) >= SparseVersion ||
       (versionOf(bytes) == 2 && bytes.length != denseLen)
+    require(sparse || 8 * n <= bb.remaining,
+      s"corrupt dense CMS blob: $d x $w counters in ${bb.remaining} bytes")
+    val counters = new Array[Long](n.toInt)
     if (sparse) {
       val nz = bb.getInt()
       var i = 0

@@ -157,23 +157,37 @@ package object catalyst {
     B.aggColumn(SketchMergeAgg(B.expression(blob)))
 
   /** Sharded build of GLOBAL (full-config) sketch blobs — the shape
-    * every one-blob build must take at 10^12 turns: rows go to a hash
-    * shard through an explicit `repartition(shards, …)`, so the
-    * global aggregate's partial step keeps ONE full-size buffer per
-    * shard, never one per input partition (a bare `df.agg(bloomAgg(...))`
+    * every one-blob build must take at 10^12 turns. A narrow
+    * `coalesce(shards)` groups the input partitions into at most
+    * `shards` tasks, and each task folds all of its rows straight into
+    * ONE full-size partial buffer: there are ≤ `shards` partial buffers,
+    * never one per input partition (a bare `df.agg(bloomAgg(...))`
     * allocates a full-size buffer per input partition and funnels every
     * merge through one reducer: measured 0.11 scaling efficiency,
-    * BENCH.md). Each shard's partial buffer is encoded once and crosses
-    * the one exchange to the final step, which decodes it once, unions
-    * it in and encodes the result once — one merged row ever exists,
-    * nothing per-shard reaches the driver.
+    * BENCH.md). No row is shuffled. The only exchange carries the ≤
+    * `shards` encoded buffers to the final step, which decodes each
+    * once, unions it in and encodes the result once — one merged row
+    * ever exists, nothing per-shard reaches the driver.
+    *
+    * Parallelism is min(input partitions, `shards`), and the coalesce
+    * is narrow: the work between it and the last exchange or scan below
+    * (a window, a join's reduce side) runs in those tasks too. An input
+    * that arrives in fewer partitions than there are cores, or that
+    * carries heavy narrow work, should be repartitioned or cached
+    * upstream. At the 10^12-turn sizing (256 shards over
+    * far more input partitions) this beats a hash shuffle of the rows:
+    * that shuffle writes and reads every key once more to bound the
+    * same buffer count, and a skewed shard key makes its slowest shard
+    * the stage's wall time, while a coalesce moves no row and gives each
+    * task a whole number of input partitions.
+    *
     * All agg columns must produce codec blobs (byte-key or row-hash; key
     * conventions are preserved per column). Returns the one-row frame of
     * blobs under the given names. Because sketch union is
-    * commutative/associative, ANY shard column yields the blob a one-shot
-    * `df.agg(…)` builds, byte for byte (reference union law,
+    * commutative/associative, ANY grouping of the input yields the blob a
+    * one-shot `df.agg(…)` builds, byte for byte (reference union law,
     * km_bloom_filter.rs:184–194; Agarwal et al., "Mergeable Summaries"). */
-  def shardedSketchBlobs(df: DataFrame, shards: Int, shardOn: Column)(
+  def shardedSketchBlobs(df: DataFrame, shards: Int)(
       aggs: (String, Column)*): DataFrame = {
     import org.apache.spark.sql.functions.{count, lit, raise_error, when}
     // a global aggregate over zero rows still yields a row of empty
@@ -185,8 +199,13 @@ package object catalyst {
         .otherwise(raise_error(lit(s"sharded build '$nm' over an empty input produced no sketch")))
         .as(nm)
     }
-    df.repartition(shards, saltBucket(shards, shardOn)).agg(cols.head, cols.tail: _*)
+    df.coalesce(shards).agg(cols.head, cols.tail: _*)
   }
+
+  /** [[shardedSketchBlobs(df, shards)]] with an ignored shard key. */
+  @deprecated("the shard key is unused: call shardedSketchBlobs(df, shards)(aggs*)", "0.1.0")
+  def shardedSketchBlobs(df: DataFrame, shards: Int, shardOn: Column)(
+      aggs: (String, Column)*): DataFrame = shardedSketchBlobs(df, shards)(aggs: _*)
 
   /** Probe a SHARD TABLE of row-hash Bloom filters WITHOUT ever merging
     * it — the query shape that actually exists at 10^12 turns, where the

@@ -44,11 +44,12 @@ object PlanReport {
       .head.getAs[Array[Byte]](0)
 
     show("Sharded sketch build (the 10^12-turn shape)",
-      "`shardedSketchBlobs`: the REPARTITION_BY_NUM exchange routes rows to\n" +
-        "their shard, the PARTIAL ObjectHashAggregate keeps one buffer per\n" +
-        "shard (insert loop = reference `insert`), one exchange ships those\n" +
-        "binary buffers to the FINAL merge (= reference `union`).") {
-      shardedSketchBlobs(t.select(col("conv_id"), col("turn_idx")), 8, col("conv_id"))(
+      "`shardedSketchBlobs`: a narrow `Coalesce 8` groups the input\n" +
+        "partitions into at most 8 tasks with no row shuffle, the PARTIAL\n" +
+        "ObjectHashAggregate keeps one buffer per task (insert loop =\n" +
+        "reference `insert`), and the one exchange ships those binary\n" +
+        "buffers to the FINAL merge (= reference `union`).") {
+      shardedSketchBlobs(t.select(col("conv_id"), col("turn_idx")), 8)(
         "bloom" -> bloomAggNative(1000L, 0.001)(col("conv_id"), col("turn_idx")),
         "hll" -> hllAggNative(col("conv_id")))
     }

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * dumps `explain("formatted")` of the INTERNAL aggregation both ways —
   * the pre-r07 global `signed.agg(cbfAgg)` (one dense counting buffer
   * per input partition, single final reducer) and the sharded
-  * `shardedSketchBlobs` shape (one REPARTITION_BY_NUM exchange on the
-  * key's shard, one partial buffer per shard, then one exchange into the
-  * final merge) — over the SAME `signed` relation q58 builds
+  * `shardedSketchBlobs` shape (a narrow coalesce to at most 16 tasks,
+  * no row shuffle, one partial buffer per task, then one exchange into
+  * the final merge) — over the SAME `signed` relation q58 builds
   * (SparkEntry.q58Signed).
   * Usage: runMain graft.tools.Q58InternalPlanDump <sfDir> [tag]
   */
@@ -34,8 +34,8 @@ object Q58InternalPlanDump {
     val cap = math.max(n, 1000L)
     val signed = graft.SparkEntry.q58Signed(t)
     val globalAgg = signed.agg(gf.cbfAgg(cap, P)(col("k"), col("m")))
-    val sharded = graft.spark.catalyst.shardedSketchBlobs(
-      signed, 16, col("k"))("cbf" -> gf.cbfAgg(cap, P)(col("k"), col("m")))
+    val sharded = graft.spark.catalyst.shardedSketchBlobs(signed, 16)(
+      "cbf" -> gf.cbfAgg(cap, P)(col("k"), col("m")))
     val dir = new java.io.File(s"plans/$tag"); dir.mkdirs()
     def dump(name: String, df: org.apache.spark.sql.DataFrame, note: String): Unit = {
       val out = new java.io.PrintWriter(s"plans/$tag/$name")
@@ -49,7 +49,7 @@ object Q58InternalPlanDump {
     dump("q58_cbf_retraction_internal_before.txt", globalAgg,
       "pre-r07 shape: global agg(cbfAgg) — dense partial buffer per input partition, one final reducer")
     dump("q58_cbf_retraction_internal_after.txt", sharded,
-      "sharded shape: shardedSketchBlobs — REPARTITION_BY_NUM on the key's shard, one partial buffer per shard, one exchange into the final merge")
+      "sharded shape: shardedSketchBlobs — coalesce to at most 16 tasks, no row shuffle, one partial buffer per task, one exchange into the final merge")
     spark.stop()
   }
 }

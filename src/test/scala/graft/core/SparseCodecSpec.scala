@@ -348,12 +348,14 @@ class SparseCodecSpec extends AnyFunSuite {
     assert(chosen === Set(0, 1, 2), s"random filters did not reach every layout: $chosen")
   }
 
+  /** A copy of `blob` with `width` little-endian bytes of `v` at `at`. */
+  private def le(blob: Array[Byte], at: Int, v: Long, width: Int): Array[Byte] = {
+    val b = blob.clone()
+    (0 until width).foreach(i => b(at + i) = (v >>> (8 * i)).toByte)
+    b
+  }
+
   test("length-inflated Bloom blobs fail with the codec's error before allocating") {
-    def le(blob: Array[Byte], at: Int, v: Long, width: Int): Array[Byte] = {
-      val b = blob.clone()
-      (0 until width).foreach(i => b(at + i) = (v >>> (8 * i)).toByte)
-      b
-    }
     // the length field sits after header(6), variant/keyMode/hasherId(3),
     // capacity(8) and fpp(8): dense nWords (4 bytes), sparse numBits (8)
     val dense = SketchCodec.encodeBloom(bloomOf(3000, 0 until 3000))
@@ -374,6 +376,52 @@ class SparseCodecSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](SketchCodec.decodeBloom(
       le(le(sparse, 9, 1L << 40, 8), 25, huge, 8)))
     assert(e.getMessage.contains("corrupt"), e.getMessage)
+  }
+
+  test("a sparse Bloom header inflated past the heap fails typed, not with OutOfMemoryError") {
+    // capacity (offset 9) and numBits (offset 25) inflated together: the
+    // word count stays under the Int bound, the logical size does not fit
+    val sparse = SketchCodec.encodeBloom(bloomOf(100000, 0 until 100))
+    val bits = BloomConfig(1L << 33, 0.001).totalBits
+    assert(((bits + 63) >>> 6) <= Int.MaxValue)
+    assume(((bits + 63) >>> 6) * 8 > Runtime.getRuntime.maxMemory)
+    val e = intercept[IllegalArgumentException](SketchCodec.decodeBloom(
+      le(le(sparse, 9, 1L << 33, 8), 25, bits, 8)))
+    assert(e.getMessage.contains("heap"), e.getMessage)
+  }
+
+  test("HLL blobs with an out-of-range precision fail typed before allocating") {
+    // p sits right after the 6-byte header; sparse and dense (v1) bodies
+    val blobs = Seq(SketchCodec.encodeHll(hllOf(0 until 50)),
+      SketchCodec.encodeHll(hllOf(0 until 200000)))
+    assert(blobs.map(_(5).toInt) === Seq(3, 1))
+    for (blob <- blobs; p <- Seq(31, 30, 19, 3, 0, -1, Int.MinValue)) {
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeHll(le(blob, 6, p, 4)))
+      assert(e.getMessage.contains("precision"), s"p=$p: ${e.getMessage}")
+    }
+  }
+
+  test("CMS blobs with inflated or overflowing dimensions fail typed before allocating") {
+    // keyMode(1) at 6, then depth(4) at 7 and width(4) at 11
+    def dims(blob: Array[Byte], d: Int, w: Int) = le(le(blob, 7, d, 4), 11, w, 4)
+    val sparse = SketchCodec.encodeCms(cmsOf(0 until 10))
+    val dense = SketchCodec.encodeCms(cmsOf(0 until 5000))
+    assert(sparse(5) === 3 && dense(5) === 1)
+    // non-positive, and products past the Int bound (65536 x 65536 wraps
+    // to 0 as an Int product)
+    for (blob <- Seq(sparse, dense);
+         (d, w) <- Seq((-1, 272), (5, 0), (0, 0), (65536, 65536), (Int.MaxValue, 2), (1 << 16, 1 << 15))) {
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeCms(dims(blob, d, w)))
+      assert(e.getMessage.contains("corrupt"), s"$d x $w: ${e.getMessage}")
+    }
+    // a dense grid larger than the bytes that follow the header
+    val short = intercept[IllegalArgumentException](SketchCodec.decodeCms(dims(dense, 5, 272 * 1000)))
+    assert(short.getMessage.contains("corrupt dense CMS"), short.getMessage)
+    // under the Int bound but past the heap: a sparse body cannot bound it
+    val (d, w) = (3, 715827882)
+    assume(8L * d * w > Runtime.getRuntime.maxMemory)
+    val e = intercept[IllegalArgumentException](SketchCodec.decodeCms(dims(sparse, d, w)))
+    assert(e.getMessage.contains("heap"), e.getMessage)
   }
 
   test("describe renders sparse blobs; corrupt sparse blobs fail loudly") {

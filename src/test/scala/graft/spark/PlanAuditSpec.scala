@@ -98,34 +98,37 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("sharded global build: repartition-by-shard feeds the grouped agg, " +
+  test("sharded global build: a narrow coalesce feeds the partial agg, no row exchange, " +
       "merge stage sees blobs only (no full-size buffer per input partition)") {
-    val t = Transcripts.load(spark, sf)
-    val df = shardedSketchBlobs(t.select(col("conv_id"), col("turn_idx")), 8, col("conv_id"))(
-      "sk" -> bloomAggNative(1000L, 0.01)(col("conv_id"), col("turn_idx")))
+    // a plain scan (Transcripts.load numbers turns with a window, whose
+    // own exchange would hide whether the build adds one)
+    val ev = spark.read.parquet(s"$sf/events.parquet").select(col("user_id"), col("event_id"))
+    val df = shardedSketchBlobs(ev, 8)(
+      "sk" -> bloomAggNative(1000L, 0.01)(col("user_id"), col("event_id")))
     val plan = planOf(df)
     val lines = plan.linesIterator.toIndexedSeq
-    // the row shuffle is the EXPLICIT repartition (shard count chosen by
-    // the caller), not an aggregation ENSURE_REQUIREMENTS exchange — that
-    // is what bounds live full-size buffers to the shard count
-    val rep = lines.indexWhere(_.contains("REPARTITION_BY_NUM"))
-    assert(rep >= 0, s"no explicit shard repartition:\n$plan")
-    // below the repartition: only the scan/projection — the partial
-    // aggregate (where full-size buffers live) sits ABOVE it
-    assert(!lines.drop(rep).exists(_.contains("ObjectHashAggregate")),
-      s"aggregate below the shard repartition:\n$plan")
+    def isPartial(l: String) = l.contains("ObjectHashAggregate") && l.contains("partial_graft_")
+    val partial = lines.indexWhere(isPartial)
+    assert(partial >= 0, s"no partial sketch aggregate:\n$plan")
+    // the partial aggregate (where full-size buffers live) reads the
+    // caller's shard count of coalesced input partitions — that bounds
+    // live buffers to the shard count — and no row crosses an exchange
+    // on the way there
+    assert(partial + 1 < lines.length && lines(partial + 1).contains("Coalesce 8"),
+      s"no Coalesce 8 directly under the partial aggregate:\n$plan")
+    assert(!lines.drop(partial).exists(_.contains("Exchange")),
+      s"exchange below the partial aggregate:\n$plan")
     // exactly one exchange above it, and what crosses it is the partial
-    // aggregate's output (one buffer per shard), not rows or shard blobs
-    val above = lines.take(rep)
+    // aggregate's output (one buffer per task), not rows or shard blobs
+    val above = lines.take(partial)
     val exchanges = above.indices.filter(i => above(i).contains("Exchange "))
-    assert(exchanges.size == 1, s"expected one exchange above the shard repartition:\n$plan")
-    val between = above.drop(exchanges.head + 1)
-    assert(between.nonEmpty && between.forall(l =>
-        l.contains("ObjectHashAggregate") && l.contains("partial_graft_bloom_agg")),
-      s"not only a partial aggregate between the two exchanges:\n$plan")
-    assert(above.take(exchanges.head).exists(_.contains("ObjectHashAggregate")),
-      s"no final aggregate above the last exchange:\n$plan")
-    // the shard buffers merge in that final aggregate: no blob re-fold
+    assert(exchanges.size == 1, s"expected one exchange above the partial aggregate:\n$plan")
+    assert(lines.slice(exchanges.head + 1, partial + 1).forall(isPartial),
+      s"not only a partial aggregate between the exchange and the coalesce:\n$plan")
+    assert(above.take(exchanges.head).exists(l =>
+        l.contains("ObjectHashAggregate") && !l.contains("partial_")),
+      s"no final aggregate above the exchange:\n$plan")
+    // the task buffers merge in that final aggregate: no blob re-fold
     assert(!plan.contains("graft_sketch_merge_agg"), s"second merge stage:\n$plan")
   }
 

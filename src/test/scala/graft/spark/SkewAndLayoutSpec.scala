@@ -119,7 +119,7 @@ class SkewAndLayoutSpec extends AnyFunSuite {
     val empty = spark.range(0)
       .selectExpr("CAST(id AS STRING) AS conv_id", "CAST(id AS INT) AS turn_idx")
     val ex = intercept[Exception] {
-      shardedSketchBlobs(empty, 4, col("conv_id"))(
+      shardedSketchBlobs(empty, 4)(
         "sk" -> bloomAggNative(1000L, 0.01)(col("conv_id"), col("turn_idx"))).head
     }
     def messages(t: Throwable): Seq[String] =
@@ -147,14 +147,89 @@ class SkewAndLayoutSpec extends AnyFunSuite {
       "cbf" -> gf.cbfAgg(8000L, 0.01)(col("k"), col("m")))
     val oneShot = signed.agg(aggs.head._2.as(aggs.head._1),
       aggs.tail.map { case (nm, c) => c.as(nm) }: _*).head
-    // 5 distinct conv_ids: 64 shards leaves most shards empty
+    // the union has 12 input partitions: 64 shards leaves them uncoalesced
     for (shards <- Seq(1, 4, 64)) {
-      val sharded = shardedSketchBlobs(signed, shards, col("conv_id"))(aggs: _*).head
+      val sharded = shardedSketchBlobs(signed, shards)(aggs: _*).head
       aggs.foreach { case (nm, _) =>
         assert(sharded.getAs[Array[Byte]](nm).sameElements(oneShot.getAs[Array[Byte]](nm)),
           s"$nm differs from the one-shot build at $shards shards")
       }
     }
+  }
+
+  test("sharded build runs one shuffle-writing stage of min(input partitions, shards) tasks") {
+    import graft.spark.catalyst._
+    import graft.spark.{functions => gf}
+    import org.apache.spark.scheduler._
+    import spark.implicits._
+    /** Stage ids, task counts and shuffle bytes written, per job group.
+      * A fence job in its own group marks the end of the bus events of
+      * everything run before it: the bus delivers in order. */
+    final class StageLog extends SparkListener {
+      val jobGroup = scala.collection.mutable.Map.empty[Int, String]
+      val groupOfStage = scala.collection.mutable.Map.empty[Int, String]
+      val done = scala.collection.mutable.Map.empty[Int, (Int, Long)]
+      val endedGroups = scala.collection.mutable.Set.empty[String]
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        jobGroup(e.jobId) = g
+        e.stageIds.foreach(groupOfStage(_) = g)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+        val i = e.stageInfo
+        done(i.stageId) = (i.numTasks, i.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+        jobGroup.get(e.jobId).foreach(endedGroups += _)
+      }
+      // a Seq, not a Map: two stages may share (tasks, bytes)
+      def stages(group: String): Seq[(Int, Long)] = synchronized {
+        done.toSeq.collect { case (id, v) if groupOfStage.get(id).contains(group) => v }
+      }
+      def fenced(fence: String): Boolean = synchronized(endedGroups(fence))
+    }
+    val sc = spark.sparkContext
+    def run(partitions: Int, shards: Int): Unit = {
+      val turns = sc.parallelize((0 until 20000).map(i => (s"c${i % 97}", i)), partitions)
+        .toDF("conv_id", "turn_idx")
+      val aggs: Seq[(String, org.apache.spark.sql.Column)] = Seq(
+        "rowHash" -> bloomAggNative(20000L, 0.01)(col("conv_id"), col("turn_idx")),
+        "bloom" -> gf.bloomAgg(20000L, 0.01)(gf.sketchKey(col("conv_id"), col("turn_idx"))),
+        "hll" -> gf.hllAgg(gf.sketchKey(col("conv_id"))))
+      val log = new StageLog
+      val group = s"sharded-$partitions-$shards"
+      sc.addSparkListener(log)
+      val build = shardedSketchBlobs(turns, shards)(aggs: _*)
+      val sharded = try {
+        sc.setJobGroup(group, group)
+        val row = build.head
+        sc.setJobGroup(s"$group-fence", "fence")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.currentTimeMillis() + 60000L
+        while (!log.fenced(s"$group-fence") && System.currentTimeMillis() < deadline) Thread.sleep(10)
+        assert(log.fenced(s"$group-fence"), "listener bus did not drain")
+        row
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(log)
+      }
+      // the partial aggregate's stage is the only one that writes shuffle
+      // output: no row exchange ran before it
+      val writers = log.stages(group).filter(_._2 > 0)
+      assert(writers.size == 1, s"$partitions partitions, $shards shards: " +
+        s"stages (tasks, shuffle bytes written) ${log.stages(group)}\n" +
+        build.queryExecution.executedPlan)
+      assert(writers.head._1 == math.min(partitions, shards),
+        s"$partitions partitions, $shards shards: partial stage ran ${writers.head._1} tasks")
+      val oneShot = turns.agg(aggs.head._2.as(aggs.head._1),
+        aggs.tail.map { case (nm, c) => c.as(nm) }: _*).head
+      aggs.foreach { case (nm, _) =>
+        assert(sharded.getAs[Array[Byte]](nm).sameElements(oneShot.getAs[Array[Byte]](nm)),
+          s"$nm differs from the one-shot build ($partitions partitions, $shards shards)")
+      }
+    }
+    run(partitions = 40, shards = 4)
+    run(partitions = 1, shards = 16)
   }
 
   test("bucket-directory layout: probe routing prunes partitions at the scan") {

@@ -1324,7 +1324,7 @@ object PipelineEntries {
         val extraEmptyF = graft.spark.Par.overlapped(
           pairs.join(truePairs, Seq("doc_new", "doc_old"), "left_anti").count() == 0)
         val nNovelF = graft.spark.Par.overlapped(graft.pipeline.LshIndex
-          .novelDocs(s, split, batch, corpus, Some(verified)).count())
+          .novel(s, split, batch, corpus, Some(verified)).count())
         val missedEmpty =
           truePairs.join(pairs, Seq("doc_new", "doc_old"), "left_anti").count() == 0
         val pairSetExact = extraEmptyF() && missedEmpty
@@ -1343,7 +1343,7 @@ object PipelineEntries {
     // between TWO persisted LSH indexes — the contamination-sweep shape
     // at corpus × corpus scale. Neither corpus is re-shingled: both sides
     // of the candidate join are scans of already-persisted 8-byte band
-    // keys (BandIndexOps.crossIndexCandidates has the O(|A|+|B|) vs
+    // keys (BandIndex.crossCandidates has the O(|A|+|B|) vs
     // O(corpus·signature) argument). Fan-outs DELIBERATELY differ (32 vs
     // 64) — bucket layout is an index-local property; the band keys join.
     // Gate: exact-verified cross pairs ≡ the exact Jaccard ≥ 1/2 cross
@@ -1582,7 +1582,7 @@ object PipelineEntries {
           truth.join(pairs, Seq("vec_new", "vec_old"), "left_anti").count() == 0
         val pairSetExact = extraEmptyF() && missedEmpty
         val nNovel = graft.pipeline.SrpIndex
-          .novelVecs(s, split, batch, emb, verifiedPairs = Some(verified)).count()
+          .novel(s, split, batch, emb, verifiedPairs = Some(verified)).count()
         verified.unpersist(); truth.unpersist()
         Seq((nBatch, nTrue, nNovel, pairSetExact, appendEq))
           .toDF("n_batch", "n_true_pairs", "n_novel", "pair_set_exact",

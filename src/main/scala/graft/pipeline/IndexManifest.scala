@@ -1,10 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** GENERATIONAL index root — the manifest-flip lifecycle shared by every
-  * persisted index in this library (IVF/IVF-PQ vector indexes, the
-  * MinHash-LSH band index):
+/** The persisted-index protocol shared by every index family in this
+  * library (IVF/IVF-PQ vector indexes, the LSH and SRP band indexes):
+  * the sidecar read and the generational manifest-flip lifecycle.
+  *
+  * SIDECARS are config dirs inside an index dir (`_codebook`,
+  * `_pqbooks`, `_lshmeta`, `_srpmeta`), written LAST by every build.
+  * [[hasSidecar]] is the one "committed" test: part-files exist under
+  * the dir. A crash during the sidecar write leaves the dir holding only
+  * `_temporary`, and a bare exists() check would hand that to a parquet
+  * read that fails with an untyped schema-inference error.
+  * [[requireSidecar]] turns every uncommitted sidecar into the same
+  * curated IllegalArgumentException on every read path.
+  *
+  * GENERATIONS:
   *
   * {{{
   * root/
@@ -35,6 +46,36 @@ private[pipeline] object IndexManifest {
   private def fs(spark: SparkSession, path: String) = {
     val p = new org.apache.hadoop.fs.Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** Whether `indexPath/dir` holds a committed sidecar (part-files, not
+    * just the `_temporary` litter of a write torn mid-flight). */
+  def hasSidecar(spark: SparkSession, indexPath: String, dir: String): Boolean = {
+    val (f, p) = fs(spark, s"$indexPath/$dir")
+    f.exists(p) &&
+      Option(f.globStatus(new org.apache.hadoop.fs.Path(s"$p/part-*"))).exists(_.nonEmpty)
+  }
+
+  /** The committed sidecar dir `indexPath/dir` (its file system and
+    * path, the identity a [[SidecarCache]] keys on), or a curated
+    * IllegalArgumentException naming the family (`what`) and the entry
+    * point that builds one (`buildHint`). */
+  def requireSidecar(spark: SparkSession, indexPath: String, dir: String,
+      what: String, buildHint: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    require(hasSidecar(spark, indexPath, dir),
+      s"no $dir sidecar at $indexPath — not $what (or the write did not " +
+        s"complete); build with $buildHint")
+    fs(spark, s"$indexPath/$dir")
+  }
+
+  /** [[requireSidecar]], then the sidecar's rows. Explicit reads of an
+    * underscore-prefixed dir succeed (the filter only hides it from
+    * PARENT-dir listings) but log a cosmetic "All paths were ignored"
+    * WARN — expected, same trick as _spark_metadata/_delta_log. */
+  def readSidecar(spark: SparkSession, indexPath: String, dir: String,
+      what: String, buildHint: String): DataFrame = {
+    requireSidecar(spark, indexPath, dir, what, buildHint)
+    spark.read.parquet(s"$indexPath/$dir")
   }
 
   /** (version, generation dir name) pairs present in the manifest,
@@ -77,6 +118,26 @@ private[pipeline] object IndexManifest {
     finally out.close()
   }
 
+  /** The one generation swap: `write` a complete index into a fresh
+    * generation dir, THEN install it — a crash before the install leaves
+    * no manifest entry, so readers never see the partial write, and a
+    * retry takes the next generation name (the orphan is reclaimed by a
+    * later [[retireOldGenerations]]). Returns the new data path. */
+  def installNext(spark: SparkSession, rootPath: String)(write: String => Unit): String = {
+    val gen = nextGenName(spark, rootPath)
+    write(s"$rootPath/$gen")
+    installGeneration(spark, rootPath, gen)
+    s"$rootPath/$gen"
+  }
+
+  /** [[installNext]] for a generation derived from the current one
+    * (compaction, re-bucketing): `rewrite(currentPath, newPath)`. */
+  def rewriteCurrent(spark: SparkSession, rootPath: String, buildHint: String)(
+      rewrite: (String, String) => Unit): String = {
+    val src = currentPath(spark, rootPath, buildHint)
+    installNext(spark, rootPath)(rewrite(src, _))
+  }
+
   /** Name of the next generation dir under the root. Regex, not a bare
     * toInt on the suffix: a stray `gen-tmp` scratch dir under the root
     * must not kill every future build. */
@@ -112,5 +173,39 @@ private[pipeline] object IndexManifest {
         case _ => false
       })
       .map { gp => f.delete(gp, true); s"$rootPath/${gp.getName}" }
+  }
+}
+
+/** Access-ordered LRU of VERIFIED sidecar reads keyed by the sidecar
+  * dir's on-disk identity (every data file's path, mtime and length) —
+  * an ingest loop probes + appends the SAME index per batch, and each
+  * verified read costs a parquet job + collect, pure fixed cost at any
+  * corpus size. A rebuilt/overwritten sidecar changes its file status,
+  * so stale entries can never be returned. Eviction is per-entry
+  * (`removeEldestEntry`), never wholesale — the BloomProbeHelper rule;
+  * 64 live indexes per JVM is far beyond any real ingest loop. */
+private[pipeline] final class SidecarCache[M](maxEntries: Int = 64) {
+  private val memo =
+    new java.util.LinkedHashMap[Seq[(String, Long, Long)], M](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[(String, Long, Long)], M]): Boolean =
+        size() > maxEntries
+    }
+
+  /** The verified value for the sidecar at `dir`, loading (and caching)
+    * via `load` on miss. `fs`/`dir` must point at the sidecar dir whose
+    * part-files define the cache identity. */
+  def getOrLoad(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path)(load: => M): M = {
+    val key = fs.listStatus(dir).filter(_.getPath.getName.startsWith("part-"))
+      .map(s => (s.getPath.toString, s.getModificationTime, s.getLen))
+      .sortBy(_._1).toSeq
+    memo.synchronized {
+      val hit = memo.get(key)
+      if (hit != null) return hit
+    }
+    val v = load
+    memo.synchronized { memo.put(key, v); () }
+    v
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PERSISTED MinHash-LSH band index — the text-dedup sibling of the
@@ -9,29 +9,13 @@ import org.apache.spark.sql.functions._
   * thing is NOT the candidate join — it is re-shingling and re-minhashing
   * the corpus every time a new ingest batch has to be deduped against it.
   *
-  * Layout on disk (parquet):
-  *   bucket=0/…bucket=N-1/   (band, bkey, doc_id) rows, 42 per doc
-  *   _lshmeta/               config sidecar (see below)
-  *
-  * - `bucket = bkey & (N-1)` is the PARTITION column: a novelty probe for
-  *   a small batch touches ≤ 42·|batch| of N buckets, so point lookups
-  *   ("is this document already in the corpus?") prune the scan the way
-  *   IVF probes prune centroid lists — PartitionFilters in the executed
-  *   plan, unprobed buckets never leave storage (LshIndexSpec pins the
-  *   files-read count). N is an INDEX property recorded in the sidecar
-  *   (default 256), not a library constant: probe and append derive the
-  *   bucket of each band key from the sidecar, so indexes built at
-  *   different fan-outs interoperate with one binary.
-  * - The INCREMENTAL contract mirrors appendToIvfIndex: band keys are a
-  *   pure function of (text, hash-family constants), so build-half +
-  *   append-half is row-identical to a one-shot build (q55 gates it by
-  *   xor-signature), and a probe against the accreted index equals a
-  *   probe against a from-scratch one.
-  * - The `_lshmeta` sidecar pins the hash-family shape (rows-per-band,
-  *   bands, bucket count, shingle width) with a self-verifying
-  *   fingerprint: probing or appending with a library compiled to a
-  *   DIFFERENT banding never silently returns empty candidate sets — it
-  *   throws at the door, the codebook-mismatch rule.
+  * The layout, sidecar protocol, probe, ingest and lifecycle are
+  * [[BandIndex]]'s. This family stores 42 (band, bkey, doc_id) rows per
+  * document (Broder 1997 banding over word 3-shingles), pins rows per
+  * band, bands and shingle width in its `_lshmeta` sidecar, and
+  * exact-verifies candidates by Jaccard ≥ 1/2 (the q15 criterion). q55
+  * gates build-half + append-half against the one-shot projection by
+  * xor-signature.
   *
   * Scale accounting (the honest trade): the index stores 42 × 20 B rows
   * per document (~300 B/doc after parquet encoding) — small next to the
@@ -42,387 +26,51 @@ import org.apache.spark.sql.functions._
   * the same increment-vs-reprocess argument as the weighted-sample blobs
   * (BENCH.md "Weighted training-mix sampling") and the IVF append path.
   */
-object LshIndex {
+object LshIndex extends BandIndex(LshFamily.value)
 
-  /** Default bucket fan-out for new indexes. 256 keeps the partition
-    * count storage-friendly at corpus scale while a single-doc probe
-    * (42 band keys) prunes ≥ 83% of it. Must be a power of two (the
-    * bucket is the low bits of the 64-bit band key). */
-  val NumBuckets: Int = 256
+/** The MinHash text family: shingle+minhash signature, Jaccard verify. */
+private object LshFamily {
 
-  private val MetaDir = "_lshmeta"
-
-  /** The banding constants an index on disk must agree with. Bumping the
-    * hash-family fields in code orphans existing indexes — by design:
-    * their keys are not comparable. `buckets` is a layout property of
-    * the individual index, not of the hash family. */
-  private case class Meta(rowsPerBand: Int, bands: Int, buckets: Int,
-      shingleWidth: Int) {
-    def fingerprint: Long = {
-      var h = 0x15AL
-      for (v <- Seq(rowsPerBand, bands, buckets, shingleWidth))
-        h = graft.core.Hashing.xxHash64Long(v.toLong, h)
-      h
-    }
-    def family: (Int, Int, Int) = (rowsPerBand, bands, shingleWidth)
-  }
-
-  private def currentMeta(buckets: Int): Meta =
-    Meta(TextPipeline.MinhashRows, TextPipeline.MinhashBands, buckets,
-      TextPipeline.ShingleWidth)
-
-  /** (doc_id, band, bkey, bucket) — the map-only signature projection
-    * shared verbatim by build, append and probe (the
-    * VectorPipeline.pqIndexRows rule: the three paths can never drift).
-    * Public so callers can gate an on-disk index's content against the
-    * from-scratch projection (q55's append-equivalence signature) without
-    * materializing a second index. */
-  def indexRows(docs: DataFrame, numBuckets: Int = NumBuckets): DataFrame = {
-    BandIndexOps.requirePow2(numBuckets)
-    TextPipeline.withShingles(docs, "__sh")
+  val value: BandFamily = BandFamily(
+    name = "LSH banding", owner = "LshIndex", metaDir = "_lshmeta", seed = 0x15AL,
+    fields = Seq("rows_per_band" -> TextPipeline.MinhashRows,
+      "bands" -> TextPipeline.MinhashBands,
+      "shingle_width" -> TextPipeline.ShingleWidth),
+    bucketsPos = 2,
+    idCol = "doc_id", payloadCol = "text",
+    sign = docs => TextPipeline.withShingles(docs, "__sh")
       .select(col("doc_id"),
         posexplode_outer(graft.spark.catalyst.minhashBandKeys(col("__sh")))
-          .as(Seq("band", "bkey")))
-      .filter(col("bkey").isNotNull)
-      .withColumn("bucket", BandIndexOps.bucketOf(col("bkey"), numBuckets))
-  }
+          .as(Seq("band", "bkey"))),
+    verify = jaccard)
 
-  private def writeMeta(spark: SparkSession, path: String, buckets: Int): Unit = {
-    import spark.implicits._
-    val m = currentMeta(buckets)
-    Seq((m.rowsPerBand, m.bands, m.buckets, m.shingleWidth, m.fingerprint))
-      .toDF("rows_per_band", "bands", "buckets", "shingle_width", "__fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/$MetaDir")
-  }
-
-  /** Read + integrity-verify the sidecar, then require its HASH FAMILY to
-    * match the banding THIS library would produce — the only banding the
-    * probe and append projections can emit. The bucket fan-out is taken
-    * from the sidecar (an index layout choice, legal to vary). */
-  private def readVerifiedMeta(spark: SparkSession, path: String): Meta = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$MetaDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no $MetaDir sidecar at $path — not an LSH index (or the write did " +
-        "not complete); build with LshIndex.write")
-    // memoized on the sidecar's on-disk file identity — see SidecarCache
-    metaMemo.getOrLoad(fs, p) {
-      val rows = spark.read.parquet(s"$path/$MetaDir").collect()
-      require(rows.length == 1,
-        s"$MetaDir sidecar at $path carries ${rows.length} rows — corrupt")
-      val r = rows.head
-      val stored = Meta(r.getAs[Int]("rows_per_band"), r.getAs[Int]("bands"),
-        r.getAs[Int]("buckets"), r.getAs[Int]("shingle_width"))
-      require(stored.fingerprint == r.getAs[Long]("__fingerprint"),
-        s"$MetaDir sidecar at $path fails its own fingerprint — corrupt sidecar")
-      val cur = currentMeta(stored.buckets)
-      require(stored.family == cur.family,
-        s"LSH banding mismatch at $path: index built with $stored, this " +
-          s"library produces $cur — band keys are not comparable " +
-          "across hash-family shapes; rebuild the index")
-      stored
-    }
-  }
-
-  private val metaMemo = new SidecarCache[Meta]()
-
-  /** Build the index over a corpus. Data first, then the sidecar — a torn
-    * write leaves a probe-refusing directory, never a silently
-    * half-probed one. */
-  def write(docs: DataFrame, path: String, numBuckets: Int = NumBuckets): Unit = {
-    BandIndexOps.writeRows(indexRows(docs, numBuckets), path, "overwrite")
-    writeMeta(docs.sparkSession, path, numBuckets)
-  }
-
-  /** Incremental ingest: new files land inside the existing bucket=…
-    * partitions, so probes see old + new rows with the same pruning.
-    * Row-identical to a one-shot build over the union (band keys are a
-    * pure function of the text). */
-  def append(batch: DataFrame, path: String): Unit = {
-    val meta = readVerifiedMeta(batch.sparkSession, path)
-    BandIndexOps.writeRows(indexRows(batch, meta.buckets), path, "append")
-  }
-
-  /** Candidate near-dup pairs (doc_new, doc_old) of a probe batch against
-    * the indexed corpus: the batch pays its own O(|batch|) signature cost,
-    * the corpus side is an 8-byte-key scan pruned to the buckets the
-    * batch touches. `broadcastProbe` (default) ships the batch's band
-    * rows to the index scan — the daily-ingest shape where Δ ≪ corpus;
-    * pass false for batch ≈ corpus-sized backfills, which degrade to the
-    * shuffle-hash equi-join `minhashCandidates` uses.
-    *
-    * Candidates are LSH candidates — callers verify survivors exactly
-    * (the q39 Bloom-then-exact rule); recall at the 42×3 banding is gated
-    * against the exact Jaccard≥1/2 pair set in q55/LshIndexSpec. */
-  def probeCandidates(spark: SparkSession, path: String, batch: DataFrame,
-      broadcastProbe: Boolean = true): DataFrame = {
-    val meta = readVerifiedMeta(spark, path)
-    BandIndexOps.probeJoin(spark, path,
-      indexRows(batch, meta.buckets)
-        .select(col("band"), col("bkey"), col("bucket"), col("doc_id").as("doc_new")),
-      idCol = "doc_id", newCol = "doc_new", oldCol = "doc_old", broadcastProbe)
-  }
-
-  /** [[probeCandidates]] over PRE-SIGNED, already-materialized batch band
-    * rows (the ingest loop's sign-once path — see
-    * [[BandIndexOps.ingestNovel]]): the signature projection is not
-    * recomputed and the rows are not re-materialized. */
-  def probeCandidatesFromRows(spark: SparkSession, path: String,
-      bandRows: DataFrame, broadcastProbe: Boolean = true): DataFrame = {
-    val meta = readVerifiedMeta(spark, path)
-    // the bucket is RE-DERIVED from the stored band key at THIS index's
-    // sidecar fan-out — rows signed at a different fan-out would
-    // otherwise silently miss every candidate (bucket participates in
-    // the equi-join); a cheap projection over the materialized rows
-    BandIndexOps.probeJoin(spark, path,
-      bandRows.select(col("band"), col("bkey"),
-        BandIndexOps.bucketOf(col("bkey"), meta.buckets).as("bucket"),
-        col("doc_id").as("doc_new")),
-      idCol = "doc_id", newCol = "doc_new", oldCol = "doc_old", broadcastProbe,
-      materializeProbe = false)
-  }
-
-  /** Novelty filter — the ingest-gate shape: batch docs with NO exact
-    * near-dup (Jaccard ≥ 1/2 after exact verification of LSH candidates)
-    * already in the corpus. `corpusDocs`/`batchDocs` supply the text for
-    * the verify join of candidate survivors only — the index itself
-    * stays text-free. Pass `verifiedPairs` when the caller has already
-    * materialized `verifiedDupPairs` for the same (index, batch, corpus) —
-    * the anti-join then reuses it instead of re-running probe + verify. */
-  def novelDocs(spark: SparkSession, path: String, batchDocs: DataFrame,
-      corpusDocs: DataFrame, verifiedPairs: Option[DataFrame] = None): DataFrame = {
-    val pairs = verifiedPairs.getOrElse(
-      verifiedDupPairs(spark, path, batchDocs, corpusDocs))
-    val dups = pairs.select(col("doc_new").as("doc_id")).distinct()
-    batchDocs.join(dups, Seq("doc_id"), "left_anti")
-  }
-
-  /** [[novelDocs]] over pre-signed batch band rows (sign-once ingest). */
-  def novelDocsFromRows(spark: SparkSession, path: String, bandRows: DataFrame,
-      batchDocs: DataFrame, corpusDocs: DataFrame): DataFrame = {
-    val pairs = verifiedDupPairsFromRows(spark, path, bandRows, batchDocs, corpusDocs)
-    val dups = pairs.select(col("doc_new").as("doc_id")).distinct()
-    batchDocs.join(dups, Seq("doc_id"), "left_anti")
-  }
-
-  /** One step of the streaming ingest novelty gate (the q56 shape):
-    * greedy-sequential micro-batch dedup against the kept corpus, both
-    * stores accreted, replay-IDEMPOTENT per `batchId` — the full
-    * contract (greedy order, marker protocol, torn-replay residue
-    * analysis) is [[BandIndexOps.ingestNovel]]'s scaladoc; this binds
-    * the text family's seams (Jaccard ≥ 1/2 novelty via [[novelDocs]],
-    * (doc_id, text) payload). q56 gates the streamed kept set against a
-    * batch recomputation of the same greedy rule and the final index
-    * content against `indexRows(kept)`. */
-  def ingestNovel(spark: SparkSession, indexPath: String, keptDir: String,
-      batch: DataFrame, batchId: Long, numBuckets: Int = NumBuckets): Long =
-    BandIndexOps.ingestNovel(spark, indexPath, keptDir, batch, batchId,
-      payloadCols = Seq("doc_id", "text"), metaDir = MetaDir,
-      defaultBuckets = numBuckets,
-      sidecarBuckets = () => readVerifiedMeta(spark, indexPath).buckets,
-      signRows = (docs, buckets) => indexRows(docs, buckets),
-      installMeta = buckets => writeMeta(spark, indexPath, buckets),
-      verifyMeta = () => { readVerifiedMeta(spark, indexPath); () },
-      novelFromRows = (b, keptBefore, rows) =>
-        novelDocsFromRows(spark, indexPath, rows, b, keptBefore))
-
-  /** Index observability: per-bucket row/doc/file counts straight from
-    * the partitioned layout, plus the bucket's share of the index. The
-    * fragmentation signal for [[compact]]: every [[append]] (and every
-    * [[ingestNovel]] batch) lands one new file per touched bucket, so
-    * after thousands of ingest steps a probe of one bucket opens
-    * thousands of files. Doc counts surface banding skew (a degenerate
-    * shingle set — empty docs all hash to the same band keys — shows as
-    * a hot bucket). One scan of the key columns; payload-free. */
-  def lshIndexStats(spark: SparkSession, path: String): DataFrame = {
-    readVerifiedMeta(spark, path)
-    BandIndexOps.stats(spark, path, idCol = "doc_id")
-  }
-
-  /** Compact a fragmented index into `destPath`: each bucket's accreted
-    * small files ([[lshIndexStats]]' n_files is the signal) are shuffled
-    * onto one task and rewritten coalesced, then the SAME sidecar is
-    * reinstalled (bucket fan-out and hash family travel unchanged —
-    * compaction is a physical rewrite, never a re-band). Band rows are
-    * also `.distinct()`ed: the one legal duplicate source is the torn
-    * ingest replay [[ingestNovel]] documents (a batch appended twice
-    * before its marker landed), and (doc_id, band) is unique within any
-    * single append, so dedup here removes exactly that residue. The
-    * `_ingested` replay markers are copied over so a resumed ingest
-    * loop keeps its idempotency history. Writes to a NEW path on
-    * purpose — the atomic swap is [[compactLshIndexVersioned]]'s
-    * manifest flip. destPath must not exist. */
-  def compact(spark: SparkSession, srcPath: String, destPath: String): Unit = {
-    val meta = readVerifiedMeta(spark, srcPath)
-    BandIndexOps.compactRows(spark, srcPath, destPath,
-      Seq("doc_id", "band", "bkey", "bucket"))
-    writeMeta(spark, destPath, meta.buckets)
-    BandIndexOps.copyMarkers(spark, srcPath, destPath, "_ingested")
-  }
-
-  /** Re-bucket into `destPath` at a new fan-out — capacity growth
-    * without re-shingling (see [[BandIndexOps.rebucketRows]]: the band
-    * key is stored, the bucket is recomputed from it). The sidecar is
-    * reinstalled with the new bucket count (same hash family); the
-    * `_ingested` replay markers travel. Probes answer identically at
-    * any fan-out (spec-pinned: fan-out is an index layout property). */
-  def rebucket(spark: SparkSession, srcPath: String, destPath: String,
-      newBuckets: Int): Unit = {
-    readVerifiedMeta(spark, srcPath)
-    BandIndexOps.rebucketRows(spark, srcPath, destPath, newBuckets,
-      idCol = "doc_id")
-    writeMeta(spark, destPath, newBuckets)
-    BandIndexOps.copyMarkers(spark, srcPath, destPath, "_ingested")
-  }
-
-  /** Re-bucket the CURRENT generation into a new one at `newBuckets`
-    * and flip the manifest — the atomic fan-out-growth swap. */
-  def rebucketLshIndexVersioned(spark: SparkSession, rootPath: String,
-      newBuckets: Int): String = {
-    val src = currentLshIndexPath(spark, rootPath)
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    rebucket(spark, src, s"$rootPath/$gen", newBuckets)
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
-
-  // ------------------------------------------- versioned index lifecycle
-  // Same generational root + atomic manifest flip as the IVF index —
-  // the shared [[IndexManifest]] (root/_manifest/vNNNNNNNN points at
-  // root/gen-NNNNNNNN, install is one no-overwrite file create).
-
-  /** Current index DATA path under a versioned root — probe, append and
-    * ingest entry points take this resolved path. */
-  def currentLshIndexPath(spark: SparkSession, rootPath: String): String =
-    IndexManifest.currentPath(spark, rootPath, "LshIndex.writeVersioned")
-
-  /** Build generation 1 of a versioned index root: full index write
-    * (band rows + `_lshmeta` sidecar) into a fresh generation dir, THEN
-    * the manifest flip — a crash before the flip leaves no manifest
-    * entry, so readers never see the partial build. Returns the data
-    * path. */
-  def writeVersioned(docs: DataFrame, rootPath: String,
-      numBuckets: Int = NumBuckets): String = {
-    val spark = docs.sparkSession
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    write(docs, s"$rootPath/$gen", numBuckets)
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
-
-  /** Compact the CURRENT generation into a new one and flip the
-    * manifest — the complete defragmentation lifecycle for an accreting
-    * ingest index ([[lshIndexStats]] signals it, [[compact]] rewrites,
-    * this installs). The old generation is left on disk for in-flight
-    * readers; call [[retireLshIndexGenerations]] once their horizon
-    * passes. Returns the new data path. */
-  def compactLshIndexVersioned(spark: SparkSession, rootPath: String): String = {
-    val src = currentLshIndexPath(spark, rootPath)
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    compact(spark, src, s"$rootPath/$gen")
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
-
-  /** Delete every generation dir strictly older than the current one —
-    * the retire half of the swap (see [[IndexManifest.retireOldGenerations]]
-    * for why strictly-older). Returns the deleted paths. */
-  def retireLshIndexGenerations(spark: SparkSession, rootPath: String): Seq[String] =
-    IndexManifest.retireOldGenerations(spark, rootPath, "LshIndex.writeVersioned")
-
-  /** Exact-verified near-dup pairs of a batch against the indexed corpus:
-    * LSH candidates → shingle-overlap verify join restricted to candidate
-    * doc ids (never the full corpus), Jaccard ≥ 1/2 in integer arithmetic
-    * (the q15 criterion). The candidate relation feeds THREE joins below,
-    * so it is materialized once — it is bounded by the near-dup pair count
-    * of the batch (tiny next to either input); via localCheckpoint
-    * rather than .cache() so ingest loops cannot accumulate cached-plan
-    * entries (see the probe-relation note in [[probeCandidates]]). */
-  def verifiedDupPairs(spark: SparkSession, path: String, batchDocs: DataFrame,
-      corpusDocs: DataFrame): DataFrame =
-    verifiedFromCands(
-      probeCandidates(spark, path, batchDocs).localCheckpoint(true),
-      batchDocs, corpusDocs)
-
-  /** [[verifiedDupPairs]] over pre-signed batch band rows (sign-once
-    * ingest — same verify stage, no signature recomputation). */
-  def verifiedDupPairsFromRows(spark: SparkSession, path: String,
-      bandRows: DataFrame, batchDocs: DataFrame, corpusDocs: DataFrame): DataFrame =
-    verifiedFromCands(
-      probeCandidatesFromRows(spark, path, bandRows).localCheckpoint(true),
-      batchDocs, corpusDocs)
-
-  private def verifiedFromCands(cands: DataFrame, batchDocs: DataFrame,
-      corpusDocs: DataFrame): DataFrame = {
-    // verify ONLY candidate docs: semi-join both text relations down to
-    // docs that appear in some candidate pair, then run the ONE
-    // sort-merge shingle self-join pairStatsFromShingled is built around
-    // (identical children → ReusedExchange, the explode evaluated once) —
-    // the same plan the exact oracles use, just over the candidate slice.
-    val restricted = batchDocs
-      .join(cands.select(col("doc_new").as("doc_id")).distinct(), "doc_id")
-      .unionByName(corpusDocs
-        .join(cands.select(col("doc_old").as("doc_id")).distinct(), "doc_id"))
+  /** Candidate pairs (aCol, bCol) with Jaccard ≥ 1/2 in integer
+    * arithmetic. Verifies ONLY candidate docs: both text relations are
+    * semi-joined down to docs that appear in some candidate pair, then
+    * the ONE sort-merge shingle self-join pairStatsFromShingled is built
+    * around runs over that slice (identical children → ReusedExchange,
+    * the explode evaluated once) — the same plan the exact oracles use.
+    * Emits (aCol, bCol, n_common, n_union). */
+  private def jaccard(cands: DataFrame, aCol: String, bCol: String,
+      aDocs: DataFrame, bDocs: DataFrame): DataFrame = {
+    val restricted = aDocs
+      .join(cands.select(col(aCol).as("doc_id")).distinct(), "doc_id")
+      .unionByName(bDocs
+        .join(cands.select(col(bCol).as("doc_id")).distinct(), "doc_id"))
     val stats = TextPipeline.pairStatsFromShingled(
       TextPipeline.withShingles(restricted, "__sh"))
-    // pairStats emits doc_a < doc_b; recover the (new, old) orientation by
-    // an EQUI-join against the normalized candidate pairs (batch and
-    // corpus doc ids are disjoint in the ingest contract, so a pair's
-    // orientation is unique)
+      .withColumnRenamed("doc_a", "__lo").withColumnRenamed("doc_b", "__hi")
+    // pairStats emits doc_a < doc_b; recover the (a, b) orientation by an
+    // EQUI-join against the normalized candidate pairs (the two sides'
+    // doc ids are disjoint, so a pair's orientation is unique)
     val candsN = cands.select(
-      least(col("doc_new"), col("doc_old")).as("doc_a"),
-      greatest(col("doc_new"), col("doc_old")).as("doc_b"),
-      col("doc_new"), col("doc_old"))
+      least(col(aCol), col(bCol)).as("__lo"),
+      greatest(col(aCol), col(bCol)).as("__hi"),
+      col(aCol), col(bCol))
     stats
       .filter(lit(2) * col("n_common") >= col("na") + col("nb") - col("n_common"))
-      .join(candsN, Seq("doc_a", "doc_b"))
-      .select(col("doc_new"), col("doc_old"),
-        col("n_common").cast("long").as("n_common"),
-        (col("na") + col("nb") - col("n_common")).cast("long").as("n_union"))
-  }
-
-  /** Corpus × corpus LSH candidate pairs between TWO persisted indexes —
-    * dataset-vs-dataset near-dup discovery without re-shingling either
-    * corpus (the scale argument and join shape are
-    * [[BandIndexOps.crossIndexCandidates]]'s scaladoc). Both sidecars
-    * are integrity- and family-verified first: each index's banding must
-    * equal what THIS library produces, so the two are mutually
-    * comparable by transitivity (fan-outs may differ — bucket does not
-    * join). doc_id namespaces must be disjoint across the corpora (the
-    * natural cross-corpus contract). Emits distinct (doc_a, doc_b) with
-    * doc_a from `pathA`. */
-  def crossCandidates(spark: SparkSession, pathA: String, pathB: String): DataFrame = {
-    readVerifiedMeta(spark, pathA)
-    readVerifiedMeta(spark, pathB)
-    BandIndexOps.crossIndexCandidates(spark, pathA, pathB,
-      idCol = "doc_id", aCol = "doc_a", bCol = "doc_b")
-  }
-
-  /** Exact-verified cross-corpus near-dup pairs (Jaccard ≥ 1/2): the
-    * [[verifiedDupPairs]] verify stage over [[crossCandidates]] —
-    * shingles recomputed ONLY for docs that appear in some candidate
-    * pair, one sort-merge shingle self-join over that slice. `docsA` /
-    * `docsB` supply (doc_id, text) for their corpora. */
-  def verifiedCrossPairs(spark: SparkSession, pathA: String, pathB: String,
-      docsA: DataFrame, docsB: DataFrame): DataFrame = {
-    val cands = crossCandidates(spark, pathA, pathB).localCheckpoint(true)
-    val restricted = docsA
-      .join(cands.select(col("doc_a").as("doc_id")).distinct(), "doc_id")
-      .unionByName(docsB
-        .join(cands.select(col("doc_b").as("doc_id")).distinct(), "doc_id"))
-    val stats = TextPipeline.pairStatsFromShingled(
-      TextPipeline.withShingles(restricted, "__sh"))
-    // pairStats emits doc_a < doc_b; recover the (A, B) orientation by an
-    // equi-join against the normalized candidates (disjoint namespaces ⇒
-    // orientation unique)
-    val candsN = cands.select(
-      least(col("doc_a"), col("doc_b")).as("doc_a"),
-      greatest(col("doc_a"), col("doc_b")).as("doc_b"),
-      col("doc_a").as("a_id"), col("doc_b").as("b_id"))
-    stats
-      .filter(lit(2) * col("n_common") >= col("na") + col("nb") - col("n_common"))
-      .join(candsN, Seq("doc_a", "doc_b"))
-      .select(col("a_id").as("doc_a"), col("b_id").as("doc_b"),
+      .join(candsN, Seq("__lo", "__hi"))
+      .select(col(aCol), col(bCol),
         col("n_common").cast("long").as("n_common"),
         (col("na") + col("nb") - col("n_common")).cast("long").as("n_union"))
   }

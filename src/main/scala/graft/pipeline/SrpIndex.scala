@@ -1,38 +1,24 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PERSISTED SRP (signed-random-projection) band index — the
   * dense-embedding sibling of the MinHash-LSH text index ([[LshIndex]]),
-  * sharing its physical machinery ([[BandIndexOps]]) and generational
-  * lifecycle ([[IndexManifest]]). At corpus scale an embedding near-dup
-  * gate is never built once: embeddings accrete batch by batch, and the
-  * expensive thing is re-projecting the corpus every time a new ingest
-  * batch must be deduped against it — the index stores the 32 band keys
-  * per vector ONCE, so a batch probe pays O(|batch|·dim) projection work
-  * plus a bucket-pruned 8-byte-key join against the corpus.
+  * the same [[BandIndex]] over a different family. At corpus scale an
+  * embedding near-dup gate is never built once: embeddings accrete batch
+  * by batch, and the expensive thing is re-projecting the corpus every
+  * time a new ingest batch must be deduped against it — the index stores
+  * the 32 band keys per vector ONCE, so a batch probe pays
+  * O(|batch|·dim) projection work plus a bucket-pruned 8-byte-key join.
   *
-  * Layout on disk (parquet):
-  *   bucket=0/…bucket=N-1/   (band, bkey, vec_id) rows, 32 per vector
-  *   _srpmeta/               config sidecar (see below)
-  *
-  * - `bucket = bkey & (N-1)` is the PARTITION column: a small-batch
-  *   novelty probe touches ≤ 32·|batch| of N buckets — PartitionFilters
-  *   in the executed plan, unprobed buckets never leave storage
-  *   (SrpIndexSpec pins the files-read count). N is an INDEX property
-  *   recorded in the sidecar, not a library constant.
-  * - The INCREMENTAL contract mirrors [[LshIndex.append]]: band keys are
-  *   a pure function of (embedding, sign family), so build-half +
-  *   append-half is row-identical to a one-shot build, and a probe
-  *   against the accreted index equals one against a from-scratch index.
-  * - The `_srpmeta` sidecar pins the PROJECTION FAMILY (band bits,
-  *   bands, max dimension — [[graft.spark.catalyst.SrpBandKernel]]'s
-  *   compile-time constants, which fix the deterministic ±1 sign matrix)
-  *   with a self-verifying fingerprint: probing or appending with a
-  *   library compiled to a different family throws at the door instead
-  *   of silently returning empty candidate sets — the codebook-mismatch
-  *   rule (VectorPipeline.scala sidecar lifecycle).
+  * This family stores (band, bkey, vec_id) rows (Charikar 2002 signed
+  * random projections; zero/empty/null embeddings have no direction and
+  * produce no rows), pins the PROJECTION FAMILY in its `_srpmeta`
+  * sidecar (band bits, bands, max dimension —
+  * [[graft.spark.catalyst.SrpBandKernel]]'s compile-time constants, which
+  * fix the deterministic ±1 sign matrix), and exact-verifies candidates
+  * with the codegen'd cosine at cos ≥ τ.
   *
   * SRP is the right angular LSH only at HIGH cosine thresholds (per-bit
   * collision p = 1 − θ/π — see the VectorPipeline.srpCandidates scaladoc
@@ -41,320 +27,40 @@ import org.apache.spark.sql.functions._
   * or lightly-perturbed content at cos ≥ ~0.9, where the 16-bit × 32
   * banding has both vanishing miss probability (≈2e-5 at cos 0.95) and
   * strong random-pair suppression (p_band = 2^-16 at cos 0).
-  * Candidates are LSH candidates — [[verifiedDupPairs]] exact-verifies
-  * survivors with the codegen'd cosine, the q39 Bloom-then-exact rule.
   */
-object SrpIndex {
+object SrpIndex extends BandIndex(SrpFamily.value) {
 
-  /** Default bucket fan-out for new indexes — [[LshIndex.NumBuckets]]'s
-    * sizing rule: storage-friendly partition count at corpus scale while
-    * a single-vector probe (32 band keys) prunes ≥ 87% of it. */
-  val NumBuckets: Int = 256
-
-  /** Default exact-verification threshold. SRP recall at the 16×32
-    * banding is only strong above ~0.9 (see the class doc); callers
-    * probing for a looser notion of similarity should use the IVF/PQ
-    * top-k surface instead. */
+  /** Exact-verification threshold. SRP recall at the 16×32 banding is
+    * only strong above ~0.9 (see the class doc); callers probing for a
+    * looser notion of similarity should use the IVF/PQ top-k surface
+    * instead. */
   val DefaultTau: Double = 0.9
+}
 
-  private val MetaDir = "_srpmeta"
+/** The SRP embedding family: projection signature, cosine verify. */
+private object SrpFamily {
+  import graft.spark.catalyst.SrpBandKernel
 
-  /** The projection family an index on disk must agree with. Bumping
-    * the kernel constants in code orphans existing indexes — by design:
-    * their keys are not comparable. `buckets` is a layout property of
-    * the individual index, not of the family. */
-  private case class Meta(bandBits: Int, bands: Int, buckets: Int, maxDim: Int) {
-    def fingerprint: Long = {
-      var h = 0x529L // distinct seed from the LSH sidecar's 0x15A
-      for (v <- Seq(bandBits, bands, buckets, maxDim))
-        h = graft.core.Hashing.xxHash64Long(v.toLong, h)
-      h
-    }
-    def family: (Int, Int, Int) = (bandBits, bands, maxDim)
-  }
+  val value: BandFamily = BandFamily(
+    name = "SRP projection-family", owner = "SrpIndex", metaDir = "_srpmeta",
+    seed = 0x529L, // distinct from the LSH sidecar's 0x15A
+    fields = Seq("band_bits" -> SrpBandKernel.BandBits,
+      "bands" -> SrpBandKernel.Bands, "max_dim" -> SrpBandKernel.MaxDim),
+    bucketsPos = 2,
+    idCol = "vec_id", payloadCol = "embedding",
+    sign = vecs => vecs.select(col("vec_id"),
+      posexplode_outer(graft.spark.catalyst.srpBandKeysNative(col("embedding")))
+        .as(Seq("band", "bkey"))),
+    verify = cosine)
 
-  private def currentMeta(buckets: Int): Meta = {
-    import graft.spark.catalyst.SrpBandKernel
-    Meta(SrpBandKernel.BandBits, SrpBandKernel.Bands, buckets, SrpBandKernel.MaxDim)
-  }
-
-  /** (vec_id, band, bkey, bucket) — the map-only signature projection
-    * shared verbatim by build, append and probe (the LshIndex.indexRows
-    * rule: the three paths can never drift). Zero/empty/null embeddings
-    * produce no rows (no direction ⇒ never bucketed). Public so callers
-    * can gate an on-disk index's content against the from-scratch
-    * projection without materializing a second index. */
-  def indexRows(vecs: DataFrame, numBuckets: Int = NumBuckets,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    BandIndexOps.requirePow2(numBuckets)
-    vecs.select(col(idCol).as("vec_id"),
-        posexplode_outer(graft.spark.catalyst.srpBandKeysNative(col(embCol)))
-          .as(Seq("band", "bkey")))
-      .filter(col("bkey").isNotNull)
-      .withColumn("bucket", BandIndexOps.bucketOf(col("bkey"), numBuckets))
-  }
-
-  private def writeMeta(spark: SparkSession, path: String, buckets: Int): Unit = {
-    import spark.implicits._
-    val m = currentMeta(buckets)
-    Seq((m.bandBits, m.bands, m.buckets, m.maxDim, m.fingerprint))
-      .toDF("band_bits", "bands", "buckets", "max_dim", "__fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/$MetaDir")
-  }
-
-  /** Read + integrity-verify the sidecar, then require its projection
-    * FAMILY to match the one this library's kernel produces. The bucket
-    * fan-out is taken from the sidecar (an index layout choice, legal to
-    * vary). Memoized on the sidecar's on-disk identity ([[SidecarCache]]). */
-  private def readVerifiedMeta(spark: SparkSession, path: String): Meta = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$MetaDir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p),
-      s"no $MetaDir sidecar at $path — not an SRP index (or the write did " +
-        "not complete); build with SrpIndex.write")
-    metaMemo.getOrLoad(fs, p) {
-      val rows = spark.read.parquet(s"$path/$MetaDir").collect()
-      require(rows.length == 1,
-        s"$MetaDir sidecar at $path carries ${rows.length} rows — corrupt")
-      val r = rows.head
-      val stored = Meta(r.getAs[Int]("band_bits"), r.getAs[Int]("bands"),
-        r.getAs[Int]("buckets"), r.getAs[Int]("max_dim"))
-      require(stored.fingerprint == r.getAs[Long]("__fingerprint"),
-        s"$MetaDir sidecar at $path fails its own fingerprint — corrupt sidecar")
-      val cur = currentMeta(stored.buckets)
-      require(stored.family == cur.family,
-        s"SRP projection-family mismatch at $path: index built with $stored, " +
-          s"this library produces $cur — band keys are not comparable " +
-          "across families; rebuild the index")
-      stored
-    }
-  }
-
-  private val metaMemo = new SidecarCache[Meta]()
-
-  /** Build the index over a corpus. Data first, then the sidecar — a
-    * torn write leaves a probe-refusing directory, never a silently
-    * half-probed one. */
-  def write(vecs: DataFrame, path: String, numBuckets: Int = NumBuckets): Unit = {
-    BandIndexOps.writeRows(indexRows(vecs, numBuckets), path, "overwrite")
-    writeMeta(vecs.sparkSession, path, numBuckets)
-  }
-
-  /** Incremental ingest — row-identical to a one-shot build over the
-    * union (band keys are a pure function of the embedding). */
-  def append(batch: DataFrame, path: String): Unit = {
-    val meta = readVerifiedMeta(batch.sparkSession, path)
-    BandIndexOps.writeRows(indexRows(batch, meta.buckets), path, "append")
-  }
-
-  /** Candidate near-dup pairs (vec_new, vec_old) of a probe batch
-    * against the indexed corpus: the batch pays its own O(|batch|·dim)
-    * projection cost, the corpus side is an 8-byte-key scan pruned to
-    * the buckets the batch touches. See [[BandIndexOps.probeJoin]] for
-    * the broadcast-vs-backfill switch. */
-  def probeCandidates(spark: SparkSession, path: String, batch: DataFrame,
-      broadcastProbe: Boolean = true): DataFrame = {
-    val meta = readVerifiedMeta(spark, path)
-    BandIndexOps.probeJoin(spark, path,
-      indexRows(batch, meta.buckets)
-        .select(col("band"), col("bkey"), col("bucket"), col("vec_id").as("vec_new")),
-      idCol = "vec_id", newCol = "vec_new", oldCol = "vec_old", broadcastProbe)
-  }
-
-  /** [[probeCandidates]] over PRE-SIGNED, already-materialized batch band
-    * rows (the ingest loop's sign-once path — see
-    * [[BandIndexOps.ingestNovel]]). */
-  def probeCandidatesFromRows(spark: SparkSession, path: String,
-      bandRows: DataFrame, broadcastProbe: Boolean = true): DataFrame = {
-    val meta = readVerifiedMeta(spark, path)
-    // bucket re-derived at the sidecar fan-out (the LshIndex rule) —
-    // rows signed at a different fan-out must not silently miss
-    BandIndexOps.probeJoin(spark, path,
-      bandRows.select(col("band"), col("bkey"),
-        BandIndexOps.bucketOf(col("bkey"), meta.buckets).as("bucket"),
-        col("vec_id").as("vec_new")),
-      idCol = "vec_id", newCol = "vec_new", oldCol = "vec_old", broadcastProbe,
-      materializeProbe = false)
-  }
-
-  /** Exact-verified near-dup pairs of a batch against the indexed
-    * corpus: SRP candidates → codegen'd-cosine verify join restricted to
-    * candidate vec ids (never the full corpus), cos ≥ `tau`. Returns
-    * (vec_new, vec_old, cos). The candidate relation feeds both verify
-    * joins, so it is materialized once — localCheckpoint, not .cache(),
-    * for the ingest-loop reason in [[BandIndexOps.probeJoin]]. */
-  def verifiedDupPairs(spark: SparkSession, path: String, batchVecs: DataFrame,
-      corpusVecs: DataFrame, tau: Double = DefaultTau): DataFrame =
-    verifiedFromCands(
-      probeCandidates(spark, path, batchVecs).localCheckpoint(true),
-      batchVecs, corpusVecs, tau)
-
-  /** [[verifiedDupPairs]] over pre-signed batch band rows (sign-once
-    * ingest — same verify stage, no re-projection). */
-  def verifiedDupPairsFromRows(spark: SparkSession, path: String,
-      bandRows: DataFrame, batchVecs: DataFrame, corpusVecs: DataFrame,
-      tau: Double = DefaultTau): DataFrame =
-    verifiedFromCands(
-      probeCandidatesFromRows(spark, path, bandRows).localCheckpoint(true),
-      batchVecs, corpusVecs, tau)
-
-  private def verifiedFromCands(cands: DataFrame, batchVecs: DataFrame,
-      corpusVecs: DataFrame, tau: Double): DataFrame =
+  /** Candidate pairs (aCol, bCol) with cos ≥ [[SrpIndex.DefaultTau]]:
+    * embeddings fetched ONLY for candidate ids. Emits (aCol, bCol, cos). */
+  private def cosine(cands: DataFrame, aCol: String, bCol: String,
+      aVecs: DataFrame, bVecs: DataFrame): DataFrame =
     cands
-      .join(batchVecs.select(col("vec_id").as("vec_new"),
-        col("embedding").as("__e_new")), Seq("vec_new"))
-      .join(corpusVecs.select(col("vec_id").as("vec_old"),
-        col("embedding").as("__e_old")), Seq("vec_old"))
-      .select(col("vec_new"), col("vec_old"),
-        graft.spark.catalyst.cosineNative(col("__e_new"), col("__e_old")).as("cos"))
-      .filter(col("cos") >= tau)
-
-  /** Corpus × corpus SRP candidate pairs between TWO persisted indexes —
-    * the dense-vector sibling of [[LshIndex.crossCandidates]] (scale
-    * argument: [[BandIndexOps.crossIndexCandidates]]). Both sidecars are
-    * verified against THIS library's projection family, so the band keys
-    * are mutually comparable; vec_id namespaces must be disjoint. */
-  def crossCandidates(spark: SparkSession, pathA: String, pathB: String): DataFrame = {
-    readVerifiedMeta(spark, pathA)
-    readVerifiedMeta(spark, pathB)
-    BandIndexOps.crossIndexCandidates(spark, pathA, pathB,
-      idCol = "vec_id", aCol = "vec_a", bCol = "vec_b")
-  }
-
-  /** Exact-verified cross-corpus near-dup pairs (cos ≥ `tau`): the
-    * [[verifiedDupPairs]] verify join over [[crossCandidates]] —
-    * embeddings fetched ONLY for candidate vec ids. */
-  def verifiedCrossPairs(spark: SparkSession, pathA: String, pathB: String,
-      vecsA: DataFrame, vecsB: DataFrame, tau: Double = DefaultTau): DataFrame = {
-    val cands = crossCandidates(spark, pathA, pathB).localCheckpoint(true)
-    cands
-      .join(vecsA.select(col("vec_id").as("vec_a"),
-        col("embedding").as("__e_a")), Seq("vec_a"))
-      .join(vecsB.select(col("vec_id").as("vec_b"),
-        col("embedding").as("__e_b")), Seq("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
+      .join(aVecs.select(col("vec_id").as(aCol), col("embedding").as("__e_a")), Seq(aCol))
+      .join(bVecs.select(col("vec_id").as(bCol), col("embedding").as("__e_b")), Seq(bCol))
+      .select(col(aCol), col(bCol),
         graft.spark.catalyst.cosineNative(col("__e_a"), col("__e_b")).as("cos"))
-      .filter(col("cos") >= tau)
-  }
-
-  /** Novelty filter — the ingest-gate shape: batch vectors with NO
-    * exact-verified near-dup (cos ≥ `tau`) already in the corpus. Pass
-    * `verifiedPairs` when the caller has already materialized
-    * [[verifiedDupPairs]] for the same (index, batch, corpus). */
-  def novelVecs(spark: SparkSession, path: String, batchVecs: DataFrame,
-      corpusVecs: DataFrame, tau: Double = DefaultTau,
-      verifiedPairs: Option[DataFrame] = None): DataFrame = {
-    val pairs = verifiedPairs.getOrElse(
-      verifiedDupPairs(spark, path, batchVecs, corpusVecs, tau))
-    val dups = pairs.select(col("vec_new").as("vec_id")).distinct()
-    batchVecs.join(dups, Seq("vec_id"), "left_anti")
-  }
-
-  /** [[novelVecs]] over pre-signed batch band rows (sign-once ingest). */
-  def novelVecsFromRows(spark: SparkSession, path: String, bandRows: DataFrame,
-      batchVecs: DataFrame, corpusVecs: DataFrame,
-      tau: Double = DefaultTau): DataFrame = {
-    val pairs = verifiedDupPairsFromRows(spark, path, bandRows, batchVecs, corpusVecs, tau)
-    val dups = pairs.select(col("vec_new").as("vec_id")).distinct()
-    batchVecs.join(dups, Seq("vec_id"), "left_anti")
-  }
-
-  /** One step of a streaming embedding-ingest novelty gate: the vector
-    * binding of [[BandIndexOps.ingestNovel]] (full contract — greedy
-    * order, `_ingested` marker protocol, torn-replay residue — in its
-    * scaladoc), with cos ≥ `tau` novelty via [[novelVecs]] and a
-    * (vec_id, embedding) kept payload. Returns the number of vectors
-    * kept. The on-disk index always holds exactly the kept
-    * representatives' band rows (dropped vectors are never indexed). */
-  def ingestNovel(spark: SparkSession, indexPath: String, keptDir: String,
-      batch: DataFrame, batchId: Long, tau: Double = DefaultTau,
-      numBuckets: Int = NumBuckets): Long =
-    BandIndexOps.ingestNovel(spark, indexPath, keptDir, batch, batchId,
-      payloadCols = Seq("vec_id", "embedding"), metaDir = MetaDir,
-      defaultBuckets = numBuckets,
-      sidecarBuckets = () => readVerifiedMeta(spark, indexPath).buckets,
-      signRows = (vecs, buckets) => indexRows(vecs, buckets),
-      installMeta = buckets => writeMeta(spark, indexPath, buckets),
-      verifyMeta = () => { readVerifiedMeta(spark, indexPath); () },
-      novelFromRows = (b, keptBefore, rows) =>
-        novelVecsFromRows(spark, indexPath, rows, b, keptBefore, tau))
-
-  /** Index observability — see [[BandIndexOps.stats]]. (`n_docs` counts
-    * distinct vec_ids; a hot bucket signals near-axis-aligned embedding
-    * mass, the SRP analogue of degenerate shingle sets.) */
-  def srpIndexStats(spark: SparkSession, path: String): DataFrame = {
-    readVerifiedMeta(spark, path)
-    BandIndexOps.stats(spark, path, idCol = "vec_id")
-  }
-
-  /** Compact a fragmented index into `destPath` — see
-    * [[BandIndexOps.compactRows]]; the sidecar travels unchanged
-    * (compaction is a physical rewrite, never a re-projection). The
-    * atomic swap is [[compactSrpIndexVersioned]]'s manifest flip. */
-  def compact(spark: SparkSession, srcPath: String, destPath: String): Unit = {
-    val meta = readVerifiedMeta(spark, srcPath)
-    BandIndexOps.compactRows(spark, srcPath, destPath,
-      Seq("vec_id", "band", "bkey", "bucket"))
-    writeMeta(spark, destPath, meta.buckets)
-    BandIndexOps.copyMarkers(spark, srcPath, destPath, "_ingested")
-  }
-
-  /** Re-bucket into `destPath` at a new fan-out — capacity growth
-    * without re-projecting any embedding (see
-    * [[BandIndexOps.rebucketRows]]); sidecar reinstalled with the new
-    * bucket count, `_ingested` markers travel. */
-  def rebucket(spark: SparkSession, srcPath: String, destPath: String,
-      newBuckets: Int): Unit = {
-    readVerifiedMeta(spark, srcPath)
-    BandIndexOps.rebucketRows(spark, srcPath, destPath, newBuckets,
-      idCol = "vec_id")
-    writeMeta(spark, destPath, newBuckets)
-    BandIndexOps.copyMarkers(spark, srcPath, destPath, "_ingested")
-  }
-
-  /** Re-bucket the CURRENT generation into a new one at `newBuckets`
-    * and flip the manifest — the atomic fan-out-growth swap. */
-  def rebucketSrpIndexVersioned(spark: SparkSession, rootPath: String,
-      newBuckets: Int): String = {
-    val src = currentSrpIndexPath(spark, rootPath)
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    rebucket(spark, src, s"$rootPath/$gen", newBuckets)
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
-
-  // ------------------------------------------- versioned index lifecycle
-  // Same generational root + atomic manifest flip as the IVF and LSH
-  // indexes — the shared [[IndexManifest]].
-
-  /** Current index DATA path under a versioned root. */
-  def currentSrpIndexPath(spark: SparkSession, rootPath: String): String =
-    IndexManifest.currentPath(spark, rootPath, "SrpIndex.writeVersioned")
-
-  /** Build generation 1 of a versioned root: full index write into a
-    * fresh generation dir, THEN the manifest flip. Returns the data
-    * path. */
-  def writeVersioned(vecs: DataFrame, rootPath: String,
-      numBuckets: Int = NumBuckets): String = {
-    val spark = vecs.sparkSession
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    write(vecs, s"$rootPath/$gen", numBuckets)
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
-
-  /** Compact the CURRENT generation into a new one and flip the
-    * manifest; retire old generations with
-    * [[retireSrpIndexGenerations]] once in-flight readers pass. */
-  def compactSrpIndexVersioned(spark: SparkSession, rootPath: String): String = {
-    val src = currentSrpIndexPath(spark, rootPath)
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    compact(spark, src, s"$rootPath/$gen")
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
-
-  /** Delete every generation dir strictly older than the current one. */
-  def retireSrpIndexGenerations(spark: SparkSession, rootPath: String): Seq[String] =
-    IndexManifest.retireOldGenerations(spark, rootPath, "SrpIndex.writeVersioned")
+      .filter(col("cos") >= SrpIndex.DefaultTau)
 }

@@ -29,9 +29,9 @@ object TextPipeline {
 
   /** Word-shingle width — the constant every shingling path is BUILT
     * from, and the one the LSH index sidecar records as part of its hash
-    * family (LshIndex.currentMeta): the sidecar's "foreign banding
-    * refuses to probe" guard only works if it reads the same constant
-    * the band keys are derived from, not an unconnected literal. */
+    * family (the `_lshmeta` fields of LshIndex): the sidecar's "foreign
+    * banding refuses to probe" guard only works if it reads the same
+    * constant the band keys are derived from, not an unconnected literal. */
   val ShingleWidth: Int = 3
 
   /** Word 3-shingles, distinct, as an array column — built from codegen'd

@@ -516,15 +516,8 @@ object VectorPipeline {
     * written before the mode column default to flat. */
   private def readSidecar(spark: SparkSession, indexPath: String)
       : (DataFrame, Long, String) = {
-    val sidecar = new org.apache.hadoop.fs.Path(s"$indexPath/_codebook")
-    require(sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sidecar),
-      s"no _codebook sidecar at $indexPath — either the index write did not " +
-        "complete or the index predates codebook persistence; rebuild with writeIvfIndex")
-    // explicit reads of an underscore-prefixed dir succeed (the filter
-    // only hides it from PARENT-dir listings) but log a cosmetic
-    // "All paths were ignored" WARN — expected, same trick as
-    // _spark_metadata/_delta_log
-    val raw = spark.read.parquet(s"$indexPath/_codebook")
+    val raw = IndexManifest.readSidecar(spark, indexPath, "_codebook",
+      "an IVF index", "writeIvfIndex")
     val meta =
       if (raw.schema.fieldNames.contains("__assign"))
         raw.select(col("__fingerprint"), col("__assign")).distinct().collect()
@@ -1031,11 +1024,8 @@ object VectorPipeline {
     * cannot be handed books the codes were not produced by (that would
     * silently score garbage: codes index into the WRONG centroids). */
   def readPqBooks(spark: SparkSession, indexPath: String): Seq[Seq[Seq[Float]]] = {
-    val sidecar = new org.apache.hadoop.fs.Path(s"$indexPath/_pqbooks")
-    require(sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sidecar),
-      s"no _pqbooks sidecar at $indexPath — not a PQ index (or the write " +
-        "did not complete); build with writeIvfIndexPq")
-    val raw = spark.read.parquet(s"$indexPath/_pqbooks").collect()
+    val raw = IndexManifest.readSidecar(spark, indexPath, "_pqbooks",
+      "a PQ index", "writeIvfIndexPq").collect()
     val fps = raw.map(_.getAs[Long]("__fingerprint")).distinct
     require(fps.length == 1,
       s"_pqbooks sidecar at $indexPath carries ${fps.length} fingerprints — corrupt")
@@ -1170,40 +1160,42 @@ object VectorPipeline {
     * signal); compaction shuffles each list onto one task and rewrites
     * it as coalesced files, then reinstalls the SAME codebook sidecar
     * (fingerprint and assignment mode travel unchanged — compaction is
-    * a physical rewrite, never a re-route). Writes to a NEW path on
-    * purpose: an in-place delete-and-rename is not atomic on object
-    * stores, so the swap is the caller's metadata flip (point readers
-    * at destPath, then retire srcPath). destPath must not exist. */
+    * a physical rewrite, never a re-route) and, for a PQ index, the SAME
+    * `_pqbooks`. Writes to a NEW path on purpose: an in-place
+    * delete-and-rename is not atomic on object stores, so the swap is
+    * the caller's metadata flip (point readers at destPath, then retire
+    * srcPath). destPath must not exist. */
   def compactIvfIndex(spark: SparkSession, srcPath: String, destPath: String): Unit = {
     val (book, mode) = readVerifiedSidecar(spark, srcPath)
-    spark.read.parquet(srcPath)
-      .repartition(col("centroid_id"))
+    val rows = spark.read.parquet(srcPath)
+    // a PQ payload is only decodable with its books: read (and verify)
+    // them before the rewrite, and reinstall them with the codebook
+    val pqBooks =
+      if (rows.schema.fieldNames.contains("pq")) Some(readPqBooks(spark, srcPath)) else None
+    rows.repartition(col("centroid_id"))
       .write.partitionBy("centroid_id").mode("errorifexists").parquet(destPath)
     writeCodebookSidecar(book, destPath, mode)
+    pqBooks.foreach(writePqBooksSidecar(spark, _, destPath))
   }
 
   // ------------------------------------------- versioned index lifecycle
   // The generational root layout, the atomic manifest flip, and the
-  // retire rule live in [[IndexManifest]] (shared with LshIndex — one
-  // lifecycle for every persisted index in the library).
+  // retire rule live in [[IndexManifest]] (shared with the band indexes
+  // — one lifecycle for every persisted index in the library).
+
+  private val IvfVersionedHint = "writeIvfIndexVersioned"
 
   /** Current index DATA path under a versioned root — every existing
     * probe/append entry point takes this resolved path. */
   def currentIvfIndexPath(spark: SparkSession, rootPath: String): String =
-    IndexManifest.currentPath(spark, rootPath, "writeIvfIndexVersioned")
+    IndexManifest.currentPath(spark, rootPath, IvfVersionedHint)
 
-  /** Build generation 1 of a versioned index root: full index write
-    * (data + `_codebook` sidecar) into a fresh generation dir, THEN the
-    * manifest flip — a crash before the flip leaves no manifest entry,
-    * so readers never see the partial build. Returns the data path. */
+  /** Build a generation of a versioned index root (data + `_codebook`
+    * sidecar) and flip the manifest ([[IndexManifest.installNext]]).
+    * Returns the data path. */
   def writeIvfIndexVersioned(corpus: DataFrame, book: DataFrame,
-      rootPath: String): String = {
-    val spark = corpus.sparkSession
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    writeIvfIndex(corpus, book, s"$rootPath/$gen")
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
+      rootPath: String): String =
+    IndexManifest.installNext(corpus.sparkSession, rootPath)(writeIvfIndex(corpus, book, _))
 
   /** Compact the CURRENT generation into a new one and flip the
     * manifest — the complete defragmentation lifecycle ([[ivfIndexStats]]
@@ -1211,19 +1203,14 @@ object VectorPipeline {
     * generation is left on disk for in-flight readers; call
     * [[retireIvfIndexGenerations]] once their horizon passes. Returns
     * the new data path. */
-  def compactIvfIndexVersioned(spark: SparkSession, rootPath: String): String = {
-    val src = currentIvfIndexPath(spark, rootPath)
-    val gen = IndexManifest.nextGenName(spark, rootPath)
-    compactIvfIndex(spark, src, s"$rootPath/$gen")
-    IndexManifest.installGeneration(spark, rootPath, gen)
-    s"$rootPath/$gen"
-  }
+  def compactIvfIndexVersioned(spark: SparkSession, rootPath: String): String =
+    IndexManifest.rewriteCurrent(spark, rootPath, IvfVersionedHint)(compactIvfIndex(spark, _, _))
 
   /** Delete every generation dir strictly older than the current one —
     * the retire half of the swap (see [[IndexManifest.retireOldGenerations]]
     * for why strictly-older). Returns the deleted paths. */
   def retireIvfIndexGenerations(spark: SparkSession, rootPath: String): Seq[String] =
-    IndexManifest.retireOldGenerations(spark, rootPath, "writeIvfIndexVersioned")
+    IndexManifest.retireOldGenerations(spark, rootPath, IvfVersionedHint)
 
   /** Rank a scored candidate relation to per-query top-k. */
   def topKFromScored(scored: DataFrame, k: Int): DataFrame = {

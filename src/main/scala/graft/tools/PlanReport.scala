@@ -305,7 +305,7 @@ object PlanReport {
     rmLsh()
 
     // persisted SRP index probe — the dense-embedding sibling over the
-    // same BandIndexOps probe join (q57 shape)
+    // same BandIndex probe join (q57 shape)
     val srpPath = s"/tmp/graft_plans_srp_index_$runTag"
     def rmSrp(): Unit = {
       val p = new org.apache.hadoop.fs.Path(srpPath)
@@ -318,7 +318,7 @@ object PlanReport {
     graft.pipeline.SrpIndex.write(srpVecs, srpPath, numBuckets = 32)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     show("Persisted SRP index probe (bucket-pruned band join, q57 shape)",
-      "Same physical core as the LSH probe (BandIndexOps.probeJoin): the\n" +
+      "Same physical core as the LSH probe (BandIndex.probeJoin): the\n" +
         "batch pays its own map-only SrpBandKeys projection (32 keys x\n" +
         "O(dim) float products, codegen'd) and is BROADCAST onto the\n" +
         "index scan; PartitionFilters restrict the scan to the <= 32\n" +

@@ -134,7 +134,7 @@ class LshIndexSpec extends AnyFunSuite {
         .select(col("doc_new"), col("doc_old"))
       assert(got.exceptAll(truth).isEmpty && truth.exceptAll(got).isEmpty,
         "verified dup pairs must equal the exact Jaccard>=1/2 cross-pair set")
-      val novel = LshIndex.novelDocs(spark, path, batch, corpus)
+      val novel = LshIndex.novel(spark, path, batch, corpus)
       val expectNovel = batch.join(truth.select(col("doc_new").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
       assert(novel.count() === expectNovel.count())
@@ -194,81 +194,6 @@ class LshIndexSpec extends AnyFunSuite {
           when(isA(col("doc_a")), col("doc_b")).otherwise(col("doc_a")).as("doc_b"))
       assert(verified.exceptAll(truth).isEmpty && truth.exceptAll(verified).isEmpty,
         "verified cross pairs must equal the exact Jaccard cross pair set")
-    } finally { rm(base); d.unpersist() }
-  }
-
-  test("ingestNovel: a torn bootstrap (band rows, no sidecar) self-heals on replay") {
-    val d = docs.cache()
-    val base = "/tmp/graft_test_lsh_torn_bootstrap"
-    val ix = s"$base/index"; val kept = s"$base/kept"
-    try {
-      rm(base)
-      val batch0 = d.filter(col("doc_id") % 3 === 0)
-      // clean bootstrap, then reproduce the crash point: band rows on
-      // disk, but the LAST-written artifacts (_lshmeta sidecar, kept
-      // partition, _ingested marker) all missing — bootstrap's write
-      // order makes exactly this the torn state
-      val cleanKept = LshIndex.ingestNovel(spark, ix, kept, batch0,
-        batchId = 0L, numBuckets = 16)
-      val cleanSig = spark.read.parquet(ix)
-        .agg(expr("bit_xor(xxhash64(doc_id, band, bkey, bucket))"),
-          count(lit(1))).head
-      rm(s"$ix/_lshmeta"); rm(s"$ix/_ingested"); rm(kept)
-      // replay MUST take the bootstrap path again (sidecar-absent ⟹
-      // pre-bootstrap) — deciding on dir existence instead would route to
-      // append, where readVerifiedMeta throws on every retry forever
-      val healedKept = LshIndex.ingestNovel(spark, ix, kept, batch0,
-        batchId = 0L, numBuckets = 16)
-      assert(healedKept === cleanKept)
-      val healedSig = spark.read.parquet(ix)
-        .agg(expr("bit_xor(xxhash64(doc_id, band, bkey, bucket))"),
-          count(lit(1))).head
-      assert(healedSig === cleanSig,
-        "healed index must be row-identical to the clean bootstrap (overwrite semantics)")
-      // and the healed index is fully functional: next batch appends
-      LshIndex.ingestNovel(spark, ix, kept, d.filter(col("doc_id") % 3 === 1),
-        batchId = 1L, numBuckets = 16)
-    } finally { rm(base); d.unpersist() }
-  }
-
-  test("ingestNovel: a sidecar torn MID-WRITE (dir with only _temporary) also self-heals") {
-    val d = docs.cache()
-    val base = "/tmp/graft_test_lsh_torn_midwrite"
-    val ix = s"$base/index"; val kept = s"$base/kept"
-    try {
-      rm(base)
-      val batch0 = d.filter(col("doc_id") % 3 === 0)
-      val cleanKept = LshIndex.ingestNovel(spark, ix, kept, batch0,
-        batchId = 0L, numBuckets = 16)
-      // crash DURING the sidecar write: $ix/_lshmeta exists but holds no
-      // committed part-files — a bare exists() check would misroute this
-      // to the append path and wedge on every replay
-      val fs = new org.apache.hadoop.fs.Path(ix)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      rm(s"$ix/_lshmeta"); rm(s"$ix/_ingested"); rm(kept)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ix/_lshmeta/_temporary"))
-      val healedKept = LshIndex.ingestNovel(spark, ix, kept, batch0,
-        batchId = 0L, numBuckets = 16)
-      assert(healedKept === cleanKept,
-        "mid-write torn sidecar must re-bootstrap, not wedge")
-      LshIndex.probeCandidates(spark, ix, d.filter(col("doc_id") % 3 === 1)).count()
-    } finally { rm(base); d.unpersist() }
-  }
-
-  test("ingestNovel refuses to bootstrap-overwrite a dir that is not a band index") {
-    val d = docs.cache()
-    val base = "/tmp/graft_test_lsh_wrongpath"
-    try {
-      rm(base)
-      // an unrelated parquet dataset at the "index" path — a mistyped
-      // path must refuse loudly, never be destroyed by the overwrite
-      d.limit(5).write.parquet(s"$base/not_an_index")
-      val e = intercept[IllegalArgumentException](
-        LshIndex.ingestNovel(spark, s"$base/not_an_index", s"$base/kept",
-          d.filter(col("doc_id") % 3 === 0), batchId = 0L, numBuckets = 16))
-      assert(e.getMessage.contains("refusing to overwrite"))
-      assert(spark.read.parquet(s"$base/not_an_index").count() === 5,
-        "the unrelated dataset must be untouched")
     } finally { rm(base); d.unpersist() }
   }
 
@@ -335,10 +260,10 @@ class LshIndexSpec extends AnyFunSuite {
     try {
       rm(root)
       // not-a-root fails fast, not with a missing-parquet stack
-      intercept[IllegalArgumentException](LshIndex.currentLshIndexPath(spark, root))
+      intercept[IllegalArgumentException](LshIndex.currentPath(spark, root))
       val gen1 = LshIndex.writeVersioned(
         corpus.filter(col("doc_id") % 3 === 1), root, numBuckets = 16)
-      assert(LshIndex.currentLshIndexPath(spark, root) === gen1)
+      assert(LshIndex.currentPath(spark, root) === gen1)
       val rest = corpus.filter(col("doc_id") % 3 === 2)
       LshIndex.append(rest, gen1)
       // torn-replay residue: the same batch appended twice (crash after
@@ -347,15 +272,15 @@ class LshIndexSpec extends AnyFunSuite {
       val cands1 = LshIndex.probeCandidates(spark, gen1, batch).cache()
       cands1.count()
       // fragmentation visible pre-compaction: appends accrete files
-      assert(LshIndex.lshIndexStats(spark, gen1)
+      assert(LshIndex.stats(spark, gen1)
         .agg(max(col("n_files"))).head.getLong(0) > 1L,
         "appends should have fragmented at least one bucket")
       val rawBefore = spark.read.parquet(gen1).count()
 
-      val gen2 = LshIndex.compactLshIndexVersioned(spark, root)
+      val gen2 = LshIndex.compactVersioned(spark, root)
       assert(gen2 !== gen1)
-      assert(LshIndex.currentLshIndexPath(spark, root) === gen2)
-      assert(LshIndex.lshIndexStats(spark, gen2)
+      assert(LshIndex.currentPath(spark, root) === gen2)
+      assert(LshIndex.stats(spark, gen2)
         .agg(max(col("n_files"))).head.getLong(0) === 1L,
         "compacted generation must be one file per bucket")
       assert(spark.read.parquet(gen2).count() < rawBefore,
@@ -369,16 +294,16 @@ class LshIndexSpec extends AnyFunSuite {
         "compacted index must hold exactly the dup-free band-row set")
       // readers resolving the root answer identically post-flip
       val cands2 = LshIndex.probeCandidates(spark,
-        LshIndex.currentLshIndexPath(spark, root), batch)
+        LshIndex.currentPath(spark, root), batch)
       assert(cands1.exceptAll(cands2).isEmpty && cands2.exceptAll(cands1).isEmpty,
         "post-flip probe must answer identically")
       // old generation stays on disk for in-flight readers until retired
       assert(hfs.exists(new org.apache.hadoop.fs.Path(gen1)))
-      val retired = LshIndex.retireLshIndexGenerations(spark, root)
+      val retired = LshIndex.retireGenerations(spark, root)
       assert(retired === Seq(gen1), s"expected to retire only $gen1, got $retired")
       assert(!hfs.exists(new org.apache.hadoop.fs.Path(gen1)))
       val cands3 = LshIndex.probeCandidates(spark,
-        LshIndex.currentLshIndexPath(spark, root), batch)
+        LshIndex.currentPath(spark, root), batch)
       assert(cands1.exceptAll(cands3).isEmpty && cands3.exceptAll(cands1).isEmpty)
       cands1.unpersist()
     } finally { rm(root); d.unpersist() }
@@ -396,10 +321,10 @@ class LshIndexSpec extends AnyFunSuite {
       val cands1 = LshIndex.probeCandidates(spark, gen1, batch).cache()
       cands1.count()
       // grow 16 -> 64: pure column rewrite of the stored band keys
-      val gen2 = LshIndex.rebucketLshIndexVersioned(spark, root, 64)
-      assert(LshIndex.currentLshIndexPath(spark, root) === gen2)
+      val gen2 = LshIndex.rebucketVersioned(spark, root, 64)
+      assert(LshIndex.currentPath(spark, root) === gen2)
       // layout really is 64-wide: stats reach buckets past the old 16
-      assert(LshIndex.lshIndexStats(spark, gen2)
+      assert(LshIndex.stats(spark, gen2)
         .agg(max(col("bucket"))).head.getInt(0) > 15,
         "rebucketed index must occupy the new bucket range")
       // content == the from-scratch projection AT THE NEW FAN-OUT
@@ -424,35 +349,6 @@ class LshIndexSpec extends AnyFunSuite {
       rm(scratch)
       cands1.unpersist()
     } finally { rm(root); d.unpersist() }
-  }
-
-  test("compaction preserves the _ingested replay markers") {
-    val d = docs.cache()
-    val base = "/tmp/graft_test_lsh_compact_markers"
-    val root = s"$base/root"; val kept = s"$base/kept"
-    try {
-      rm(base)
-      // generation 1 from a base corpus, then one ingest batch (its
-      // replay marker lands inside the generation dir)
-      val gen1 = LshIndex.writeVersioned(
-        d.filter(col("doc_id") % 3 === 0), root, numBuckets = 16)
-      LshIndex.ingestNovel(spark, gen1, kept, d.filter(col("doc_id") % 3 === 1),
-        batchId = 1L, numBuckets = 16)
-      val gen2 = LshIndex.compactLshIndexVersioned(spark, root)
-      // a replay against the COMPACTED generation still short-circuits.
-      // Full-row hash + count (bare xxhash64(doc_id) xor cancels to 0
-      // over the 42 identical hashes per doc — see the ingestNovel test)
-      def sig(p: String, cols: String) = {
-        val r = spark.read.parquet(p)
-          .agg(expr(s"bit_xor(xxhash64($cols))"), count(lit(1))).head
-        (r.getLong(0), r.getLong(1))
-      }
-      val before = (sig(gen2, "doc_id, band, bkey, bucket"), sig(kept, "doc_id"))
-      LshIndex.ingestNovel(spark, gen2, kept, d.filter(col("doc_id") % 3 === 1),
-        batchId = 1L, numBuckets = 16)
-      assert((sig(gen2, "doc_id, band, bkey, bucket"), sig(kept, "doc_id")) === before,
-        "replay against the compacted generation must not mutate stores")
-    } finally { rm(base); d.unpersist() }
   }
 
   test("missing or tampered _lshmeta refuses to probe or append") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The persisted SRP band index (SrpIndex) — the dense-embedding sibling
-  * of LshIndexSpec, over the same shared physical core (BandIndexOps).
+  * of LshIndexSpec, over the same shared physical core (BandIndex).
   * The fixture embeddings are unit-norm with natural pairwise cos ≤ ~0.6,
   * so near-dups are PLANTED deterministically: multiplicative ±5%
   * per-dimension perturbations (cos ≈ 0.999 to the source, ≤ ~0.65 to
@@ -157,7 +157,7 @@ class SrpIndexSpec extends AnyFunSuite {
         .select(col("vec_new"), col("vec_old"))
       assert(got.exceptAll(truth).isEmpty && truth.exceptAll(got).isEmpty,
         "verified dup pairs must equal the exact cos>=tau cross-pair set")
-      val novel = SrpIndex.novelVecs(spark, path, batch, corpus)
+      val novel = SrpIndex.novel(spark, path, batch, corpus)
       val expectNovel = batch.join(truth.select(col("vec_new").as("vec_id")).distinct(),
         Seq("vec_id"), "left_anti")
       assert(novel.select("vec_id").exceptAll(expectNovel.select("vec_id")).isEmpty &&
@@ -308,7 +308,7 @@ class SrpIndexSpec extends AnyFunSuite {
       val gen1 = SrpIndex.writeVersioned(corpus, root, numBuckets = 16)
       val cands1 = SrpIndex.probeCandidates(spark, gen1, batch).cache()
       cands1.count()
-      val gen2 = SrpIndex.rebucketSrpIndexVersioned(spark, root, 64)
+      val gen2 = SrpIndex.rebucketVersioned(spark, root, 64)
       val got = spark.read.parquet(gen2)
         .select(col("vec_id"), col("band"), col("bkey"), col("bucket"))
       val want = SrpIndex.indexRows(corpus, 64)
@@ -316,7 +316,7 @@ class SrpIndexSpec extends AnyFunSuite {
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
         "rebucket must be exactly a bucket-column recompute at the new fan-out")
       val cands2 = SrpIndex.probeCandidates(spark,
-        SrpIndex.currentSrpIndexPath(spark, root), batch)
+        SrpIndex.currentPath(spark, root), batch)
       assert(cands1.exceptAll(cands2).isEmpty && cands2.exceptAll(cands1).isEmpty,
         "probes must answer identically across the rebucket flip")
       cands1.unpersist()
@@ -331,25 +331,25 @@ class SrpIndexSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       rm(root)
-      intercept[IllegalArgumentException](SrpIndex.currentSrpIndexPath(spark, root))
+      intercept[IllegalArgumentException](SrpIndex.currentPath(spark, root))
       val gen1 = SrpIndex.writeVersioned(
         corpus.filter(col("vec_id") % 2 === 0), root, numBuckets = 16)
-      assert(SrpIndex.currentSrpIndexPath(spark, root) === gen1)
+      assert(SrpIndex.currentPath(spark, root) === gen1)
       val rest = corpus.filter(col("vec_id") % 2 === 1)
       SrpIndex.append(rest, gen1)
       // torn-replay residue: the same batch appended twice
       SrpIndex.append(rest, gen1)
       val cands1 = SrpIndex.probeCandidates(spark, gen1, batch).cache()
       cands1.count()
-      assert(SrpIndex.srpIndexStats(spark, gen1)
+      assert(SrpIndex.stats(spark, gen1)
         .agg(max(col("n_files"))).head.getLong(0) > 1L,
         "appends should have fragmented at least one bucket")
       val rawBefore = spark.read.parquet(gen1).count()
 
-      val gen2 = SrpIndex.compactSrpIndexVersioned(spark, root)
+      val gen2 = SrpIndex.compactVersioned(spark, root)
       assert(gen2 !== gen1)
-      assert(SrpIndex.currentSrpIndexPath(spark, root) === gen2)
-      assert(SrpIndex.srpIndexStats(spark, gen2)
+      assert(SrpIndex.currentPath(spark, root) === gen2)
+      assert(SrpIndex.stats(spark, gen2)
         .agg(max(col("n_files"))).head.getLong(0) === 1L,
         "compacted generation must be one file per bucket")
       assert(spark.read.parquet(gen2).count() < rawBefore,
@@ -361,11 +361,11 @@ class SrpIndexSpec extends AnyFunSuite {
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
         "compacted index must hold exactly the dup-free band-row set")
       val cands2 = SrpIndex.probeCandidates(spark,
-        SrpIndex.currentSrpIndexPath(spark, root), batch)
+        SrpIndex.currentPath(spark, root), batch)
       assert(cands1.exceptAll(cands2).isEmpty && cands2.exceptAll(cands1).isEmpty,
         "post-flip probe must answer identically")
       assert(hfs.exists(new org.apache.hadoop.fs.Path(gen1)))
-      val retired = SrpIndex.retireSrpIndexGenerations(spark, root)
+      val retired = SrpIndex.retireGenerations(spark, root)
       assert(retired === Seq(gen1), s"expected to retire only $gen1, got $retired")
       assert(!hfs.exists(new org.apache.hadoop.fs.Path(gen1)))
       cands1.unpersist()

@@ -523,6 +523,8 @@ object SketchCodec {
     val minV = bb.getDouble()
     val maxV = bb.getDouble()
     val n = bb.getInt()
+    require(n >= 0 && 16L * n <= bb.remaining,
+      s"corrupt t-digest blob: $n centroids in ${bb.remaining} bytes")
     val means = new Array[Double](n)
     val weights = new Array[Double](n)
     var i = 0
@@ -556,8 +558,12 @@ object SketchCodec {
     val minV = bb.getDouble()
     val maxV = bb.getDouble()
     val nLevels = bb.getInt()
+    require(nLevels >= 0 && 4L * nLevels <= bb.remaining,
+      s"corrupt KLL blob: $nLevels levels in ${bb.remaining} bytes")
     val lens = Array.fill(nLevels)(bb.getInt())
     val levels = lens.map { len =>
+      require(len >= 0 && 8L * len <= bb.remaining,
+        s"corrupt KLL blob: a $len-item level in ${bb.remaining} bytes")
       val a = new Array[Double](len)
       var i = 0
       while (i < len) { a(i) = bb.getDouble(); i += 1 }
@@ -583,6 +589,8 @@ object SketchCodec {
     val k = bb.getInt()
     val thetaU = bb.getLong()
     val n = bb.getInt()
+    require(n >= 0 && 8L * n <= bb.remaining,
+      s"corrupt theta blob: $n entries in ${bb.remaining} bytes")
     val es = new Array[Long](n)
     var i = 0
     while (i < n) { es(i) = bb.getLong(); i += 1 }

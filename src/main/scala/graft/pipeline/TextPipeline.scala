@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.core.Hashing
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-data text operators over the `documents` table: exact dedup,
@@ -304,94 +304,87 @@ object TextPipeline {
     *   - its own label,
     *   - its neighbors' labels (one distributed join+groupBy), and
     *   - its label's label (one self-join — the "label ← min(label,
-    *     label-of-label)" doubling step),
-    * so label information travels ~2× farther per round and convergence
-    * is O(log diameter) rounds instead of O(diameter): a 100-hop chain
-    * of templated docs converges in ~9 rounds where plain neighbor-min
-    * needs 100 (pinned in TextPipelineSpec). Every adopted label is a
-    * node id inside the same component (neighbor labels by edge
-    * adjacency; label-of-label by induction), so correctness is
-    * unchanged — the fixpoint is the per-component minimum id. Each
-    * round materializes through an EAGER `localCheckpoint`, which (unlike
-    * cache + count) also TRUNCATES the logical plan: the label table is
-    * referenced three times per round (self-join + neighbor join), so an
-    * uncheckpointed plan re-analyzed per round grows as 3^rounds — cache
-    * keeps the physical lineage flat but Catalyst still re-walks (and
-    * clones, for self-join attribute dedup) the whole accumulated logical
-    * plan, which measured minutes of pure driver planning by round ~9 on
-    * a 100-hop chain. Old round blocks are released by the
-    * ContextCleaner once dereferenced. Throws if `maxIters` rounds don't
-    * reach the fixpoint rather than returning a half-propagated labeling.
+    *     label-of-label)" doubling step).
+    * Every adopted label is a node id inside the same component, so the
+    * fixpoint is the per-component minimum id. Doubling pays where ids
+    * grow along a path: a 100-hop chain of templated docs converges in 9
+    * rounds where plain neighbor-min needs 100 (pinned in
+    * TextPipelineSpec); ids in random order along a path still take
+    * rounds on the order of its length. Throws if `maxIters` rounds
+    * don't reach the fixpoint rather than returning a half-propagated
+    * labeling.
+    *
+    * ONE Spark action per round. Round 1 reads the edges alone (every
+    * label starts as its doc_id). Each round's label table is
+    * materialized through an EAGER `localCheckpoint`, which (unlike
+    * cache + count) also TRUNCATES the logical plan: the table is
+    * referenced three times per round, so an unchecked plan grows as
+    * 3^rounds. The same job counts (`Dataset.observe`) the labels that
+    * dropped; a round in which none did is the fixpoint. The checkpoint
+    * carries that job's row count as its statistics
+    * (`GraftSqlBridge.withRowCount`).
     *
     * FAULT TOLERANCE: `localCheckpoint` blocks are executor-local and
     * non-replicated — once lineage is truncated a lost executor fails
     * the job (it cannot recompute). For long runs on preemptible
     * infrastructure, set `spark.sparkContext.setCheckpointDir(...)`:
-    * rounds then round-trip through MANAGED parquet files under that
-    * dir (HDFS/S3-backed, survives executor loss) at the cost of one
-    * distributed write per round, with round i−1's files deleted as
-    * round i lands and everything removed on EVERY exit path — success,
-    * non-convergence throw, or a mid-round failure — no checkpoint-file
-    * leak (a bare `Dataset.checkpoint()` leaks every round unless the
-    * non-default cleanCheckpoints conf plus a driver GC happens to
-    * fire). Residual exposure even in reliable mode: the RETURNED frame
-    * is handed off through `localCheckpoint` (executor-local,
-    * non-replicated) and the final round's parquet is deleted before
-    * return, so an executor lost after return but before the caller
-    * consumes the result fails that job with no recompute path —
-    * durability holds per round, not across the handoff. A caller that
-    * needs a durable result writes it to its own storage first.
+    * each round's action is then a write of MANAGED parquet under that
+    * dir (survives executor loss); round i−1's files go as round i
+    * lands, and all of them on EVERY exit path. The RETURNED frame is
+    * handed off through `localCheckpoint` because the final round's
+    * parquet is deleted before return: durability holds per round, not
+    * across the handoff, so a caller that needs a durable result writes
+    * it to its own storage first.
     *
     * Returns (doc_id, canonical_id) for every doc that appears in a
     * pair; canonical_id = the cluster's minimum doc_id. Docs with no
     * near-dup pair are their own canonical and are NOT emitted (join
     * with the corpus and coalesce for the full mapping). The RETURNED
-    * DataFrame is cached (it is the converged fixpoint) — the caller
-    * unpersists it when done; all intermediate round caches are
-    * released internally. */
+    * DataFrame is cached, lazily (local mode: over the last round's
+    * checkpoint blocks) — the caller unpersists it when done. */
   def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    // eager materialization + plan truncation per round (see scaladoc).
-    // Reliable mode (session has a checkpoint dir): rounds round-trip
-    // through MANAGED parquet files — survives executor loss AND lets us
-    // delete round i−1 the moment round i is materialized (a bare
-    // Dataset.checkpoint() leaks every round's files: Spark only removes
-    // reliable checkpoint data under the non-default
-    // spark.cleaner.referenceTracking.cleanCheckpoints, and even then
-    // only on driver GC). Local mode: eager localCheckpoint.
+    // Reliable mode (session has a checkpoint dir): managed parquet, as a
+    // bare Dataset.checkpoint() leaks every round's files (Spark removes
+    // them only under the non-default cleanCheckpoints, on driver GC)
     val reliableBase = spark.sparkContext.getCheckpointDir
       .map(d => s"$d/graft_cc_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    var roundId = 0
-    var prevRoundPath: Option[String] = None
     def deleteDir(dir: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       ()
     }
-    def materialize(df: DataFrame): DataFrame = reliableBase match {
-      case Some(base) =>
-        val path = s"$base/round$roundId"
-        roundId += 1
-        df.write.parquet(path)
-        prevRoundPath.foreach(deleteDir)
-        prevRoundPath = Some(path)
-        spark.read.parquet(path)
-      case None => df.localCheckpoint()
+    // round i's ONE action: materialize its (doc_id, label) table and,
+    // in the same job, count its rows and the labels that dropped
+    def materialize(round: DataFrame, i: Int): (DataFrame, Long) = {
+      val seen = Observation()
+      val labels = round
+        .observe(seen, count_if(col("__chg")).as("changed"), count(lit(1)).as("rows"))
+        .select(col("doc_id"), col("label"))
+      val out = reliableBase match {
+        case Some(base) =>
+          labels.write.parquet(s"$base/round$i")
+          if (i > 0) deleteDir(s"$base/round${i - 1}")
+          spark.read.parquet(s"$base/round$i")
+        case None =>
+          val ckpt = labels.localCheckpoint()
+          GraftSqlBridge.withRowCount(ckpt, seen.get("rows").asInstanceOf[Long])
+      }
+      (out, seen.get("changed").asInstanceOf[Long])
     }
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .cache()
-    // try/finally so the managed round files (and the edges cache) are
-    // released on EVERY exit path — the non-convergence throw and any
-    // mid-round failure included, not just successful convergence
-    try {
-    var labels: DataFrame = materialize(
-      edges.select(col("src").as("doc_id"))
-        .distinct()
-        .withColumn("label", col("doc_id")))
-    var iters = 0
-    var changed = 1L
-    while (changed > 0 && iters < maxIters) {
+    // round 1 over the edges alone: while every label is its doc_id, the
+    // neighbor minimum is min(dst) and the label-of-label is the label
+    def firstRound: DataFrame = {
+      val chg = col("neighbor_label") < col("doc_id")
+      edges.groupBy(col("src").as("doc_id"))
+        .agg(min(col("dst")).as("neighbor_label"))
+        .select(col("doc_id"), when(chg, col("neighbor_label")).otherwise(col("doc_id")).as("label"),
+          chg.as("__chg"))
+    }
+    def nextRound(labels: DataFrame): DataFrame = {
       val neighborMin = edges
         .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
         .groupBy(col("src").as("doc_id"))
@@ -405,31 +398,36 @@ object TextPipeline {
           col("label") === col("__lbl_id"), "left")
         .select(col("doc_id"), col("label"),
           coalesce(col("label_label"), col("label")).as("label_label"))
-      val updated = materialize(labelOfLabel
+      labelOfLabel
         .join(neighborMin, Seq("doc_id"), "left")
         .select(col("doc_id"), col("label"),
           least(col("label"), col("label_label"),
             coalesce(col("neighbor_label"), col("label"))).as("new_label"))
         .select(col("doc_id"), col("new_label").as("label"),
-          (col("new_label") < col("label")).as("__chg")))
-      changed = updated.filter(col("__chg")).count()
-      labels = updated.drop("__chg")
+          (col("new_label") < col("label")).as("__chg"))
+    }
+    // try/finally so the managed round files (and the edges cache) are
+    // released on EVERY exit path — the non-convergence throw and any
+    // mid-round failure included, not just successful convergence
+    try {
+    var labels: Option[DataFrame] = None
+    var iters = 0
+    var changed = 1L
+    while (changed > 0 && iters < maxIters) {
+      val (next, n) = materialize(labels.fold(firstRound)(nextRound), iters)
+      labels = Some(next)
+      changed = n
       iters += 1
     }
     if (changed != 0) {
       throw new IllegalArgumentException(
         s"label propagation did not converge in $maxIters rounds")
     }
-    // the returned frame is eagerly localCheckpoint-ed AND cached
-    // (contract: caller unpersists): it must not depend on the final
-    // round's parquet file, which the finally below deletes — reliable
-    // mode leaves ZERO files behind. Local-mode round blocks are freed
-    // by the ContextCleaner once this method's references go out of
-    // scope.
-    val out = labels.select(col("doc_id"), col("label").as("canonical_id"))
-      .localCheckpoint().cache()
-    out.count()
-    out
+    // local mode: the last round's checkpoint blocks live as long as
+    // the result does. Reliable mode: the finally below deletes the
+    // last round's parquet, so hand off through a localCheckpoint.
+    val out = labels.get.select(col("doc_id"), col("label").as("canonical_id"))
+    (if (reliableBase.isDefined) out.localCheckpoint() else out).cache()
     } finally {
       edges.unpersist()
       reliableBase.foreach(deleteDir)

@@ -511,45 +511,48 @@ object VectorPipeline {
       .write.mode("overwrite").parquet(s"$indexPath/_codebook")
   }
 
-  /** ONE sidecar parquet read, shared by every verification shape:
-    * returns (book, stored fingerprint, assignment mode). Sidecars
-    * written before the mode column default to flat. */
+  /** ONE verified sidecar read, shared by every verification shape:
+    * returns (book, stored fingerprint, assignment mode). The stored
+    * book must match its own fingerprint. The fingerprint, the mode and
+    * the file schema are memoized on the sidecar's on-disk identity
+    * ([[SidecarCache]]), so a repeat read of an unchanged sidecar runs
+    * no job until the book itself is used. Sidecars written before the
+    * mode column default to flat. */
   private def readSidecar(spark: SparkSession, indexPath: String)
       : (DataFrame, Long, String) = {
-    val raw = IndexManifest.readSidecar(spark, indexPath, "_codebook",
+    val dir = s"$indexPath/_codebook"
+    val (fs, p) = IndexManifest.requireSidecar(spark, indexPath, "_codebook",
       "an IVF index", "writeIvfIndex")
-    val meta =
-      if (raw.schema.fieldNames.contains("__assign"))
-        raw.select(col("__fingerprint"), col("__assign")).distinct().collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-      else raw.select(col("__fingerprint")).distinct().collect()
-        .map(r => (r.getLong(0), AssignFlat))
-    require(meta.length == 1, s"codebook sidecar at $indexPath carries " +
-      s"${meta.length} (fingerprint, mode) pairs — corrupt sidecar")
-    (raw.select(col("centroid_id"), col("c_emb")), meta.head._1, meta.head._2)
+    def book(raw: DataFrame) = raw.select(col("centroid_id"), col("c_emb"))
+    val (stored, mode, schema) = codebookMemo.getOrLoad(fs, p) {
+      val raw = spark.read.parquet(dir)
+      val meta =
+        if (raw.schema.fieldNames.contains("__assign"))
+          raw.select(col("__fingerprint"), col("__assign")).distinct().collect()
+            .map(r => (r.getLong(0), r.getString(1)))
+        else raw.select(col("__fingerprint")).distinct().collect()
+          .map(r => (r.getLong(0), AssignFlat))
+      require(meta.length == 1, s"codebook sidecar at $indexPath carries " +
+        s"${meta.length} (fingerprint, mode) pairs — corrupt sidecar")
+      require(codebookFingerprint(book(raw)) == meta.head._1,
+        s"codebook sidecar at $indexPath fails its own fingerprint — corrupt sidecar")
+      (meta.head._1, meta.head._2, raw.schema)
+    }
+    (book(spark.read.schema(schema).parquet(dir)), stored, mode)
   }
 
   /** Read (and integrity-verify) the codebook an index was built with —
     * the read path needs NO separate codebook argument. */
   def readIvfCodebook(spark: SparkSession, indexPath: String): DataFrame =
-    readVerifiedSidecar(spark, indexPath)._1
-
-  private def readVerifiedSidecar(spark: SparkSession, indexPath: String)
-      : (DataFrame, String) = {
-    val (book, stored, mode) = readSidecar(spark, indexPath)
-    require(codebookFingerprint(book) == stored,
-      s"codebook sidecar at $indexPath fails its own fingerprint — corrupt sidecar")
-    (book, mode)
-  }
+    readSidecar(spark, indexPath)._1
 
   /** Refuse a codebook that is not the one the index was built with:
     * appending rows assigned under a retrained codebook (or probing with
     * one) silently mis-routes — recall degrades with no error anywhere.
     * This was the one silent-corruption path in the library; now it
-    * throws at the door like every other config mismatch. One sidecar
-    * read, one fingerprint pass over the supplied book (the stored
-    * fingerprint IS the identity — sidecar corruption surfaces as a
-    * mismatch here too). Returns the index's assignment mode. */
+    * throws at the door like every other config mismatch. One verified
+    * (memoized) sidecar read, one fingerprint pass over the supplied
+    * book. Returns the index's assignment mode. */
   private def requireCodebookMatch(spark: SparkSession, indexPath: String,
       book: DataFrame): String = {
     val (_, stored, mode) = readSidecar(spark, indexPath)
@@ -671,7 +674,7 @@ object VectorPipeline {
     * routing config to pass (and nothing to get wrong; the sidecar's
     * self-verify stands in for the match). */
   def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
-    val (book, mode) = readVerifiedSidecar(batch.sparkSession, path)
+    val (book, _, mode) = readSidecar(batch.sparkSession, path)
     appendCore(batch, book, path, quantized = false, mode)
   }
 
@@ -682,7 +685,7 @@ object VectorPipeline {
   }
 
   def appendToIvfIndexQuantized(batch: DataFrame, path: String): Unit = {
-    val (book, mode) = readVerifiedSidecar(batch.sparkSession, path)
+    val (book, _, mode) = readSidecar(batch.sparkSession, path)
     appendCore(batch, book, path, quantized = true, mode)
   }
 
@@ -1075,7 +1078,7 @@ object VectorPipeline {
     * (vector, sidecar state). */
   def appendToIvfIndexPq(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    val (book, mode) = readVerifiedSidecar(spark, path)
+    val (book, _, mode) = readSidecar(spark, path)
     val rows = pqIndexRows(batch, book, mode, readPqBooks(spark, path))
     requireSameIndexLayout(spark, path, rows)
     rows.write.partitionBy("centroid_id").mode("append").parquet(path)
@@ -1166,7 +1169,7 @@ object VectorPipeline {
     * the caller's metadata flip (point readers at destPath, then retire
     * srcPath). destPath must not exist. */
   def compactIvfIndex(spark: SparkSession, srcPath: String, destPath: String): Unit = {
-    val (book, mode) = readVerifiedSidecar(spark, srcPath)
+    val (book, _, mode) = readSidecar(spark, srcPath)
     val rows = spark.read.parquet(srcPath)
     // a PQ payload is only decodable with its books: read (and verify)
     // them before the rewrite, and reinstall them with the codebook
@@ -1184,6 +1187,12 @@ object VectorPipeline {
   // — one lifecycle for every persisted index in the library).
 
   private val IvfVersionedHint = "writeIvfIndexVersioned"
+
+  /** Verified `_codebook` reads of every IVF index in the JVM: (stored
+    * fingerprint, assignment mode, file schema), keyed by the sidecar's
+    * file identity. */
+  private val codebookMemo =
+    new SidecarCache[(Long, String, org.apache.spark.sql.types.StructType)]()
 
   /** Current index DATA path under a versioned root — every existing
     * probe/append entry point takes this resolved path. */

@@ -8,9 +8,12 @@ import org.apache.spark.sql.SparkSession
 object CheckQuery {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: CheckQuery <queryName> [more...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+    // sized like graft.Verify; scratch goes where Spark puts it by
+    // default: SPARK_LOCAL_DIRS if set, else java.io.tmpdir
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

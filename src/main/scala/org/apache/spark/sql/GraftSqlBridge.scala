@@ -2,6 +2,9 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Spark 4 removed the public Column(Expression) constructor (Column is a
   * ColumnNode facade in sql-api); extensions that build custom Catalyst
@@ -16,4 +19,21 @@ object GraftSqlBridge {
 
   def aggColumn(f: AggregateFunction): Column =
     column(f.toAggregateExpression())
+
+  /** `checkpoint` (a `localCheckpoint` result) with the statistics of the
+    * `rows` it holds. Spark carries the optimizer's size estimate of the
+    * checkpointed plan into the checkpoint, and a join's estimate is the
+    * product of its inputs': a loop that joins each round's checkpoint
+    * with itself triples the estimate's digits per round, so past ~20
+    * rounds planning one round takes seconds, then minutes, of BigInt
+    * multiplication. */
+  def withRowCount(checkpoint: DataFrame, rows: Long): DataFrame =
+    checkpoint.queryExecution.logical match {
+      case r: LogicalRDD =>
+        val session = checkpoint.sparkSession.asInstanceOf[classic.SparkSession]
+        val stats = Statistics(EstimationUtils.getSizePerRow(r.output) * rows, Some(BigInt(rows)))
+        classic.Dataset.ofRows(session, r.copy()(session, Some(stats), Some(r.constraints)))
+      case other => throw new IllegalArgumentException(
+        s"not a checkpoint: ${other.nodeName}")
+    }
 }

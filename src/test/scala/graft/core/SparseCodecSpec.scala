@@ -424,6 +424,43 @@ class SparseCodecSpec extends AnyFunSuite {
     assert(e.getMessage.contains("heap"), e.getMessage)
   }
 
+  test("length-inflated t-digest, KLL and theta blobs fail typed before allocating") {
+    // each count is checked against the bytes that follow it; at the
+    // counts below an unchecked decoder dies with OutOfMemoryError,
+    // NegativeArraySizeException or BufferUnderflowException
+    def rejects(decode: Array[Byte] => Any, blob: Array[Byte], what: String): Unit = {
+      val e = intercept[IllegalArgumentException](decode(blob))
+      assert(e.getMessage.contains("corrupt"), s"$what: ${e.getMessage}")
+    }
+    def counts(fits: Int) =
+      Seq(Int.MaxValue, Int.MinValue, -1, 1 << 28, fits + 1).map(_.toLong)
+    // t-digest: compression, min, max (8 each) after the header, then n(4)
+    val td = TDigestSketch()
+    (1 to 500).foreach(i => td.update(i * 0.37))
+    val tdBlob = SketchCodec.encodeTDigest(td)
+    val tdN = (tdBlob.length - 34) / 16
+    assert(SketchCodec.decodeTDigest(le(tdBlob, 30, tdN, 4)).count === td.count)
+    counts(tdN).foreach(n => rejects(SketchCodec.decodeTDigest, le(tdBlob, 30, n, 4), s"t-digest n=$n"))
+    // theta: k(4) thetaU(8) after the header, then count(4)
+    val theta = ThetaSketch()
+    (0 until 300).foreach(i => theta.updateHash(Hashing.xxHash64Long(i.toLong, 7L)))
+    val thBlob = SketchCodec.encodeTheta(theta)
+    val thN = (thBlob.length - 22) / 8
+    counts(thN).foreach(n => rejects(SketchCodec.decodeTheta, le(thBlob, 18, n, 4), s"theta n=$n"))
+    // KLL: k(4) n(8) min(8) max(8) after the header, then numLevels(4)
+    // and one len(4) per level
+    val kll = KLLSketch()
+    (0 until 5000).foreach(i => kll.update(i.toDouble))
+    val kBlob = SketchCodec.encodeKll(kll)
+    val nLevels = kll.levelsSnapshot.length
+    assert(nLevels > 1)
+    counts((kBlob.length - 38) / 4).foreach(n =>
+      rejects(SketchCodec.decodeKll, le(kBlob, 34, n, 4), s"KLL numLevels=$n"))
+    val itemBytes = kBlob.length - 38 - 4 * nLevels
+    for (level <- Seq(0, nLevels - 1); len <- counts(itemBytes / 8))
+      rejects(SketchCodec.decodeKll, le(kBlob, 38 + 4 * level, len, 4), s"KLL level $level len=$len")
+  }
+
   test("describe renders sparse blobs; corrupt sparse blobs fail loudly") {
     val h = hllOf(0 until 50)
     assert(SketchCodec.describe(SketchCodec.encodeHll(h)).contains("HLLSketch"))

@@ -182,6 +182,37 @@ class IvfIndexSpec extends AnyFunSuite {
     retrained.unpersist(); book.unpersist(); emb.unpersist()
   }
 
+  test("the _codebook sidecar is verified once per on-disk identity") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7L)
+    val emb = (0L until 300L).map(i => (i, Seq.fill(16)(rnd.nextFloat() - 0.5f), 0))
+      .toDF("vec_id", "embedding", "label").cache()
+    val queries = emb.filter(col("vec_id") < 20)
+    val book = VectorPipeline.trainedCodebook(emb, 16).cache()
+    val path = "/tmp/graft_test_ivf_sidecar_memo"
+    VectorPipeline.writeIvfIndex(emb, book, path)
+    def probe() = VectorPipeline.ivfTopKFromIndex(spark, path, queries, 10, 8)
+      .select(col("q_id"), col("n_id")).collect().toSet
+    // the first probe reads and verifies the sidecar; the second reuses
+    // the verified read and runs only the probe's own jobs
+    val (first, firstJobs) = JobCount(spark)(probe())
+    val (second, secondJobs) = JobCount(spark)(probe())
+    assert(second === first)
+    assert(secondJobs < firstJobs, s"second probe ran $secondJobs jobs, first $firstJobs")
+    // an overwritten sidecar is a new identity and is verified again: a
+    // stored fingerprint that no longer matches the stored book is refused
+    val cb = s"$path/_codebook"
+    val raw = spark.read.parquet(cb)
+    val rows = raw.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), raw.schema)
+      .withColumn("__fingerprint", col("__fingerprint") + 1)
+      .coalesce(1).write.mode("overwrite").parquet(cb)
+    val e = intercept[IllegalArgumentException](VectorPipeline.readIvfCodebook(spark, path))
+    assert(e.getMessage.contains("fails its own fingerprint"), e.getMessage)
+    intercept[IllegalArgumentException](probe())
+    book.unpersist(); emb.unpersist()
+  }
+
   test("two-stage re-rank: full candidate set reproduces the float brute force exactly") {
     val emb = VectorPipeline.embeddings(spark, "/root/testdata/sf0.001").cache()
     val queries = emb.filter(col("vec_id") < 20)

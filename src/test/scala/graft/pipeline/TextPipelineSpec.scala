@@ -147,13 +147,88 @@ class TextPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     // a chained-templated-doc corpus A~B~C~…: 101 nodes, diameter 100.
     // Plain neighbor-min propagation needs 100 rounds and would throw at
-    // the default maxIters = 20; pointer doubling converges in ~9.
+    // the default maxIters = 20; pointer doubling converges in 9: 8
+    // label-dropping rounds plus the one that sees no change, so one
+    // round fewer must throw and the count cannot drift
     val chain = (0L until 100L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val labels = TextPipeline.dedupClusters(chain) // default maxIters = 20
+    intercept[IllegalArgumentException](TextPipeline.dedupClusters(chain, maxIters = 8))
+    val labels = TextPipeline.dedupClusters(chain, maxIters = 9)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     labels.unpersist()
     assert(got.length === 101)
     assert(got.forall(_._2 === 0L), "every chain node must label to the minimum id")
+  }
+
+  test("dedupClusters equals a driver-side union-find over random graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019L)
+    for (trial <- 0 until 6) {
+      val ids = rnd.shuffle((1L to 400L).toList)
+      // chains, stars and cycles over disjoint id runs, in random edge
+      // orientation, plus duplicate pairs, self pairs and random noise
+      val it = ids.iterator
+      val pairs = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      def orient(a: Long, b: Long) = if (rnd.nextBoolean()) (a, b) else (b, a)
+      for (_ <- 0 until 8) {
+        val chain = it.take(2 + rnd.nextInt(25)).toList
+        pairs ++= chain.zip(chain.tail).map { case (a, b) => orient(a, b) }
+        val star = it.take(2 + rnd.nextInt(10)).toList
+        pairs ++= star.tail.map(orient(star.head, _))
+        val cycle = it.take(3 + rnd.nextInt(12)).toList
+        pairs ++= (cycle :+ cycle.head).sliding(2).map { case Seq(a, b) => orient(a, b) }
+      }
+      pairs ++= Seq.fill(10)(pairs(rnd.nextInt(pairs.length))).map { case (a, b) => orient(a, b) }
+      pairs ++= Seq.fill(5)(ids(rnd.nextInt(ids.length))).map(v => (v, v))
+      pairs ++= Seq.fill(trial * 4)((ids(rnd.nextInt(ids.length)), ids(rnd.nextInt(ids.length))))
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(v: Long): Long = {
+        val p = parent.getOrElseUpdate(v, v)
+        if (p == v) v else { val r = find(p); parent(v) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val want = parent.keys.map(v => v -> find(v)).toMap
+      // ids run in random order along a path, where pointer doubling
+      // saves little: these need up to ~27 rounds, past the default 20
+      val labels = TextPipeline.dedupClusters(
+        rnd.shuffle(pairs.toList).toDF("doc_a", "doc_b"), maxIters = 200)
+      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
+      labels.unpersist()
+      assert(got.length === want.size, s"trial $trial: one row per paired doc")
+      assert(got.toMap === want, s"trial $trial")
+    }
+  }
+
+  test("dedupClusters costs one job per round: 60 disjoint pairs in <= 10 jobs with the collect") {
+    import spark.implicits._
+    // two rounds, the second sees no change: one action each, plus the
+    // collect. A count job per round and materializing the initial
+    // labels and the result on their own take 23 jobs here.
+    val pairs = (0L until 60L).map(i => (2 * i, 2 * i + 1)).toDF("doc_a", "doc_b")
+    TextPipeline.dedupClusters(pairs).unpersist() // warm the code paths
+    val (got, jobs) = JobCount(spark) {
+      val labels = TextPipeline.dedupClusters(pairs)
+      try labels.collect() finally labels.unpersist()
+    }
+    assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (0L until 120L).map(i => i -> (i & ~1L)).toMap)
+    assert(jobs <= 10, s"clusters ran $jobs jobs")
+  }
+
+  test("a round's checkpoint carries its row count, not its plan's estimate, as statistics") {
+    import spark.implicits._
+    // a join's size estimate is the product of its inputs': carried from
+    // checkpoint to checkpoint it grows as est^3 per round
+    val labels = (0L until 50L).map(i => (i, i / 2)).toDF("doc_id", "label")
+    val round = labels.join(labels.select($"doc_id".as("l2"), $"label".as("ll")), $"label" === $"l2")
+      .select($"doc_id", $"ll".as("label")).localCheckpoint()
+    val counted = org.apache.spark.sql.GraftSqlBridge.withRowCount(round, 50L)
+    val stats = counted.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount.contains(BigInt(50)))
+    assert(stats.sizeInBytes < round.queryExecution.optimizedPlan.stats.sizeInBytes)
+    assert(counted.collect().toSet === round.collect().toSet)
   }
 
   test("dedupClusters uses RELIABLE round files when a checkpoint dir is set") {

@@ -1,7 +1,8 @@
 package graft
 
 import graft.core._
-import graft.pipeline.{MultimodalPipeline, TextPipeline, VectorPipeline, Winnowing}
+import graft.pipeline.{IvfAssign, IvfLayout, IvfStorage, MultimodalPipeline, TextPipeline,
+  VectorPipeline, Winnowing}
 import graft.spark.catalyst._
 import graft.spark.Transcripts
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -480,7 +481,7 @@ object PipelineEntries {
         sampleN = 1 << 15, iters = 10).cache()
       // r07 (guide §2.6): the determinism re-training and the float
       // brute-force baseline are independent of the index build — both
-      // overlap the writeIvfIndexTwoLevel below
+      // overlap the two-level writeIvfIndex below
       val book2F = graft.spark.Par.overlapped(
         VectorPipeline.trainedCodebookDistributed(
           emb.repartition(7, col("vec_id") % 3), 64, sampleN = 1 << 15, iters = 10))
@@ -491,7 +492,8 @@ object PipelineEntries {
       }
       val ixPath = scratchDir("graft_q46_ivf_index")
       try {
-        VectorPipeline.writeIvfIndexTwoLevel(emb, book, ixPath, coarseK = 8, probes = 4)
+        VectorPipeline.writeIvfIndex(emb, book, ixPath,
+          IvfLayout(assign = IvfAssign.TwoLevel(coarseK = 8, probes = 4)))
         val deterministic = VectorPipeline.codebookFingerprint(book) ==
           VectorPipeline.codebookFingerprint(book2F())
         val bf = bfF()
@@ -1207,6 +1209,7 @@ object PipelineEntries {
         VectorPipeline.trainedCodebookDistributed(emb, 16,
           sampleN = 1 << 12, iters = 5).cache())
       val pqBooks = VectorPipeline.trainedPqBooks(emb, m = 16, ksub = 256)
+      val pqLayout = IvfLayout(storage = IvfStorage.Pq(pqBooks))
       val book = bookF()
       val full = scratchDir("graft_q54_full")
       val half = scratchDir("graft_q54_half")
@@ -1218,7 +1221,7 @@ object PipelineEntries {
             .select(col("q_id"), col("n_id")).cache()
           x.count(); x
         }
-        VectorPipeline.writeIvfIndexPq(emb, book, pqBooks, full)
+        VectorPipeline.writeIvfIndex(emb, book, full, pqLayout)
         val roundtrip = VectorPipeline.pqBooksFingerprint(
           VectorPipeline.readPqBooks(s, full)) ==
           VectorPipeline.pqBooksFingerprint(pqBooks)
@@ -1237,16 +1240,16 @@ object PipelineEntries {
         // signature touch only `half` — independent of the probe/recall
         // path over `full`, so the whole arm runs on a background thread
         val halfSigF = graft.spark.Par.overlapped {
-          VectorPipeline.writeIvfIndexPq(
-            emb.filter(col("vec_id") % 2 === 0), book, pqBooks, half)
-          VectorPipeline.appendToIvfIndexPq(emb.filter(col("vec_id") % 2 === 1), half)
+          VectorPipeline.writeIvfIndex(
+            emb.filter(col("vec_id") % 2 === 0), book, half, pqLayout)
+          VectorPipeline.appendToIvfIndex(emb.filter(col("vec_id") % 2 === 1), half)
           sig(half)
         }
         val bf = bfF()
         // ONE pruned ADC pass at maxProbe=16; both nprobe depths are
         // ranked slices of it (the q46 shape)
         val scored = VectorPipeline
-          .ivfScoredCandidatesFromIndexPq(s, full, queries, 16).cache()
+          .ivfScoredCandidatesFromIndex(s, full, queries, 16).cache()
         def recallAt(nprobe: Int): Double = {
           val got = VectorPipeline.rerankTopK(
             scored.filter(col("probe_rank") <= nprobe), emb, queries, 10, 40)

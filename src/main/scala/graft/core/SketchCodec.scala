@@ -107,6 +107,18 @@ object SketchCodec {
     require(size <= heap, s"corrupt $what blob: declares $size bytes, more than the $heap-byte heap")
   }
 
+  /** An entry count `n` whose entries take at least `minEntry` bytes
+    * each must fit in the bytes that follow it. */
+  private def requireEntries(n: Int, minEntry: Int, bb: ByteBuffer, what: String): Unit =
+    require(n >= 0 && minEntry.toLong * n <= bb.remaining,
+      s"corrupt $what blob: $n entries in ${bb.remaining} bytes")
+
+  /** A key length must leave room for the rest of its entry (`after`
+    * bytes) and the minimum of every entry after it. */
+  private def requireKey(len: Int, after: Long, bb: ByteBuffer, what: String): Unit =
+    require(len >= 0 && len + after <= bb.remaining,
+      s"corrupt $what blob: a $len-byte key in ${bb.remaining} bytes")
+
   /** Sniff the sketch type of an encoded blob without decoding it. */
   def typeOf(bytes: Array[Byte]): Byte = {
     require(bytes.length >= 6, "truncated sketch blob")
@@ -632,8 +644,12 @@ object SketchCodec {
     val dec = bb.getLong()
     val n = bb.getLong()
     val cnt = bb.getInt()
-    val es = (0 until cnt).map { _ =>
+    // an entry is keyLen(4) key count(8): each length is checked against
+    // the bytes left for it and the entries after it, O(1) per field
+    requireEntries(cnt, 12, bb, "Misra-Gries")
+    val es = (0 until cnt).map { i =>
       val len = bb.getInt()
+      requireKey(len, 8 + 12L * (cnt - 1 - i), bb, "Misra-Gries")
       val kb = new Array[Byte](len)
       bb.get(kb)
       (kb, bb.getLong())
@@ -645,9 +661,12 @@ object SketchCodec {
     val bb = reader(bytes, TypeId.BottomK)
     val k = bb.getInt()
     val n = bb.getInt()
-    val es = (0 until n).map { _ =>
+    // an entry is hash(8) keyLen(4) key
+    requireEntries(n, 12, bb, "bottom-k")
+    val es = (0 until n).map { i =>
       val h = bb.getLong()
       val len = bb.getInt()
+      requireKey(len, 12L * (n - 1 - i), bb, "bottom-k")
       val kb = new Array[Byte](len)
       bb.get(kb)
       (h, kb)
@@ -675,10 +694,13 @@ object SketchCodec {
     val bb = reader(bytes, TypeId.WeightedBottomK)
     val k = bb.getInt()
     val n = bb.getInt()
-    val es = (0 until n).map { _ =>
+    // an entry is race(8) keyHash(8) keyLen(4) key
+    requireEntries(n, 20, bb, "weighted bottom-k")
+    val es = (0 until n).map { i =>
       val r = bb.getDouble()
       val h = bb.getLong()
       val len = bb.getInt()
+      requireKey(len, 20L * (n - 1 - i), bb, "weighted bottom-k")
       val kb = new Array[Byte](len)
       bb.get(kb)
       (r, h, kb)
@@ -759,18 +781,27 @@ object SketchCodec {
     val capacity = bb.getLong()
     val fpp = bb.getDouble()
     val config = BloomConfig(capacity, fpp)
+    // one byte per cell: the configured size must fit one array and the
+    // heap before either layout allocates it
+    require(config.totalBits <= Int.MaxValue,
+      s"corrupt counting Bloom blob: ${config.totalBits} cells past one array")
+    requireHeapFits(config.totalBits, "counting Bloom")
     val layout = bb.get()
     val cells = layout match {
       case 0 =>
         val n = bb.getInt()
-        require(n.toLong == config.totalBits,
-          s"counting blob cell count $n != configured ${config.totalBits}")
+        require(n.toLong == config.totalBits && n <= bb.remaining,
+          s"corrupt counting Bloom blob: cell count $n, configured " +
+            s"${config.totalBits}, in ${bb.remaining} bytes")
         val c = new Array[Byte](n)
         bb.get(c)
         c
       case 1 =>
         val c = new Array[Byte](config.totalBits.toInt)
         val nz = bb.getInt()
+        // an occupied cell is a varint delta (>= 1 byte) and a count byte
+        require(nz >= 0 && 2L * nz <= bb.remaining,
+          s"corrupt counting Bloom blob: $nz occupied cells in ${bb.remaining} bytes")
         var idx = 0L
         var i = 0
         while (i < nz) {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** The persisted-index protocol shared by every index family in this
   * library (IVF/IVF-PQ vector indexes, the LSH and SRP band indexes):
@@ -59,23 +59,16 @@ private[pipeline] object IndexManifest {
   /** The committed sidecar dir `indexPath/dir` (its file system and
     * path, the identity a [[SidecarCache]] keys on), or a curated
     * IllegalArgumentException naming the family (`what`) and the entry
-    * point that builds one (`buildHint`). */
+    * point that builds one (`buildHint`). Explicit reads of the
+    * underscore-prefixed dir succeed (the filter only hides it from
+    * PARENT-dir listings) but log a cosmetic "All paths were ignored"
+    * WARN — expected, same trick as _spark_metadata/_delta_log. */
   def requireSidecar(spark: SparkSession, indexPath: String, dir: String,
       what: String, buildHint: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     require(hasSidecar(spark, indexPath, dir),
       s"no $dir sidecar at $indexPath — not $what (or the write did not " +
         s"complete); build with $buildHint")
     fs(spark, s"$indexPath/$dir")
-  }
-
-  /** [[requireSidecar]], then the sidecar's rows. Explicit reads of an
-    * underscore-prefixed dir succeed (the filter only hides it from
-    * PARENT-dir listings) but log a cosmetic "All paths were ignored"
-    * WARN — expected, same trick as _spark_metadata/_delta_log. */
-  def readSidecar(spark: SparkSession, indexPath: String, dir: String,
-      what: String, buildHint: String): DataFrame = {
-    requireSidecar(spark, indexPath, dir, what, buildHint)
-    spark.read.parquet(s"$indexPath/$dir")
   }
 
   /** (version, generation dir name) pairs present in the manifest,

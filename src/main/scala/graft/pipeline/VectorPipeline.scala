@@ -445,11 +445,14 @@ object VectorPipeline {
       maxProbe: Int): DataFrame =
     scoreProbedLists(centroidProbes(book, queries, maxProbe), assigned)
 
-  private def scoreProbedLists(probes: DataFrame, lists: DataFrame): DataFrame =
+  /** The broadcast probe relation joined onto the inverted lists, each
+    * candidate scored by `score` (float cosine by default; the persisted
+    * index passes its payload's score). */
+  private def scoreProbedLists(probes: DataFrame, lists: DataFrame,
+      score: Column = cosine(col("q_emb"), col("embedding"))): DataFrame =
     broadcast(probes).join(lists, "centroid_id")
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosine(col("q_emb"), col("embedding")).as("cos"), col("probe_rank"))
+      .select(col("q_id"), col("vec_id").as("n_id"), score.as("cos"), col("probe_rank"))
 
   // ------------------------------------------------- persisted IVF index
   /** Deterministic 64-bit fingerprint of a codebook's logical content:
@@ -476,19 +479,6 @@ object VectorPipeline {
     }
     h
   }
-
-  /** Flat exact assignment — the default index routing mode. */
-  private val AssignFlat = "flat"
-
-  /** Two-level mode string, VERSIONED like a codec byte: `v1` pins the
-    * whole coarse-training scheme (spherical k-means, init = first
-    * coarseK fine centroids in id order, 10 iterations, the tie rules)
-    * — not just the (coarseK, probes) numbers — because a book-free
-    * append retrains the coarse book from the mode string alone, and a
-    * silently changed trainer would scatter nearly-tied vectors
-    * differently than the build did. Changing ANY of that scheme means
-    * writing `2l:v2:...` and teaching the parser both. */
-  private def assignMode2l(coarseK: Int, probes: Int) = s"2l:v1:$coarseK:$probes"
 
   /** The codebook sidecar lives INSIDE the index directory (`_codebook`
     * — the underscore prefix keeps every Spark read of the index data
@@ -531,7 +521,7 @@ object VectorPipeline {
           raw.select(col("__fingerprint"), col("__assign")).distinct().collect()
             .map(r => (r.getLong(0), r.getString(1)))
         else raw.select(col("__fingerprint")).distinct().collect()
-          .map(r => (r.getLong(0), AssignFlat))
+          .map(r => (r.getLong(0), IvfAssign.Flat.mode))
       require(meta.length == 1, s"codebook sidecar at $indexPath carries " +
         s"${meta.length} (fingerprint, mode) pairs — corrupt sidecar")
       require(codebookFingerprint(book(raw)) == meta.head._1,
@@ -564,33 +554,59 @@ object VectorPipeline {
     mode
   }
 
-  /** Assignment dispatcher for a persisted mode string. Unknown modes
-    * AND unknown two-level trainer versions throw — an append must
-    * never guess at routing it cannot reproduce. */
-  private def assignWithMode(corpus: DataFrame, book: DataFrame, mode: String): DataFrame =
-    mode match {
-      case AssignFlat => ivfAssign(corpus, book)
-      case s if s.startsWith("2l:v1:") =>
-        // the sidecar fingerprint covers the codebook, not the mode
-        // string — a truncated/corrupted mode must land in the curated
-        // unknown-mode error, not a raw ArrayIndexOutOfBounds/
-        // NumberFormatException from an unchecked split
-        val parsed = s.stripPrefix("2l:v1:").split(":", -1) match {
-          case Array(ck, p) =>
-            try Some((ck.toInt, p.toInt)) catch { case _: NumberFormatException => None }
-          case _ => None
-        }
-        parsed match {
-          case Some((ck, p)) if ck >= 1 && p >= 1 => ivfAssignTwoLevel(corpus, book, ck, p)
-          case _ => throw new IllegalArgumentException(
-            s"unknown index assignment mode '$s' — this build cannot " +
-              "reproduce that routing; rebuild the index or upgrade")
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown index assignment mode '$other' — this build cannot " +
-            "reproduce that routing; rebuild the index or upgrade")
+  /** Routing by an [[IvfAssign]]: the flat exact argmax or the
+    * two-level coarse → fine one. */
+  private def assign(corpus: DataFrame, book: DataFrame, a: IvfAssign): DataFrame =
+    a match {
+      case IvfAssign.Flat => ivfAssign(corpus, book)
+      case IvfAssign.TwoLevel(coarseK, probes) => ivfAssignTwoLevel(corpus, book, coarseK, probes)
     }
+
+  /** The ONE index-row projection, shared by write and append so the two
+    * can never drift apart: routing always runs on the FLOAT vectors
+    * against the float codebook (bit-identical for every storage), and
+    * only the stored payload differs — the float `embedding`, the int8
+    * `qe` blob ([[graft.spark.catalyst.QuantizeI8]], 1 B/dim) or the
+    * `pq` code ([[graft.spark.catalyst.PqEncode]], m bytes). */
+  private def indexRows(corpus: DataFrame, book: DataFrame, layout: IvfLayout): DataFrame = {
+    val assigned = assign(corpus, book, layout.assign)
+    def payload(c: Column) = assigned.select(col("vec_id"), c, col("centroid_id"))
+    layout.storage match {
+      case IvfStorage.Float => assigned
+      case IvfStorage.Int8 =>
+        payload(graft.spark.catalyst.quantizeI8(col("embedding")).as("qe"))
+      case IvfStorage.Pq(books) =>
+        payload(graft.spark.catalyst.pqEncodeNative(col("embedding"), books).as("pq"))
+    }
+  }
+
+  /** The storage an index was written with, read from its on-disk
+    * payload column — `embedding`, `qe` or `pq` (a PQ index's books come
+    * from its verified `_pqbooks`). Readers and appends never take the
+    * storage from the caller, so an append cannot mix payloads and a
+    * probe cannot score one payload as another. Anything else refuses. */
+  private def storageOf(spark: SparkSession, indexPath: String,
+      schema: org.apache.spark.sql.types.StructType): IvfStorage =
+    Seq("embedding", "qe", "pq").filter(schema.fieldNames.contains) match {
+      case Seq("embedding") => IvfStorage.Float
+      case Seq("qe") => IvfStorage.Int8
+      case Seq("pq") => IvfStorage.Pq(readPqBooks(spark, indexPath))
+      case _ => throw new IllegalArgumentException(
+        s"index at $indexPath has columns ${schema.fieldNames.mkString(", ")} — " +
+          "not an IVF payload this build can read (embedding, qe or pq)")
+    }
+
+  /** The sidecars, written LAST (a torn write leaves a probe-refusing
+    * index): the `_codebook` with the routing mode, then, for a PQ
+    * payload, the `_pqbooks`. */
+  private def writeSidecars(book: DataFrame, path: String, mode: String,
+      storage: IvfStorage): Unit = {
+    writeCodebookSidecar(book, path, mode)
+    storage match {
+      case IvfStorage.Pq(books) => writePqBooksSidecar(book.sparkSession, books, path)
+      case _ =>
+    }
+  }
 
   /** Write the IVF index in the INVERTED-LIST layout: the assigned corpus
     * partitioned by centroid_id on storage. This is what makes "scan only
@@ -599,57 +615,23 @@ object VectorPipeline {
     * with a `centroid_id IN (probed...)` PARTITION filter, so unprobed
     * inverted lists are never read from storage at all (directory-level
     * pruning), instead of being scanned and discarded by a post-scan
-    * filter. Write path is the shuffle-free [[ivfAssign]] projection +
-    * one partitioned write, then the `_codebook` sidecar (the routing
-    * config travels inside the index). */
-  def writeIvfIndex(corpus: DataFrame, book: DataFrame, path: String): Unit =
-    writeIndexCore(corpus, book, path, quantized = false, AssignFlat)
-
-  /** Index built with the TWO-LEVEL assignment — the write path once
-    * ncentroids outgrows the flat scan (6.9× at k=1024/probes=2,
-    * BENCH.md). The mode is recorded in the sidecar, so APPENDS
-    * reproduce the same routing automatically. */
-  def writeIvfIndexTwoLevel(corpus: DataFrame, book: DataFrame, path: String,
-      coarseK: Int, probes: Int): Unit =
-    writeIndexCore(corpus, book, path, quantized = false, assignMode2l(coarseK, probes))
-
-  /** Quantized twin of [[writeIvfIndexTwoLevel]]. */
-  def writeIvfIndexQuantizedTwoLevel(corpus: DataFrame, book: DataFrame, path: String,
-      coarseK: Int, probes: Int): Unit =
-    writeIndexCore(corpus, book, path, quantized = true, assignMode2l(coarseK, probes))
-
-  private def writeIndexCore(corpus: DataFrame, book: DataFrame, path: String,
-      quantized: Boolean, mode: String): Unit = {
-    val rows = if (quantized) quantizedIndexRows(corpus, book, mode)
-      else floatIndexRows(corpus, book, mode)
-    rows.write.partitionBy("centroid_id").mode("overwrite").parquet(path)
-    writeCodebookSidecar(book, path, mode)
-  }
-
-  /** The two index payload layouts share ONE projection definition each,
-    * so write and append can never drift apart. */
-  private def floatIndexRows(corpus: DataFrame, book: DataFrame, mode: String): DataFrame =
-    assignWithMode(corpus, book, mode)
-  private def quantizedIndexRows(corpus: DataFrame, book: DataFrame, mode: String): DataFrame =
-    assignWithMode(corpus, book, mode)
-      .select(col("vec_id"), graft.spark.catalyst.quantizeI8(col("embedding")).as("qe"),
-        col("centroid_id"))
-
-  /** Parquet append performs NO schema validation — appending the float
-    * layout into a quantized index (or vice versa) would poison the
-    * directory with mixed footers and fail (or silently drop rows) only
-    * at read time. Guard: the appended rows' columns must match what is
-    * already on disk. */
-  private def requireSameIndexLayout(spark: SparkSession, path: String,
-      rows: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-      val existing = spark.read.parquet(path).schema.fieldNames.toSet
-      val incoming = rows.schema.fieldNames.toSet
-      require(existing == incoming,
-        s"index layout mismatch at $path: on-disk columns $existing vs " +
-          s"appended $incoming — float and quantized indexes cannot mix")
-    }
+    * filter. Write path is the shuffle-free assignment projection + one
+    * partitioned write, then the sidecars (the routing config travels
+    * inside the index).
+    *
+    * `layout` picks the routing and the payload. Two-level routing is the
+    * write path once ncentroids outgrows the flat scan (6.9× at
+    * k=1024/probes=2, BENCH.md); its mode is recorded in the sidecar, so
+    * appends reproduce the same routing. `Int8` is IVF-SQ8 (each list 4×
+    * smaller on disk and in the scoring scan); `Pq` is IVF-PQ (a
+    * 20 B/vector payload at m=16: 12.8× less list IO than float, 3.2×
+    * less than SQ8). The `_codebook` sidecar always stores the FLOAT
+    * codebook. */
+  def writeIvfIndex(corpus: DataFrame, book: DataFrame, path: String,
+      layout: IvfLayout = IvfLayout.default): Unit = {
+    indexRows(corpus, book, layout)
+      .write.partitionBy("centroid_id").mode("overwrite").parquet(path)
+    writeSidecars(book, path, layout.assign.mode, layout.storage)
   }
 
   /** INCREMENTAL index maintenance: assign a new vector batch with the
@@ -658,119 +640,50 @@ object VectorPipeline {
     * it accretes. Append is directory-level (new files land inside the
     * existing centroid_id=... partitions), so probes see old + new rows
     * with the same pruning, and the result is value-identical to having
-    * built the index over the union in one pass (the assignment is a
-    * deterministic pure function of (vector, codebook)). Re-training the
-    * codebook requires a REBUILD — the supplied codebook is fingerprint-
-    * verified against the index's persisted one, so a retrained-codebook
-    * append THROWS instead of silently corrupting routing; mixing
-    * LAYOUTS (float vs quantized) is likewise rejected up front. */
-  def appendToIvfIndex(batch: DataFrame, book: DataFrame, path: String): Unit = {
-    val mode = requireCodebookMatch(batch.sparkSession, path, book)
-    appendCore(batch, book, path, quantized = false, mode)
-  }
+    * built the index over the union in one pass (assignment and encoding
+    * are deterministic pure functions of (vector, sidecar state)). The
+    * layout comes from the index itself: the assignment mode from the
+    * `_codebook` sidecar, the payload from the on-disk column. Re-training
+    * the codebook requires a REBUILD — the supplied codebook is
+    * fingerprint-verified against the index's persisted one, so a
+    * retrained-codebook append THROWS instead of silently corrupting
+    * routing. */
+  def appendToIvfIndex(batch: DataFrame, book: DataFrame, path: String): Unit =
+    appendRows(batch, book, path, requireCodebookMatch(batch.sparkSession, path, book))
 
-  /** Append a batch using the index's OWN persisted codebook AND its
-    * recorded assignment mode — the incremental-ingest shape with no
-    * routing config to pass (and nothing to get wrong; the sidecar's
-    * self-verify stands in for the match). */
+  /** Append a batch using the index's OWN persisted codebook — the
+    * incremental-ingest shape with no routing config to pass (and
+    * nothing to get wrong; the sidecar's self-verify stands in for the
+    * match). */
   def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
     val (book, _, mode) = readSidecar(batch.sparkSession, path)
-    appendCore(batch, book, path, quantized = false, mode)
+    appendRows(batch, book, path, mode)
   }
 
-  /** Quantized twin of [[appendToIvfIndex]] (IVF-SQ8 layout). */
-  def appendToIvfIndexQuantized(batch: DataFrame, book: DataFrame, path: String): Unit = {
-    val mode = requireCodebookMatch(batch.sparkSession, path, book)
-    appendCore(batch, book, path, quantized = true, mode)
+  private def appendRows(batch: DataFrame, book: DataFrame, path: String,
+      mode: String): Unit = {
+    val spark = batch.sparkSession
+    val layout = IvfLayout(IvfAssign.parse(mode),
+      storageOf(spark, path, spark.read.parquet(path).schema))
+    indexRows(batch, book, layout).write.partitionBy("centroid_id").mode("append").parquet(path)
   }
-
-  def appendToIvfIndexQuantized(batch: DataFrame, path: String): Unit = {
-    val (book, _, mode) = readSidecar(batch.sparkSession, path)
-    appendCore(batch, book, path, quantized = true, mode)
-  }
-
-  private def appendCore(batch: DataFrame, book: DataFrame, path: String,
-      quantized: Boolean, mode: String): Unit = {
-    val rows = if (quantized) quantizedIndexRows(batch, book, mode)
-      else floatIndexRows(batch, book, mode)
-    requireSameIndexLayout(batch.sparkSession, path, rows)
-    rows.write.partitionBy("centroid_id").mode("append").parquet(path)
-  }
-
-  /** The IVF-SQ8 composition — the production index shape at corpus
-    * scale: inverted-list layout (partition pruning reads only probed
-    * lists) AND int8-quantized vectors (each list 4× smaller on disk
-    * and in the scoring scan). Assignment happens on the FLOAT vectors
-    * (bit-identical routing to [[writeIvfIndex]]); only the stored
-    * payload is quantized. */
-  def writeIvfIndexQuantized(corpus: DataFrame, book: DataFrame, path: String): Unit =
-    // the sidecar stores the FLOAT codebook — routing always runs on
-    // float centroids regardless of the list payload layout
-    writeIndexCore(corpus, book, path, quantized = true, AssignFlat)
-
-  /** Scored int8 candidates against a quantized index: centroid routing
-    * on the float query against the float codebook (same probes as every
-    * other path), candidate scoring with the integer-MAC
-    * [[graft.spark.catalyst.CosineSimI8]] over the pruned quantized
-    * lists. Returns (q_id, n_id, cos, probe_rank). */
-  def ivfScoredCandidatesFromIndexQuantized(spark: SparkSession, indexPath: String,
-      book: DataFrame, queries: DataFrame, maxProbe: Int): DataFrame = {
-    requireCodebookMatch(spark, indexPath, book)
-    scoredFromIndexQuantizedCore(spark, indexPath, book, queries, maxProbe)
-  }
-
-  private def scoredFromIndexQuantizedCore(spark: SparkSession, indexPath: String,
-      book: DataFrame, queries: DataFrame, maxProbe: Int): DataFrame = {
-    import graft.spark.catalyst.{cosineI8, quantizeI8}
-    val probes = centroidProbes(book, queries, maxProbe)
-      .withColumn("q_qe", quantizeI8(col("q_emb"))).drop("q_emb")
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists = spark.read.parquet(indexPath)
-      .filter(col("centroid_id").isin(probedIds.toSeq: _*))
-    broadcast(probes).join(lists, "centroid_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        cosineI8(col("q_qe"), col("qe")).as("cos"), col("probe_rank"))
-  }
-
-  /** Top-k against a quantized index ([[writeIvfIndexQuantized]]). */
-  def ivfTopKFromIndexQuantized(spark: SparkSession, indexPath: String,
-      book: DataFrame, queries: DataFrame, k: Int, nprobe: Int): DataFrame =
-    topKFromScored(
-      ivfScoredCandidatesFromIndexQuantized(spark, indexPath, book, queries, nprobe), k)
-
-  /** Same, routing with the index's OWN persisted codebook (the
-    * sidecar's self-verify makes a separate match redundant — one
-    * sidecar read total). */
-  def ivfTopKFromIndexQuantized(spark: SparkSession, indexPath: String,
-      queries: DataFrame, k: Int, nprobe: Int): DataFrame =
-    topKFromScored(scoredFromIndexQuantizedCore(spark, indexPath,
-      readIvfCodebook(spark, indexPath), queries, nprobe), k)
 
   /** Scored candidates against a WRITTEN index ([[writeIvfIndex]]):
     * identical semantics to [[ivfScoredCandidates]] (same probes, same
-    * deterministic assignment, same scoring), but the corpus scan is
-    * partition-pruned to the probed inverted lists. The probed-centroid
-    * id pull is ≤ ncentroids values — constant-size, never corpus-bound. */
+    * deterministic assignment), but the corpus scan is partition-pruned
+    * to the probed inverted lists. The probed-centroid id pull is ≤
+    * ncentroids values — constant-size, never corpus-bound. Routing is
+    * always the float query against the float codebook; scoring follows
+    * the index's payload: float [[cosine]], the integer-MAC
+    * [[graft.spark.catalyst.CosineSimI8]] on the quantized query, or
+    * ADC ([[graft.spark.catalyst.PqAdcCosine]]) against per-query
+    * lookup tables riding the broadcast probe relation. The supplied
+    * codebook must be the index's own. Returns (q_id, n_id, cos,
+    * probe_rank). */
   def ivfScoredCandidatesFromIndex(spark: SparkSession, indexPath: String,
       book: DataFrame, queries: DataFrame, maxProbe: Int): DataFrame = {
     requireCodebookMatch(spark, indexPath, book)
-    scoredFromIndexCore(spark, indexPath, book, queries, maxProbe)
-  }
-
-  private def scoredFromIndexCore(spark: SparkSession, indexPath: String,
-      book: DataFrame, queries: DataFrame, maxProbe: Int): DataFrame = {
-    val probes = centroidProbes(book, queries, maxProbe)
-    // probes is computed twice (id pull here + the join below) — it is
-    // |queries|·maxProbe rows against a broadcast codebook, so the
-    // recompute is cheaper than holding a cache registration open past
-    // this call's lifetime
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists = spark.read.parquet(indexPath)
-      .filter(col("centroid_id").isin(probedIds.toSeq: _*))
-    scoreProbedLists(probes, lists)
+    scoredFromIndex(spark, indexPath, book, queries, maxProbe)
   }
 
   /** Same, routing with the index's OWN persisted codebook — the read
@@ -778,8 +691,36 @@ object VectorPipeline {
     * stale one; one sidecar read, self-verified). */
   def ivfScoredCandidatesFromIndex(spark: SparkSession, indexPath: String,
       queries: DataFrame, maxProbe: Int): DataFrame =
-    scoredFromIndexCore(spark, indexPath,
+    scoredFromIndex(spark, indexPath,
       readIvfCodebook(spark, indexPath), queries, maxProbe)
+
+  private def scoredFromIndex(spark: SparkSession, indexPath: String,
+      book: DataFrame, queries: DataFrame, maxProbe: Int): DataFrame = {
+    import graft.spark.catalyst.{cosineI8, pqAdcCosineNative, quantizeI8}
+    val index = spark.read.parquet(indexPath)
+    val probed = centroidProbes(book, queries, maxProbe)
+    val (probes, score) = storageOf(spark, indexPath, index.schema) match {
+      case IvfStorage.Float => (probed, cosine(col("q_emb"), col("embedding")))
+      case IvfStorage.Int8 =>
+        (probed.withColumn("q_qe", quantizeI8(col("q_emb"))).drop("q_emb"),
+          cosineI8(col("q_qe"), col("qe")))
+      case IvfStorage.Pq(books) =>
+        // table built on the QUERIES relation (one m·ksub·subdim pass per
+        // query), then joined onto the probe fan-out — building it after
+        // centroidProbes would run the UDF maxProbe× per query
+        val qTabs = queries.select(col("vec_id").as("q_id"),
+          pqAdcTable(books)(col("embedding")).as("q_tab"))
+        (probed.drop("q_emb").join(broadcast(qTabs), "q_id"),
+          pqAdcCosineNative(col("q_tab"), col("pq")))
+    }
+    // probes is computed twice (id pull here + the join below) — it is
+    // |queries|·maxProbe rows against a broadcast codebook, so the
+    // recompute is cheaper than holding a cache registration open past
+    // this call's lifetime
+    val probedIds = probes.select(col("centroid_id")).distinct()
+      .collect().map(_.getLong(0)).sorted
+    scoreProbedLists(probes, index.filter(col("centroid_id").isin(probedIds.toSeq: _*)), score)
+  }
 
   /** Top-k against a written index with partition-pruned scans. */
   def ivfTopKFromIndex(spark: SparkSession, indexPath: String, book: DataFrame,
@@ -1025,112 +966,33 @@ object VectorPipeline {
   /** Read (and integrity-verify) the PQ books a PQ index was encoded
     * with — probe and append paths take no books argument, so they
     * cannot be handed books the codes were not produced by (that would
-    * silently score garbage: codes index into the WRONG centroids). */
+    * silently score garbage: codes index into the WRONG centroids).
+    * Memoized on the sidecar's on-disk identity ([[SidecarCache]]), like
+    * the `_codebook`: a repeat read of an unchanged sidecar runs no job,
+    * and an overwritten one is verified again. */
   def readPqBooks(spark: SparkSession, indexPath: String): Seq[Seq[Seq[Float]]] = {
-    val raw = IndexManifest.readSidecar(spark, indexPath, "_pqbooks",
-      "a PQ index", "writeIvfIndexPq").collect()
-    val fps = raw.map(_.getAs[Long]("__fingerprint")).distinct
-    require(fps.length == 1,
-      s"_pqbooks sidecar at $indexPath carries ${fps.length} fingerprints — corrupt")
-    val byCell = raw.map(r =>
-      ((r.getAs[Int]("sub"), r.getAs[Int]("code")), r.getSeq[Float](2))).toMap
-    require(byCell.size == raw.length,
-      s"_pqbooks sidecar at $indexPath has duplicate (sub, code) rows — corrupt")
-    val m = raw.map(_.getAs[Int]("sub")).max + 1
-    val ksub = raw.map(_.getAs[Int]("code")).max + 1
-    require(byCell.size == m * ksub,
-      s"_pqbooks sidecar at $indexPath is missing cells — corrupt")
-    val books: Seq[Seq[Seq[Float]]] =
-      (0 until m).map(j => (0 until ksub).map(c => byCell((j, c))))
-    require(pqBooksFingerprint(books) == fps.head,
-      s"_pqbooks sidecar at $indexPath fails its own fingerprint — corrupt")
-    books
+    val (fs, p) = IndexManifest.requireSidecar(spark, indexPath, "_pqbooks",
+      "a PQ index", "writeIvfIndex with IvfStorage.Pq")
+    pqBooksMemo.getOrLoad(fs, p) {
+      val raw = spark.read.parquet(s"$indexPath/_pqbooks").collect()
+      val fps = raw.map(_.getAs[Long]("__fingerprint")).distinct
+      require(fps.length == 1,
+        s"_pqbooks sidecar at $indexPath carries ${fps.length} fingerprints — corrupt")
+      val byCell = raw.map(r =>
+        ((r.getAs[Int]("sub"), r.getAs[Int]("code")), r.getSeq[Float](2))).toMap
+      require(byCell.size == raw.length,
+        s"_pqbooks sidecar at $indexPath has duplicate (sub, code) rows — corrupt")
+      val m = raw.map(_.getAs[Int]("sub")).max + 1
+      val ksub = raw.map(_.getAs[Int]("code")).max + 1
+      require(byCell.size == m * ksub,
+        s"_pqbooks sidecar at $indexPath is missing cells — corrupt")
+      val books: Seq[Seq[Seq[Float]]] =
+        (0 until m).map(j => (0 until ksub).map(c => byCell((j, c))))
+      require(pqBooksFingerprint(books) == fps.head,
+        s"_pqbooks sidecar at $indexPath fails its own fingerprint — corrupt")
+      books
+    }
   }
-
-  /** One projection shared by PQ write and append (the
-    * floatIndexRows/quantizedIndexRows rule: write and append can never
-    * drift apart). Routing runs on the FLOAT vectors — bit-identical to
-    * every other index's assignment; only the stored payload is PQ. */
-  private def pqIndexRows(corpus: DataFrame, book: DataFrame, mode: String,
-      pqBooks: Seq[Seq[Seq[Float]]]): DataFrame =
-    assignWithMode(corpus, book, mode)
-      .select(col("vec_id"),
-        graft.spark.catalyst.pqEncodeNative(col("embedding"), pqBooks).as("pq"),
-        col("centroid_id"))
-
-  /** The IVF-PQ composition — the full-size production index at corpus
-    * scale: inverted-list partition pruning (only probed lists are read
-    * from storage) AND a 20 B/vector PQ payload (m=16 + norm; 12.8×
-    * less list IO than float, 3.2× less than IVF-SQ8). Data first, then
-    * BOTH sidecars — a torn write leaves a probe-refusing index. */
-  def writeIvfIndexPq(corpus: DataFrame, book: DataFrame,
-      pqBooks: Seq[Seq[Seq[Float]]], path: String): Unit = {
-    pqIndexRows(corpus, book, AssignFlat, pqBooks)
-      .write.partitionBy("centroid_id").mode("overwrite").parquet(path)
-    writeCodebookSidecar(book, path, AssignFlat)
-    writePqBooksSidecar(corpus.sparkSession, pqBooks, path)
-  }
-
-  /** Incremental PQ-index ingest: routing codebook, assignment mode AND
-    * PQ books all come from the index's own sidecars (nothing to pass,
-    * nothing to get wrong) — value-identical to a one-shot build over
-    * the union, because assignment and encoding are pure functions of
-    * (vector, sidecar state). */
-  def appendToIvfIndexPq(batch: DataFrame, path: String): Unit = {
-    val spark = batch.sparkSession
-    val (book, _, mode) = readSidecar(spark, path)
-    val rows = pqIndexRows(batch, book, mode, readPqBooks(spark, path))
-    requireSameIndexLayout(spark, path, rows)
-    rows.write.partitionBy("centroid_id").mode("append").parquet(path)
-  }
-
-  /** Scored ADC candidates against a PQ index: float-codebook centroid
-    * routing (same probes as every other path), per-query ADC tables
-    * riding the broadcast probe relation, partition-pruned list scan
-    * scoring m table reads per row. Returns (q_id, n_id, cos,
-    * probe_rank). */
-  def ivfScoredCandidatesFromIndexPq(spark: SparkSession, indexPath: String,
-      queries: DataFrame, maxProbe: Int): DataFrame = {
-    val book = readIvfCodebook(spark, indexPath)
-    val books = readPqBooks(spark, indexPath)
-    // table built on the QUERIES relation (one m·ksub·subdim pass per
-    // query), then joined onto the probe fan-out — building it after
-    // centroidProbes would run the UDF maxProbe× per query
-    val qTabs = queries.select(col("vec_id").as("q_id"),
-      pqAdcTable(books)(col("embedding")).as("q_tab"))
-    val probes = centroidProbes(book, queries, maxProbe).drop("q_emb")
-      .join(broadcast(qTabs), "q_id")
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists = spark.read.parquet(indexPath)
-      .filter(col("centroid_id").isin(probedIds.toSeq: _*))
-    broadcast(probes).join(lists, "centroid_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        graft.spark.catalyst.pqAdcCosineNative(col("q_tab"), col("pq")).as("cos"),
-        col("probe_rank"))
-  }
-
-  /** IVF-PQ two-stage: pruned ADC lists → top-(candMult·k) → float
-    * re-rank → top-k. The production 100 TB read shape:
-    * nprobe/ncentroids of the corpus scanned at 20 B/vector, float
-    * vectors touched only for C·dim per query in the re-rank tail. */
-  def ivfTopKFromIndexPqReranked(spark: SparkSession, indexPath: String,
-      corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-      candMult: Int = 4): DataFrame =
-    rerankTopK(ivfScoredCandidatesFromIndexPq(spark, indexPath, queries, nprobe),
-      corpus, queries, k, candMult * k)
-
-  /** IVF-SQ8 two-stage: pruned quantized lists generate candidates, the
-    * float corpus re-ranks them — the production 100 TB query shape
-    * (quantized index for the scan, primary float store for the tail). */
-  def ivfTopKFromIndexQuantizedReranked(spark: SparkSession, indexPath: String,
-      corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
-      candMult: Int = 4): DataFrame =
-    rerankTopK(
-      scoredFromIndexQuantizedCore(spark, indexPath,
-        readIvfCodebook(spark, indexPath), queries, nprobe),
-      corpus, queries, k, candMult * k)
 
   /** Index observability: per-inverted-list row/file counts straight
     * from the partitioned layout, plus the list's share of the corpus.
@@ -1173,12 +1035,10 @@ object VectorPipeline {
     val rows = spark.read.parquet(srcPath)
     // a PQ payload is only decodable with its books: read (and verify)
     // them before the rewrite, and reinstall them with the codebook
-    val pqBooks =
-      if (rows.schema.fieldNames.contains("pq")) Some(readPqBooks(spark, srcPath)) else None
+    val storage = storageOf(spark, srcPath, rows.schema)
     rows.repartition(col("centroid_id"))
       .write.partitionBy("centroid_id").mode("errorifexists").parquet(destPath)
-    writeCodebookSidecar(book, destPath, mode)
-    pqBooks.foreach(writePqBooksSidecar(spark, _, destPath))
+    writeSidecars(book, destPath, mode, storage)
   }
 
   // ------------------------------------------- versioned index lifecycle
@@ -1193,6 +1053,10 @@ object VectorPipeline {
     * file identity. */
   private val codebookMemo =
     new SidecarCache[(Long, String, org.apache.spark.sql.types.StructType)]()
+
+  /** Verified `_pqbooks` reads of every IVF-PQ index in the JVM, keyed
+    * the same way. */
+  private val pqBooksMemo = new SidecarCache[Seq[Seq[Seq[Float]]]]()
 
   /** Current index DATA path under a versioned root — every existing
     * probe/append entry point takes this resolved path. */
@@ -1227,4 +1091,69 @@ object VectorPipeline {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
+}
+
+/** How a persisted IVF index routes vectors to inverted lists
+  * ([[IvfAssign]]) and what each list row stores ([[IvfStorage]]) —
+  * the one value [[VectorPipeline.writeIvfIndex]] takes. Appends and
+  * probes read both back from the index itself. */
+final case class IvfLayout(assign: IvfAssign = IvfAssign.Flat,
+    storage: IvfStorage = IvfStorage.Float)
+
+object IvfLayout {
+  /** Flat exact routing, float payload. */
+  val default: IvfLayout = IvfLayout()
+}
+
+/** Write-time routing of an IVF index, persisted as the `_codebook`
+  * sidecar's `__assign` mode string. */
+sealed trait IvfAssign {
+  def mode: String
+}
+
+object IvfAssign {
+  /** The exact flat argmax ([[VectorPipeline.ivfAssign]]). */
+  case object Flat extends IvfAssign {
+    val mode = "flat"
+  }
+
+  /** Two-level coarse → fine routing ([[VectorPipeline.ivfAssignTwoLevel]]).
+    * The mode string is VERSIONED like a codec byte: `v1` pins the whole
+    * coarse-training scheme (spherical k-means, init = first coarseK
+    * fine centroids in id order, 10 iterations, the tie rules) — not
+    * just the (coarseK, probes) numbers — because a book-free append
+    * retrains the coarse book from the mode string alone, and a silently
+    * changed trainer would scatter nearly-tied vectors differently than
+    * the build did. Changing ANY of that scheme means writing
+    * `2l:v2:...` and teaching [[parse]] both. */
+  final case class TwoLevel(coarseK: Int, probes: Int) extends IvfAssign {
+    def mode: String = s"2l:v1:$coarseK:$probes"
+  }
+
+  private val TwoLevelV1 = "2l:v1:(\\d+):(\\d+)".r
+
+  /** The routing a persisted mode string names. Unknown modes AND
+    * unknown two-level trainer versions throw — an append must never
+    * guess at routing it cannot reproduce. The sidecar fingerprint
+    * covers the codebook, not the mode string, so a truncated or
+    * corrupted mode lands here too. */
+  def parse(mode: String): IvfAssign = mode match {
+    case Flat.mode => Flat
+    case TwoLevelV1(ck, p) if ck.toIntOption.exists(_ >= 1) && p.toIntOption.exists(_ >= 1) =>
+      TwoLevel(ck.toInt, p.toInt)
+    case other => throw new IllegalArgumentException(
+      s"unknown index assignment mode '$other' — this build cannot " +
+        "reproduce that routing; rebuild the index or upgrade")
+  }
+}
+
+/** The payload of an IVF index's list rows: the float `embedding`, the
+  * int8 `qe` blob (IVF-SQ8) or the `pq` code of `books` (IVF-PQ, Jégou
+  * et al., TPAMI 2011), books(j)(c) = centroid c of subspace j. */
+sealed trait IvfStorage
+
+object IvfStorage {
+  case object Float extends IvfStorage
+  case object Int8 extends IvfStorage
+  final case class Pq(books: Seq[Seq[Seq[scala.Float]]]) extends IvfStorage
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.pipeline.VectorPipeline
+import graft.pipeline.{IvfLayout, IvfStorage, VectorPipeline}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -47,10 +47,10 @@ object IvfSweep {
       {
         val b = VectorPipeline.trainedCodebook(emb, 16).cache()
         val qPath = "/tmp/graft_sweep_ivf_q8"
-        VectorPipeline.writeIvfIndexQuantized(emb, b, qPath)
+        VectorPipeline.writeIvfIndex(emb, b, qPath, IvfLayout(storage = IvfStorage.Int8))
         for (nprobe <- Seq(8, 12, 16)) {
           val ivf = VectorPipeline
-            .ivfTopKFromIndexQuantized(spark, qPath, b, queries, 10, nprobe)
+            .ivfTopKFromIndex(spark, qPath, b, queries, 10, nprobe)
             .select(col("q_id"), col("n_id"))
           val recall = bf.join(ivf, Seq("q_id", "n_id")).count().toDouble / (nq * 10)
           println(f"$sf,trained_sq8,$nprobe,$recall%.3f")

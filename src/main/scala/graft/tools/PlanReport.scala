@@ -163,9 +163,12 @@ object PlanReport {
       val pqBooks = graft.pipeline.VectorPipeline.trainedPqBooks(emb, m = 16,
         ksub = 64, iters = 3)
       val ixPath = s"/tmp/graft_plans_ivfpq_index_$runTag"
-      graft.pipeline.VectorPipeline.writeIvfIndexPq(emb, book, pqBooks, ixPath)
-      graft.pipeline.VectorPipeline.ivfTopKFromIndexPqReranked(spark, ixPath,
-        emb, emb.filter(col("vec_id") === 0), 10, 2)
+      graft.pipeline.VectorPipeline.writeIvfIndex(emb, book, ixPath,
+        graft.pipeline.IvfLayout(storage = graft.pipeline.IvfStorage.Pq(pqBooks)))
+      val queries = emb.filter(col("vec_id") === 0)
+      graft.pipeline.VectorPipeline.rerankTopK(
+        graft.pipeline.VectorPipeline.ivfScoredCandidatesFromIndex(spark, ixPath, queries, 2),
+        emb, queries, 10, 40)
     }
 
     show("MinHash LSH band self-join (dedup candidate core)",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.pipeline.VectorPipeline
+import graft.pipeline.{IvfLayout, IvfStorage, VectorPipeline}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -66,10 +66,10 @@ object PqBench {
       path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
     }
     try {
-      VectorPipeline.writeIvfIndexPq(emb, book, pqBooks, pqIx)
+      VectorPipeline.writeIvfIndex(emb, book, pqIx, IvfLayout(storage = IvfStorage.Pq(pqBooks)))
       VectorPipeline.writeIvfIndex(emb, book, fIx)
       val scored = VectorPipeline
-        .ivfScoredCandidatesFromIndexPq(spark, pqIx, queries, 16).cache()
+        .ivfScoredCandidatesFromIndex(spark, pqIx, queries, 16).cache()
       val rr = Seq(8, 16).map { np =>
         val got = VectorPipeline.rerankTopK(
           scored.filter(col("probe_rank") <= np), emb, queries, 10, 40)

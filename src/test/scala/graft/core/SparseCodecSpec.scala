@@ -461,6 +461,70 @@ class SparseCodecSpec extends AnyFunSuite {
       rejects(SketchCodec.decodeKll, le(kBlob, 38 + 4 * level, len, 4), s"KLL level $level len=$len")
   }
 
+  test("length-inflated Misra-Gries, bottom-k and weighted bottom-k blobs fail typed") {
+    def rejects(decode: Array[Byte] => Any, blob: Array[Byte], what: String): Unit = {
+      val e = intercept[IllegalArgumentException](decode(blob))
+      assert(e.getMessage.contains("corrupt"), s"$what: ${e.getMessage}")
+    }
+    def inflated(fits: Long) = Seq(Int.MaxValue, Int.MinValue, -1, 1 << 28).map(_.toLong) :+ (fits + 1)
+    def key(i: Int) = Hashing.utf8(s"key-$i")
+    // each case: the blob, its decoder, the offset of the entry count,
+    // the smallest entry, the offset of the first key length and the
+    // entry bytes after the key
+    val mg = MGSketch(16)
+    (0 until 40).foreach(i => mg.update(key(i % 12), 1L + i))
+    val bk = BottomKSketch(16)
+    (0 until 40).foreach(i => bk.update(key(i)))
+    val wbk = WeightedBottomKSketch(16)
+    (0 until 40).foreach(i => wbk.update(key(i), 1.0 + i))
+    val cases = Seq[(String, Array[Byte], Array[Byte] => Any, Int, Int, Int, Int)](
+      // k(4) decremented(8) n(8), then count(4); entry keyLen(4) key count(8)
+      ("Misra-Gries", SketchCodec.encodeMg(mg), b => SketchCodec.decodeMg(b), 26, 12, 30, 8),
+      // k(4), then n(4); entry hash(8) keyLen(4) key
+      ("bottom-k", SketchCodec.encodeBottomK(bk), b => SketchCodec.decodeBottomK(b), 10, 12, 22, 0),
+      // k(4), then n(4); entry race(8) keyHash(8) keyLen(4) key
+      ("weighted bottom-k", SketchCodec.encodeWeightedBottomK(wbk),
+        b => SketchCodec.decodeWeightedBottomK(b), 10, 20, 30, 0))
+    for ((what, blob, decode, countAt, minEntry, lenAt, afterKey) <- cases) {
+      val n = ByteBuffer.wrap(blob, countAt, 4).order(ByteOrder.LITTLE_ENDIAN).getInt()
+      assert(n > 1, what)
+      decode(blob) // the untouched blob decodes
+      val body = blob.length - countAt - 4
+      (inflated(body / minEntry) :+ (n + 1L)).foreach(c =>
+        rejects(decode, le(blob, countAt, c, 4), s"$what count=$c"))
+      val keyFits = blob.length - lenAt - 4 - afterKey - minEntry.toLong * (n - 1)
+      inflated(keyFits).foreach(l =>
+        rejects(decode, le(blob, lenAt, l, 4), s"$what first key length=$l"))
+    }
+  }
+
+  test("counting Bloom blobs with an inflated config or cell count fail typed") {
+    // keyMode(1) hasherId(1) after the header, capacity(8) at 8, fpp(8),
+    // layout(1) at 24, then the dense cell count(4) at 25
+    val dense = CountingBloomSketch(1000L, 0.01)
+    (0 until 1000).foreach(i => dense.insert(Hashing.utf8(s"k$i")))
+    val light = CountingBloomSketch(1000L, 0.01)
+    (0 until 5).foreach(i => light.insert(Hashing.utf8(s"k$i")))
+    val denseBlob = SketchCodec.encodeCountingBloom(dense)
+    val sparseBlob = SketchCodec.encodeCountingBloom(light)
+    assert(denseBlob(24) === 0 && sparseBlob(24) === 1)
+    def rejects(blob: Array[Byte], what: String): Unit = {
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeCountingBloom(blob))
+      assert(e.getMessage.contains("corrupt"), s"$what: ${e.getMessage}")
+    }
+    // a configured size past one array, on either layout
+    for (blob <- Seq(denseBlob, sparseBlob); cap <- Seq(1L << 40, Long.MaxValue / 64))
+      rejects(le(blob, 8, cap, 8), s"layout ${blob(24)} capacity=$cap")
+    // dense cell counts that disagree with the config or the bytes
+    val cells = dense.config.totalBits
+    for (n <- Seq(-1L, Int.MinValue.toLong, Int.MaxValue.toLong, cells + 1, cells - 1))
+      rejects(le(denseBlob, 25, n, 4), s"dense cells=$n")
+    rejects(denseBlob.dropRight(1), "truncated dense body")
+    // sparse occupied-cell counts past the bytes that follow
+    for (nz <- Seq(-1L, Int.MaxValue.toLong, 1L << 28))
+      rejects(le(sparseBlob, 25, nz, 4), s"sparse occupied=$nz")
+  }
+
   test("describe renders sparse blobs; corrupt sparse blobs fail loudly") {
     val h = hllOf(0 until 50)
     assert(SketchCodec.describe(SketchCodec.encodeHll(h)).contains("HLLSketch"))

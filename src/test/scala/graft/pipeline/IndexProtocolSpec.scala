@@ -273,11 +273,12 @@ class IndexProtocolSpec extends AnyFunSuite {
 
   private lazy val book: DataFrame = VectorPipeline.trainedCodebook(vecs, 16).cache()
   private lazy val pqBooks = VectorPipeline.trainedPqBooks(vecs, m = 8, ksub = 16)
+  private def pqLayout = IvfLayout(storage = IvfStorage.Pq(pqBooks))
   private def queries = vecs.filter(col("vec_id") < 20)
   private def ivfAnswers(path: String) =
     sig(VectorPipeline.ivfTopKFromIndex(spark, path, queries, 10, 8))
   private def pqAnswers(path: String) =
-    sig(VectorPipeline.ivfScoredCandidatesFromIndexPq(spark, path, queries, 4))
+    sig(VectorPipeline.ivfScoredCandidatesFromIndex(spark, path, queries, 4))
 
   test("IVF: every read path refuses a missing or torn _codebook") {
     val base = "/tmp/graft_test_protocol_ivf_refuse"
@@ -314,7 +315,7 @@ class IndexProtocolSpec extends AnyFunSuite {
     try {
       rm(base)
       val half = vecs.filter(col("vec_id") % 2 === 0)
-      VectorPipeline.writeIvfIndexPq(half, book, pqBooks, ix)
+      VectorPipeline.writeIvfIndex(half, book, ix, pqLayout)
       val clean = pqAnswers(ix)
       // "missing" is also the state of a PQ index compacted before
       // compaction carried `_pqbooks`: its compaction refuses, typed
@@ -325,12 +326,12 @@ class IndexProtocolSpec extends AnyFunSuite {
         def no(op: String)(g: => Any): Unit = refuses("_pqbooks", s"$state $op")(g)
         no("books")(VectorPipeline.readPqBooks(spark, ix))
         no("probe")(pqAnswers(ix))
-        no("append")(VectorPipeline.appendToIvfIndexPq(
+        no("append")(VectorPipeline.appendToIvfIndex(
           vecs.filter(col("vec_id") % 2 === 1), ix))
         no("compact")(VectorPipeline.compactIvfIndex(spark, ix, s"$base/compacted"))
         assert(!exists(s"$base/compacted"), s"$state: a refused compaction must write nothing")
       }
-      VectorPipeline.writeIvfIndexPq(half, book, pqBooks, ix)
+      VectorPipeline.writeIvfIndex(half, book, ix, pqLayout)
       assert(pqAnswers(ix) === clean)
     } finally rm(base)
   }
@@ -339,9 +340,9 @@ class IndexProtocolSpec extends AnyFunSuite {
     val base = "/tmp/graft_test_protocol_pq_compact"
     try {
       rm(base)
-      VectorPipeline.writeIvfIndexPq(vecs.filter(col("vec_id") % 2 === 0), book,
-        pqBooks, s"$base/index")
-      VectorPipeline.appendToIvfIndexPq(vecs.filter(col("vec_id") % 2 === 1),
+      VectorPipeline.writeIvfIndex(vecs.filter(col("vec_id") % 2 === 0), book,
+        s"$base/index", pqLayout)
+      VectorPipeline.appendToIvfIndex(vecs.filter(col("vec_id") % 2 === 1),
         s"$base/index")
       val before = pqAnswers(s"$base/index")
       VectorPipeline.compactIvfIndex(spark, s"$base/index", s"$base/compacted")

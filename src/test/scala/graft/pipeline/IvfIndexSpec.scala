@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,47 +56,67 @@ class IvfIndexSpec extends AnyFunSuite {
     val emb = VectorPipeline.embeddings(spark, "/root/testdata/sf0.001").cache()
     val queries = emb.filter(col("vec_id") < 20)
     val book = VectorPipeline.trainedCodebook(emb, 16).cache()
+    val pqBooks = VectorPipeline.trainedPqBooks(emb, m = 8, ksub = 16)
     val oncePath = "/tmp/graft_test_ivf_once"
     val accrPath = "/tmp/graft_test_ivf_accreted"
+    def sig(df: DataFrame): (Long, Long) = {
+      val r = df.agg(coalesce(bit_xor(xxhash64(df.columns.map(col).toSeq: _*)), lit(0L)),
+        count(lit(1))).head
+      (r.getLong(0), r.getLong(1))
+    }
+    // every routing × payload: the on-disk mode string is pinned, and an
+    // accreted index (build over half, one with-book and one book-free
+    // append) equals the one-pass build row for row and answers alike
+    for ((assign, mode) <- Seq(IvfAssign.Flat -> "flat",
+           IvfAssign.TwoLevel(coarseK = 4, probes = 2) -> "2l:v1:4:2");
+         storage <- Seq(IvfStorage.Float, IvfStorage.Int8, IvfStorage.Pq(pqBooks))) {
+      val layout = IvfLayout(assign, storage)
+      val what = s"${assign.mode}/${storage.getClass.getSimpleName}"
+      assert(IvfAssign.parse(mode) === assign)
+      VectorPipeline.writeIvfIndex(emb, book, oncePath, layout)
+      VectorPipeline.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), book, accrPath, layout)
+      VectorPipeline.appendToIvfIndex(emb.filter(col("vec_id") % 4 === 1), book, accrPath)
+      VectorPipeline.appendToIvfIndex(emb.filter(col("vec_id") % 4 === 3), accrPath)
+      assert(spark.read.parquet(s"$accrPath/_codebook").select(col("__assign")).distinct()
+        .collect().map(_.getString(0)).toSeq === Seq(mode), what)
+      val once = spark.read.parquet(oncePath)
+      val accr = spark.read.parquet(accrPath)
+      assert(once.exceptAll(accr).isEmpty && accr.exceptAll(once).isEmpty,
+        s"$what: accreted index rows differ from the one-pass build")
+      // book-free and with-book probes answer the same, on both builds
+      val answers = sig(VectorPipeline.ivfScoredCandidatesFromIndex(spark, oncePath, queries, 8))
+      assert(answers._2 > 0L, what)
+      assert(sig(VectorPipeline.ivfScoredCandidatesFromIndex(spark, accrPath, queries, 8)) ===
+        answers, what)
+      assert(sig(VectorPipeline.ivfScoredCandidatesFromIndex(spark, accrPath, book, queries, 8)) ===
+        answers, what)
+    }
+    intercept[IllegalArgumentException](IvfAssign.parse("2l:v2:4:2"))
+    intercept[IllegalArgumentException](IvfAssign.parse("2l:v1:0:2"))
+    intercept[IllegalArgumentException](IvfAssign.parse("2l:v1:4"))
+
+    // the payload is read from disk, so a payload column this build does
+    // not know refuses append and probe, with or without a codebook
+    val unknown = "/tmp/graft_test_ivf_unknown_payload"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val unknownP = new org.apache.hadoop.fs.Path(unknown)
+    val fs = unknownP.getFileSystem(hconf)
+    fs.delete(unknownP, true)
     VectorPipeline.writeIvfIndex(emb, book, oncePath)
-    // build over the first half, append the second half in two batches
-    VectorPipeline.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), book, accrPath)
-    VectorPipeline.appendToIvfIndex(
-      emb.filter(col("vec_id") % 4 === 1), book, accrPath)
-    VectorPipeline.appendToIvfIndex(
-      emb.filter(col("vec_id") % 4 === 3), book, accrPath)
-    // same rows on disk...
-    val once = spark.read.parquet(oncePath)
-      .select(col("vec_id"), col("centroid_id"))
-    val accr = spark.read.parquet(accrPath)
-      .select(col("vec_id"), col("centroid_id"))
-    assert(once.exceptAll(accr).isEmpty && accr.exceptAll(once).isEmpty,
-      "accreted index rows differ from the one-pass build")
-    // ...and identical query results through the pruned probe path
-    val a = VectorPipeline.ivfTopKFromIndex(spark, oncePath, book, queries, 10, 8)
-      .select(col("q_id"), col("n_id"))
-    val b = VectorPipeline.ivfTopKFromIndex(spark, accrPath, book, queries, 10, 8)
-      .select(col("q_id"), col("n_id"))
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-
-    // quantized twin: same accretion identity on the SQ8 layout
-    val q8Once = "/tmp/graft_test_ivf_q8_once"
-    val q8Accr = "/tmp/graft_test_ivf_q8_accreted"
-    VectorPipeline.writeIvfIndexQuantized(emb, book, q8Once)
-    VectorPipeline.writeIvfIndexQuantized(emb.filter(col("vec_id") % 2 === 0), book, q8Accr)
-    VectorPipeline.appendToIvfIndexQuantized(
-      emb.filter(col("vec_id") % 2 === 1), book, q8Accr)
-    val qa = spark.read.parquet(q8Once).select(col("vec_id"), col("qe"), col("centroid_id"))
-    val qb = spark.read.parquet(q8Accr).select(col("vec_id"), col("qe"), col("centroid_id"))
-    assert(qa.exceptAll(qb).isEmpty && qb.exceptAll(qa).isEmpty,
-      "accreted quantized index differs from the one-pass build")
-
-    // LAYOUT MIXING is rejected up front (parquet append would not
-    // validate; a mixed directory fails only at read time)
-    intercept[IllegalArgumentException](
-      VectorPipeline.appendToIvfIndex(emb, book, q8Accr))
-    intercept[IllegalArgumentException](
-      VectorPipeline.appendToIvfIndexQuantized(emb, book, accrPath))
+    spark.read.parquet(oncePath).withColumnRenamed("embedding", "blob")
+      .write.partitionBy("centroid_id").parquet(unknown)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(s"$oncePath/_codebook"),
+      fs, new org.apache.hadoop.fs.Path(s"$unknown/_codebook"), false, hconf)
+    def refused(op: String)(g: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](g)
+      assert(e.getMessage.contains("payload"), s"$op: ${e.getMessage}")
+    }
+    refused("append")(VectorPipeline.appendToIvfIndex(emb, unknown))
+    refused("append with book")(VectorPipeline.appendToIvfIndex(emb, book, unknown))
+    refused("probe")(VectorPipeline.ivfScoredCandidatesFromIndex(spark, unknown, queries, 8))
+    refused("probe with book")(
+      VectorPipeline.ivfScoredCandidatesFromIndex(spark, unknown, book, queries, 8))
+    assert(spark.read.parquet(unknown).count() === emb.count(), "a refused append wrote rows")
     book.unpersist(); emb.unpersist()
   }
 
@@ -106,14 +126,14 @@ class IvfIndexSpec extends AnyFunSuite {
     val nq = queries.count()
     val book = VectorPipeline.trainedCodebook(emb, 16).cache()
     val qPath = "/tmp/graft_test_ivf_index_q8"
-    VectorPipeline.writeIvfIndexQuantized(emb, book, qPath)
+    VectorPipeline.writeIvfIndex(emb, book, qPath, IvfLayout(storage = IvfStorage.Int8))
 
     // recall@10 at nprobe=12 vs the FLOAT brute-force ground truth: the
     // float IVF path gates 0.90 at this depth (q17); int8 scoring must
     // hold ≥ 0.85 (measured equal-or-near the float path on this data)
     val bf = VectorPipeline.bruteForceTopK(emb, queries, 10)
       .select(col("q_id"), col("n_id"))
-    val q8 = VectorPipeline.ivfTopKFromIndexQuantized(spark, qPath, book, queries, 10, 12)
+    val q8 = VectorPipeline.ivfTopKFromIndex(spark, qPath, book, queries, 10, 12)
       .select(col("q_id"), col("n_id"))
     val recall = bf.join(q8, Seq("q_id", "n_id")).count().toDouble / (nq * 10)
     assert(recall >= 0.85, s"IVF-SQ8 recall@10(nprobe=12) = $recall")
@@ -160,14 +180,14 @@ class IvfIndexSpec extends AnyFunSuite {
 
     // quantized index: same sidecar, same no-book probe equivalence
     val qPath = "/tmp/graft_test_ivf_codebook_q8"
-    VectorPipeline.writeIvfIndexQuantized(emb, book, qPath)
-    val qa = VectorPipeline.ivfTopKFromIndexQuantized(spark, qPath, queries, 10, 8)
+    VectorPipeline.writeIvfIndex(emb, book, qPath, IvfLayout(storage = IvfStorage.Int8))
+    val qa = VectorPipeline.ivfTopKFromIndex(spark, qPath, queries, 10, 8)
       .select(col("q_id"), col("n_id"))
-    val qb = VectorPipeline.ivfTopKFromIndexQuantized(spark, qPath, book, queries, 10, 8)
+    val qb = VectorPipeline.ivfTopKFromIndex(spark, qPath, book, queries, 10, 8)
       .select(col("q_id"), col("n_id"))
     assert(qa.exceptAll(qb).isEmpty && qb.exceptAll(qa).isEmpty)
     intercept[IllegalArgumentException](
-      VectorPipeline.appendToIvfIndexQuantized(emb.filter(col("vec_id") === 0), retrained, qPath))
+      VectorPipeline.appendToIvfIndex(emb.filter(col("vec_id") === 0), retrained, qPath))
 
     // a missing sidecar (torn write / pre-round-4 index) fails fast on
     // the read path instead of probing a config-less index
@@ -213,6 +233,38 @@ class IvfIndexSpec extends AnyFunSuite {
     book.unpersist(); emb.unpersist()
   }
 
+  test("the _pqbooks sidecar is verified once per on-disk identity") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11L)
+    val emb = (0L until 300L).map(i => (i, Seq.fill(16)(rnd.nextFloat() - 0.5f), 0))
+      .toDF("vec_id", "embedding", "label").cache()
+    val queries = emb.filter(col("vec_id") < 20)
+    val book = VectorPipeline.trainedCodebook(emb, 16).cache()
+    val pqBooks = VectorPipeline.trainedPqBooks(emb, m = 4, ksub = 16)
+    val path = "/tmp/graft_test_ivf_pqbooks_memo"
+    VectorPipeline.writeIvfIndex(emb, book, path, IvfLayout(storage = IvfStorage.Pq(pqBooks)))
+    // the _codebook read is already memoized, so the two probes differ
+    // only in the _pqbooks read: the first verifies it, the second reuses it
+    VectorPipeline.readIvfCodebook(spark, path)
+    def probe() = VectorPipeline.ivfTopKFromIndex(spark, path, queries, 10, 8)
+      .select(col("q_id"), col("n_id")).collect().toSet
+    val (first, firstJobs) = JobCount(spark)(probe())
+    val (second, secondJobs) = JobCount(spark)(probe())
+    assert(second === first)
+    assert(secondJobs < firstJobs, s"second PQ probe ran $secondJobs jobs, first $firstJobs")
+    // an overwritten _pqbooks is a new identity and is verified again
+    val pb = s"$path/_pqbooks"
+    val raw = spark.read.parquet(pb)
+    val rows = raw.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), raw.schema)
+      .withColumn("__fingerprint", col("__fingerprint") + 1)
+      .coalesce(1).write.mode("overwrite").parquet(pb)
+    val e = intercept[IllegalArgumentException](VectorPipeline.readPqBooks(spark, path))
+    assert(e.getMessage.contains("fails its own fingerprint"), e.getMessage)
+    intercept[IllegalArgumentException](probe())
+    book.unpersist(); emb.unpersist()
+  }
+
   test("two-stage re-rank: full candidate set reproduces the float brute force exactly") {
     val emb = VectorPipeline.embeddings(spark, "/root/testdata/sf0.001").cache()
     val queries = emb.filter(col("vec_id") < 20)
@@ -248,12 +300,14 @@ class IvfIndexSpec extends AnyFunSuite {
     // >= the int8-only ranking's — the production 100 TB query shape
     val book = VectorPipeline.trainedCodebook(emb, 16).cache()
     val qPath = "/tmp/graft_test_ivf_rerank_q8"
-    VectorPipeline.writeIvfIndexQuantized(emb, book, qPath)
+    VectorPipeline.writeIvfIndex(emb, book, qPath, IvfLayout(storage = IvfStorage.Int8))
     val i8Only = recallOf(
-      VectorPipeline.ivfTopKFromIndexQuantized(spark, qPath, queries, 10, 12)
+      VectorPipeline.ivfTopKFromIndex(spark, qPath, queries, 10, 12)
         .select(col("q_id"), col("n_id")))
     val reranked = recallOf(
-      VectorPipeline.ivfTopKFromIndexQuantizedReranked(spark, qPath, emb, queries, 10, 12)
+      VectorPipeline.rerankTopK(
+        VectorPipeline.ivfScoredCandidatesFromIndex(spark, qPath, queries, 12),
+        emb, queries, 10, 40)
         .select(col("q_id"), col("n_id")))
     assert(reranked >= i8Only,
       s"index-path re-rank recall $reranked below int8-only $i8Only")

@@ -158,15 +158,16 @@ class PqSpec extends AnyFunSuite {
     val full = s"/tmp/graft_pqspec_full_${java.util.UUID.randomUUID()}"
     val half = s"/tmp/graft_pqspec_half_${java.util.UUID.randomUUID()}"
     try {
-      VectorPipeline.writeIvfIndexPq(emb, book, pqBooks, full)
+      VectorPipeline.writeIvfIndex(emb, book, full, IvfLayout(storage = IvfStorage.Pq(pqBooks)))
       // the persisted books ARE the trained books
       assert(VectorPipeline.pqBooksFingerprint(VectorPipeline.readPqBooks(spark, full))
         === VectorPipeline.pqBooksFingerprint(pqBooks))
       // probe end-to-end (re-ranked) against the float brute force
       val bf = VectorPipeline.bruteForceTopK(emb, queries, 10)
         .select(col("q_id"), col("n_id"))
-      val pq = VectorPipeline.ivfTopKFromIndexPqReranked(spark, full, emb, queries,
-        k = 10, nprobe = 8).select(col("q_id"), col("n_id"))
+      val pq = VectorPipeline.rerankTopK(
+        VectorPipeline.ivfScoredCandidatesFromIndex(spark, full, queries, maxProbe = 8),
+        emb, queries, k = 10, candidates = 40).select(col("q_id"), col("n_id"))
       val recall = bf.join(pq, Seq("q_id", "n_id")).count().toDouble / (20 * 10)
       info(s"IVF-PQ re-ranked recall@10 at nprobe 8/16: $recall")
       // nprobe 8/16 caps recall at the IVF pruning level (~0.9 on these
@@ -174,9 +175,9 @@ class PqSpec extends AnyFunSuite {
       // not degrade it below the pruning floor
       assert(recall >= 0.7, s"IVF-PQ recall $recall under floor")
       // append-equivalence: half build + half append == one-shot build
-      VectorPipeline.writeIvfIndexPq(emb.filter(col("vec_id") % 2 === 0), book,
-        pqBooks, half)
-      VectorPipeline.appendToIvfIndexPq(emb.filter(col("vec_id") % 2 === 1), half)
+      VectorPipeline.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), book,
+        half, IvfLayout(storage = IvfStorage.Pq(pqBooks)))
+      VectorPipeline.appendToIvfIndex(emb.filter(col("vec_id") % 2 === 1), half)
       def sig(path: String): (Long, Long) = {
         val r = spark.read.parquet(path)
           .agg(expr("bit_xor(xxhash64(vec_id, pq, centroid_id))"), count(lit(1))).head

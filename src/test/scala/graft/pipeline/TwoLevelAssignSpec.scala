@@ -59,7 +59,8 @@ class TwoLevelAssignSpec extends AnyFunSuite {
     val book = VectorPipeline.trainedCodebookDistributed(emb, 64,
       sampleN = 1 << 14, iters = 5).cache()
     val path = "/tmp/graft_test_ivf_2l"
-    VectorPipeline.writeIvfIndexTwoLevel(emb, book, path, coarseK = 8, probes = 4)
+    val twoLevel = IvfLayout(assign = IvfAssign.TwoLevel(coarseK = 8, probes = 4))
+    VectorPipeline.writeIvfIndex(emb, book, path, twoLevel)
 
     // book-free probes route with the persisted codebook; recall floor
     // = the flat-built index's gate (mis-assignments are nearly-tied
@@ -75,8 +76,7 @@ class TwoLevelAssignSpec extends AnyFunSuite {
     // must reproduce the build's two-level routing (mode travels in the
     // sidecar), so accreted rows == one-pass rows exactly
     val accr = "/tmp/graft_test_ivf_2l_accr"
-    VectorPipeline.writeIvfIndexTwoLevel(
-      emb.filter(col("vec_id") % 2 === 0), book, accr, coarseK = 8, probes = 4)
+    VectorPipeline.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), book, accr, twoLevel)
     VectorPipeline.appendToIvfIndex(emb.filter(col("vec_id") % 2 === 1), accr)
     val once = spark.read.parquet(path).select(col("vec_id"), col("centroid_id"))
     val acc = spark.read.parquet(accr).select(col("vec_id"), col("centroid_id"))

@@ -99,6 +99,13 @@ object SketchCodec {
 
   private def versionOf(bytes: Array[Byte]): Byte = bytes(5)
 
+  /** A blob that ends inside a field fails like every other damaged blob. */
+  private def typed[A](decode: => A): A =
+    try decode catch {
+      case e: java.nio.BufferUnderflowException =>
+        throw new IllegalArgumentException("corrupt sketch blob: truncated", e)
+    }
+
   /** A sparse body cannot bound the logical size its header declares, so
     * a header inflated past the heap is refused here, typed, instead of
     * failing the allocation with OutOfMemoryError. */
@@ -187,7 +194,9 @@ object SketchCodec {
     // measure all three layouts in one word-level pass: within a word
     // every offset-list delta is < 64 (one varint byte), so only each
     // nonzero word's first set bit needs a real varint size; a word-RLE
-    // group is sized when its literal run ends
+    // group is sized when its literal run ends (BloomSizer is the same
+    // sizing for the canonical-form check; this loop stays inline, it is
+    // the encoder's hot path)
     val densePayload = 3 + 16 + 4 + 8 + 8 * nW
     var offsetBody = 4
     var ones = 0
@@ -213,9 +222,8 @@ object SketchCodec {
       wi += 1
     }
     if (litRun > 0) rleBody += varintSize(litRun.toLong) + 8 * litRun
-    val sparseHeader = 3 + 16 + 8 + 1
-    val offsetPayload = sparseHeader + offsetBody
-    val rlePayload = sparseHeader + rleBody
+    val offsetPayload = BloomSparseHeader + offsetBody
+    val rlePayload = BloomSparseHeader + rleBody
 
     def putSparseHeader(bb: ByteBuffer, layout: Byte): Unit = {
       bb.put(s.variant); bb.put(keyMode); bb.put(s.hasherId)
@@ -273,7 +281,7 @@ object SketchCodec {
     }
   }
 
-  def decodeBloom(bytes: Array[Byte]): BloomSketch = {
+  def decodeBloom(bytes: Array[Byte]): BloomSketch = typed {
     val bb = reader(bytes, TypeId.Bloom)
     val variant = bb.get()
     bb.get() // keyMode — surfaced via bloomKeyMode
@@ -358,6 +366,41 @@ object SketchCodec {
     x
   }
 
+  private val BloomSparseHeader = 3 + 16 + 8 + 1
+
+  /** Sizes a Bloom filter's offset-list and word-RLE bodies from its
+    * nonzero words, fed in ascending word order. Within a word every
+    * offset-list delta is < 64 (one varint byte), so only each nonzero
+    * word's first set bit needs a real varint size; a word-RLE group is
+    * sized when its literal run ends. The canonical-form check sizes
+    * with it exactly as encodeBloom's inline loop does, so both make the
+    * same layout choice (GoldenBlobSpec and CodecFuzzSpec pin that). */
+  private final class BloomSizer {
+    var offsetBody = 4
+    var ones = 0
+    private var lastPos = 0L
+    private var rle = 0
+    private var lastWord = -1L
+    private var litRun = 0
+
+    def word(wi: Long, word: Long): Unit = {
+      val first = wi * 64 + java.lang.Long.numberOfTrailingZeros(word)
+      val c = java.lang.Long.bitCount(word)
+      offsetBody += varintSize(if (ones == 0) first else first - lastPos) + c - 1
+      ones += c
+      lastPos = wi * 64 + 63 - java.lang.Long.numberOfLeadingZeros(word)
+      if (litRun > 0 && wi == lastWord + 1) litRun += 1
+      else {
+        if (litRun > 0) rle += varintSize(litRun.toLong) + 8 * litRun
+        rle += varintSize(wi - lastWord - 1)
+        litRun = 1
+      }
+      lastWord = wi
+    }
+
+    def rleBody: Int = if (litRun > 0) rle + varintSize(litRun.toLong) + 8 * litRun else rle
+  }
+
   /** Key convention of an encoded Bloom blob (header 6 + variant 1). */
   def bloomKeyMode(bytes: Array[Byte]): Byte = {
     require(bytes.length >= 8 && typeOf(bytes) == TypeId.Bloom, "not a Bloom blob")
@@ -402,7 +445,7 @@ object SketchCodec {
     }
   }
 
-  def decodeHll(bytes: Array[Byte]): HLLSketch = {
+  def decodeHll(bytes: Array[Byte]): HLLSketch = typed {
     val bb = reader(bytes, TypeId.Hll)
     val p = bb.getInt()
     require(p >= 4 && p <= 18, s"corrupt HLL blob: precision $p outside [4,18]")
@@ -475,7 +518,7 @@ object SketchCodec {
     }
   }
 
-  def decodeCms(bytes: Array[Byte]): CMSSketch = {
+  def decodeCms(bytes: Array[Byte]): CMSSketch = typed {
     val bb = reader(bytes, TypeId.Cms)
     bb.get() // keyMode — surfaced via cmsKeyMode
     val d = bb.getInt()
@@ -529,7 +572,7 @@ object SketchCodec {
     bb.array()
   }
 
-  def decodeTDigest(bytes: Array[Byte]): TDigestSketch = {
+  def decodeTDigest(bytes: Array[Byte]): TDigestSketch = typed {
     val bb = reader(bytes, TypeId.TDigest)
     val compression = bb.getDouble()
     val minV = bb.getDouble()
@@ -563,7 +606,7 @@ object SketchCodec {
     bb.array()
   }
 
-  def decodeKll(bytes: Array[Byte]): KLLSketch = {
+  def decodeKll(bytes: Array[Byte]): KLLSketch = typed {
     val bb = reader(bytes, TypeId.Kll)
     val k = bb.getInt()
     val count = bb.getLong()
@@ -596,7 +639,7 @@ object SketchCodec {
     bb.array()
   }
 
-  def decodeTheta(bytes: Array[Byte]): ThetaSketch = {
+  def decodeTheta(bytes: Array[Byte]): ThetaSketch = typed {
     val bb = reader(bytes, TypeId.Theta)
     val k = bb.getInt()
     val thetaU = bb.getLong()
@@ -638,7 +681,7 @@ object SketchCodec {
     bb.array()
   }
 
-  def decodeMg(bytes: Array[Byte]): MGSketch = {
+  def decodeMg(bytes: Array[Byte]): MGSketch = typed {
     val bb = reader(bytes, TypeId.Mg)
     val k = bb.getInt()
     val dec = bb.getLong()
@@ -657,7 +700,7 @@ object SketchCodec {
     MGSketch.fromEntries(k, es, dec, n)
   }
 
-  def decodeBottomK(bytes: Array[Byte]): BottomKSketch = {
+  def decodeBottomK(bytes: Array[Byte]): BottomKSketch = typed {
     val bb = reader(bytes, TypeId.BottomK)
     val k = bb.getInt()
     val n = bb.getInt()
@@ -690,7 +733,7 @@ object SketchCodec {
     bb.array()
   }
 
-  def decodeWeightedBottomK(bytes: Array[Byte]): WeightedBottomKSketch = {
+  def decodeWeightedBottomK(bytes: Array[Byte]): WeightedBottomKSketch = typed {
     val bb = reader(bytes, TypeId.WeightedBottomK)
     val k = bb.getInt()
     val n = bb.getInt()
@@ -774,7 +817,7 @@ object SketchCodec {
     }
   }
 
-  def decodeCountingBloom(bytes: Array[Byte]): CountingBloomSketch = {
+  def decodeCountingBloom(bytes: Array[Byte]): CountingBloomSketch = typed {
     val bb = reader(bytes, TypeId.CountingBloom)
     bb.get() // keyMode — surfaced via countingBloomKeyMode
     val hasherId = bb.get()
@@ -824,7 +867,370 @@ object SketchCodec {
 
   /** KeyMode byte of an encoded counting-Bloom blob (probe-path guard,
     * same contract as the Bloom/CMS key-mode sniffers). */
-  def countingBloomKeyMode(bytes: Array[Byte]): Byte = {
+  def countingBloomKeyMode(bytes: Array[Byte]): Byte = typed {
     reader(bytes, TypeId.CountingBloom).get()
+  }
+
+  // ------------------------------------------------------ canonical form
+  // A blob is CANONICAL when the current encoder writes exactly these
+  // bytes for the state they decode to: encode(decode(b)) == b, with the
+  // blob's own key convention. An aggregation buffer may then hold the
+  // blob and pass it through instead of decoding and re-encoding it
+  // (graft.spark.catalyst.SketchBuffer). The check reads the blob once
+  // and allocates no sketch state; it mirrors each decoder's refusals and
+  // each encoder's layout choice, and asks for what the encoder always
+  // writes (exact length, minimal varints, ascending entries, no empty
+  // groups or zero cells). Legacy versions (Bloom v1/v3, HLL/CMS v2, v2
+  // of the content types) are never canonical: the encoder no longer
+  // writes them. Neither is anything damaged — decoding such a blob is
+  // what reports the damage.
+
+  /** True iff `encode(decode(bytes)) == bytes`, checked without building
+    * the sketch. Never throws. */
+  def isCanonical(bytes: Array[Byte]): Boolean =
+    bytes.length >= 6 && java.util.Arrays.equals(bytes, 0, 4, Magic, 0, 4) && (try {
+      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).position(6)
+      val v = versionOf(bytes)
+      bytes(4) match {
+        case TypeId.Bloom =>
+          (v == BloomVersion || v == BloomSparseVersion) && canonicalBloom(bytes, bb)
+        case TypeId.Hll => canonicalHll(bytes, bb, v)
+        case TypeId.Cms => canonicalCms(bytes, bb, v)
+        case _ if v != MinVersion => false
+        case TypeId.TDigest => canonicalTDigest(bytes, bb)
+        case TypeId.Kll => canonicalKll(bytes, bb)
+        case TypeId.Theta => canonicalTheta(bytes, bb)
+        case TypeId.BottomK => canonicalBottomK(bb)
+        case TypeId.Mg => canonicalMg(bytes, bb)
+        case TypeId.WeightedBottomK => canonicalWeightedBottomK(bb)
+        case TypeId.CountingBloom => canonicalCountingBloom(bytes, bb)
+        case _ => false
+      }
+    } catch {
+      case _: java.nio.BufferUnderflowException | _: IllegalArgumentException |
+          _: IndexOutOfBoundsException => false
+    })
+
+  /** Same type, and the same header fields an encoder takes from its
+    * caller or its class rather than from the decoded state: the Bloom
+    * variant and the key convention of Bloom, CMS and counting Bloom.
+    * Both blobs must carry a full header. */
+  def sameKind(a: Array[Byte], b: Array[Byte]): Boolean =
+    a(4) == b(4) && (a(4) match {
+      case TypeId.Bloom => a(6) == b(6) && a(7) == b(7)
+      case TypeId.Cms | TypeId.CountingBloom => a(6) == b(6)
+      case _ => true
+    })
+
+  private def registeredPair(id: Byte): Boolean = KMHashPair.registered.exists(_.id == id)
+
+  /** Reads varints from `bytes` at `at` as the encoder writes them. */
+  private final class Varints(bytes: Array[Byte], var at: Int) {
+    /** The next varint if it is minimal (a multi-byte one ends in a
+      * nonzero byte) and below 2^63 (at most 9 bytes); else -1. */
+    def next(): Long = {
+      val start = at
+      var x = 0L
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) {
+        if (at >= bytes.length || shift > 56) return -1L
+        b = bytes(at) & 0xff
+        x |= (b & 0x7fL) << shift
+        shift += 7
+        at += 1
+      }
+      if (b == 0 && at - start > 1) -1L else x
+    }
+  }
+
+  private def canonicalBloom(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
+    val variant = bb.get()
+    bb.get() // keyMode: any byte round-trips
+    val hasherId = bb.get()
+    val pairOk = variant match {
+      case BloomVariant.KM => registeredPair(hasherId)
+      case BloomVariant.Seeded => hasherId == 0
+      case _ => false
+    }
+    val numBits = if (pairOk) BloomConfig(bb.getLong(), bb.getDouble()).totalBits else -1L
+    val nWords = (numBits + 63) >>> 6
+    if (numBits < 0 || nWords > Int.MaxValue || 8 * nWords > Runtime.getRuntime.maxMemory)
+      return false
+    val densePayload = 3 + 16 + 4 + 8 + 8 * nWords.toInt
+    val sizer = new BloomSizer
+    if (versionOf(bytes) == BloomVersion) {
+      if (bytes.length != 6 + 31 + 8 * nWords || bb.getInt() != nWords || bb.getLong() != numBits)
+        return false
+      var wi = 0
+      while (wi < nWords) {
+        val word = bb.getLong()
+        if (word != 0L) sizer.word(wi, word)
+        wi += 1
+      }
+      val offsetPayload = BloomSparseHeader + sizer.offsetBody
+      val rlePayload = BloomSparseHeader + sizer.rleBody
+      !(offsetPayload < densePayload && offsetPayload <= rlePayload) && rlePayload >= densePayload
+    } else {
+      if (bb.getLong() != numBits) return false
+      val payload = bytes.length - 6
+      bb.get() match {
+        case 0 => // offset-list: strictly ascending positions in range
+          val ones = bb.getInt()
+          val in = new Varints(bytes, bb.position())
+          var pos = -1L
+          var word = 0L
+          var wi = -1L
+          var i = 0
+          while (i < ones) {
+            val d = in.next()
+            if (d < 0 || (i > 0 && d == 0)) return false
+            pos = if (i == 0) d else pos + d
+            if (pos < 0 || pos >= numBits) return false
+            if ((pos >>> 6) != wi) {
+              if (wi >= 0) sizer.word(wi, word)
+              wi = pos >>> 6
+              word = 0L
+            }
+            word |= 1L << (pos & 63)
+            i += 1
+          }
+          if (wi >= 0) sizer.word(wi, word)
+          in.at == bytes.length && ones >= 0 && payload < densePayload &&
+            payload <= BloomSparseHeader + sizer.rleBody
+        case 1 => // word-RLE: maximal literal runs of nonzero words
+          val in = new Varints(bytes, bb.position())
+          var wp = 0L
+          var first = true
+          while (in.at < bytes.length) {
+            val z = in.next()
+            val lit = in.next()
+            if (z < 0 || lit < 1 || (!first && z == 0) || z > nWords || lit > nWords ||
+                wp + z + lit > nWords ||
+                in.at + 8 * lit > bytes.length) return false
+            wp += z
+            var j = 0L
+            while (j < lit) {
+              val word = bb.getLong(in.at)
+              if (word == 0L) return false
+              sizer.word(wp, word)
+              in.at += 8
+              wp += 1
+              j += 1
+            }
+            first = false
+          }
+          val offsetPayload = BloomSparseHeader + sizer.offsetBody
+          payload < densePayload && !(offsetPayload < densePayload && offsetPayload <= payload)
+        case _ => false
+      }
+    }
+  }
+
+  private def canonicalHll(bytes: Array[Byte], bb: ByteBuffer, v: Byte): Boolean = {
+    val p = bb.getInt()
+    if (p < 4 || p > 18) return false
+    val m = 1 << p
+    if (v == MinVersion) {
+      if (bytes.length != 10 + m) return false
+      var occupied = 0
+      var i = 10
+      while (i < bytes.length) { if (bytes(i) != 0) occupied += 1; i += 1 }
+      4 + 4 * occupied >= m
+    } else v == SparseVersion && {
+      val n = bb.getInt()
+      n >= 0 && 4 + 4L * n < m && bytes.length == 14 + 4L * n && {
+        var prevIdx = -1
+        var i = 0
+        while (i < n) {
+          val packed = bb.getInt()
+          val idx = packed >>> 6
+          if (idx <= prevIdx || idx >= m || (packed & 0x3f) == 0) return false
+          prevIdx = idx
+          i += 1
+        }
+        true
+      }
+    }
+  }
+
+  private def canonicalCms(bytes: Array[Byte], bb: ByteBuffer, v: Byte): Boolean = {
+    bb.get() // keyMode
+    val d = bb.getInt()
+    val w = bb.getInt()
+    bb.getLong() // total
+    val n = d.toLong * w
+    if (d <= 0 || w <= 0 || n > Int.MaxValue || 8 * n > Runtime.getRuntime.maxMemory) return false
+    val cells = n.toInt
+    if (v == MinVersion) {
+      if (bytes.length != 23 + 8 * n) return false
+      var nonzero = 0
+      var i = 0
+      while (i < cells) { if (bb.getLong() != 0L) nonzero += 1; i += 1 }
+      !(4 + 12 * nonzero < 8 * cells)
+    } else v == SparseVersion && {
+      val nz = bb.getInt()
+      nz >= 0 && 4 + 12 * nz < 8 * cells && bytes.length == 27 + 12L * nz && {
+        var prevIdx = -1
+        var i = 0
+        while (i < nz) {
+          val idx = bb.getInt()
+          if (idx <= prevIdx || idx >= cells || bb.getLong() == 0L) return false
+          prevIdx = idx
+          i += 1
+        }
+        true
+      }
+    }
+  }
+
+  private def canonicalTDigest(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
+    val compression = bb.getDouble()
+    bb.getDouble(); bb.getDouble() // min, max
+    val n = bb.getInt()
+    compression >= 20 && n >= 0 && bytes.length == 34 + 16L * n
+  }
+
+  private def canonicalKll(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
+    val k = bb.getInt()
+    bb.getLong(); bb.getDouble(); bb.getDouble() // n, min, max
+    val nLevels = bb.getInt()
+    if (k < 8 || nLevels < 1 || 4L * nLevels > bb.remaining) return false
+    var items = 0L
+    var i = 0
+    while (i < nLevels) {
+      val len = bb.getInt()
+      if (len < 0) return false
+      items += len
+      i += 1
+    }
+    bytes.length == 38 + 4L * nLevels + 8 * items
+  }
+
+  private def canonicalTheta(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
+    val k = bb.getInt()
+    val thetaU = bb.getLong()
+    val n = bb.getInt()
+    n >= 0 && n <= k && bytes.length == 22 + 8L * n && {
+      var prev = 0L
+      var i = 0
+      while (i < n) {
+        val e = bb.getLong()
+        if ((i > 0 && java.lang.Long.compareUnsigned(prev, e) >= 0) ||
+            (thetaU != ThetaSketch.ExactTheta && java.lang.Long.compareUnsigned(e, thetaU) >= 0))
+          return false
+        prev = e
+        i += 1
+      }
+      true
+    }
+  }
+
+  /** Skips a key of `len` bytes that must fit in the rest of the blob. */
+  private def skipKey(bb: ByteBuffer, len: Int): Boolean =
+    len >= 0 && len <= bb.remaining && { bb.position(bb.position() + len); true }
+
+  private def canonicalBottomK(bb: ByteBuffer): Boolean = {
+    val k = bb.getInt()
+    val n = bb.getInt()
+    n >= 0 && n <= k && {
+      var prev = 0L
+      var i = 0
+      while (i < n) {
+        val h = bb.getLong()
+        if ((i > 0 && java.lang.Long.compareUnsigned(prev, h) >= 0) || !skipKey(bb, bb.getInt()))
+          return false
+        prev = h
+        i += 1
+      }
+      !bb.hasRemaining
+    }
+  }
+
+  private def canonicalMg(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
+    val k = bb.getInt()
+    bb.getLong(); bb.getLong() // decremented, n
+    val cnt = bb.getInt()
+    k >= 1 && cnt >= 0 && cnt <= k && {
+      var prevAt = -1
+      var prevLen = 0
+      var i = 0
+      while (i < cnt) {
+        val len = bb.getInt()
+        val at = bb.position()
+        if (!skipKey(bb, len) || (i > 0 && java.util.Arrays.compareUnsigned(
+            bytes, prevAt, prevAt + prevLen, bytes, at, at + len) >= 0) || bb.getLong() <= 0L)
+          return false
+        prevAt = at
+        prevLen = len
+        i += 1
+      }
+      !bb.hasRemaining
+    }
+  }
+
+  private def canonicalWeightedBottomK(bb: ByteBuffer): Boolean = {
+    val k = bb.getInt()
+    val n = bb.getInt()
+    k >= 1 && n >= 0 && n <= k && {
+      var prevR = 0.0
+      var prevH = 0L
+      var i = 0
+      while (i < n) {
+        val r = bb.getDouble()
+        val h = bb.getLong()
+        if (!java.lang.Double.isFinite(r) || r < 0.0) return false
+        val c = java.lang.Double.compare(prevR, r)
+        if (i > 0 && (c > 0 || (c == 0 && java.lang.Long.compareUnsigned(prevH, h) >= 0)))
+          return false
+        if (!skipKey(bb, bb.getInt())) return false
+        prevR = r
+        prevH = h
+        i += 1
+      }
+      !bb.hasRemaining
+    }
+  }
+
+  private def canonicalCountingBloom(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
+    bb.get() // keyMode
+    if (!registeredPair(bb.get())) return false
+    val total = BloomConfig(bb.getLong(), bb.getDouble()).totalBits
+    if (total > Int.MaxValue || total > Runtime.getRuntime.maxMemory) return false
+    val n = total.toInt
+    val densePayload = 2 + 16 + 1 + 4 + n
+    bb.get() match {
+      case 0 =>
+        if (bb.getInt() != n || bytes.length != 6 + densePayload) return false
+        var sparseBody = 4
+        var prev = 0
+        var nz = 0
+        var j = 0
+        val at = bb.position()
+        while (j < n) {
+          if (bytes(at + j) != 0) {
+            sparseBody += varintSize((if (nz == 0) j else j - prev).toLong) + 1
+            prev = j
+            nz += 1
+          }
+          j += 1
+        }
+        2 + 16 + 1 + sparseBody >= densePayload
+      case 1 =>
+        val nz = bb.getInt()
+        val in = new Varints(bytes, bb.position())
+        var idx = -1L
+        var i = 0
+        while (i < nz) {
+          val d = in.next()
+          if (d < 0 || (i > 0 && d == 0)) return false
+          idx = if (i == 0) d else idx + d
+          if (idx < 0 || idx >= n || in.at >= bytes.length || bytes(in.at) == 0) return false
+          in.at += 1
+          i += 1
+        }
+        nz >= 0 && in.at == bytes.length && bytes.length - 6 < densePayload
+      case _ => false
+    }
   }
 }

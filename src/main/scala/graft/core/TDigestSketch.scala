@@ -21,9 +21,11 @@ final class TDigestSketch(val compression: Double) extends Serializable {
   private var centroidCount: Int = 0
   private var totalWeight: Double = 0.0
 
-  // unmerged incoming points
+  // unmerged incoming points; allocated by the first update, so a
+  // decoded digest that is only merged or queried never sizes it from
+  // its (blob-supplied) compression
   private val bufferCap: Int = math.max(64, (4 * compression).toInt)
-  private var buffer: Array[Double] = new Array[Double](bufferCap)
+  private var buffer: Array[Double] = _
   private var bufferLen: Int = 0
 
   var minValue: Double = Double.PositiveInfinity
@@ -33,7 +35,8 @@ final class TDigestSketch(val compression: Double) extends Serializable {
 
   def update(x: Double): Unit = {
     if (x.isNaN) return
-    if (bufferLen == bufferCap) compress()
+    if (buffer == null) buffer = new Array[Double](bufferCap)
+    else if (bufferLen == bufferCap) compress()
     buffer(bufferLen) = x
     bufferLen += 1
     if (x < minValue) minValue = x

@@ -3,7 +3,6 @@ package graft.spark.catalyst
 import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Second-level sketch aggregation: fold a COLUMN OF SKETCH BLOBS into
   * one blob. This is the piece that makes sketch TABLES composable inside
@@ -25,35 +24,114 @@ case class SketchMergeAgg(
     blob: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends SketchAggBase[SketchMergeAgg.Holder] {
+  extends SketchAggBase[SketchMergeAgg.Typed] {
 
-  import SketchMergeAgg.Holder
+  import SketchMergeAgg.Typed
 
   override def children: Seq[Expression] = Seq(blob)
   override def prettyName: String = "graft_sketch_merge_agg"
-  override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
 
-  override def createAggregationBuffer(): Holder = new Holder
+  // the first blob types the buffer: an empty one has no sketch to make
+  override protected def newSketch(): Typed =
+    throw new IllegalStateException("an empty sketch merge has no type")
 
-  override def update(b: Holder, input: InternalRow): Holder = {
+  override protected def insert(s: Typed, input: InternalRow): Unit =
+    throw new IllegalStateException("sketch merge folds blobs, not rows")
+
+  /** Union one codec blob in; an empty buffer takes the blob as it is. */
+  override def update(b: SketchBuffer[Typed], input: InternalRow): SketchBuffer[Typed] = {
     val v = blob.eval(input)
-    if (v != null) b.merge(v.asInstanceOf[Array[Byte]])
-    b
+    if (v == null) b else merge(b, super.deserialize(v.asInstanceOf[Array[Byte]]))
   }
 
-  override def merge(b: Holder, o: Holder): Holder = b.merge(o)
-
-  override def eval(b: Holder): Any = b.encoded.orNull
-
-  override def serialize(b: Holder): Array[Byte] =
-    b.encoded.getOrElse(Array.emptyByteArray)
-
-  override def deserialize(bytes: Array[Byte]): Holder = {
-    val h = new Holder
-    if (bytes.nonEmpty) h.merge(bytes)
-    h
+  override protected def decode(bytes: Array[Byte]): Typed = {
+    val t = SketchCodec.typeOf(bytes)
+    t match {
+      case SketchCodec.TypeId.Bloom =>
+        Typed(t, SketchCodec.bloomKeyMode(bytes), SketchCodec.decodeBloom(bytes))
+      case SketchCodec.TypeId.Hll => Typed(t, 0, SketchCodec.decodeHll(bytes))
+      case SketchCodec.TypeId.Cms =>
+        Typed(t, SketchCodec.cmsKeyMode(bytes), SketchCodec.decodeCms(bytes))
+      case SketchCodec.TypeId.TDigest => Typed(t, 0, SketchCodec.decodeTDigest(bytes))
+      case SketchCodec.TypeId.Kll => Typed(t, 0, SketchCodec.decodeKll(bytes))
+      case SketchCodec.TypeId.Theta => Typed(t, 0, SketchCodec.decodeTheta(bytes))
+      case SketchCodec.TypeId.BottomK => Typed(t, 0, SketchCodec.decodeBottomK(bytes))
+      case SketchCodec.TypeId.Mg => Typed(t, 0, SketchCodec.decodeMg(bytes))
+      case SketchCodec.TypeId.WeightedBottomK =>
+        Typed(t, 0, SketchCodec.decodeWeightedBottomK(bytes))
+      case SketchCodec.TypeId.CountingBloom =>
+        Typed(t, SketchCodec.countingBloomKeyMode(bytes), SketchCodec.decodeCountingBloom(bytes))
+      case other => throw new IllegalArgumentException(s"unknown sketch type $other")
+    }
   }
+
+  override protected def canonical(bytes: Array[Byte]): Boolean = SketchCodec.isCanonical(bytes)
+
+  override protected def union(s: Typed, o: Typed): Typed = {
+    require(o.typeId == s.typeId, s"cannot merge sketch type ${o.typeId} into ${s.typeId}")
+    val (mine, other) = (s.sketch, o.sketch)
+    s.typeId match {
+      case SketchCodec.TypeId.Bloom =>
+        require(o.keyMode == s.keyMode,
+          "cannot merge Bloom sketches built with different key conventions")
+        mine.asInstanceOf[BloomSketch].unionInPlace(other.asInstanceOf[BloomSketch])
+      case SketchCodec.TypeId.Hll =>
+        mine.asInstanceOf[HLLSketch].mergeInPlace(other.asInstanceOf[HLLSketch])
+      case SketchCodec.TypeId.Cms =>
+        require(o.keyMode == s.keyMode,
+          "cannot merge CMS sketches built with different key conventions")
+        mine.asInstanceOf[CMSSketch].mergeInPlace(other.asInstanceOf[CMSSketch])
+      case SketchCodec.TypeId.TDigest =>
+        mine.asInstanceOf[TDigestSketch].mergeInPlace(other.asInstanceOf[TDigestSketch])
+      case SketchCodec.TypeId.Kll =>
+        mine.asInstanceOf[KLLSketch].mergeInPlace(other.asInstanceOf[KLLSketch])
+      case SketchCodec.TypeId.Theta =>
+        mine.asInstanceOf[ThetaSketch].mergeInPlace(other.asInstanceOf[ThetaSketch])
+      case SketchCodec.TypeId.BottomK =>
+        mine.asInstanceOf[BottomKSketch].mergeInPlace(other.asInstanceOf[BottomKSketch])
+      case SketchCodec.TypeId.Mg =>
+        mine.asInstanceOf[MGSketch].mergeInPlace(other.asInstanceOf[MGSketch])
+      case SketchCodec.TypeId.WeightedBottomK =>
+        mine.asInstanceOf[WeightedBottomKSketch]
+          .mergeInPlace(other.asInstanceOf[WeightedBottomKSketch])
+      case SketchCodec.TypeId.CountingBloom =>
+        require(o.keyMode == s.keyMode,
+          "cannot merge counting filters built with different key conventions")
+        // per-cell saturating add — associative + commutative, so the
+        // counting filter is in the bit-identity club alongside Bloom
+        mine.asInstanceOf[CountingBloomSketch]
+          .mergeInPlace(other.asInstanceOf[CountingBloomSketch])
+    }
+    s
+  }
+
+  override protected def encode(s: Typed): Array[Byte] = {
+    val sk = s.sketch
+    s.typeId match {
+      case SketchCodec.TypeId.Bloom => SketchCodec.encodeBloom(sk.asInstanceOf[BloomSketch], s.keyMode)
+      case SketchCodec.TypeId.Hll => SketchCodec.encodeHll(sk.asInstanceOf[HLLSketch])
+      case SketchCodec.TypeId.Cms => SketchCodec.encodeCms(sk.asInstanceOf[CMSSketch], s.keyMode)
+      case SketchCodec.TypeId.TDigest => SketchCodec.encodeTDigest(sk.asInstanceOf[TDigestSketch])
+      case SketchCodec.TypeId.Kll => SketchCodec.encodeKll(sk.asInstanceOf[KLLSketch])
+      case SketchCodec.TypeId.Theta => SketchCodec.encodeTheta(sk.asInstanceOf[ThetaSketch])
+      case SketchCodec.TypeId.BottomK => SketchCodec.encodeBottomK(sk.asInstanceOf[BottomKSketch])
+      case SketchCodec.TypeId.Mg => SketchCodec.encodeMg(sk.asInstanceOf[MGSketch])
+      case SketchCodec.TypeId.WeightedBottomK =>
+        SketchCodec.encodeWeightedBottomK(sk.asInstanceOf[WeightedBottomKSketch])
+      case SketchCodec.TypeId.CountingBloom =>
+        SketchCodec.encodeCountingBloom(sk.asInstanceOf[CountingBloomSketch], s.keyMode)
+    }
+  }
+
+  // an empty merge crosses the shuffle as zero bytes and evaluates to null
+  override def serialize(b: SketchBuffer[Typed]): Array[Byte] =
+    if (b.isEmpty) Array.emptyByteArray else super.serialize(b)
+
+  override def eval(b: SketchBuffer[Typed]): Any = if (b.isEmpty) null else super.serialize(b)
+
+  override def deserialize(bytes: Array[Byte]): SketchBuffer[Typed] =
+    if (bytes.isEmpty) createAggregationBuffer() else super.deserialize(bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): SketchMergeAgg =
     copy(mutableAggBufferOffset = o)
@@ -64,99 +142,7 @@ case class SketchMergeAgg(
 }
 
 object SketchMergeAgg {
-
-  /** Running merged sketch, typed by the first blob seen. */
-  final class Holder {
-    private var typeId: Byte = -1
-    private var keyMode: Byte = 0
-    private var sketch: AnyRef = _
-
-    /** Union one codec blob in; the decoded sketch is owned by this holder. */
-    def merge(bytes: Array[Byte]): Unit = {
-      val t = SketchCodec.typeOf(bytes)
-      val (km, decoded): (Byte, AnyRef) = t match {
-        case SketchCodec.TypeId.Bloom =>
-          (SketchCodec.bloomKeyMode(bytes), SketchCodec.decodeBloom(bytes))
-        case SketchCodec.TypeId.Hll => (0, SketchCodec.decodeHll(bytes))
-        case SketchCodec.TypeId.Cms =>
-          (SketchCodec.cmsKeyMode(bytes), SketchCodec.decodeCms(bytes))
-        case SketchCodec.TypeId.TDigest => (0, SketchCodec.decodeTDigest(bytes))
-        case SketchCodec.TypeId.Kll => (0, SketchCodec.decodeKll(bytes))
-        case SketchCodec.TypeId.Theta => (0, SketchCodec.decodeTheta(bytes))
-        case SketchCodec.TypeId.BottomK => (0, SketchCodec.decodeBottomK(bytes))
-        case SketchCodec.TypeId.Mg => (0, SketchCodec.decodeMg(bytes))
-        case SketchCodec.TypeId.WeightedBottomK =>
-          (0, SketchCodec.decodeWeightedBottomK(bytes))
-        case SketchCodec.TypeId.CountingBloom =>
-          (SketchCodec.countingBloomKeyMode(bytes), SketchCodec.decodeCountingBloom(bytes))
-        case other => throw new IllegalArgumentException(s"unknown sketch type $other")
-      }
-      if (sketch == null) { typeId = t; keyMode = km; sketch = decoded }
-      else union(t, km, decoded)
-    }
-
-    /** Union another holder's sketch in without a codec round-trip and
-      * return the merged holder. An empty holder returns `o` itself:
-      * Spark keeps whatever `merge` returns as the buffer, and `o` is a
-      * freshly deserialized buffer that is dropped after the merge. */
-    def merge(o: Holder): Holder =
-      if (sketch == null) o
-      else {
-        if (o.sketch != null) union(o.typeId, o.keyMode, o.sketch)
-        this
-      }
-
-    private def union(t: Byte, km: Byte, other: AnyRef): Unit = {
-      require(t == typeId, s"cannot merge sketch type $t into $typeId")
-      t match {
-        case SketchCodec.TypeId.Bloom =>
-          require(km == keyMode,
-            "cannot merge Bloom sketches built with different key conventions")
-          sketch.asInstanceOf[BloomSketch].unionInPlace(other.asInstanceOf[BloomSketch])
-        case SketchCodec.TypeId.Hll =>
-          sketch.asInstanceOf[HLLSketch].mergeInPlace(other.asInstanceOf[HLLSketch])
-        case SketchCodec.TypeId.Cms =>
-          require(km == keyMode,
-            "cannot merge CMS sketches built with different key conventions")
-          sketch.asInstanceOf[CMSSketch].mergeInPlace(other.asInstanceOf[CMSSketch])
-        case SketchCodec.TypeId.TDigest =>
-          sketch.asInstanceOf[TDigestSketch].mergeInPlace(other.asInstanceOf[TDigestSketch])
-        case SketchCodec.TypeId.Kll =>
-          sketch.asInstanceOf[KLLSketch].mergeInPlace(other.asInstanceOf[KLLSketch])
-        case SketchCodec.TypeId.Theta =>
-          sketch.asInstanceOf[ThetaSketch].mergeInPlace(other.asInstanceOf[ThetaSketch])
-        case SketchCodec.TypeId.BottomK =>
-          sketch.asInstanceOf[BottomKSketch].mergeInPlace(other.asInstanceOf[BottomKSketch])
-        case SketchCodec.TypeId.Mg =>
-          sketch.asInstanceOf[MGSketch].mergeInPlace(other.asInstanceOf[MGSketch])
-        case SketchCodec.TypeId.WeightedBottomK =>
-          sketch.asInstanceOf[WeightedBottomKSketch]
-            .mergeInPlace(other.asInstanceOf[WeightedBottomKSketch])
-        case SketchCodec.TypeId.CountingBloom =>
-          require(km == keyMode,
-            "cannot merge counting filters built with different key conventions")
-          // per-cell saturating add — associative + commutative, so the
-          // counting filter is in the bit-identity club alongside Bloom
-          sketch.asInstanceOf[CountingBloomSketch]
-            .mergeInPlace(other.asInstanceOf[CountingBloomSketch])
-      }
-    }
-
-    def encoded: Option[Array[Byte]] = Option(sketch).map { s =>
-      typeId match {
-        case SketchCodec.TypeId.Bloom => SketchCodec.encodeBloom(s.asInstanceOf[BloomSketch], keyMode)
-        case SketchCodec.TypeId.Hll => SketchCodec.encodeHll(s.asInstanceOf[HLLSketch])
-        case SketchCodec.TypeId.Cms => SketchCodec.encodeCms(s.asInstanceOf[CMSSketch], keyMode)
-        case SketchCodec.TypeId.TDigest => SketchCodec.encodeTDigest(s.asInstanceOf[TDigestSketch])
-        case SketchCodec.TypeId.Kll => SketchCodec.encodeKll(s.asInstanceOf[KLLSketch])
-        case SketchCodec.TypeId.Theta => SketchCodec.encodeTheta(s.asInstanceOf[ThetaSketch])
-        case SketchCodec.TypeId.BottomK => SketchCodec.encodeBottomK(s.asInstanceOf[BottomKSketch])
-        case SketchCodec.TypeId.Mg => SketchCodec.encodeMg(s.asInstanceOf[MGSketch])
-        case SketchCodec.TypeId.WeightedBottomK =>
-          SketchCodec.encodeWeightedBottomK(s.asInstanceOf[WeightedBottomKSketch])
-        case SketchCodec.TypeId.CountingBloom =>
-          SketchCodec.encodeCountingBloom(s.asInstanceOf[CountingBloomSketch], keyMode)
-      }
-    }
-  }
+  /** A decoded sketch of any codec type, with the key convention its
+    * blob carried (the decoded Bloom/CMS/counting sketch does not). */
+  final case class Typed(typeId: Byte, keyMode: Byte, sketch: AnyRef)
 }

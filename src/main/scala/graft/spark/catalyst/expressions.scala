@@ -4,7 +4,6 @@ import graft.core._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,8 +18,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * compiled into the aggregate's key projection, so the null-key FILTER
   * folds away. RowHasher folds a single BINARY child to exactly the
   * kernels' `hashers.h1/h2(bytes)` and `xxHash64(bytes, 0)`, so those
-  * blobs equal a core bulk insert of the bytes. Buffers live as plain objects in ObjectHashAggregate and
-  * serialize through the graft codec only when crossing the shuffle.
+  * blobs equal a core bulk insert of the bytes. Every aggregate's buffer
+  * is a [[SketchBuffer]] (SketchBuffer.scala): a blob that arrives from
+  * the shuffle or the state store is held as it came and passes through
+  * to the next serialize or eval unchanged unless a row or a merge writes
+  * to it; only then is it decoded, and only a changed sketch is encoded.
   *
   * Hash-convention note: Bloom and CMS blobs carry the aggregate's
   * `keyMode` (KeyMode.Bytes or KeyMode.RowHash) in the codec header; each
@@ -93,39 +95,11 @@ object RowHasher {
   }
 }
 
-abstract class SketchAggBase[T] extends TypedImperativeAggregate[T] {
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-}
-
-object SketchAggBase {
-  /** A numeric column value as the quantile sketches' double. */
-  def numeric(v: Any): Double = v match {
-    case d: java.lang.Double => d.doubleValue()
-    case f: java.lang.Float => f.doubleValue()
-    case l: java.lang.Long => l.doubleValue()
-    case i: java.lang.Integer => i.doubleValue()
-    case x => x.toString.toDouble
-  }
-
-  /** A string or binary key value as its bytes. */
-  def keyBytes(v: Any): Array[Byte] = v match {
-    case s: UTF8String => s.getBytes
-    case a: Array[Byte] => a
-  }
-
-  def stringOrBinaryKey(name: String, key: Expression): TypeCheckResult = key.dataType match {
-    case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$name takes a string or binary key column, got ${other.catalogString}")
-  }
-}
-
 /** Aggregates over a tuple of key columns. Bound column references are
   * read straight from the input row; computed keys (functions.sketchKey)
   * go through one generated projection instead of interpreted `eval` per
   * row. */
-abstract class KeyedSketchAgg[T] extends SketchAggBase[T] {
+abstract class KeyedSketchAgg[S <: AnyRef] extends SketchAggBase[S] {
   def keys: Seq[Expression]
   override def children: Seq[Expression] = keys
 
@@ -175,25 +149,17 @@ case class BloomSketchAgg(
 
   @transient private lazy val pair = KMHashPair.byId(hasherId)
 
-  override def createAggregationBuffer(): KMBloomSketch =
-    KMBloomSketch(capacity, fpp, pair)
-
-  override def update(b: KMBloomSketch, input: InternalRow): KMBloomSketch = {
+  override protected def newSketch(): KMBloomSketch = KMBloomSketch(capacity, fpp, pair)
+  override protected def insert(s: KMBloomSketch, input: InternalRow): Unit = {
     val (h1, h2) = RowHasher.hashPair(hashedKeys, keyRow(input), pair)
-    b.insertHashes(h1, h2)
-    b
+    s.insertHashes(h1, h2)
   }
-
-  override def merge(b: KMBloomSketch, o: KMBloomSketch): KMBloomSketch = {
-    b.unionInPlace(o)
-    b
+  override protected def union(s: KMBloomSketch, o: KMBloomSketch): KMBloomSketch = {
+    s.unionInPlace(o)
+    s
   }
-
-  override def eval(b: KMBloomSketch): Any = SketchCodec.encodeBloom(b, keyMode)
-
-  override def serialize(b: KMBloomSketch): Array[Byte] = SketchCodec.encodeBloom(b, keyMode)
-
-  override def deserialize(bytes: Array[Byte]): KMBloomSketch =
+  override protected def encode(s: KMBloomSketch): Array[Byte] = SketchCodec.encodeBloom(s, keyMode)
+  override protected def decode(bytes: Array[Byte]): KMBloomSketch =
     SketchCodec.decodeBloom(bytes).asInstanceOf[KMBloomSketch]
 
   override def withNewMutableAggBufferOffset(o: Int): BloomSketchAgg =
@@ -219,19 +185,15 @@ case class SeededBloomSketchAgg(
   override def prettyName: String = "graft_bloom_seeded_agg"
   override def checkInputDataTypes(): TypeCheckResult = checkKeys(SketchCodec.KeyMode.Bytes)
 
-  override def createAggregationBuffer(): SeededBloomSketch = SeededBloomSketch(capacity, fpp)
-
-  override def update(b: SeededBloomSketch, input: InternalRow): SeededBloomSketch = {
+  override protected def newSketch(): SeededBloomSketch = SeededBloomSketch(capacity, fpp)
+  override protected def insert(s: SeededBloomSketch, input: InternalRow): Unit = {
     val k = hashedKeys(0).eval(keyRow(input))
-    if (k != null) b.insert(k.asInstanceOf[Array[Byte]])
-    b
+    if (k != null) s.insert(k.asInstanceOf[Array[Byte]])
   }
-
-  override def merge(b: SeededBloomSketch, o: SeededBloomSketch): SeededBloomSketch =
-    b.unionInPlace(o)
-  override def eval(b: SeededBloomSketch): Any = SketchCodec.encodeBloom(b)
-  override def serialize(b: SeededBloomSketch): Array[Byte] = SketchCodec.encodeBloom(b)
-  override def deserialize(bytes: Array[Byte]): SeededBloomSketch =
+  override protected def union(s: SeededBloomSketch, o: SeededBloomSketch): SeededBloomSketch =
+    s.unionInPlace(o)
+  override protected def encode(s: SeededBloomSketch): Array[Byte] = SketchCodec.encodeBloom(s)
+  override protected def decode(bytes: Array[Byte]): SeededBloomSketch =
     SketchCodec.decodeBloom(bytes).asInstanceOf[SeededBloomSketch]
   override def withNewMutableAggBufferOffset(o: Int): SeededBloomSketchAgg =
     copy(mutableAggBufferOffset = o)
@@ -275,10 +237,10 @@ case class CbfSketchAgg(
       s"$prettyName takes (binary key, long multiplicity), got " +
         s"(${key.dataType.catalogString}, ${multiplicity.dataType.catalogString})")
 
-  override def createAggregationBuffer(): Buf =
+  override protected def newSketch(): Buf =
     (CountingBloomSketch(capacity, fpp), CountingBloomSketch(capacity, fpp))
 
-  override def update(b: Buf, input: InternalRow): Buf = {
+  override protected def insert(b: Buf, input: InternalRow): Unit = {
     val row = keyRow(input)
     val k = hashedKeys(0).eval(row)
     val m = hashedKeys(1).eval(row)
@@ -298,21 +260,33 @@ case class CbfSketchAgg(
       val n = math.min(255L, if (mult > 0L) mult else -math.max(mult, -255L))
       while (i < n) { target.insertHashes(h1, h2); i += 1 }
     }
-    b
   }
 
-  override def merge(b: Buf, o: Buf): Buf = (b._1.mergeInPlace(o._1), b._2.mergeInPlace(o._2))
+  override protected def union(b: Buf, o: Buf): Buf =
+    (b._1.mergeInPlace(o._1), b._2.mergeInPlace(o._2))
 
-  override def eval(b: Buf): Any = SketchCodec.encodeCountingBloom(b._1.subtractInPlace(b._2))
+  override def eval(b: SketchBuffer[Buf]): Any = {
+    val (ins, ret) = sketch(b)
+    SketchCodec.encodeCountingBloom(ins.subtractInPlace(ret))
+  }
 
-  override def serialize(b: Buf): Array[Byte] = {
+  override protected def encode(b: Buf): Array[Byte] = {
     val ins = SketchCodec.encodeCountingBloom(b._1)
     val ret = SketchCodec.encodeCountingBloom(b._2)
     java.nio.ByteBuffer.allocate(4 + ins.length + ret.length)
       .putInt(ins.length).put(ins).put(ret).array()
   }
 
-  override def deserialize(bytes: Array[Byte]): Buf = {
+  /** The two length-framed blobs, each canonical under byte keys. */
+  override protected def canonical(bytes: Array[Byte]): Boolean = {
+    def part(b: Array[Byte]) = SketchCodec.isCanonical(b) &&
+      b(4) == SketchCodec.TypeId.CountingBloom && b(6) == SketchCodec.KeyMode.Bytes
+    val n = if (bytes.length < 4) -1 else java.nio.ByteBuffer.wrap(bytes).getInt()
+    n >= 0 && n <= bytes.length - 4 && part(java.util.Arrays.copyOfRange(bytes, 4, 4 + n)) &&
+      part(java.util.Arrays.copyOfRange(bytes, 4 + n, bytes.length))
+  }
+
+  override protected def decode(bytes: Array[Byte]): Buf = {
     val n = java.nio.ByteBuffer.wrap(bytes).getInt()
     (SketchCodec.decodeCountingBloom(java.util.Arrays.copyOfRange(bytes, 4, 4 + n)),
       SketchCodec.decodeCountingBloom(java.util.Arrays.copyOfRange(bytes, 4 + n, bytes.length)))
@@ -611,15 +585,12 @@ case class HllSketchAgg(
 
   override def prettyName: String = "graft_hll_agg"
 
-  override def createAggregationBuffer(): HLLSketch = HLLSketch(p)
-  override def update(b: HLLSketch, input: InternalRow): HLLSketch = {
-    b.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
-    b
-  }
-  override def merge(b: HLLSketch, o: HLLSketch): HLLSketch = b.mergeInPlace(o)
-  override def eval(b: HLLSketch): Any = SketchCodec.encodeHll(b)
-  override def serialize(b: HLLSketch): Array[Byte] = SketchCodec.encodeHll(b)
-  override def deserialize(bytes: Array[Byte]): HLLSketch = SketchCodec.decodeHll(bytes)
+  override protected def newSketch(): HLLSketch = HLLSketch(p)
+  override protected def insert(s: HLLSketch, input: InternalRow): Unit =
+    s.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
+  override protected def union(s: HLLSketch, o: HLLSketch): HLLSketch = s.mergeInPlace(o)
+  override protected def encode(s: HLLSketch): Array[Byte] = SketchCodec.encodeHll(s)
+  override protected def decode(bytes: Array[Byte]): HLLSketch = SketchCodec.decodeHll(bytes)
   override def withNewMutableAggBufferOffset(o: Int): HllSketchAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): HllSketchAgg =
@@ -640,15 +611,12 @@ case class ThetaSketchAgg(
 
   override def prettyName: String = "graft_theta_agg"
 
-  override def createAggregationBuffer(): ThetaSketch = ThetaSketch(k)
-  override def update(b: ThetaSketch, input: InternalRow): ThetaSketch = {
-    b.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
-    b
-  }
-  override def merge(b: ThetaSketch, o: ThetaSketch): ThetaSketch = b.mergeInPlace(o)
-  override def eval(b: ThetaSketch): Any = SketchCodec.encodeTheta(b)
-  override def serialize(b: ThetaSketch): Array[Byte] = SketchCodec.encodeTheta(b)
-  override def deserialize(bytes: Array[Byte]): ThetaSketch = SketchCodec.decodeTheta(bytes)
+  override protected def newSketch(): ThetaSketch = ThetaSketch(k)
+  override protected def insert(s: ThetaSketch, input: InternalRow): Unit =
+    s.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
+  override protected def union(s: ThetaSketch, o: ThetaSketch): ThetaSketch = s.mergeInPlace(o)
+  override protected def encode(s: ThetaSketch): Array[Byte] = SketchCodec.encodeTheta(s)
+  override protected def decode(bytes: Array[Byte]): ThetaSketch = SketchCodec.decodeTheta(bytes)
   override def withNewMutableAggBufferOffset(o: Int): ThetaSketchAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): ThetaSketchAgg =
@@ -676,18 +644,16 @@ case class BottomKSampleAgg(
   override def checkInputDataTypes(): TypeCheckResult =
     SketchAggBase.stringOrBinaryKey(prettyName, key)
 
-  override def createAggregationBuffer(): BottomKSketch = BottomKSketch(k)
-
-  override def update(b: BottomKSketch, input: InternalRow): BottomKSketch = {
+  override protected def newSketch(): BottomKSketch = BottomKSketch(k)
+  override protected def insert(s: BottomKSketch, input: InternalRow): Unit = {
     val v = key.eval(input)
-    if (v != null) b.update(SketchAggBase.keyBytes(v))
-    b
+    if (v != null) s.update(SketchAggBase.keyBytes(v))
   }
-
-  override def merge(b: BottomKSketch, o: BottomKSketch): BottomKSketch = b.mergeInPlace(o)
-  override def eval(b: BottomKSketch): Any = SketchCodec.encodeBottomK(b)
-  override def serialize(b: BottomKSketch): Array[Byte] = SketchCodec.encodeBottomK(b)
-  override def deserialize(bytes: Array[Byte]): BottomKSketch = SketchCodec.decodeBottomK(bytes)
+  override protected def union(s: BottomKSketch, o: BottomKSketch): BottomKSketch =
+    s.mergeInPlace(o)
+  override protected def encode(s: BottomKSketch): Array[Byte] = SketchCodec.encodeBottomK(s)
+  override protected def decode(bytes: Array[Byte]): BottomKSketch =
+    SketchCodec.decodeBottomK(bytes)
   override def withNewMutableAggBufferOffset(o: Int): BottomKSampleAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): BottomKSampleAgg =
@@ -726,9 +692,9 @@ case class WeightedBottomKSampleAgg(
             s"(${kt.catalogString}, ${wt.catalogString})")
     }
 
-  override def createAggregationBuffer(): WeightedBottomKSketch = WeightedBottomKSketch(k)
+  override protected def newSketch(): WeightedBottomKSketch = WeightedBottomKSketch(k)
 
-  override def update(b: WeightedBottomKSketch, input: InternalRow): WeightedBottomKSketch = {
+  override protected def insert(s: WeightedBottomKSketch, input: InternalRow): Unit = {
     val v = key.eval(input)
     if (v != null) {
       val w = weight.eval(input)
@@ -739,17 +705,15 @@ case class WeightedBottomKSampleAgg(
       require(w != null,
         "weighted bottom-k weight is null for a non-null key — the weight " +
           "must be finite and > 0 (a non-numeric value cast to double yields null)")
-      b.update(SketchAggBase.keyBytes(v), w.asInstanceOf[Double])
+      s.update(SketchAggBase.keyBytes(v), w.asInstanceOf[Double])
     }
-    b
   }
 
-  override def merge(b: WeightedBottomKSketch, o: WeightedBottomKSketch): WeightedBottomKSketch =
-    b.mergeInPlace(o)
-  override def eval(b: WeightedBottomKSketch): Any = SketchCodec.encodeWeightedBottomK(b)
-  override def serialize(b: WeightedBottomKSketch): Array[Byte] =
-    SketchCodec.encodeWeightedBottomK(b)
-  override def deserialize(bytes: Array[Byte]): WeightedBottomKSketch =
+  override protected def union(s: WeightedBottomKSketch,
+      o: WeightedBottomKSketch): WeightedBottomKSketch = s.mergeInPlace(o)
+  override protected def encode(s: WeightedBottomKSketch): Array[Byte] =
+    SketchCodec.encodeWeightedBottomK(s)
+  override protected def decode(bytes: Array[Byte]): WeightedBottomKSketch =
     SketchCodec.decodeWeightedBottomK(bytes)
   override def withNewMutableAggBufferOffset(o: Int): WeightedBottomKSampleAgg =
     copy(mutableAggBufferOffset = o)
@@ -777,18 +741,14 @@ case class MgSketchAgg(
   override def checkInputDataTypes(): TypeCheckResult =
     SketchAggBase.stringOrBinaryKey(prettyName, key)
 
-  override def createAggregationBuffer(): MGSketch = MGSketch(k)
-
-  override def update(b: MGSketch, input: InternalRow): MGSketch = {
+  override protected def newSketch(): MGSketch = MGSketch(k)
+  override protected def insert(s: MGSketch, input: InternalRow): Unit = {
     val v = key.eval(input)
-    if (v != null) b.update(SketchAggBase.keyBytes(v))
-    b
+    if (v != null) s.update(SketchAggBase.keyBytes(v))
   }
-
-  override def merge(b: MGSketch, o: MGSketch): MGSketch = b.mergeInPlace(o)
-  override def eval(b: MGSketch): Any = SketchCodec.encodeMg(b)
-  override def serialize(b: MGSketch): Array[Byte] = SketchCodec.encodeMg(b)
-  override def deserialize(bytes: Array[Byte]): MGSketch = SketchCodec.decodeMg(bytes)
+  override protected def union(s: MGSketch, o: MGSketch): MGSketch = s.mergeInPlace(o)
+  override protected def encode(s: MGSketch): Array[Byte] = SketchCodec.encodeMg(s)
+  override protected def decode(bytes: Array[Byte]): MGSketch = SketchCodec.decodeMg(bytes)
   override def withNewMutableAggBufferOffset(o: Int): MgSketchAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): MgSketchAgg =
@@ -811,15 +771,12 @@ case class CmsSketchAgg(
   override def prettyName: String = "graft_cms_agg"
   override def checkInputDataTypes(): TypeCheckResult = checkKeys(keyMode)
 
-  override def createAggregationBuffer(): CMSSketch = CMSSketch(eps, delta)
-  override def update(b: CMSSketch, input: InternalRow): CMSSketch = {
-    b.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
-    b
-  }
-  override def merge(b: CMSSketch, o: CMSSketch): CMSSketch = b.mergeInPlace(o)
-  override def eval(b: CMSSketch): Any = SketchCodec.encodeCms(b, keyMode)
-  override def serialize(b: CMSSketch): Array[Byte] = SketchCodec.encodeCms(b, keyMode)
-  override def deserialize(bytes: Array[Byte]): CMSSketch = SketchCodec.decodeCms(bytes)
+  override protected def newSketch(): CMSSketch = CMSSketch(eps, delta)
+  override protected def insert(s: CMSSketch, input: InternalRow): Unit =
+    s.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
+  override protected def union(s: CMSSketch, o: CMSSketch): CMSSketch = s.mergeInPlace(o)
+  override protected def encode(s: CMSSketch): Array[Byte] = SketchCodec.encodeCms(s, keyMode)
+  override protected def decode(bytes: Array[Byte]): CMSSketch = SketchCodec.decodeCms(bytes)
   override def withNewMutableAggBufferOffset(o: Int): CmsSketchAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CmsSketchAgg =
@@ -867,16 +824,16 @@ case class TDigestSketchAgg(
   override def children: Seq[Expression] = Seq(value)
   override def prettyName: String = "graft_tdigest_agg"
 
-  override def createAggregationBuffer(): TDigestSketch = TDigestSketch(compression)
-  override def update(b: TDigestSketch, input: InternalRow): TDigestSketch = {
+  override protected def newSketch(): TDigestSketch = TDigestSketch(compression)
+  override protected def insert(s: TDigestSketch, input: InternalRow): Unit = {
     val v = value.eval(input)
-    if (v != null) b.update(SketchAggBase.numeric(v))
-    b
+    if (v != null) s.update(SketchAggBase.numeric(v))
   }
-  override def merge(b: TDigestSketch, o: TDigestSketch): TDigestSketch = b.mergeInPlace(o)
-  override def eval(b: TDigestSketch): Any = SketchCodec.encodeTDigest(b)
-  override def serialize(b: TDigestSketch): Array[Byte] = SketchCodec.encodeTDigest(b)
-  override def deserialize(bytes: Array[Byte]): TDigestSketch = SketchCodec.decodeTDigest(bytes)
+  override protected def union(s: TDigestSketch, o: TDigestSketch): TDigestSketch =
+    s.mergeInPlace(o)
+  override protected def encode(s: TDigestSketch): Array[Byte] = SketchCodec.encodeTDigest(s)
+  override protected def decode(bytes: Array[Byte]): TDigestSketch =
+    SketchCodec.decodeTDigest(bytes)
   override def withNewMutableAggBufferOffset(o: Int): TDigestSketchAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): TDigestSketchAgg =
@@ -896,16 +853,14 @@ case class KllSketchAgg(
   override def children: Seq[Expression] = Seq(value)
   override def prettyName: String = "graft_kll_agg"
 
-  override def createAggregationBuffer(): KLLSketch = KLLSketch(k)
-  override def update(b: KLLSketch, input: InternalRow): KLLSketch = {
+  override protected def newSketch(): KLLSketch = KLLSketch(k)
+  override protected def insert(s: KLLSketch, input: InternalRow): Unit = {
     val v = value.eval(input)
-    if (v != null) b.update(SketchAggBase.numeric(v))
-    b
+    if (v != null) s.update(SketchAggBase.numeric(v))
   }
-  override def merge(b: KLLSketch, o: KLLSketch): KLLSketch = b.mergeInPlace(o)
-  override def eval(b: KLLSketch): Any = SketchCodec.encodeKll(b)
-  override def serialize(b: KLLSketch): Array[Byte] = SketchCodec.encodeKll(b)
-  override def deserialize(bytes: Array[Byte]): KLLSketch = SketchCodec.decodeKll(bytes)
+  override protected def union(s: KLLSketch, o: KLLSketch): KLLSketch = s.mergeInPlace(o)
+  override protected def encode(s: KLLSketch): Array[Byte] = SketchCodec.encodeKll(s)
+  override protected def decode(bytes: Array[Byte]): KLLSketch = SketchCodec.decodeKll(bytes)
   override def withNewMutableAggBufferOffset(o: Int): KllSketchAgg =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): KllSketchAgg =

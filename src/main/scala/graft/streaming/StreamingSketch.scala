@@ -6,6 +6,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.BinaryType
 
 /** Structured Streaming over the sketch family. Mergeable binary state is
   * exactly what incremental processing needs: every micro-batch folds into
@@ -481,13 +484,17 @@ object StreamingSketch {
       }
   }
 
-  /** Running union of sketch blobs of ANY codec type (sniffs the type
-    * byte via SketchMergeAgg.Holder — Bloom, HLL, CMS, theta, …;
-    * thread-safe; micro-batches arrive sequentially but defensive
-    * anyway). */
+  /** Running union of sketch blobs of ANY codec type, folded through
+    * SketchMergeAgg's own buffer (sniffs the type byte — Bloom, HLL, CMS,
+    * theta, …; the first blob is held as it came until a second one
+    * arrives; thread-safe; micro-batches arrive sequentially but
+    * defensive anyway). */
   final class IncrementalState {
-    private val holder = new SketchMergeAgg.Holder
-    def merge(blob: Array[Byte]): Unit = synchronized { holder.merge(blob) }
-    def get: Option[Array[Byte]] = synchronized(holder.encoded)
+    private val agg = SketchMergeAgg(BoundReference(0, BinaryType, nullable = true))
+    private var buffer = agg.createAggregationBuffer()
+    def merge(blob: Array[Byte]): Unit = synchronized {
+      buffer = agg.update(buffer, InternalRow(blob))
+    }
+    def get: Option[Array[Byte]] = synchronized(Option(agg.eval(buffer).asInstanceOf[Array[Byte]]))
   }
 }

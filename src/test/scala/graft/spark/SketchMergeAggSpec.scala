@@ -123,25 +123,25 @@ class SketchMergeAggSpec extends AnyFunSuite {
         SketchCodec.encodeMg(mg), SketchCodec.encodeCountingBloom(cbf),
         SketchCodec.encodeKll(kll), SketchCodec.encodeTDigest(td))
     }
-    def holderOf(bs: Array[Byte]*): SketchMergeAgg.Holder = {
-      val h = new SketchMergeAgg.Holder
-      bs.foreach(h.merge(_))
-      h
-    }
-    val agg = SketchMergeAgg(org.apache.spark.sql.catalyst.expressions.Literal(null,
-      org.apache.spark.sql.types.BinaryType))
+    val agg = SketchMergeAgg(org.apache.spark.sql.catalyst.expressions.BoundReference(0,
+      org.apache.spark.sql.types.BinaryType, nullable = true))
+    def holderOf(bs: Array[Byte]*): SketchBuffer[SketchMergeAgg.Typed] =
+      bs.foldLeft(agg.createAggregationBuffer())((h, b) =>
+        agg.update(h, org.apache.spark.sql.catalyst.InternalRow(b)))
+    def empty = agg.createAggregationBuffer()
     blobs(0 until 50).zip(blobs(50 until 100)).foreach { case (a, b) =>
       val t = SketchCodec.typeOf(a)
       val o = holderOf(a)
-      assert(agg.merge(new SketchMergeAgg.Holder, o) eq o, s"type $t: empty buffer copies")
+      assert(agg.merge(empty, o) eq o, s"type $t: empty buffer copies")
+      assert(agg.serialize(o) eq a, s"type $t: an unchanged buffer does not pass its blob through")
       val h = holderOf(a)
-      assert(agg.merge(h, new SketchMergeAgg.Holder) eq h, s"type $t: empty input replaces")
+      assert(agg.merge(h, empty) eq h, s"type $t: empty input replaces")
       val m = agg.merge(h, holderOf(b))
       assert(m eq h, s"type $t: non-empty buffer is not merged in place")
-      assert(m.encoded.get.sameElements(holderOf(a, b).encoded.get),
+      assert(agg.serialize(m).sameElements(agg.serialize(holderOf(a, b))),
         s"type $t: holder merge differs from the blob merge")
     }
-    assert(agg.merge(new SketchMergeAgg.Holder, new SketchMergeAgg.Holder).encoded.isEmpty)
+    assert(agg.eval(agg.merge(empty, empty)) == null)
   }
 
   test("SQL: per-shard blobs rolled up with graft_sketch_merge_agg") {

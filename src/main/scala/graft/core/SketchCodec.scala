@@ -190,65 +190,50 @@ object SketchCodec {
         "the pair with a stable id in KMHashPair to use it in Spark aggregation")
     val w = s.bits.words
     val nW = w.length
-
-    // measure all three layouts in one word-level pass: within a word
-    // every offset-list delta is < 64 (one varint byte), so only each
-    // nonzero word's first set bit needs a real varint size; a word-RLE
-    // group is sized when its literal run ends (BloomSizer is the same
-    // sizing for the canonical-form check; this loop stays inline, it is
-    // the encoder's hot path)
-    val densePayload = 3 + 16 + 4 + 8 + 8 * nW
-    var offsetBody = 4
-    var ones = 0
-    var lastPos = 0L
-    var rleBody = 0
-    var zeroRun = 0L
-    var litRun = 0
+    val sizer = new BloomSizer
     var wi = 0
     while (wi < nW) {
       val word = w(wi)
-      if (word != 0L) {
-        val first = wi.toLong * 64 + java.lang.Long.numberOfTrailingZeros(word)
-        val c = java.lang.Long.bitCount(word)
-        offsetBody += varintSize(if (ones == 0) first else first - lastPos) + c - 1
-        ones += c
-        lastPos = wi.toLong * 64 + 63 - java.lang.Long.numberOfLeadingZeros(word)
-        if (litRun == 0) { rleBody += varintSize(zeroRun); zeroRun = 0 }
-        litRun += 1
-      } else {
-        if (litRun > 0) { rleBody += varintSize(litRun.toLong) + 8 * litRun; litRun = 0 }
-        zeroRun += 1
-      }
+      if (word != 0L) sizer.word(wi, word)
       wi += 1
     }
-    if (litRun > 0) rleBody += varintSize(litRun.toLong) + 8 * litRun
-    val offsetPayload = BloomSparseHeader + offsetBody
-    val rlePayload = BloomSparseHeader + rleBody
+    val densePayload = 3 + 16 + 4 + 8 + 8 * nW
+    val offsetPayload = BloomSparseHeader + sizer.offsetBody
+    // the offset list wins outright when it is no larger than the
+    // word-RLE lower bound; only otherwise is the word-RLE body sized
+    val offsetWins = offsetPayload < densePayload && offsetPayload <= rlePayloadAtLeast(sizer.words)
+    val rlePayload =
+      if (offsetWins) Int.MaxValue
+      else {
+        wi = 0
+        while (wi < nW) { if (w(wi) != 0L) sizer.rleWord(wi); wi += 1 }
+        BloomSparseHeader + sizer.rleBody
+      }
 
     def putSparseHeader(bb: ByteBuffer, layout: Byte): Unit = {
       bb.put(s.variant); bb.put(keyMode); bb.put(s.hasherId)
       bb.putLong(s.config.capacity); bb.putDouble(s.config.fpp)
       bb.putLong(s.bits.numBits); bb.put(layout)
     }
-    if (offsetPayload < densePayload && offsetPayload <= rlePayload) {
+    if (offsetWins || (offsetPayload < densePayload && offsetPayload <= rlePayload)) {
       val bb = writer(TypeId.Bloom, offsetPayload, BloomSparseVersion)
       putSparseHeader(bb, 0)
-      bb.putInt(ones)
+      bb.putInt(sizer.ones)
+      val out = bb.array()
+      var at = bb.position()
       var prevPos = 0L
-      var first = true
       wi = 0
       while (wi < nW) {
         var bits = w(wi)
         while (bits != 0L) {
           val pos = wi.toLong * 64 + java.lang.Long.numberOfTrailingZeros(bits)
-          putVarint(bb, if (first) pos else pos - prevPos)
+          at = putVarint(out, at, pos - prevPos)
           prevPos = pos
-          first = false
           bits &= bits - 1
         }
         wi += 1
       }
-      bb.array()
+      out
     } else if (rlePayload < densePayload) {
       val bb = writer(TypeId.Bloom, rlePayload, BloomSparseVersion)
       putSparseHeader(bb, 1)
@@ -306,9 +291,12 @@ object SketchCodec {
           case 0 => // offset-list
             val ones = bb.getInt()
             var pos = 0L
+            var at = bb.position()
             var i = 0
             while (i < ones) {
-              pos += getVarint(bb)
+              // one-byte deltas straight from the array, longer ones via bb
+              if (at < bytes.length && bytes(at) >= 0) { pos += bytes(at); at += 1 }
+              else { bb.position(at); pos += getVarint(bb); at = bb.position() }
               require(pos >= 0 && pos < numBits, "corrupt sparse Bloom blob (offset)")
               words((pos >>> 6).toInt) |= 1L << (pos & 63)
               i += 1
@@ -351,10 +339,15 @@ object SketchCodec {
     while ((x & ~0x7fL) != 0L) { x >>>= 7; n += 1 }
     n
   }
-  private def putVarint(bb: ByteBuffer, v: Long): Unit = {
+  private def putVarint(bb: ByteBuffer, v: Long): Unit =
+    bb.position(putVarint(bb.array(), bb.position(), v))
+  /** Writes `v` at `out(at)`; returns the index after it. */
+  private def putVarint(out: Array[Byte], at: Int, v: Long): Int = {
     var x = v
-    while ((x & ~0x7fL) != 0L) { bb.put(((x & 0x7f) | 0x80).toByte); x >>>= 7 }
-    bb.put(x.toByte)
+    var i = at
+    while ((x & ~0x7fL) != 0L) { out(i) = ((x & 0x7f) | 0x80).toByte; x >>>= 7; i += 1 }
+    out(i) = x.toByte
+    i + 1
   }
   private def getVarint(bb: ByteBuffer): Long = {
     var x = 0L; var shift = 0; var b = 0
@@ -369,15 +362,16 @@ object SketchCodec {
   private val BloomSparseHeader = 3 + 16 + 8 + 1
 
   /** Sizes a Bloom filter's offset-list and word-RLE bodies from its
-    * nonzero words, fed in ascending word order. Within a word every
-    * offset-list delta is < 64 (one varint byte), so only each nonzero
-    * word's first set bit needs a real varint size; a word-RLE group is
-    * sized when its literal run ends. The canonical-form check sizes
-    * with it exactly as encodeBloom's inline loop does, so both make the
-    * same layout choice (GoldenBlobSpec and CodecFuzzSpec pin that). */
+    * nonzero words, fed in ascending word order to [[word]] and
+    * [[rleWord]] respectively. Within a word every offset-list delta is
+    * < 64 (one varint byte), so only each nonzero word's first set bit
+    * needs a real varint size; a word-RLE group is sized when its
+    * literal run ends. encodeBloom and the canonical-form check both size
+    * through it, so they make the same layout choice. */
   private final class BloomSizer {
     var offsetBody = 4
     var ones = 0
+    var words = 0
     private var lastPos = 0L
     private var rle = 0
     private var lastWord = -1L
@@ -389,6 +383,10 @@ object SketchCodec {
       offsetBody += varintSize(if (ones == 0) first else first - lastPos) + c - 1
       ones += c
       lastPos = wi * 64 + 63 - java.lang.Long.numberOfLeadingZeros(word)
+      words += 1
+    }
+
+    def rleWord(wi: Long): Unit = {
       if (litRun > 0 && wi == lastWord + 1) litRun += 1
       else {
         if (litRun > 0) rle += varintSize(litRun.toLong) + 8 * litRun
@@ -400,6 +398,9 @@ object SketchCodec {
 
     def rleBody: Int = if (litRun > 0) rle + varintSize(litRun.toLong) + 8 * litRun else rle
   }
+
+  /** Every nonzero word costs a word-RLE body 8 bytes. */
+  private def rlePayloadAtLeast(nonZeroWords: Long): Long = BloomSparseHeader + 8L * nonZeroWords
 
   /** Key convention of an encoded Bloom blob (header 6 + variant 1). */
   def bloomKeyMode(bytes: Array[Byte]): Byte = {
@@ -424,17 +425,23 @@ object SketchCodec {
   def encodeHll(s: HLLSketch): Array[Byte] = {
     val regs = s.registers
     val m = regs.length
-    var occupied = 0
-    var i = 0
-    while (i < m) { if (regs(i) != 0) occupied += 1; i += 1 }
+    val occupied = nonZeroBytes(regs, 0, m)
     if (4 + 4 * occupied < m) {
       val bb = writer(TypeId.Hll, 4 + 4 + 4 * occupied, SparseVersion)
       bb.putInt(s.p)
       bb.putInt(occupied)
-      i = 0
-      while (i < m) {
-        if (regs(i) != 0) bb.putInt((i << 6) | (regs(i) & 0x3f))
-        i += 1
+      // m = 2^p >= 16, so the registers read as whole 8-byte lanes
+      val lanes = ByteBuffer.wrap(regs)
+      var lane = 0
+      while (lane < m) {
+        if (lanes.getLong(lane) != 0L) {
+          var i = lane
+          while (i < lane + 8) {
+            if (regs(i) != 0) bb.putInt((i << 6) | (regs(i) & 0x3f))
+            i += 1
+          }
+        }
+        lane += 8
       }
       bb.array()
     } else {
@@ -443,6 +450,24 @@ object SketchCodec {
       bb.put(regs)
       bb.array()
     }
+  }
+
+  /** Nonzero bytes in `a(from until until)`, eight at a time; the span's
+    * length is a multiple of 8. */
+  private def nonZeroBytes(a: Array[Byte], from: Int, until: Int): Int = {
+    val lanes = ByteBuffer.wrap(a)
+    var n = 0
+    var i = from
+    while (i < until) {
+      val x = lanes.getLong(i)
+      // the top bit of each byte of t is set iff that byte of x is nonzero
+      if (x != 0L) {
+        val t = ((x & 0x7f7f7f7f7f7f7f7fL) + 0x7f7f7f7f7f7f7f7fL) | x
+        n += java.lang.Long.bitCount(t & 0x8080808080808080L)
+      }
+      i += 8
+    }
+    n
   }
 
   def decodeHll(bytes: Array[Byte]): HLLSketch = typed {
@@ -911,14 +936,15 @@ object SketchCodec {
           _: IndexOutOfBoundsException => false
     })
 
-  /** Same type, and the same header fields an encoder takes from its
-    * caller or its class rather than from the decoded state: the Bloom
-    * variant and the key convention of Bloom, CMS and counting Bloom.
-    * Both blobs must carry a full header. */
-  def sameKind(a: Array[Byte], b: Array[Byte]): Boolean =
-    a(4) == b(4) && (a(4) match {
-      case TypeId.Bloom => a(6) == b(6) && a(7) == b(7)
-      case TypeId.Cms | TypeId.CountingBloom => a(6) == b(6)
+  /** A blob of type `typeId` whose header carries the fields an encoder
+    * takes from its caller rather than from the sketch state: the Bloom
+    * `variant` and key convention, the CMS and counting-Bloom key
+    * convention (`keyMode`); other types ignore both. `bytes` must carry
+    * a full header. */
+  def isKind(bytes: Array[Byte], typeId: Byte, variant: Byte, keyMode: Byte): Boolean =
+    bytes(4) == typeId && (typeId match {
+      case TypeId.Bloom => bytes(6) == variant && bytes(7) == keyMode
+      case TypeId.Cms | TypeId.CountingBloom => bytes(6) == keyMode
       case _ => true
     })
 
@@ -965,7 +991,7 @@ object SketchCodec {
       var wi = 0
       while (wi < nWords) {
         val word = bb.getLong()
-        if (word != 0L) sizer.word(wi, word)
+        if (word != 0L) { sizer.word(wi, word); sizer.rleWord(wi) }
         wi += 1
       }
       val offsetPayload = BloomSparseHeader + sizer.offsetBody
@@ -976,28 +1002,41 @@ object SketchCodec {
       val payload = bytes.length - 6
       bb.get() match {
         case 0 => // offset-list: strictly ascending positions in range
+          // the body's length is the offset-list size; only the word-RLE
+          // size is left to compare, and it needs just the nonzero words
           val ones = bb.getInt()
-          val in = new Varints(bytes, bb.position())
-          var pos = -1L
-          var word = 0L
-          var wi = -1L
-          var i = 0
-          while (i < ones) {
-            val d = in.next()
-            if (d < 0 || (i > 0 && d == 0)) return false
-            pos = if (i == 0) d else pos + d
-            if (pos < 0 || pos >= numBits) return false
-            if ((pos >>> 6) != wi) {
-              if (wi >= 0) sizer.word(wi, word)
-              wi = pos >>> 6
-              word = 0L
+          val start = bb.position()
+          /** Nonzero words of a body of `ones` minimal varint deltas that
+            * fills the blob, each also fed to `rle` unless null; -1 if
+            * the body is not that. */
+          def words(rle: BloomSizer): Long = {
+            val in = new Varints(bytes, start)
+            var at = start
+            var pos = 0L
+            var wi = -1L
+            var n = 0L
+            var i = 0
+            while (i < ones) {
+              // a one-byte delta is always minimal
+              val d =
+                if (at < bytes.length && bytes(at) >= 0) { at += 1; bytes(at - 1).toLong }
+                else { in.at = at; val v = in.next(); at = in.at; v }
+              if (d < 0 || (i > 0 && d == 0)) return -1L
+              pos += d
+              if (pos < 0 || pos >= numBits) return -1L
+              if ((pos >>> 6) != wi) {
+                wi = pos >>> 6
+                n += 1
+                if (rle != null) rle.rleWord(wi)
+              }
+              i += 1
             }
-            word |= 1L << (pos & 63)
-            i += 1
+            if (at == bytes.length && ones >= 0) n else -1L
           }
-          if (wi >= 0) sizer.word(wi, word)
-          in.at == bytes.length && ones >= 0 && payload < densePayload &&
-            payload <= BloomSparseHeader + sizer.rleBody
+          val n = words(null)
+          n >= 0 && payload < densePayload &&
+            (payload <= rlePayloadAtLeast(n) ||
+              { words(sizer); payload <= BloomSparseHeader + sizer.rleBody })
         case 1 => // word-RLE: maximal literal runs of nonzero words
           val in = new Varints(bytes, bb.position())
           var wp = 0L
@@ -1032,11 +1071,7 @@ object SketchCodec {
     if (p < 4 || p > 18) return false
     val m = 1 << p
     if (v == MinVersion) {
-      if (bytes.length != 10 + m) return false
-      var occupied = 0
-      var i = 10
-      while (i < bytes.length) { if (bytes(i) != 0) occupied += 1; i += 1 }
-      4 + 4 * occupied >= m
+      bytes.length == 10 + m && 4 + 4 * nonZeroBytes(bytes, 10, bytes.length) >= m
     } else v == SparseVersion && {
       val n = bb.getInt()
       n >= 0 && 4 + 4L * n < m && bytes.length == 14 + 4L * n && {

@@ -49,11 +49,19 @@ abstract class SketchAggBase[S <: AnyRef] extends TypedImperativeAggregate[Sketc
   protected def encode(s: S): Array[Byte]
   protected def decode(bytes: Array[Byte]): S
 
-  @transient private lazy val emptyBlob: Array[Byte] = encode(newSketch())
+  /** The codec type of this aggregate's blobs (SketchCodec.TypeId). */
+  protected def blobType: Byte
+  /** The header fields this aggregate's encoder takes from the aggregate
+    * rather than from the sketch: the Bloom variant, and the key
+    * convention of Bloom, CMS and counting-Bloom blobs. */
+  protected def blobVariant: Byte = 0
+  protected def blobKeyMode: Byte = 0
 
-  /** `encode(decode(bytes)) == bytes`, checked without decoding. */
+  /** `encode(decode(bytes)) == bytes` for this aggregate's encoder,
+    * checked without decoding. */
   protected def canonical(bytes: Array[Byte]): Boolean =
-    SketchCodec.isCanonical(bytes) && SketchCodec.sameKind(bytes, emptyBlob)
+    SketchCodec.isCanonical(bytes) &&
+      SketchCodec.isKind(bytes, blobType, blobVariant, blobKeyMode)
 
   /** The buffer's sketch, decoded or created on its first write. */
   protected final def sketch(b: SketchBuffer[S]): S = {
@@ -85,6 +93,13 @@ abstract class SketchAggBase[S <: AnyRef] extends TypedImperativeAggregate[Sketc
     if (b.bytes != null && canonical(b.bytes)) b.bytes else encode(sketch(b))
 
   override def eval(b: SketchBuffer[S]): Any = serialize(b)
+
+  /** `b`, its held blob checked now: passed when canonical, else decoded,
+    * so a damaged blob fails here, typed, instead of at a later write. */
+  final def checked(b: SketchBuffer[S]): SketchBuffer[S] = {
+    if (b.bytes != null && !canonical(b.bytes)) sketch(b)
+    b
+  }
 
   override def deserialize(bytes: Array[Byte]): SketchBuffer[S] =
     new SketchBuffer(bytes, null.asInstanceOf[S])

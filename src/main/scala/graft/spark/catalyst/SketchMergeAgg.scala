@@ -66,6 +66,9 @@ case class SketchMergeAgg(
     }
   }
 
+  // a blob of any codec type passes through: the first blob types the
+  // buffer, so canonical asks for no particular kind
+  override protected def blobType: Byte = -1
   override protected def canonical(bytes: Array[Byte]): Boolean = SketchCodec.isCanonical(bytes)
 
   override protected def union(s: Typed, o: Typed): Typed = {

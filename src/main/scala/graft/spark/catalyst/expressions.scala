@@ -150,6 +150,9 @@ case class BloomSketchAgg(
   @transient private lazy val pair = KMHashPair.byId(hasherId)
 
   override protected def newSketch(): KMBloomSketch = KMBloomSketch(capacity, fpp, pair)
+  override protected def blobType: Byte = SketchCodec.TypeId.Bloom
+  override protected def blobVariant: Byte = BloomVariant.KM
+  override protected def blobKeyMode: Byte = keyMode
   override protected def insert(s: KMBloomSketch, input: InternalRow): Unit = {
     val (h1, h2) = RowHasher.hashPair(hashedKeys, keyRow(input), pair)
     s.insertHashes(h1, h2)
@@ -186,6 +189,8 @@ case class SeededBloomSketchAgg(
   override def checkInputDataTypes(): TypeCheckResult = checkKeys(SketchCodec.KeyMode.Bytes)
 
   override protected def newSketch(): SeededBloomSketch = SeededBloomSketch(capacity, fpp)
+  override protected def blobType: Byte = SketchCodec.TypeId.Bloom
+  override protected def blobVariant: Byte = BloomVariant.Seeded
   override protected def insert(s: SeededBloomSketch, input: InternalRow): Unit = {
     val k = hashedKeys(0).eval(keyRow(input))
     if (k != null) s.insert(k.asInstanceOf[Array[Byte]])
@@ -277,13 +282,16 @@ case class CbfSketchAgg(
       .putInt(ins.length).put(ins).put(ret).array()
   }
 
-  /** The two length-framed blobs, each canonical under byte keys. */
+  // each of the two framed blobs is a counting filter under byte keys
+  override protected def blobType: Byte = SketchCodec.TypeId.CountingBloom
+  override protected def blobKeyMode: Byte = SketchCodec.KeyMode.Bytes
+
+  /** The two length-framed blobs, each canonical. */
   override protected def canonical(bytes: Array[Byte]): Boolean = {
-    def part(b: Array[Byte]) = SketchCodec.isCanonical(b) &&
-      b(4) == SketchCodec.TypeId.CountingBloom && b(6) == SketchCodec.KeyMode.Bytes
     val n = if (bytes.length < 4) -1 else java.nio.ByteBuffer.wrap(bytes).getInt()
-    n >= 0 && n <= bytes.length - 4 && part(java.util.Arrays.copyOfRange(bytes, 4, 4 + n)) &&
-      part(java.util.Arrays.copyOfRange(bytes, 4 + n, bytes.length))
+    n >= 0 && n <= bytes.length - 4 &&
+      super.canonical(java.util.Arrays.copyOfRange(bytes, 4, 4 + n)) &&
+      super.canonical(java.util.Arrays.copyOfRange(bytes, 4 + n, bytes.length))
   }
 
   override protected def decode(bytes: Array[Byte]): Buf = {
@@ -586,6 +594,7 @@ case class HllSketchAgg(
   override def prettyName: String = "graft_hll_agg"
 
   override protected def newSketch(): HLLSketch = HLLSketch(p)
+  override protected def blobType: Byte = SketchCodec.TypeId.Hll
   override protected def insert(s: HLLSketch, input: InternalRow): Unit =
     s.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
   override protected def union(s: HLLSketch, o: HLLSketch): HLLSketch = s.mergeInPlace(o)
@@ -612,6 +621,7 @@ case class ThetaSketchAgg(
   override def prettyName: String = "graft_theta_agg"
 
   override protected def newSketch(): ThetaSketch = ThetaSketch(k)
+  override protected def blobType: Byte = SketchCodec.TypeId.Theta
   override protected def insert(s: ThetaSketch, input: InternalRow): Unit =
     s.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
   override protected def union(s: ThetaSketch, o: ThetaSketch): ThetaSketch = s.mergeInPlace(o)
@@ -645,6 +655,7 @@ case class BottomKSampleAgg(
     SketchAggBase.stringOrBinaryKey(prettyName, key)
 
   override protected def newSketch(): BottomKSketch = BottomKSketch(k)
+  override protected def blobType: Byte = SketchCodec.TypeId.BottomK
   override protected def insert(s: BottomKSketch, input: InternalRow): Unit = {
     val v = key.eval(input)
     if (v != null) s.update(SketchAggBase.keyBytes(v))
@@ -693,6 +704,7 @@ case class WeightedBottomKSampleAgg(
     }
 
   override protected def newSketch(): WeightedBottomKSketch = WeightedBottomKSketch(k)
+  override protected def blobType: Byte = SketchCodec.TypeId.WeightedBottomK
 
   override protected def insert(s: WeightedBottomKSketch, input: InternalRow): Unit = {
     val v = key.eval(input)
@@ -742,6 +754,7 @@ case class MgSketchAgg(
     SketchAggBase.stringOrBinaryKey(prettyName, key)
 
   override protected def newSketch(): MGSketch = MGSketch(k)
+  override protected def blobType: Byte = SketchCodec.TypeId.Mg
   override protected def insert(s: MGSketch, input: InternalRow): Unit = {
     val v = key.eval(input)
     if (v != null) s.update(SketchAggBase.keyBytes(v))
@@ -772,6 +785,8 @@ case class CmsSketchAgg(
   override def checkInputDataTypes(): TypeCheckResult = checkKeys(keyMode)
 
   override protected def newSketch(): CMSSketch = CMSSketch(eps, delta)
+  override protected def blobType: Byte = SketchCodec.TypeId.Cms
+  override protected def blobKeyMode: Byte = keyMode
   override protected def insert(s: CMSSketch, input: InternalRow): Unit =
     s.updateHash(RowHasher.hash64(hashedKeys, keyRow(input)))
   override protected def union(s: CMSSketch, o: CMSSketch): CMSSketch = s.mergeInPlace(o)
@@ -825,6 +840,7 @@ case class TDigestSketchAgg(
   override def prettyName: String = "graft_tdigest_agg"
 
   override protected def newSketch(): TDigestSketch = TDigestSketch(compression)
+  override protected def blobType: Byte = SketchCodec.TypeId.TDigest
   override protected def insert(s: TDigestSketch, input: InternalRow): Unit = {
     val v = value.eval(input)
     if (v != null) s.update(SketchAggBase.numeric(v))
@@ -854,6 +870,7 @@ case class KllSketchAgg(
   override def prettyName: String = "graft_kll_agg"
 
   override protected def newSketch(): KLLSketch = KLLSketch(k)
+  override protected def blobType: Byte = SketchCodec.TypeId.Kll
   override protected def insert(s: KLLSketch, input: InternalRow): Unit = {
     val v = value.eval(input)
     if (v != null) s.update(SketchAggBase.numeric(v))

@@ -488,13 +488,17 @@ object StreamingSketch {
     * SketchMergeAgg's own buffer (sniffs the type byte — Bloom, HLL, CMS,
     * theta, …; the first blob is held as it came until a second one
     * arrives; thread-safe; micro-batches arrive sequentially but
-    * defensive anyway). */
+    * defensive anyway). The state keeps its own copy of every blob and
+    * hands out copies. */
   final class IncrementalState {
     private val agg = SketchMergeAgg(BoundReference(0, BinaryType, nullable = true))
     private var buffer = agg.createAggregationBuffer()
+    /** A damaged blob fails this call, typed, and leaves the state as it
+      * was: a blob the state would hold undecoded is checked here. */
     def merge(blob: Array[Byte]): Unit = synchronized {
-      buffer = agg.update(buffer, InternalRow(blob))
+      buffer = agg.checked(agg.update(buffer, InternalRow(blob.clone())))
     }
-    def get: Option[Array[Byte]] = synchronized(Option(agg.eval(buffer).asInstanceOf[Array[Byte]]))
+    def get: Option[Array[Byte]] =
+      synchronized(Option(agg.eval(buffer).asInstanceOf[Array[Byte]]).map(_.clone()))
   }
 }

@@ -317,6 +317,31 @@ class SparseCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("Bloom blob length is the smallest layout where the offset list and word-RLE cross") {
+    // nonzero words of k evenly spread bits between empty runs: the offset
+    // list takes about k bytes a word, word-RLE 8, so word-RLE wins from
+    // k = 9 on — where the offset list stays under 12 bytes a word
+    val cfg = BloomConfig(2000, 0.01)
+    val nW = ((cfg.totalBits + 63) / 64).toInt
+    val layouts = for (k <- 6 to 16; gap <- Seq(1, 3, 40)) yield {
+      val bits = BitArray(cfg.totalBits)
+      var wi = 0
+      while (wi < nW - 1) {
+        (0 until 4).foreach { j =>
+          if (wi + j < nW - 1) (0 until k).foreach(b => bits.set((wi + j) * 64L + b * 64 / k))
+        }
+        wi += 4 + gap
+      }
+      val s = new KMBloomSketch(cfg, bits, KMHashPair.XxMurmur)
+      val blob = SketchCodec.encodeBloom(s)
+      assert(blob.length === layoutMin(s), s"k=$k gap=$gap: not the smallest layout")
+      assert(SketchCodec.isCanonical(blob), s"k=$k gap=$gap: own blob not canonical")
+      assert(SketchCodec.decodeBloom(blob).bits === s.bits, s"k=$k gap=$gap: round-trip")
+      blob(33)
+    }
+    assert(layouts.toSet === Set[Byte](0, 1), s"the crossover reached only layouts ${layouts.toSet}")
+  }
+
   test("one-pass layout sizing: random filters encode to the smallest layout, losslessly") {
     // fills from empty to dense, with runs of solid and empty words mixed
     // in so every layout wins somewhere; the first set bit sits anywhere

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.SketchCodec
+import graft.core.{KMBloomSketch, SketchCodec}
 import graft.spark.catalyst._
 import graft.spark.Transcripts
 import org.apache.spark.sql.SparkSession
@@ -92,6 +92,26 @@ class StreamingSketchSpec extends AnyFunSuite {
         .head.getAs[Array[Byte]](0))
     assert(streamed === bulk,
       "incremental micro-batch union != bulk batch build (associativity broken)")
+  }
+
+  test("incremental state refuses a damaged first blob at merge and stays usable") {
+    val a = KMBloomSketch(1000L, 0.01)
+    val b = KMBloomSketch(1000L, 0.01)
+    (0 until 50).foreach(i => a.insert(s"a$i".getBytes))
+    (0 until 50).foreach(i => b.insert(s"b$i".getBytes))
+    val (blobA, blobB) = (SketchCodec.encodeBloom(a), SketchCodec.encodeBloom(b))
+    val state = new StreamingSketch.IncrementalState
+    intercept[IllegalArgumentException](state.merge(blobA.take(blobA.length - 3)))
+    assert(state.get.isEmpty, "a refused blob must not become the state")
+    state.merge(blobA)
+    assert(state.get.get.sameElements(blobA))
+    // the state holds copies: changing the caller's or a returned array
+    // does not change it
+    blobA(blobA.length - 1) = (blobA(blobA.length - 1) ^ 1).toByte
+    state.get.get(8) = 99
+    state.merge(blobB)
+    intercept[IllegalArgumentException](state.merge(blobB.take(20)))
+    assert(state.get.get.sameElements(SketchCodec.encodeBloom(a.unionInPlace(b))))
   }
 
   test("flatMapGroupsWithState per-conversation dedup survives replays across micro-batches") {

@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.collection.immutable.ArraySeq
+
 /** Versioned binary serialization for every sketch.
   *
   * The reference keeps filter state RAM-only (no serde —
@@ -46,32 +48,23 @@ object SketchCodec {
   //     KMHashPair); v1 blobs still decode (default pair), so old
   //     checkpoints resume. A filter whose offset-list or word-RLE
   //     layout is strictly smaller than dense is stamped v4 and encoded
-  //     sparse (round 5 — see encodeBloom). v4, NOT v3: the pre-round-5
-  //     reader already accepts v3 globally (HLL/CMS sparse) but has no
-  //     Bloom sparse branch — a v3 sparse Bloom would MISPARSE there
-  //     (reads the sparse numBits field as nWords, then buffer
-  //     underflow), not fail fast. v4 is above that reader's max
-  //     accepted version, so it rejects with the curated version error.
-  //     The decoder still accepts v3 sparse Bloom blobs (emitted
-  //     briefly intra-round-5; Bloom never emitted v3 dense, so the
-  //     byte is unambiguous).
-  //   - HLL/CMS: DENSE blobs are written v1 (byte-identical layout to
-  //     every earlier build); a blob whose occupied cells are few enough
-  //     that the SPARSE layout is strictly smaller is stamped v3 and
-  //     encoded sparse (see encodeHll/encodeCms). v3, NOT v2: one
-  //     earlier build stamped version 2 on every type while still
-  //     writing the DENSE layout, so v2 must keep decoding as dense —
-  //     reusing it for sparse would silently misdecode that build's
-  //     persisted HLL/CMS blobs (checkpoints, sketch-table columns).
-  //     The dense/sparse choice is a pure function of the logical
-  //     sketch state, so equal sketches always encode to equal bytes
-  //     regardless of merge order — the canonical-encoding property
-  //     every bit-identity gate (q33, state-identity suites) relies on.
-  //     An older reader keeps accepting every dense blob and FAILS FAST
-  //     (version check) on a sparse v3 one, rather than misreading it.
+  //     sparse (see encodeBloom). v4, NOT v3: the pre-round-5 reader
+  //     accepts v3 (HLL/CMS sparse) but would MISPARSE a sparse Bloom as
+  //     dense; v4 is above its max version, so it fails fast. Sparse
+  //     Bloom v3 blobs (briefly written in round 5) still decode: Bloom
+  //     never wrote v3 dense, so the byte is unambiguous.
+  //   - HLL/CMS: DENSE blobs are written v1 (the layout of every earlier
+  //     build); a blob whose sparse layout is strictly smaller is stamped
+  //     v3 and encoded sparse. v3, NOT v2: one earlier build stamped v2
+  //     on every type while writing the DENSE layout, so v2 keeps
+  //     decoding as dense. An older reader accepts every dense blob and
+  //     FAILS FAST (version check) on a sparse v3 one.
   //   - theta/KLL/t-digest/bottom-k: content-proportional payloads,
   //     written v1; v2 blobs from the earlier always-v2 build decode
   //     identically (the version byte never changed their layout).
+  // Every layout choice is a pure function of the sketch state, so equal
+  // sketches encode to equal bytes under any merge order (q33 and the
+  // state-identity suites rely on it).
   private val Version: Byte = 4 // max accepted by readers
   private val BloomVersion: Byte = 2
   private val SparseVersion: Byte = 3
@@ -84,20 +77,27 @@ object SketchCodec {
     bb
   }
 
+  private val MagicInt: Int = ByteBuffer.wrap(Magic).order(ByteOrder.LITTLE_ENDIAN).getInt()
+  /** No codec type: a reader that expects it takes any type. */
+  private val AnyType: Byte = 0
+
   /** Returns the buffer positioned at the payload; version via [[versionOf]]. */
   private def reader(bytes: Array[Byte], expectType: Byte): ByteBuffer = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val m = new Array[Byte](4)
-    bb.get(m)
-    require(java.util.Arrays.equals(m, Magic), "not a graft sketch (bad magic)")
+    require(bb.getInt() == MagicInt, "not a graft sketch (bad magic)")
     val t = bb.get()
-    require(t == expectType, s"sketch type mismatch: expected $expectType, got $t")
+    if (expectType != AnyType && t != expectType)
+      fail(s"sketch type mismatch: expected $expectType, got $t")
     val v = bb.get()
-    require(v >= MinVersion && v <= Version, s"unsupported sketch codec version $v")
+    if (v < MinVersion || v > Version) fail(s"unsupported sketch codec version $v")
     bb
   }
 
   private def versionOf(bytes: Array[Byte]): Byte = bytes(5)
+
+  /** `require`'s refusal, without the closure `require` allocates for its
+    * message on every call: a check walks every blob it passes. */
+  private def fail(msg: String): Nothing = throw new IllegalArgumentException(s"requirement failed: $msg")
 
   /** A blob that ends inside a field fails like every other damaged blob. */
   private def typed[A](decode: => A): A =
@@ -111,20 +111,20 @@ object SketchCodec {
     * failing the allocation with OutOfMemoryError. */
   private def requireHeapFits(size: Long, what: String): Unit = {
     val heap = Runtime.getRuntime.maxMemory
-    require(size <= heap, s"corrupt $what blob: declares $size bytes, more than the $heap-byte heap")
+    if (size > heap) fail(s"corrupt $what blob: declares $size bytes, more than the $heap-byte heap")
   }
 
   /** An entry count `n` whose entries take at least `minEntry` bytes
     * each must fit in the bytes that follow it. */
   private def requireEntries(n: Int, minEntry: Int, bb: ByteBuffer, what: String): Unit =
-    require(n >= 0 && minEntry.toLong * n <= bb.remaining,
-      s"corrupt $what blob: $n entries in ${bb.remaining} bytes")
+    if (!(n >= 0 && minEntry.toLong * n <= bb.remaining))
+      fail(s"corrupt $what blob: $n entries in ${bb.remaining} bytes")
 
   /** A key length must leave room for the rest of its entry (`after`
     * bytes) and the minimum of every entry after it. */
   private def requireKey(len: Int, after: Long, bb: ByteBuffer, what: String): Unit =
-    require(len >= 0 && len + after <= bb.remaining,
-      s"corrupt $what blob: a $len-byte key in ${bb.remaining} bytes")
+    if (!(len >= 0 && len + after <= bb.remaining))
+      fail(s"corrupt $what blob: a $len-byte key in ${bb.remaining} bytes")
 
   /** Sniff the sketch type of an encoded blob without decoding it. */
   def typeOf(bytes: Array[Byte]): Byte = {
@@ -139,22 +139,108 @@ object SketchCodec {
     * diagnostic string instead of throwing — one bad row must not kill
     * the observability query this exists for. */
   def describe(bytes: Array[Byte]): String =
-    try typeOf(bytes) match {
-      case TypeId.Bloom => decodeBloom(bytes).toString
-      case TypeId.Hll => decodeHll(bytes).toString
-      case TypeId.Cms => decodeCms(bytes).toString
-      case TypeId.TDigest => decodeTDigest(bytes).toString
-      case TypeId.Kll => decodeKll(bytes).toString
-      case TypeId.Theta => decodeTheta(bytes).toString
-      case TypeId.BottomK => decodeBottomK(bytes).toString
-      case TypeId.Mg => decodeMg(bytes).toString
-      case TypeId.WeightedBottomK => decodeWeightedBottomK(bytes).toString
-      case TypeId.CountingBloom => decodeCountingBloom(bytes).toString
-      case other => s"unknown sketch type $other (${bytes.length} bytes)"
+    try {
+      val t = typeOf(bytes)
+      if (t < TypeId.Bloom || t > TypeId.CountingBloom) s"unknown sketch type $t (${bytes.length} bytes)"
+      else decode(bytes).toString
     } catch {
       case e: Exception =>
         s"invalid sketch blob (${bytes.length} bytes): ${e.getMessage}"
     }
+
+  // ------------------------------------------ decoding and canonical form
+  // Each type's body is read by ONE walk, in one of two modes. Decoding
+  // builds the sketch. Checking builds nothing and allocates nothing
+  // whose size only the header declares; it refuses what decoding
+  // refuses, and answers whether the blob is CANONICAL: exactly what the
+  // current encoder writes for the state it decodes to, so an
+  // aggregation buffer may pass it through (catalyst.SketchBuffer). That
+  // means the current version and layout choice, the exact length,
+  // minimal varints, strictly ascending entries, no empty groups or zero
+  // cells, and a state the sketch's constructor keeps as it is. Legacy
+  // versions and damaged blobs are never canonical; decoding a damaged
+  // blob is what reports the damage. A decode skips the tests only a
+  // check needs.
+
+  /** Where a decoding walk puts the sketch; a checking walk has none. */
+  private final class Decoded { var sketch: AnyRef = _ }
+
+  /** The sketch in a blob of any codec type. */
+  def decode(bytes: Array[Byte]): AnyRef = decodeAs(bytes, AnyType)
+
+  private def decodeAs(bytes: Array[Byte], typeId: Byte): AnyRef = typed {
+    val out = new Decoded
+    walk(bytes, typeId, out)
+    out.sketch
+  }
+
+  /** True iff `encode(decode(bytes)) == bytes`, checked without building
+    * the sketch. Never throws. */
+  def isCanonical(bytes: Array[Byte]): Boolean =
+    try walk(bytes, AnyType, null) catch {
+      case _: java.nio.BufferUnderflowException | _: IllegalArgumentException |
+          _: IndexOutOfBoundsException => false
+    }
+
+  /** The one dispatch on the type byte: reads the header (of type
+    * `typeId`, unless AnyType) and walks the body — decoding into `out`,
+    * or, with `out` null, checking. A check returns whether the blob is
+    * canonical; a decode's answer means nothing. */
+  private def walk(bytes: Array[Byte], typeId: Byte, out: Decoded): Boolean = {
+    val bb = reader(bytes, typeId)
+    bytes(4) match {
+      case TypeId.Bloom => bloomBody(bytes, bb, out)
+      case TypeId.Hll => hllBody(bytes, bb, out)
+      case TypeId.Cms => cmsBody(bytes, bb, out)
+      case TypeId.TDigest => tdigestBody(bytes, bb, out)
+      case TypeId.Kll => kllBody(bytes, bb, out)
+      case TypeId.Theta => thetaBody(bytes, bb, out)
+      case TypeId.BottomK => bottomKBody(bytes, bb, out)
+      case TypeId.Mg => mgBody(bytes, bb, out)
+      case TypeId.WeightedBottomK => weightedBottomKBody(bytes, bb, out)
+      case TypeId.CountingBloom => countingBloomBody(bytes, bb, out)
+      case t => throw new IllegalArgumentException(s"unknown sketch type $t")
+    }
+  }
+
+  /** The blob of any decoded sketch, with `keyMode` for the types whose
+    * blobs carry a key convention. */
+  def encode(sketch: AnyRef, keyMode: Byte): Array[Byte] = sketch match {
+    case s: BloomSketch => encodeBloom(s, keyMode)
+    case s: HLLSketch => encodeHll(s)
+    case s: CMSSketch => encodeCms(s, keyMode)
+    case s: TDigestSketch => encodeTDigest(s)
+    case s: KLLSketch => encodeKll(s)
+    case s: ThetaSketch => encodeTheta(s)
+    case s: BottomKSketch => encodeBottomK(s)
+    case s: MGSketch => encodeMg(s)
+    case s: WeightedBottomKSketch => encodeWeightedBottomK(s)
+    case s: CountingBloomSketch => encodeCountingBloom(s, keyMode)
+    case s => throw new IllegalArgumentException(s"not a sketch: ${s.getClass.getName}")
+  }
+
+  /** Key convention of a Bloom, CMS or counting-Bloom blob; 0 for the
+    * types whose blobs carry none. */
+  def keyModeOf(bytes: Array[Byte]): Byte = typeOf(bytes) match {
+    case TypeId.Bloom => bloomKeyMode(bytes)
+    case TypeId.Cms => cmsKeyMode(bytes)
+    case TypeId.CountingBloom => countingBloomKeyMode(bytes)
+    case _ => 0
+  }
+
+  /** A blob of type `typeId` whose header carries the fields an encoder
+    * takes from its caller rather than from the sketch state: the Bloom
+    * `variant` and key convention, the CMS and counting-Bloom key
+    * convention (`keyMode`); other types ignore both. `bytes` must carry
+    * a full header. */
+  def isKind(bytes: Array[Byte], typeId: Byte, variant: Byte, keyMode: Byte): Boolean =
+    bytes(4) == typeId && (typeId match {
+      case TypeId.Bloom => bytes(6) == variant && bytes(7) == keyMode
+      case TypeId.Cms | TypeId.CountingBloom => bytes(6) == keyMode
+      case _ => true
+    })
+
+  private def registeredPair(id: Byte): Boolean = KMHashPair.registered.exists(_.id == id)
 
   // -------------------------------------------------------------- Bloom
   // v1/v2 (dense): variant(1) keyMode(1) hasherId(1) capacity(8) fpp(8)
@@ -170,18 +256,9 @@ object SketchCodec {
   //
   // Why: a grouped Bloom table — or the windowed streaming state, which
   // carries a capacity-100k filter (~175 KiB dense at p=.001) per
-  // (window, tool) — is dominated by lightly-filled filters; shipping
-  // the full m bits per group through every shuffle/state-store/
-  // sketch-table column was the one dense-only payload left after the
-  // round-3 HLL/CMS sparse codec. CANONICAL by the same rule: the
-  // encoding is a pure function of the BIT STATE (exact size of all
-  // three layouts computed, strictly-smallest wins; dense wins ties,
-  // offset beats RLE at equal size), so equal filters encode to equal
-  // bytes under any merge tree — every bit-identity gate (q03 union ≡
-  // bulk, q33 windowed_eq) is preserved. Sparse blobs are stamped v4 —
-  // ABOVE the pre-round-5 reader's max accepted version — so that
-  // reader fails fast on the version check instead of misparsing the
-  // sparse layout as dense; v1/v2 blobs keep decoding everywhere.
+  // (window, tool) — is dominated by lightly-filled filters. The layout
+  // is the strictly smallest of the three (bloomLayout), so equal
+  // filters encode to equal bytes (q03 union ≡ bulk, q33 windowed_eq).
   // Reference contrast: bitset.rs:3–6 is dense-only — it never holds
   // thousands of filters at once.
   def encodeBloom(s: BloomSketch, keyMode: Byte = KeyMode.Bytes): Array[Byte] = {
@@ -190,54 +267,37 @@ object SketchCodec {
         "the pair with a stable id in KMHashPair to use it in Spark aggregation")
     val w = s.bits.words
     val nW = w.length
-    val sizer = new BloomSizer
+    val choice = bloomLayout(w, null, nW, nW, -1L)
+    val layout = (choice & 3).toByte
+    val dense = layout == 2
+    val bb = writer(TypeId.Bloom, (choice >>> 2).toInt, if (dense) BloomVersion else BloomSparseVersion)
+      .put(s.variant).put(keyMode).put(s.hasherId).putLong(s.config.capacity).putDouble(s.config.fpp)
+    if (dense) {
+      bb.putInt(nW).putLong(s.bits.numBits)
+      bb.asLongBuffer().put(w)
+      return bb.array()
+    }
+    bb.putLong(s.bits.numBits).put(layout)
     var wi = 0
-    while (wi < nW) {
-      val word = w(wi)
-      if (word != 0L) sizer.word(wi, word)
-      wi += 1
-    }
-    val densePayload = 3 + 16 + 4 + 8 + 8 * nW
-    val offsetPayload = BloomSparseHeader + sizer.offsetBody
-    // the offset list wins outright when it is no larger than the
-    // word-RLE lower bound; only otherwise is the word-RLE body sized
-    val offsetWins = offsetPayload < densePayload && offsetPayload <= rlePayloadAtLeast(sizer.words)
-    val rlePayload =
-      if (offsetWins) Int.MaxValue
-      else {
-        wi = 0
-        while (wi < nW) { if (w(wi) != 0L) sizer.rleWord(wi); wi += 1 }
-        BloomSparseHeader + sizer.rleBody
-      }
-
-    def putSparseHeader(bb: ByteBuffer, layout: Byte): Unit = {
-      bb.put(s.variant); bb.put(keyMode); bb.put(s.hasherId)
-      bb.putLong(s.config.capacity); bb.putDouble(s.config.fpp)
-      bb.putLong(s.bits.numBits); bb.put(layout)
-    }
-    if (offsetWins || (offsetPayload < densePayload && offsetPayload <= rlePayload)) {
-      val bb = writer(TypeId.Bloom, offsetPayload, BloomSparseVersion)
-      putSparseHeader(bb, 0)
-      bb.putInt(sizer.ones)
+    if (layout == 0) {
       val out = bb.array()
-      var at = bb.position()
+      val onesAt = bb.position()
+      var at = onesAt + 4
+      var ones = 0
       var prevPos = 0L
-      wi = 0
       while (wi < nW) {
         var bits = w(wi)
         while (bits != 0L) {
           val pos = wi.toLong * 64 + java.lang.Long.numberOfTrailingZeros(bits)
           at = putVarint(out, at, pos - prevPos)
           prevPos = pos
+          ones += 1
           bits &= bits - 1
         }
         wi += 1
       }
-      out
-    } else if (rlePayload < densePayload) {
-      val bb = writer(TypeId.Bloom, rlePayload, BloomSparseVersion)
-      putSparseHeader(bb, 1)
-      wi = 0
+      bb.putInt(onesAt, ones)
+    } else {
       while (wi < nW) {
         var z = 0L
         while (wi < nW && w(wi) == 0L) { z += 1; wi += 1 }
@@ -250,90 +310,190 @@ object SketchCodec {
           while (j < wi) { bb.putLong(w(j)); j += 1 }
         }
       }
-      bb.array()
-    } else {
-      val bb = writer(TypeId.Bloom, densePayload, BloomVersion)
-      bb.put(s.variant)
-      bb.put(keyMode)
-      bb.put(s.hasherId)
-      bb.putLong(s.config.capacity)
-      bb.putDouble(s.config.fpp)
-      bb.putInt(nW)
-      bb.putLong(s.bits.numBits)
-      var i = 0
-      while (i < nW) { bb.putLong(w(i)); i += 1 }
-      bb.array()
     }
+    bb.array()
   }
 
-  def decodeBloom(bytes: Array[Byte]): BloomSketch = typed {
-    val bb = reader(bytes, TypeId.Bloom)
+  private val BloomSparseHeader = 3 + 16 + 8 + 1
+
+  /** The layout encodeBloom writes for a filter of `nWords` words, as
+    * `payload << 2 | layout` (0 offset list, 1 word-RLE, 2 dense): the
+    * strictly smallest wins, dense wins ties, and the offset list beats
+    * word-RLE at equal size. The nonzero words are `w(i)` at word index
+    * `at(i)`, i < n, or, with `at` null, `w` is the whole filter. A
+    * known offset-list payload comes as `offset` (else -1; `w` is not
+    * read). One pass over primitive locals sizes the offset list; a
+    * second sizes word-RLE only if the offset list loses to its lower
+    * bound, 8 bytes a nonzero word. */
+  private def bloomLayout(w: Array[Long], at: Array[Int], n: Int, nWords: Int, offset: Long): Long = {
+    val densePayload = 3 + 16 + 4 + 8 + 8L * nWords
+    var offsetPayload = offset
+    var nonZero = n.toLong
+    var i = 0
+    if (offset < 0) {
+      // within a word every delta is < 64 (one varint byte), so only each
+      // nonzero word's first set bit needs a real varint size
+      var body = 4L
+      var ones = 0L
+      var last = 0L
+      nonZero = 0
+      while (i < n) {
+        val x = w(i)
+        if (x != 0L) {
+          val bit0 = (if (at == null) i else at(i)).toLong << 6
+          val first = bit0 + java.lang.Long.numberOfTrailingZeros(x)
+          val c = java.lang.Long.bitCount(x)
+          body += varintSize(if (ones == 0) first else first - last) + c - 1
+          ones += c
+          last = bit0 + 63 - java.lang.Long.numberOfLeadingZeros(x)
+          nonZero += 1
+        }
+        i += 1
+      }
+      offsetPayload = BloomSparseHeader + body
+    }
+    if (offsetPayload < densePayload && offsetPayload <= BloomSparseHeader + 8 * nonZero)
+      return offsetPayload << 2
+    var rle = 0L
+    var lastWord = -1L
+    var run = 0L
+    i = 0
+    while (i < n) {
+      if (at != null || w(i) != 0L) {
+        val wi = if (at == null) i.toLong else at(i).toLong
+        if (run > 0 && wi == lastWord + 1) run += 1
+        else {
+          if (run > 0) rle += varintSize(run) + 8 * run
+          rle += varintSize(wi - lastWord - 1)
+          run = 1
+        }
+        lastWord = wi
+      }
+      i += 1
+    }
+    if (run > 0) rle += varintSize(run) + 8 * run
+    val rlePayload = BloomSparseHeader + rle
+    if (offsetPayload < densePayload && offsetPayload <= rlePayload) offsetPayload << 2
+    else if (rlePayload < densePayload) rlePayload << 2 | 1
+    else densePayload << 2 | 2
+  }
+
+  def decodeBloom(bytes: Array[Byte]): BloomSketch = decodeAs(bytes, TypeId.Bloom).asInstanceOf[BloomSketch]
+
+  private def bloomBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
+    val v = versionOf(bytes)
     val variant = bb.get()
-    bb.get() // keyMode — surfaced via bloomKeyMode
+    bb.get() // keyMode — surfaced via bloomKeyMode; any byte round-trips
     // v1 Bloom blobs predate hash-pair injection: default pair (id 0)
-    val hasherId = if (versionOf(bytes) >= 2) bb.get() else 0: Byte
-    val capacity = bb.getLong()
-    val fpp = bb.getDouble()
-    val cfg = BloomConfig(capacity, fpp)
+    val hasherId = if (v >= 2) bb.get() else 0: Byte
+    // the encoder writes v2 dense or v4 sparse, a registered pair's id,
+    // and id 0 for a seeded filter
+    if (check && ((v != BloomVersion && v != BloomSparseVersion) ||
+        !(if (variant == BloomVariant.Seeded) hasherId == 0
+          else variant == BloomVariant.KM && registeredPair(hasherId)))) return false
+    val cfg = BloomConfig(bb.getLong(), bb.getDouble())
+    val payload = bytes.length - 6L
     // every length field is checked before it sizes an allocation, so a
     // length-inflated blob fails here instead of with OutOfMemoryError
-    val bits =
+    var numBits = 0L
+    var words: Array[Long] = null
+    val canonical =
       // >= 3, not == 4: early round-5 builds stamped sparse Bloom v3
       // (Bloom never emitted v3 dense, so the byte is unambiguous)
-      if (versionOf(bytes) >= SparseVersion) {
-        val numBits = bb.getLong()
-        require(numBits == cfg.totalBits && ((numBits + 63) >>> 6) <= Int.MaxValue,
-          s"corrupt Bloom blob: config says ${cfg.totalBits} bits, header has $numBits")
+      if (v >= SparseVersion) {
+        numBits = bb.getLong()
+        if (!(numBits == cfg.totalBits && ((numBits + 63) >>> 6) <= Int.MaxValue))
+          fail(s"corrupt Bloom blob: config says ${cfg.totalBits} bits, header has $numBits")
         val nWords = ((numBits + 63) >>> 6).toInt
         requireHeapFits(8L * nWords, "Bloom")
-        val words = new Array[Long](nWords)
+        if (!check) words = new Array[Long](nWords)
         bb.get() match {
-          case 0 => // offset-list
+          case 0 => // offset list; a check keeps each nonzero word's index
             val ones = bb.getInt()
+            if (check && (ones < 0 || ones > bb.remaining)) return false
+            val idx = if (check) new Array[Int](ones) else null
+            var n = 0
             var pos = 0L
             var at = bb.position()
             var i = 0
             while (i < ones) {
               // one-byte deltas straight from the array, longer ones via bb
-              if (at < bytes.length && bytes(at) >= 0) { pos += bytes(at); at += 1 }
-              else { bb.position(at); pos += getVarint(bb); at = bb.position() }
+              val d =
+                if (at < bytes.length && bytes(at) >= 0) { at += 1; bytes(at - 1).toLong }
+                else {
+                  bb.position(at)
+                  val x = getVarint(bb)
+                  if (check && !minimalVarint(bytes, at, bb.position())) return false
+                  at = bb.position()
+                  x
+                }
+              pos += d
               require(pos >= 0 && pos < numBits, "corrupt sparse Bloom blob (offset)")
-              words((pos >>> 6).toInt) |= 1L << (pos & 63)
+              if (!check) words((pos >>> 6).toInt) |= 1L << (pos & 63)
+              else {
+                if (d == 0 && i > 0) return false // positions strictly ascend
+                val wi = (pos >>> 6).toInt
+                if (n == 0 || idx(n - 1) != wi) { idx(n) = wi; n += 1 }
+              }
               i += 1
             }
-          case 1 => // word-RLE
+            check && at == bytes.length && bloomLayout(null, idx, n, nWords, payload) == payload << 2
+          case 1 => // word-RLE; a check keeps each literal word and its index
+            val lits = if (check) new Array[Long](bb.remaining / 8) else null
+            val idx = if (check) new Array[Int](lits.length) else null
+            var n = 0
             var wp = 0L
             while (bb.hasRemaining) {
-              wp += getVarint(bb)
+              val zAt = bb.position()
+              val z = getVarint(bb)
+              val litAt = bb.position()
               val lit = getVarint(bb)
+              wp += z
               require(wp + lit <= nWords, "corrupt sparse Bloom blob (RLE)")
+              // maximal groups: zero words (none only before the first
+              // group), then at least one nonzero word
+              if (check && (!minimalVarint(bytes, zAt, litAt) ||
+                  !minimalVarint(bytes, litAt, bb.position()) || z > nWords || lit < 1 ||
+                  (z == 0 && n > 0) || lit > bb.remaining / 8)) return false
               var j = 0L
-              while (j < lit) { words(wp.toInt) = bb.getLong(); wp += 1; j += 1 }
+              while (j < lit) {
+                val word = bb.getLong()
+                if (!check) words(wp.toInt) = word
+                else if (word == 0L) return false
+                else { lits(n) = word; idx(n) = wp.toInt; n += 1 }
+                wp += 1
+                j += 1
+              }
             }
+            check && bloomLayout(lits, idx, n, nWords, -1L) == (payload << 2 | 1)
           case l => throw new IllegalArgumentException(s"unknown sparse Bloom layout $l")
         }
-        BitArray.fromWords(words, numBits)
       } else {
         val nWords = bb.getInt()
-        val numBits = bb.getLong()
-        require(nWords >= 0 && nWords <= bb.remaining / 8 && numBits >= 0 &&
-            nWords == ((numBits + 63) >>> 6),
-          s"corrupt dense Bloom blob: $nWords words for $numBits bits in ${bb.remaining} bytes")
-        val words = new Array[Long](nWords)
-        var i = 0
-        while (i < nWords) { words(i) = bb.getLong(); i += 1 }
-        BitArray.fromWords(words, numBits)
+        numBits = bb.getLong()
+        if (!(nWords >= 0 && nWords <= bb.remaining / 8 && numBits >= 0 &&
+            nWords == ((numBits + 63) >>> 6)))
+          fail(s"corrupt dense Bloom blob: $nWords words for $numBits bits in ${bb.remaining} bytes")
+        // the body is the state, so a check reads it as a decode does: a
+        // canonical dense body is the rest of the blob
+        if (check && bb.remaining != 8L * nWords) return false
+        words = new Array[Long](nWords)
+        bb.asLongBuffer().get(words)
+        check && bloomLayout(words, null, nWords, nWords, -1L) == (payload << 2 | 2)
       }
-    require(cfg.totalBits == bits.numBits,
-      s"corrupt Bloom blob: config says ${cfg.totalBits} bits, payload has ${bits.numBits}")
-    variant match {
-      case BloomVariant.KM => new KMBloomSketch(cfg, bits, KMHashPair.byId(hasherId))
-      case BloomVariant.Seeded => new SeededBloomSketch(cfg, bits)
-      case v => throw new IllegalArgumentException(s"unknown Bloom variant $v")
+    if (cfg.totalBits != numBits)
+      fail(s"corrupt Bloom blob: config says ${cfg.totalBits} bits, payload has $numBits")
+    if (!check) out.sketch = variant match {
+      case BloomVariant.KM =>
+        new KMBloomSketch(cfg, BitArray.fromWords(words, numBits), KMHashPair.byId(hasherId))
+      case BloomVariant.Seeded => new SeededBloomSketch(cfg, BitArray.fromWords(words, numBits))
+      case x => throw new IllegalArgumentException(s"unknown Bloom variant $x")
     }
+    canonical
   }
 
-  // LEB128 unsigned varints (sparse Bloom bodies)
+  // LEB128 unsigned varints (sparse Bloom and counting-Bloom bodies)
   private def varintSize(v: Long): Int = {
     var x = v; var n = 1
     while ((x & ~0x7fL) != 0L) { x >>>= 7; n += 1 }
@@ -358,49 +518,11 @@ object SketchCodec {
     } while ((b & 0x80) != 0)
     x
   }
-
-  private val BloomSparseHeader = 3 + 16 + 8 + 1
-
-  /** Sizes a Bloom filter's offset-list and word-RLE bodies from its
-    * nonzero words, fed in ascending word order to [[word]] and
-    * [[rleWord]] respectively. Within a word every offset-list delta is
-    * < 64 (one varint byte), so only each nonzero word's first set bit
-    * needs a real varint size; a word-RLE group is sized when its
-    * literal run ends. encodeBloom and the canonical-form check both size
-    * through it, so they make the same layout choice. */
-  private final class BloomSizer {
-    var offsetBody = 4
-    var ones = 0
-    var words = 0
-    private var lastPos = 0L
-    private var rle = 0
-    private var lastWord = -1L
-    private var litRun = 0
-
-    def word(wi: Long, word: Long): Unit = {
-      val first = wi * 64 + java.lang.Long.numberOfTrailingZeros(word)
-      val c = java.lang.Long.bitCount(word)
-      offsetBody += varintSize(if (ones == 0) first else first - lastPos) + c - 1
-      ones += c
-      lastPos = wi * 64 + 63 - java.lang.Long.numberOfLeadingZeros(word)
-      words += 1
-    }
-
-    def rleWord(wi: Long): Unit = {
-      if (litRun > 0 && wi == lastWord + 1) litRun += 1
-      else {
-        if (litRun > 0) rle += varintSize(litRun.toLong) + 8 * litRun
-        rle += varintSize(wi - lastWord - 1)
-        litRun = 1
-      }
-      lastWord = wi
-    }
-
-    def rleBody: Int = if (litRun > 0) rle + varintSize(litRun.toLong) + 8 * litRun else rle
-  }
-
-  /** Every nonzero word costs a word-RLE body 8 bytes. */
-  private def rlePayloadAtLeast(nonZeroWords: Long): Long = BloomSparseHeader + 8L * nonZeroWords
+  /** Whether the varint in `bytes(from until until)` is one the encoder
+    * writes: minimal (a longer one ends in a nonzero byte) and below
+    * 2^63 (at most 9 bytes). */
+  private def minimalVarint(bytes: Array[Byte], from: Int, until: Int): Boolean =
+    until - from == 1 || (until - from <= 9 && bytes(until - 1) != 0)
 
   /** Key convention of an encoded Bloom blob (header 6 + variant 1). */
   def bloomKeyMode(bytes: Array[Byte]): Byte = {
@@ -414,22 +536,16 @@ object SketchCodec {
   //              (rank ≤ 64−p+1 ≤ 61 fits 6 bits; idx < 2^p ≤ 2^18 fits
   //              the rest), ascending idx.
   //
-  // The layout is chosen from the LOGICAL state: sparse iff it is
-  // strictly smaller (occupied < m/4 registers, minus the count field) —
-  // a grouped sketch table at 10^6+ group cardinality is dominated by
-  // small groups, and shipping a 16 KiB dense register file per group
-  // through every partial-agg shuffle / checkpoint / sketch-table column
-  // is the scale cost this removes (a 100-distinct group encodes in
-  // ~0.4 KiB). Canonical by construction: equal register vectors encode
-  // to equal bytes whatever the merge tree.
+  // Sparse iff strictly smaller (occupied < m/4 registers, minus the
+  // count field): a grouped sketch table at 10^6+ group cardinality is
+  // dominated by small groups, and a 16 KiB dense register file per
+  // group crossed every shuffle (a 100-distinct group encodes in ~0.4 KiB).
   def encodeHll(s: HLLSketch): Array[Byte] = {
     val regs = s.registers
     val m = regs.length
     val occupied = nonZeroBytes(regs, 0, m)
-    if (4 + 4 * occupied < m) {
-      val bb = writer(TypeId.Hll, 4 + 4 + 4 * occupied, SparseVersion)
-      bb.putInt(s.p)
-      bb.putInt(occupied)
+    if (hllSparse(occupied, m)) {
+      val bb = writer(TypeId.Hll, 4 + 4 + 4 * occupied, SparseVersion).putInt(s.p).putInt(occupied)
       // m = 2^p >= 16, so the registers read as whole 8-byte lanes
       val lanes = ByteBuffer.wrap(regs)
       var lane = 0
@@ -444,13 +560,11 @@ object SketchCodec {
         lane += 8
       }
       bb.array()
-    } else {
-      val bb = writer(TypeId.Hll, 4 + m, 1)
-      bb.putInt(s.p)
-      bb.put(regs)
-      bb.array()
-    }
+    } else writer(TypeId.Hll, 4 + m, MinVersion).putInt(s.p).put(regs).array()
   }
+
+  /** The HLL layout rule: sparse iff strictly smaller than dense. */
+  private def hllSparse(occupied: Long, m: Int): Boolean = 4 + 4 * occupied < m
 
   /** Nonzero bytes in `a(from until until)`, eight at a time; the span's
     * length is a multiple of 8. */
@@ -470,34 +584,40 @@ object SketchCodec {
     n
   }
 
-  def decodeHll(bytes: Array[Byte]): HLLSketch = typed {
-    val bb = reader(bytes, TypeId.Hll)
+  def decodeHll(bytes: Array[Byte]): HLLSketch = decodeAs(bytes, TypeId.Hll).asInstanceOf[HLLSketch]
+
+  private def hllBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
     val p = bb.getInt()
-    require(p >= 4 && p <= 18, s"corrupt HLL blob: precision $p outside [4,18]")
-    val regs = new Array[Byte](1 << p)
+    if (p < 4 || p > 18) fail(s"corrupt HLL blob: precision $p outside [4,18]")
+    val m = 1 << p
+    val regs = if (check) null else new Array[Byte](m)
     // v1 is dense; v3 is sparse; v2 is AMBIGUOUS (one build stamped v2
     // on dense payloads, another briefly wrote sparse payloads as v2) —
     // but the sparse layout is only ever chosen when STRICTLY smaller
     // than dense, so the blob length disambiguates v2 exactly
-    val denseLen = 6 + 4 + (1 << p)
-    val sparse = versionOf(bytes) >= SparseVersion ||
-      (versionOf(bytes) == 2 && bytes.length != denseLen)
-    if (sparse) {
+    val v = versionOf(bytes)
+    if (v >= SparseVersion || (v == 2 && bytes.length != 10 + m)) {
       val n = bb.getInt()
+      if (check && !(v == SparseVersion && hllSparse(n, m) && bytes.length == 14 + 4L * n)) return false
       var i = 0
       var prevIdx = -1
       while (i < n) {
         val packed = bb.getInt()
         val idx = packed >>> 6
-        require(idx > prevIdx && idx < regs.length, "corrupt sparse HLL blob")
-        regs(idx) = (packed & 0x3f).toByte
+        require(idx > prevIdx && idx < m, "corrupt sparse HLL blob")
+        if (!check) regs(idx) = (packed & 0x3f).toByte
+        else if ((packed & 0x3f) == 0) return false
         prevIdx = idx
         i += 1
       }
+    } else if (check) {
+      return v == MinVersion && bytes.length == 10 + m && !hllSparse(nonZeroBytes(bytes, 10, 10 + m), m)
     } else {
       bb.get(regs)
     }
-    new HLLSketch(p, regs)
+    if (!check) out.sketch = new HLLSketch(p, regs)
+    true
   }
 
   // -------------------------------------------------------------- CMS
@@ -506,75 +626,72 @@ object SketchCodec {
   //              [idx(4) value(8)]*count — nonzero cells only, ascending
   //              idx into the row-major d×w grid.
   //
-  // Same canonical dense/sparse rule as HLL: sparse iff strictly smaller
-  // (a pure function of the counter grid), so equal sketches encode to
-  // equal bytes under any merge order. A grouped CMS table (frequency
-  // sketch per tool/domain/source) at high group cardinality is mostly
-  // near-empty grids — a d=5,w=2719 dense grid is ~109 KiB per group on
-  // every shuffle; a group with 100 distinct items encodes in ~6 KiB.
+  // Sparse iff strictly smaller, as for HLL: a grouped CMS table is
+  // mostly near-empty grids — a d=5,w=2719 dense grid is ~109 KiB per
+  // group; a group with 100 distinct items encodes in ~6 KiB.
   def encodeCms(s: CMSSketch, keyMode: Byte = KeyMode.Bytes): Array[Byte] = {
-    val n = s.counters.length
+    val c = s.counters
     var nonzero = 0
     var i = 0
-    while (i < n) { if (s.counters(i) != 0L) nonzero += 1; i += 1 }
-    val header = 1 + 4 + 4 + 8
-    if (4 + 12 * nonzero < 8 * n) {
-      val bb = writer(TypeId.Cms, header + 4 + 12 * nonzero, SparseVersion)
-      bb.put(keyMode)
-      bb.putInt(s.depth)
-      bb.putInt(s.width)
-      bb.putLong(s.totalCount)
+    while (i < c.length) { if (c(i) != 0L) nonzero += 1; i += 1 }
+    val sparse = cmsSparse(nonzero, c.length)
+    val bb = writer(TypeId.Cms, 1 + 4 + 4 + 8 + (if (sparse) 4 + 12 * nonzero else 8 * c.length),
+      if (sparse) SparseVersion else MinVersion)
+    bb.put(keyMode).putInt(s.depth).putInt(s.width).putLong(s.totalCount)
+    if (!sparse) bb.asLongBuffer().put(c)
+    else {
       bb.putInt(nonzero)
       i = 0
-      while (i < n) {
-        if (s.counters(i) != 0L) { bb.putInt(i); bb.putLong(s.counters(i)) }
-        i += 1
-      }
-      bb.array()
-    } else {
-      val bb = writer(TypeId.Cms, header + 8 * n, 1)
-      bb.put(keyMode)
-      bb.putInt(s.depth)
-      bb.putInt(s.width)
-      bb.putLong(s.totalCount)
-      i = 0
-      while (i < n) { bb.putLong(s.counters(i)); i += 1 }
-      bb.array()
+      while (i < c.length) { if (c(i) != 0L) bb.putInt(i).putLong(c(i)); i += 1 }
     }
+    bb.array()
   }
 
-  def decodeCms(bytes: Array[Byte]): CMSSketch = typed {
-    val bb = reader(bytes, TypeId.Cms)
-    bb.get() // keyMode — surfaced via cmsKeyMode
+  /** The CMS layout rule: sparse iff strictly smaller than dense. */
+  private def cmsSparse(nonzero: Long, cells: Long): Boolean = 4 + 12 * nonzero < 8 * cells
+
+  def decodeCms(bytes: Array[Byte]): CMSSketch = decodeAs(bytes, TypeId.Cms).asInstanceOf[CMSSketch]
+
+  private def cmsBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
+    bb.get() // keyMode — surfaced via cmsKeyMode; any byte round-trips
     val d = bb.getInt()
     val w = bb.getInt()
     val total = bb.getLong()
     val n = d.toLong * w
-    require(d > 0 && w > 0 && n <= Int.MaxValue, s"corrupt CMS blob: $d x $w counters")
+    if (!(d > 0 && w > 0 && n <= Int.MaxValue)) fail(s"corrupt CMS blob: $d x $w counters")
     requireHeapFits(8 * n, "CMS")
-    // v1 dense, v3 sparse, v2 length-disambiguated (see decodeHll)
+    // v1 dense, v3 sparse, v2 length-disambiguated (see hllBody)
+    val v = versionOf(bytes)
     val denseLen = 6 + 1 + 4 + 4 + 8 + 8 * n
-    val sparse = versionOf(bytes) >= SparseVersion ||
-      (versionOf(bytes) == 2 && bytes.length != denseLen)
-    require(sparse || 8 * n <= bb.remaining,
-      s"corrupt dense CMS blob: $d x $w counters in ${bb.remaining} bytes")
-    val counters = new Array[Long](n.toInt)
+    val sparse = v >= SparseVersion || (v == 2 && bytes.length != denseLen)
+    if (!(sparse || 8 * n <= bb.remaining))
+      fail(s"corrupt dense CMS blob: $d x $w counters in ${bb.remaining} bytes")
+    val counters = if (check) null else new Array[Long](n.toInt)
     if (sparse) {
       val nz = bb.getInt()
+      if (check && !(v == SparseVersion && cmsSparse(nz, n) && bytes.length == 27 + 12L * nz)) return false
       var i = 0
       var prevIdx = -1
       while (i < nz) {
         val idx = bb.getInt()
-        require(idx > prevIdx && idx < counters.length, "corrupt sparse CMS blob")
-        counters(idx) = bb.getLong()
+        require(idx > prevIdx && idx < n, "corrupt sparse CMS blob")
+        val c = bb.getLong()
+        if (!check) counters(idx) = c
+        else if (c == 0L) return false
         prevIdx = idx
         i += 1
       }
-    } else {
+    } else if (!check) bb.asLongBuffer().get(counters)
+    else {
+      if (v != MinVersion || bytes.length != denseLen) return false
+      var nonzero = 0
       var i = 0
-      while (i < counters.length) { counters(i) = bb.getLong(); i += 1 }
+      while (i < n) { if (bb.getLong() != 0L) nonzero += 1; i += 1 }
+      return !cmsSparse(nonzero, n)
     }
-    new CMSSketch(d, w, counters, total)
+    if (!check) out.sketch = new CMSSketch(d, w, counters, total)
+    true
   }
 
   /** Key convention of an encoded CMS blob (header is 6 bytes). */
@@ -588,23 +705,24 @@ object SketchCodec {
   def encodeTDigest(s: TDigestSketch): Array[Byte] = {
     val (means, weights) = s.centroids
     val bb = writer(TypeId.TDigest, 8 + 8 + 8 + 4 + 16 * means.length, MinVersion)
-    bb.putDouble(s.compression)
-    bb.putDouble(s.minValue)
-    bb.putDouble(s.maxValue)
-    bb.putInt(means.length)
+      .putDouble(s.compression).putDouble(s.minValue).putDouble(s.maxValue).putInt(means.length)
     var i = 0
     while (i < means.length) { bb.putDouble(means(i)); bb.putDouble(weights(i)); i += 1 }
     bb.array()
   }
 
-  def decodeTDigest(bytes: Array[Byte]): TDigestSketch = typed {
-    val bb = reader(bytes, TypeId.TDigest)
+  def decodeTDigest(bytes: Array[Byte]): TDigestSketch =
+    decodeAs(bytes, TypeId.TDigest).asInstanceOf[TDigestSketch]
+
+  private def tdigestBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
     val compression = bb.getDouble()
     val minV = bb.getDouble()
     val maxV = bb.getDouble()
     val n = bb.getInt()
-    require(n >= 0 && 16L * n <= bb.remaining,
-      s"corrupt t-digest blob: $n centroids in ${bb.remaining} bytes")
+    if (!(n >= 0 && 16L * n <= bb.remaining))
+      fail(s"corrupt t-digest blob: $n centroids in ${bb.remaining} bytes")
+    // TDigestSketch refuses a compression under 20
+    if (out == null) return versionOf(bytes) == MinVersion && 16L * n == bb.remaining && compression >= 20
     val means = new Array[Double](n)
     val weights = new Array[Double](n)
     var i = 0
@@ -612,7 +730,8 @@ object SketchCodec {
     val t = TDigestSketch.fromCentroids(compression, means, weights)
     t.minValue = minV
     t.maxValue = maxV
-    t
+    out.sketch = t
+    true
   }
 
   // -------------------------------------------------------------- KLL
@@ -621,35 +740,40 @@ object SketchCodec {
     val levels = s.levelsSnapshot
     val nItems = levels.map(_.length).sum
     val bb = writer(TypeId.Kll, 4 + 8 + 8 + 8 + 4 + 4 * levels.length + 8 * nItems, MinVersion)
-    bb.putInt(s.k)
-    bb.putLong(s.count)
-    bb.putDouble(s.minValue)
-    bb.putDouble(s.maxValue)
-    bb.putInt(levels.length)
+      .putInt(s.k).putLong(s.count).putDouble(s.minValue).putDouble(s.maxValue).putInt(levels.length)
     levels.foreach(l => bb.putInt(l.length))
     levels.foreach(l => l.foreach(bb.putDouble))
     bb.array()
   }
 
-  def decodeKll(bytes: Array[Byte]): KLLSketch = typed {
-    val bb = reader(bytes, TypeId.Kll)
+  def decodeKll(bytes: Array[Byte]): KLLSketch = decodeAs(bytes, TypeId.Kll).asInstanceOf[KLLSketch]
+
+  private def kllBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
     val k = bb.getInt()
     val count = bb.getLong()
     val minV = bb.getDouble()
     val maxV = bb.getDouble()
     val nLevels = bb.getInt()
-    require(nLevels >= 0 && 4L * nLevels <= bb.remaining,
-      s"corrupt KLL blob: $nLevels levels in ${bb.remaining} bytes")
-    val lens = Array.fill(nLevels)(bb.getInt())
-    val levels = lens.map { len =>
-      require(len >= 0 && 8L * len <= bb.remaining,
-        s"corrupt KLL blob: a $len-item level in ${bb.remaining} bytes")
-      val a = new Array[Double](len)
-      var i = 0
-      while (i < len) { a(i) = bb.getDouble(); i += 1 }
-      a
+    if (!(nLevels >= 0 && 4L * nLevels <= bb.remaining))
+      fail(s"corrupt KLL blob: $nLevels levels in ${bb.remaining} bytes")
+    // KLLSketch refuses k under 8, and gives a sketch of no levels one
+    if (check && (versionOf(bytes) != MinVersion || k < 8 || nLevels < 1)) return false
+    val lensAt = bb.position()
+    bb.position(lensAt + 4 * nLevels)
+    val levels = if (check) null else new Array[Array[Double]](nLevels)
+    var l = 0
+    while (l < nLevels) {
+      val len = bb.getInt(lensAt + 4 * l)
+      if (!(len >= 0 && 8L * len <= bb.remaining))
+        fail(s"corrupt KLL blob: a $len-item level in ${bb.remaining} bytes")
+      if (!check) { levels(l) = new Array[Double](len); bb.asDoubleBuffer().get(levels(l)) }
+      bb.position(bb.position() + 8 * len)
+      l += 1
     }
-    KLLSketch.fromLevels(k, count, minV, maxV, levels)
+    if (check) return !bb.hasRemaining
+    out.sketch = KLLSketch.fromLevels(k, count, minV, maxV, levels)
+    true
   }
 
   // -------------------------------------------------------------- Theta
@@ -657,24 +781,37 @@ object SketchCodec {
   def encodeTheta(s: ThetaSketch): Array[Byte] = {
     val es = s.entriesArray
     val bb = writer(TypeId.Theta, 4 + 8 + 4 + 8 * es.length, MinVersion)
-    bb.putInt(s.k)
-    bb.putLong(s.thetaLong)
-    bb.putInt(es.length)
+      .putInt(s.k).putLong(s.thetaLong).putInt(es.length)
     es.foreach(bb.putLong)
     bb.array()
   }
 
-  def decodeTheta(bytes: Array[Byte]): ThetaSketch = typed {
-    val bb = reader(bytes, TypeId.Theta)
+  def decodeTheta(bytes: Array[Byte]): ThetaSketch = decodeAs(bytes, TypeId.Theta).asInstanceOf[ThetaSketch]
+
+  private def thetaBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
     val k = bb.getInt()
     val thetaU = bb.getLong()
     val n = bb.getInt()
-    require(n >= 0 && 8L * n <= bb.remaining,
-      s"corrupt theta blob: $n entries in ${bb.remaining} bytes")
-    val es = new Array[Long](n)
+    if (!(n >= 0 && 8L * n <= bb.remaining))
+      fail(s"corrupt theta blob: $n entries in ${bb.remaining} bytes")
+    // fromState refuses more than k entries, or one not below theta; the
+    // encoder writes each retained entry once, in unsigned order
+    if (check && (versionOf(bytes) != MinVersion || n > k || 8L * n != bb.remaining)) return false
+    val es = if (check) null else new Array[Long](n)
+    var prev = 0L
     var i = 0
-    while (i < n) { es(i) = bb.getLong(); i += 1 }
-    ThetaSketch.fromState(k, thetaU, es)
+    while (i < n) {
+      val e = bb.getLong()
+      if (!check) es(i) = e
+      else if ((i > 0 && java.lang.Long.compareUnsigned(prev, e) >= 0) ||
+          (thetaU != ThetaSketch.ExactTheta && java.lang.Long.compareUnsigned(e, thetaU) >= 0))
+        return false
+      prev = e
+      i += 1
+    }
+    if (!check) out.sketch = ThetaSketch.fromState(k, thetaU, es)
+    true
   }
 
   // ------------------------------------------------------------ Bottom-k
@@ -682,12 +819,43 @@ object SketchCodec {
   def encodeBottomK(s: BottomKSketch): Array[Byte] = {
     val es = s.entriesSeq
     val payload = 4 + 4 + es.map(e => 8 + 4 + e._2.length).sum
-    val bb = writer(TypeId.BottomK, payload, MinVersion)
-    bb.putInt(s.k)
-    bb.putInt(es.size)
+    val bb = writer(TypeId.BottomK, payload, MinVersion).putInt(s.k).putInt(es.size)
     es.foreach { case (h, kb) => bb.putLong(h); bb.putInt(kb.length); bb.put(kb) }
     bb.array()
   }
+
+  def decodeBottomK(bytes: Array[Byte]): BottomKSketch =
+    decodeAs(bytes, TypeId.BottomK).asInstanceOf[BottomKSketch]
+
+  private def bottomKBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
+    val k = bb.getInt()
+    val n = bb.getInt()
+    // an entry is hash(8) keyLen(4) key
+    requireEntries(n, 12, bb, "bottom-k")
+    // fromEntries refuses more than k entries; the encoder writes each
+    // hash once, in unsigned order
+    if (check && (versionOf(bytes) != MinVersion || n > k)) return false
+    val es = new Array[(Long, Array[Byte])](if (check) 0 else n)
+    var prev = 0L
+    var i = 0
+    while (i < n) {
+      val h = bb.getLong()
+      val len = bb.getInt()
+      requireKey(len, 12L * (n - 1 - i), bb, "bottom-k")
+      if (!check) es(i) = (h, take(bb, len))
+      else if (i > 0 && java.lang.Long.compareUnsigned(prev, h) >= 0) return false
+      else bb.position(bb.position() + len)
+      prev = h
+      i += 1
+    }
+    if (check) return !bb.hasRemaining
+    out.sketch = BottomKSketch.fromEntries(k, ArraySeq.unsafeWrapArray(es))
+    true
+  }
+
+  /** The next `len` bytes of `bb`. */
+  private def take(bb: ByteBuffer, len: Int): Array[Byte] = { val a = new Array[Byte](len); bb.get(a); a }
 
   // ------------------------------------------------------- Misra-Gries
   // payload: k(4) decremented(8) n(8) count(4) [keyLen(4) key... count(8)]*
@@ -698,16 +866,15 @@ object SketchCodec {
     val es = s.entriesByKey
     val payload = 4 + 8 + 8 + 4 + es.map(e => 4 + e._1.length + 8).sum
     val bb = writer(TypeId.Mg, payload, MinVersion)
-    bb.putInt(s.k)
-    bb.putLong(s.decrementTotal)
-    bb.putLong(s.processedCount)
-    bb.putInt(es.size)
+      .putInt(s.k).putLong(s.decrementTotal).putLong(s.processedCount).putInt(es.size)
     es.foreach { case (kb, c) => bb.putInt(kb.length); bb.put(kb); bb.putLong(c) }
     bb.array()
   }
 
-  def decodeMg(bytes: Array[Byte]): MGSketch = typed {
-    val bb = reader(bytes, TypeId.Mg)
+  def decodeMg(bytes: Array[Byte]): MGSketch = decodeAs(bytes, TypeId.Mg).asInstanceOf[MGSketch]
+
+  private def mgBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
     val k = bb.getInt()
     val dec = bb.getLong()
     val n = bb.getLong()
@@ -715,31 +882,30 @@ object SketchCodec {
     // an entry is keyLen(4) key count(8): each length is checked against
     // the bytes left for it and the entries after it, O(1) per field
     requireEntries(cnt, 12, bb, "Misra-Gries")
-    val es = (0 until cnt).map { i =>
+    // MGSketch refuses k under 1, more than k entries, a count under 1 or
+    // a repeated key; the encoder writes the keys in unsigned order
+    if (check && (versionOf(bytes) != MinVersion || k < 1 || cnt > k)) return false
+    val es = new Array[(Array[Byte], Long)](if (check) 0 else cnt)
+    var prevAt = 0
+    var prevLen = 0
+    var i = 0
+    while (i < cnt) {
       val len = bb.getInt()
       requireKey(len, 8 + 12L * (cnt - 1 - i), bb, "Misra-Gries")
-      val kb = new Array[Byte](len)
-      bb.get(kb)
-      (kb, bb.getLong())
+      val at = bb.position()
+      if (!check) es(i) = (take(bb, len), bb.getLong())
+      else {
+        bb.position(at + len)
+        if (bb.getLong() <= 0L || (i > 0 && java.util.Arrays.compareUnsigned(
+            bytes, prevAt, prevAt + prevLen, bytes, at, at + len) >= 0)) return false
+      }
+      prevAt = at
+      prevLen = len
+      i += 1
     }
-    MGSketch.fromEntries(k, es, dec, n)
-  }
-
-  def decodeBottomK(bytes: Array[Byte]): BottomKSketch = typed {
-    val bb = reader(bytes, TypeId.BottomK)
-    val k = bb.getInt()
-    val n = bb.getInt()
-    // an entry is hash(8) keyLen(4) key
-    requireEntries(n, 12, bb, "bottom-k")
-    val es = (0 until n).map { i =>
-      val h = bb.getLong()
-      val len = bb.getInt()
-      requireKey(len, 12L * (n - 1 - i), bb, "bottom-k")
-      val kb = new Array[Byte](len)
-      bb.get(kb)
-      (h, kb)
-    }
-    BottomKSketch.fromEntries(k, es)
+    if (check) return !bb.hasRemaining
+    out.sketch = MGSketch.fromEntries(k, ArraySeq.unsafeWrapArray(es), dec, n)
+    true
   }
 
   // ------------------------------------------ weighted bottom-k (A-ES)
@@ -749,31 +915,50 @@ object SketchCodec {
   def encodeWeightedBottomK(s: WeightedBottomKSketch): Array[Byte] = {
     val es = s.entriesSeq
     val payload = 4 + 4 + es.map(e => 8 + 8 + 4 + e._3.length).sum
-    val bb = writer(TypeId.WeightedBottomK, payload, MinVersion)
-    bb.putInt(s.k)
-    bb.putInt(es.size)
+    val bb = writer(TypeId.WeightedBottomK, payload, MinVersion).putInt(s.k).putInt(es.size)
     es.foreach { case (r, h, kb) =>
       bb.putDouble(r); bb.putLong(h); bb.putInt(kb.length); bb.put(kb)
     }
     bb.array()
   }
 
-  def decodeWeightedBottomK(bytes: Array[Byte]): WeightedBottomKSketch = typed {
-    val bb = reader(bytes, TypeId.WeightedBottomK)
+  def decodeWeightedBottomK(bytes: Array[Byte]): WeightedBottomKSketch =
+    decodeAs(bytes, TypeId.WeightedBottomK).asInstanceOf[WeightedBottomKSketch]
+
+  private def weightedBottomKBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
     val k = bb.getInt()
     val n = bb.getInt()
     // an entry is race(8) keyHash(8) keyLen(4) key
     requireEntries(n, 20, bb, "weighted bottom-k")
-    val es = (0 until n).map { i =>
+    // fromEntries refuses k under 1, more than k entries, or a race that
+    // is not finite and >= 0; the encoder writes each (race, hash) once,
+    // in race order, ties in unsigned hash order
+    if (check && (versionOf(bytes) != MinVersion || k < 1 || n > k)) return false
+    val es = new Array[(Double, Long, Array[Byte])](if (check) 0 else n)
+    var prevR = 0.0
+    var prevH = 0L
+    var i = 0
+    while (i < n) {
       val r = bb.getDouble()
       val h = bb.getLong()
       val len = bb.getInt()
       requireKey(len, 20L * (n - 1 - i), bb, "weighted bottom-k")
-      val kb = new Array[Byte](len)
-      bb.get(kb)
-      (r, h, kb)
+      if (!check) es(i) = (r, h, take(bb, len))
+      else {
+        val c = java.lang.Double.compare(prevR, r)
+        if (!java.lang.Double.isFinite(r) || r < 0.0 ||
+            (i > 0 && (c > 0 || (c == 0 && java.lang.Long.compareUnsigned(prevH, h) >= 0))))
+          return false
+        bb.position(bb.position() + len)
+      }
+      prevR = r
+      prevH = h
+      i += 1
     }
-    WeightedBottomKSketch.fromEntries(k, es)
+    if (check) return !bb.hasRemaining
+    out.sketch = WeightedBottomKSketch.fromEntries(k, ArraySeq.unsafeWrapArray(es))
+    true
   }
 
   // ----------------------------------------------------- Counting Bloom
@@ -782,13 +967,10 @@ object SketchCodec {
   //   layout 1 (sparse): nOccupied(4), then per occupied cell a LEB128
   //     varint DELTA of the ascending cell index (first delta = first
   //     index) followed by the cell's count byte.
-  // CANONICAL by the Bloom/HLL/CMS rule: the layout is a pure function
-  // of the cell state (sparse iff strictly smaller), so equal filters
-  // encode to equal bytes under any merge tree. A counting filter at
-  // its design fill (~48% of cells occupied at optimal k) encodes
-  // dense; grouped/windowed small filters — the states that dominate a
-  // sketch table — go sparse at ≤ ~20% fill (5 bytes worst-case per
-  // occupied cell vs 1 byte per cell dense).
+  // Sparse iff strictly smaller, as for HLL/CMS: a counting filter at
+  // its design fill (~48% of cells occupied at optimal k) encodes dense;
+  // grouped/windowed small filters go sparse at ≤ ~20% fill (5 bytes
+  // worst-case per occupied cell vs 1 byte per cell dense).
   def encodeCountingBloom(s: CountingBloomSketch,
       keyMode: Byte = KeyMode.Bytes): Array[Byte] = {
     require(s.hasherId >= 0,
@@ -796,476 +978,109 @@ object SketchCodec {
         "the pair with a stable id in KMHashPair to use it in Spark aggregation")
     val cells = s.cells
     val n = cells.length
-    var sparseBody = 4
+    val payload = math.min(countingSparsePayload(cells, 0, n), CountingHeader + 4L + n)
+    val sparse = payload < CountingHeader + 4L + n
+    val bb = writer(TypeId.CountingBloom, payload.toInt, MinVersion)
+      .put(keyMode).put(s.hasherId).putLong(s.config.capacity).putDouble(s.config.fpp)
+    if (!sparse) return bb.put(0: Byte).putInt(n).put(cells).array()
+    bb.put(1: Byte)
+    val nzAt = bb.position()
+    bb.position(nzAt + 4)
     var nz = 0
     var prev = 0
     var j = 0
     while (j < n) {
       if (cells(j) != 0) {
-        sparseBody += varintSize((if (nz == 0) j else j - prev).toLong) + 1
+        putVarint(bb, (if (nz == 0) j else j - prev).toLong)
+        bb.put(cells(j))
         prev = j
         nz += 1
       }
       j += 1
     }
-    val header = 2 + 16 + 1
-    val densePayload = header + 4 + n
-    val sparsePayload = header + sparseBody
-    def putHeader(bb: ByteBuffer, layout: Byte): Unit = {
-      bb.put(keyMode); bb.put(s.hasherId)
-      bb.putLong(s.config.capacity); bb.putDouble(s.config.fpp)
-      bb.put(layout)
-    }
-    if (sparsePayload < densePayload) {
-      val bb = writer(TypeId.CountingBloom, sparsePayload, MinVersion)
-      putHeader(bb, 1)
-      bb.putInt(nz)
-      prev = 0
-      var first = true
-      j = 0
-      while (j < n) {
-        if (cells(j) != 0) {
-          putVarint(bb, (if (first) j else j - prev).toLong)
-          bb.put(cells(j))
-          prev = j
-          first = false
-        }
-        j += 1
-      }
-      bb.array()
-    } else {
-      val bb = writer(TypeId.CountingBloom, densePayload, MinVersion)
-      putHeader(bb, 0)
-      bb.putInt(n)
-      bb.put(cells)
-      bb.array()
-    }
+    bb.putInt(nzAt, nz).array()
   }
 
-  def decodeCountingBloom(bytes: Array[Byte]): CountingBloomSketch = typed {
-    val bb = reader(bytes, TypeId.CountingBloom)
-    bb.get() // keyMode — surfaced via countingBloomKeyMode
+  private val CountingHeader = 2 + 16 + 1
+
+  /** The sparse counting-Bloom payload of the `n` cells at `cells(from)`;
+    * the encoder writes it iff it is strictly smaller than dense. */
+  private def countingSparsePayload(cells: Array[Byte], from: Int, n: Int): Long = {
+    var body = 4L
+    var nz = 0
+    var prev = 0
+    var j = 0
+    while (j < n) {
+      if (cells(from + j) != 0) {
+        body += varintSize((if (nz == 0) j else j - prev).toLong) + 1
+        prev = j
+        nz += 1
+      }
+      j += 1
+    }
+    CountingHeader + body
+  }
+
+  def decodeCountingBloom(bytes: Array[Byte]): CountingBloomSketch =
+    decodeAs(bytes, TypeId.CountingBloom).asInstanceOf[CountingBloomSketch]
+
+  private def countingBloomBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
+    bb.get() // keyMode — surfaced via countingBloomKeyMode; any byte round-trips
     val hasherId = bb.get()
-    val capacity = bb.getLong()
-    val fpp = bb.getDouble()
-    val config = BloomConfig(capacity, fpp)
+    if (check && (versionOf(bytes) != MinVersion || !registeredPair(hasherId))) return false
+    val config = BloomConfig(bb.getLong(), bb.getDouble())
     // one byte per cell: the configured size must fit one array and the
     // heap before either layout allocates it
-    require(config.totalBits <= Int.MaxValue,
-      s"corrupt counting Bloom blob: ${config.totalBits} cells past one array")
+    if (config.totalBits > Int.MaxValue)
+      fail(s"corrupt counting Bloom blob: ${config.totalBits} cells past one array")
     requireHeapFits(config.totalBits, "counting Bloom")
-    val layout = bb.get()
-    val cells = layout match {
+    val dense = CountingHeader + 4 + config.totalBits
+    val cells = bb.get() match {
       case 0 =>
         val n = bb.getInt()
-        require(n.toLong == config.totalBits && n <= bb.remaining,
-          s"corrupt counting Bloom blob: cell count $n, configured " +
+        if (!(n.toLong == config.totalBits && n <= bb.remaining))
+          fail(s"corrupt counting Bloom blob: cell count $n, configured " +
             s"${config.totalBits}, in ${bb.remaining} bytes")
-        val c = new Array[Byte](n)
-        bb.get(c)
-        c
+        if (check) return bb.remaining == n && !(countingSparsePayload(bytes, bb.position(), n) < dense)
+        take(bb, n)
       case 1 =>
-        val c = new Array[Byte](config.totalBits.toInt)
+        val c = if (check) null else new Array[Byte](config.totalBits.toInt)
         val nz = bb.getInt()
         // an occupied cell is a varint delta (>= 1 byte) and a count byte
-        require(nz >= 0 && 2L * nz <= bb.remaining,
-          s"corrupt counting Bloom blob: $nz occupied cells in ${bb.remaining} bytes")
+        if (!(nz >= 0 && 2L * nz <= bb.remaining))
+          fail(s"corrupt counting Bloom blob: $nz occupied cells in ${bb.remaining} bytes")
         var idx = 0L
         var i = 0
         while (i < nz) {
-          idx += getVarint(bb)
+          val at = bb.position()
+          val d = getVarint(bb)
+          idx += d
           // corrupt/truncated varint deltas must surface as the codec's
           // descriptive error, not a raw ArrayIndexOutOfBounds (the
           // dense path validates its cell count the same way)
-          require(idx >= 0 && idx < config.totalBits,
-            s"counting blob sparse cell index $idx outside configured " +
+          if (!(idx >= 0 && idx < config.totalBits))
+            fail(s"counting blob sparse cell index $idx outside configured " +
               s"${config.totalBits} cells — corrupt blob")
-          c(idx.toInt) = bb.get()
+          val cell = bb.get()
+          if (!check) c(idx.toInt) = cell
+          // minimal varints, strictly ascending cells, no zero count
+          else if (!minimalVarint(bytes, at, bb.position() - 1) || (d == 0 && i > 0) || cell == 0)
+            return false
           i += 1
         }
+        if (check) return !bb.hasRemaining && bytes.length - 6 < dense
         c
       case other => throw new IllegalArgumentException(
         s"unknown counting-Bloom layout $other")
     }
-    new CountingBloomSketch(config, cells, KMHashPair.byId(hasherId))
+    out.sketch = new CountingBloomSketch(config, cells, KMHashPair.byId(hasherId))
+    true
   }
 
   /** KeyMode byte of an encoded counting-Bloom blob (probe-path guard,
     * same contract as the Bloom/CMS key-mode sniffers). */
   def countingBloomKeyMode(bytes: Array[Byte]): Byte = typed {
     reader(bytes, TypeId.CountingBloom).get()
-  }
-
-  // ------------------------------------------------------ canonical form
-  // A blob is CANONICAL when the current encoder writes exactly these
-  // bytes for the state they decode to: encode(decode(b)) == b, with the
-  // blob's own key convention. An aggregation buffer may then hold the
-  // blob and pass it through instead of decoding and re-encoding it
-  // (graft.spark.catalyst.SketchBuffer). The check reads the blob once
-  // and allocates no sketch state; it mirrors each decoder's refusals and
-  // each encoder's layout choice, and asks for what the encoder always
-  // writes (exact length, minimal varints, ascending entries, no empty
-  // groups or zero cells). Legacy versions (Bloom v1/v3, HLL/CMS v2, v2
-  // of the content types) are never canonical: the encoder no longer
-  // writes them. Neither is anything damaged — decoding such a blob is
-  // what reports the damage.
-
-  /** True iff `encode(decode(bytes)) == bytes`, checked without building
-    * the sketch. Never throws. */
-  def isCanonical(bytes: Array[Byte]): Boolean =
-    bytes.length >= 6 && java.util.Arrays.equals(bytes, 0, 4, Magic, 0, 4) && (try {
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).position(6)
-      val v = versionOf(bytes)
-      bytes(4) match {
-        case TypeId.Bloom =>
-          (v == BloomVersion || v == BloomSparseVersion) && canonicalBloom(bytes, bb)
-        case TypeId.Hll => canonicalHll(bytes, bb, v)
-        case TypeId.Cms => canonicalCms(bytes, bb, v)
-        case _ if v != MinVersion => false
-        case TypeId.TDigest => canonicalTDigest(bytes, bb)
-        case TypeId.Kll => canonicalKll(bytes, bb)
-        case TypeId.Theta => canonicalTheta(bytes, bb)
-        case TypeId.BottomK => canonicalBottomK(bb)
-        case TypeId.Mg => canonicalMg(bytes, bb)
-        case TypeId.WeightedBottomK => canonicalWeightedBottomK(bb)
-        case TypeId.CountingBloom => canonicalCountingBloom(bytes, bb)
-        case _ => false
-      }
-    } catch {
-      case _: java.nio.BufferUnderflowException | _: IllegalArgumentException |
-          _: IndexOutOfBoundsException => false
-    })
-
-  /** A blob of type `typeId` whose header carries the fields an encoder
-    * takes from its caller rather than from the sketch state: the Bloom
-    * `variant` and key convention, the CMS and counting-Bloom key
-    * convention (`keyMode`); other types ignore both. `bytes` must carry
-    * a full header. */
-  def isKind(bytes: Array[Byte], typeId: Byte, variant: Byte, keyMode: Byte): Boolean =
-    bytes(4) == typeId && (typeId match {
-      case TypeId.Bloom => bytes(6) == variant && bytes(7) == keyMode
-      case TypeId.Cms | TypeId.CountingBloom => bytes(6) == keyMode
-      case _ => true
-    })
-
-  private def registeredPair(id: Byte): Boolean = KMHashPair.registered.exists(_.id == id)
-
-  /** Reads varints from `bytes` at `at` as the encoder writes them. */
-  private final class Varints(bytes: Array[Byte], var at: Int) {
-    /** The next varint if it is minimal (a multi-byte one ends in a
-      * nonzero byte) and below 2^63 (at most 9 bytes); else -1. */
-    def next(): Long = {
-      val start = at
-      var x = 0L
-      var shift = 0
-      var b = 0x80
-      while ((b & 0x80) != 0) {
-        if (at >= bytes.length || shift > 56) return -1L
-        b = bytes(at) & 0xff
-        x |= (b & 0x7fL) << shift
-        shift += 7
-        at += 1
-      }
-      if (b == 0 && at - start > 1) -1L else x
-    }
-  }
-
-  private def canonicalBloom(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
-    val variant = bb.get()
-    bb.get() // keyMode: any byte round-trips
-    val hasherId = bb.get()
-    val pairOk = variant match {
-      case BloomVariant.KM => registeredPair(hasherId)
-      case BloomVariant.Seeded => hasherId == 0
-      case _ => false
-    }
-    val numBits = if (pairOk) BloomConfig(bb.getLong(), bb.getDouble()).totalBits else -1L
-    val nWords = (numBits + 63) >>> 6
-    if (numBits < 0 || nWords > Int.MaxValue || 8 * nWords > Runtime.getRuntime.maxMemory)
-      return false
-    val densePayload = 3 + 16 + 4 + 8 + 8 * nWords.toInt
-    val sizer = new BloomSizer
-    if (versionOf(bytes) == BloomVersion) {
-      if (bytes.length != 6 + 31 + 8 * nWords || bb.getInt() != nWords || bb.getLong() != numBits)
-        return false
-      var wi = 0
-      while (wi < nWords) {
-        val word = bb.getLong()
-        if (word != 0L) { sizer.word(wi, word); sizer.rleWord(wi) }
-        wi += 1
-      }
-      val offsetPayload = BloomSparseHeader + sizer.offsetBody
-      val rlePayload = BloomSparseHeader + sizer.rleBody
-      !(offsetPayload < densePayload && offsetPayload <= rlePayload) && rlePayload >= densePayload
-    } else {
-      if (bb.getLong() != numBits) return false
-      val payload = bytes.length - 6
-      bb.get() match {
-        case 0 => // offset-list: strictly ascending positions in range
-          // the body's length is the offset-list size; only the word-RLE
-          // size is left to compare, and it needs just the nonzero words
-          val ones = bb.getInt()
-          val start = bb.position()
-          /** Nonzero words of a body of `ones` minimal varint deltas that
-            * fills the blob, each also fed to `rle` unless null; -1 if
-            * the body is not that. */
-          def words(rle: BloomSizer): Long = {
-            val in = new Varints(bytes, start)
-            var at = start
-            var pos = 0L
-            var wi = -1L
-            var n = 0L
-            var i = 0
-            while (i < ones) {
-              // a one-byte delta is always minimal
-              val d =
-                if (at < bytes.length && bytes(at) >= 0) { at += 1; bytes(at - 1).toLong }
-                else { in.at = at; val v = in.next(); at = in.at; v }
-              if (d < 0 || (i > 0 && d == 0)) return -1L
-              pos += d
-              if (pos < 0 || pos >= numBits) return -1L
-              if ((pos >>> 6) != wi) {
-                wi = pos >>> 6
-                n += 1
-                if (rle != null) rle.rleWord(wi)
-              }
-              i += 1
-            }
-            if (at == bytes.length && ones >= 0) n else -1L
-          }
-          val n = words(null)
-          n >= 0 && payload < densePayload &&
-            (payload <= rlePayloadAtLeast(n) ||
-              { words(sizer); payload <= BloomSparseHeader + sizer.rleBody })
-        case 1 => // word-RLE: maximal literal runs of nonzero words
-          val in = new Varints(bytes, bb.position())
-          var wp = 0L
-          var first = true
-          while (in.at < bytes.length) {
-            val z = in.next()
-            val lit = in.next()
-            if (z < 0 || lit < 1 || (!first && z == 0) || z > nWords || lit > nWords ||
-                wp + z + lit > nWords ||
-                in.at + 8 * lit > bytes.length) return false
-            wp += z
-            var j = 0L
-            while (j < lit) {
-              val word = bb.getLong(in.at)
-              if (word == 0L) return false
-              sizer.word(wp, word)
-              in.at += 8
-              wp += 1
-              j += 1
-            }
-            first = false
-          }
-          val offsetPayload = BloomSparseHeader + sizer.offsetBody
-          payload < densePayload && !(offsetPayload < densePayload && offsetPayload <= payload)
-        case _ => false
-      }
-    }
-  }
-
-  private def canonicalHll(bytes: Array[Byte], bb: ByteBuffer, v: Byte): Boolean = {
-    val p = bb.getInt()
-    if (p < 4 || p > 18) return false
-    val m = 1 << p
-    if (v == MinVersion) {
-      bytes.length == 10 + m && 4 + 4 * nonZeroBytes(bytes, 10, bytes.length) >= m
-    } else v == SparseVersion && {
-      val n = bb.getInt()
-      n >= 0 && 4 + 4L * n < m && bytes.length == 14 + 4L * n && {
-        var prevIdx = -1
-        var i = 0
-        while (i < n) {
-          val packed = bb.getInt()
-          val idx = packed >>> 6
-          if (idx <= prevIdx || idx >= m || (packed & 0x3f) == 0) return false
-          prevIdx = idx
-          i += 1
-        }
-        true
-      }
-    }
-  }
-
-  private def canonicalCms(bytes: Array[Byte], bb: ByteBuffer, v: Byte): Boolean = {
-    bb.get() // keyMode
-    val d = bb.getInt()
-    val w = bb.getInt()
-    bb.getLong() // total
-    val n = d.toLong * w
-    if (d <= 0 || w <= 0 || n > Int.MaxValue || 8 * n > Runtime.getRuntime.maxMemory) return false
-    val cells = n.toInt
-    if (v == MinVersion) {
-      if (bytes.length != 23 + 8 * n) return false
-      var nonzero = 0
-      var i = 0
-      while (i < cells) { if (bb.getLong() != 0L) nonzero += 1; i += 1 }
-      !(4 + 12 * nonzero < 8 * cells)
-    } else v == SparseVersion && {
-      val nz = bb.getInt()
-      nz >= 0 && 4 + 12 * nz < 8 * cells && bytes.length == 27 + 12L * nz && {
-        var prevIdx = -1
-        var i = 0
-        while (i < nz) {
-          val idx = bb.getInt()
-          if (idx <= prevIdx || idx >= cells || bb.getLong() == 0L) return false
-          prevIdx = idx
-          i += 1
-        }
-        true
-      }
-    }
-  }
-
-  private def canonicalTDigest(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
-    val compression = bb.getDouble()
-    bb.getDouble(); bb.getDouble() // min, max
-    val n = bb.getInt()
-    compression >= 20 && n >= 0 && bytes.length == 34 + 16L * n
-  }
-
-  private def canonicalKll(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
-    val k = bb.getInt()
-    bb.getLong(); bb.getDouble(); bb.getDouble() // n, min, max
-    val nLevels = bb.getInt()
-    if (k < 8 || nLevels < 1 || 4L * nLevels > bb.remaining) return false
-    var items = 0L
-    var i = 0
-    while (i < nLevels) {
-      val len = bb.getInt()
-      if (len < 0) return false
-      items += len
-      i += 1
-    }
-    bytes.length == 38 + 4L * nLevels + 8 * items
-  }
-
-  private def canonicalTheta(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
-    val k = bb.getInt()
-    val thetaU = bb.getLong()
-    val n = bb.getInt()
-    n >= 0 && n <= k && bytes.length == 22 + 8L * n && {
-      var prev = 0L
-      var i = 0
-      while (i < n) {
-        val e = bb.getLong()
-        if ((i > 0 && java.lang.Long.compareUnsigned(prev, e) >= 0) ||
-            (thetaU != ThetaSketch.ExactTheta && java.lang.Long.compareUnsigned(e, thetaU) >= 0))
-          return false
-        prev = e
-        i += 1
-      }
-      true
-    }
-  }
-
-  /** Skips a key of `len` bytes that must fit in the rest of the blob. */
-  private def skipKey(bb: ByteBuffer, len: Int): Boolean =
-    len >= 0 && len <= bb.remaining && { bb.position(bb.position() + len); true }
-
-  private def canonicalBottomK(bb: ByteBuffer): Boolean = {
-    val k = bb.getInt()
-    val n = bb.getInt()
-    n >= 0 && n <= k && {
-      var prev = 0L
-      var i = 0
-      while (i < n) {
-        val h = bb.getLong()
-        if ((i > 0 && java.lang.Long.compareUnsigned(prev, h) >= 0) || !skipKey(bb, bb.getInt()))
-          return false
-        prev = h
-        i += 1
-      }
-      !bb.hasRemaining
-    }
-  }
-
-  private def canonicalMg(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
-    val k = bb.getInt()
-    bb.getLong(); bb.getLong() // decremented, n
-    val cnt = bb.getInt()
-    k >= 1 && cnt >= 0 && cnt <= k && {
-      var prevAt = -1
-      var prevLen = 0
-      var i = 0
-      while (i < cnt) {
-        val len = bb.getInt()
-        val at = bb.position()
-        if (!skipKey(bb, len) || (i > 0 && java.util.Arrays.compareUnsigned(
-            bytes, prevAt, prevAt + prevLen, bytes, at, at + len) >= 0) || bb.getLong() <= 0L)
-          return false
-        prevAt = at
-        prevLen = len
-        i += 1
-      }
-      !bb.hasRemaining
-    }
-  }
-
-  private def canonicalWeightedBottomK(bb: ByteBuffer): Boolean = {
-    val k = bb.getInt()
-    val n = bb.getInt()
-    k >= 1 && n >= 0 && n <= k && {
-      var prevR = 0.0
-      var prevH = 0L
-      var i = 0
-      while (i < n) {
-        val r = bb.getDouble()
-        val h = bb.getLong()
-        if (!java.lang.Double.isFinite(r) || r < 0.0) return false
-        val c = java.lang.Double.compare(prevR, r)
-        if (i > 0 && (c > 0 || (c == 0 && java.lang.Long.compareUnsigned(prevH, h) >= 0)))
-          return false
-        if (!skipKey(bb, bb.getInt())) return false
-        prevR = r
-        prevH = h
-        i += 1
-      }
-      !bb.hasRemaining
-    }
-  }
-
-  private def canonicalCountingBloom(bytes: Array[Byte], bb: ByteBuffer): Boolean = {
-    bb.get() // keyMode
-    if (!registeredPair(bb.get())) return false
-    val total = BloomConfig(bb.getLong(), bb.getDouble()).totalBits
-    if (total > Int.MaxValue || total > Runtime.getRuntime.maxMemory) return false
-    val n = total.toInt
-    val densePayload = 2 + 16 + 1 + 4 + n
-    bb.get() match {
-      case 0 =>
-        if (bb.getInt() != n || bytes.length != 6 + densePayload) return false
-        var sparseBody = 4
-        var prev = 0
-        var nz = 0
-        var j = 0
-        val at = bb.position()
-        while (j < n) {
-          if (bytes(at + j) != 0) {
-            sparseBody += varintSize((if (nz == 0) j else j - prev).toLong) + 1
-            prev = j
-            nz += 1
-          }
-          j += 1
-        }
-        2 + 16 + 1 + sparseBody >= densePayload
-      case 1 =>
-        val nz = bb.getInt()
-        val in = new Varints(bytes, bb.position())
-        var idx = -1L
-        var i = 0
-        while (i < nz) {
-          val d = in.next()
-          if (d < 0 || (i > 0 && d == 0)) return false
-          idx = if (i == 0) d else idx + d
-          if (idx < 0 || idx >= n || in.at >= bytes.length || bytes(in.at) == 0) return false
-          in.at += 1
-          i += 1
-        }
-        nz >= 0 && in.at == bytes.length && bytes.length - 6 < densePayload
-      case _ => false
-    }
   }
 }

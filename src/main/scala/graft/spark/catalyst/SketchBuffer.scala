@@ -32,9 +32,11 @@ final class SketchBuffer[S <: AnyRef] private[catalyst] (
   *     decode and encode it.
   * A blob is checked when it is about to pass through, not when it
   * arrives: most blobs a final merge receives are decoded by that merge
-  * anyway, which validates them, and the check costs about two decodes
-  * of a dense filter. A damaged blob fails in the decoder, typed, at
-  * its first write or on its way out, and is never emitted.
+  * anyway, which validates them, and the check of a dense filter costs
+  * about twice its decode (2.16 MB, warmed: 1.8 ms against 0.8 ms; a
+  * light sparse filter's check costs about 0.7 of its decode, 7 µs
+  * against 10 µs). A damaged blob fails in the decoder, typed, at its
+  * first write or on its way out, and is never emitted.
   * An aggregate supplies only the sketch operations below. */
 abstract class SketchAggBase[S <: AnyRef] extends TypedImperativeAggregate[SketchBuffer[S]] {
   override def nullable: Boolean = false

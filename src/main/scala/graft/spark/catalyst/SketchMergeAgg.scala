@@ -45,26 +45,8 @@ case class SketchMergeAgg(
     if (v == null) b else merge(b, super.deserialize(v.asInstanceOf[Array[Byte]]))
   }
 
-  override protected def decode(bytes: Array[Byte]): Typed = {
-    val t = SketchCodec.typeOf(bytes)
-    t match {
-      case SketchCodec.TypeId.Bloom =>
-        Typed(t, SketchCodec.bloomKeyMode(bytes), SketchCodec.decodeBloom(bytes))
-      case SketchCodec.TypeId.Hll => Typed(t, 0, SketchCodec.decodeHll(bytes))
-      case SketchCodec.TypeId.Cms =>
-        Typed(t, SketchCodec.cmsKeyMode(bytes), SketchCodec.decodeCms(bytes))
-      case SketchCodec.TypeId.TDigest => Typed(t, 0, SketchCodec.decodeTDigest(bytes))
-      case SketchCodec.TypeId.Kll => Typed(t, 0, SketchCodec.decodeKll(bytes))
-      case SketchCodec.TypeId.Theta => Typed(t, 0, SketchCodec.decodeTheta(bytes))
-      case SketchCodec.TypeId.BottomK => Typed(t, 0, SketchCodec.decodeBottomK(bytes))
-      case SketchCodec.TypeId.Mg => Typed(t, 0, SketchCodec.decodeMg(bytes))
-      case SketchCodec.TypeId.WeightedBottomK =>
-        Typed(t, 0, SketchCodec.decodeWeightedBottomK(bytes))
-      case SketchCodec.TypeId.CountingBloom =>
-        Typed(t, SketchCodec.countingBloomKeyMode(bytes), SketchCodec.decodeCountingBloom(bytes))
-      case other => throw new IllegalArgumentException(s"unknown sketch type $other")
-    }
-  }
+  override protected def decode(bytes: Array[Byte]): Typed =
+    Typed(SketchCodec.typeOf(bytes), SketchCodec.keyModeOf(bytes), SketchCodec.decode(bytes))
 
   // a blob of any codec type passes through: the first blob types the
   // buffer, so canonical asks for no particular kind
@@ -109,23 +91,7 @@ case class SketchMergeAgg(
     s
   }
 
-  override protected def encode(s: Typed): Array[Byte] = {
-    val sk = s.sketch
-    s.typeId match {
-      case SketchCodec.TypeId.Bloom => SketchCodec.encodeBloom(sk.asInstanceOf[BloomSketch], s.keyMode)
-      case SketchCodec.TypeId.Hll => SketchCodec.encodeHll(sk.asInstanceOf[HLLSketch])
-      case SketchCodec.TypeId.Cms => SketchCodec.encodeCms(sk.asInstanceOf[CMSSketch], s.keyMode)
-      case SketchCodec.TypeId.TDigest => SketchCodec.encodeTDigest(sk.asInstanceOf[TDigestSketch])
-      case SketchCodec.TypeId.Kll => SketchCodec.encodeKll(sk.asInstanceOf[KLLSketch])
-      case SketchCodec.TypeId.Theta => SketchCodec.encodeTheta(sk.asInstanceOf[ThetaSketch])
-      case SketchCodec.TypeId.BottomK => SketchCodec.encodeBottomK(sk.asInstanceOf[BottomKSketch])
-      case SketchCodec.TypeId.Mg => SketchCodec.encodeMg(sk.asInstanceOf[MGSketch])
-      case SketchCodec.TypeId.WeightedBottomK =>
-        SketchCodec.encodeWeightedBottomK(sk.asInstanceOf[WeightedBottomKSketch])
-      case SketchCodec.TypeId.CountingBloom =>
-        SketchCodec.encodeCountingBloom(sk.asInstanceOf[CountingBloomSketch], s.keyMode)
-    }
-  }
+  override protected def encode(s: Typed): Array[Byte] = SketchCodec.encode(s.sketch, s.keyMode)
 
   // an empty merge crosses the shuffle as zero bytes and evaluates to null
   override def serialize(b: SketchBuffer[Typed]): Array[Byte] =

@@ -16,10 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * that still decode), then truncated, bit-flipped, overwritten,
   * length-inflated or extended. Every outcome is typed: the blob
   * decodes, or decoding fails with IllegalArgumentException. A blob
-  * that decodes and is taken for canonical re-encodes to itself; a
-  * damaged one is never taken for canonical, so an aggregation buffer
-  * that holds it (deserialize, or a one-blob merge: the pass-through
-  * path) refuses it typed on its way out and never emits it. */
+  * that decodes is taken for canonical exactly when it re-encodes to
+  * itself; a damaged one is never taken for canonical, so an
+  * aggregation buffer that holds it (deserialize, or a one-blob merge:
+  * the pass-through path) refuses it typed on its way out and never
+  * emits it. */
 class CodecFuzzSpec extends AnyFunSuite {
   import SketchCodec._
 
@@ -164,10 +165,12 @@ class CodecFuzzSpec extends AnyFunSuite {
         outcome match {
           case Right(r) =>
             decoded += 1
-            if (canonical) {
-              held += 1
-              assert(r.sameElements(b), s"$name: canonical blob re-encodes differently")
-            }
+            if (canonical) held += 1
+            // exact, not merely sound: a blob is taken for canonical iff
+            // it re-encodes to itself
+            assert(r.sameElements(b) == canonical,
+              if (canonical) s"$name: canonical blob re-encodes differently"
+              else s"$name: a blob that re-encodes to itself is not taken for canonical")
             assert(merge.serialize(merge.deserialize(b)).sameElements(r),
               s"$name: a buffer's output differs from the re-encoded blob")
           case Left(_) =>

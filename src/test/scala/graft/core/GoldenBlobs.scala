@@ -117,19 +117,7 @@ object GoldenBlobs {
   }
 
   /** Decode and encode again with the blob's own key convention. */
-  def reencode(b: Array[Byte]): Array[Byte] = typeOf(b) match {
-    case TypeId.Bloom => encodeBloom(decodeBloom(b), bloomKeyMode(b))
-    case TypeId.Hll => encodeHll(decodeHll(b))
-    case TypeId.Cms => encodeCms(decodeCms(b), cmsKeyMode(b))
-    case TypeId.TDigest => encodeTDigest(decodeTDigest(b))
-    case TypeId.Kll => encodeKll(decodeKll(b))
-    case TypeId.Theta => encodeTheta(decodeTheta(b))
-    case TypeId.BottomK => encodeBottomK(decodeBottomK(b))
-    case TypeId.Mg => encodeMg(decodeMg(b))
-    case TypeId.WeightedBottomK => encodeWeightedBottomK(decodeWeightedBottomK(b))
-    case TypeId.CountingBloom => encodeCountingBloom(decodeCountingBloom(b), countingBloomKeyMode(b))
-    case t => throw new IllegalArgumentException(s"unknown sketch type $t")
-  }
+  def reencode(b: Array[Byte]): Array[Byte] = encode(decode(b), keyModeOf(b))
 
   def main(args: Array[String]): Unit = {
     val dir = Paths.get(args.headOption.getOrElse("src/test/resources/golden"))

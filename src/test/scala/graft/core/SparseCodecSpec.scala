@@ -550,6 +550,52 @@ class SparseCodecSpec extends AnyFunSuite {
       rejects(le(sparseBlob, 25, nz, 4), s"sparse occupied=$nz")
   }
 
+  test("the canonical check allocates nothing a 256 MiB header declares") {
+    // a header may declare far more state than its body holds: the check
+    // must give its verdict without allocating that state
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(f: => Boolean): (Boolean, Long) = {
+      f // warm
+      val id = Thread.currentThread().getId
+      val before = threads.getThreadAllocatedBytes(id)
+      val verdict = f
+      (verdict, threads.getThreadAllocatedBytes(id) - before)
+    }
+    val big = 256L << 20
+    // a capacity-1.5e8 filter holding five keys: 2.16e9 bits, offset list
+    val bloom = SketchCodec.encodeBloom(bloomOf(150000000L, 0 until 5))
+    assert(bloom(5) === 4 && bloom(33) === 0 && bloom.length < 1000)
+    assert(BloomConfig(150000000L, 0.001).totalBits / 8 >= big)
+    // CMS: 5 x 8e6 counters (320 MB); sparse with three cells, and a
+    // dense header over a three-cell body
+    def dims(blob: Array[Byte]) = le(le(blob, 7, 5, 4), 11, 8000000, 4)
+    val cmsSparse = dims(SketchCodec.encodeCms(cmsOf(0 until 3)))
+    val cmsDense = dims(SketchCodec.encodeCms(cmsOf(0 until 5000))).take(60)
+    assert(cmsSparse(5) === 3 && cmsDense(5) === 1 && 8L * 5 * 8000000 >= big)
+    // counting Bloom: capacity 2e7 at fpp 0.001 (2.9e8 one-byte cells);
+    // sparse with a few cells, and a dense header whose cell count
+    // matches the config over a short body
+    val cfg = BloomConfig(20000000L, 0.001)
+    assert(cfg.totalBits >= big)
+    val light = CountingBloomSketch(1000L, 0.001)
+    (0 until 3).foreach(i => light.insert(Hashing.utf8(s"k$i")))
+    val cbfSparse = le(SketchCodec.encodeCountingBloom(light), 8, cfg.capacity, 8)
+    val full = CountingBloomSketch(100L, 0.001)
+    (0 until 100).foreach(i => full.insert(Hashing.utf8(s"k$i")))
+    val cbfDense = le(le(SketchCodec.encodeCountingBloom(full), 8, cfg.capacity, 8), 25, cfg.totalBits, 4)
+    assert(cbfSparse(24) === 1 && cbfDense(24) === 0)
+    intercept[IllegalArgumentException](SketchCodec.decodeCms(cmsDense))
+    intercept[IllegalArgumentException](SketchCodec.decodeCountingBloom(cbfDense))
+    for ((what, blob, canonical) <- Seq(("sparse Bloom", bloom, true), ("sparse CMS", cmsSparse, true),
+        ("dense CMS", cmsDense, false), ("sparse counting Bloom", cbfSparse, true),
+        ("dense counting Bloom", cbfDense, false))) {
+      val (verdict, bytes) = allocated(SketchCodec.isCanonical(blob))
+      assert(verdict === canonical, what)
+      assert(bytes < (1L << 20), s"$what: the check allocated $bytes bytes")
+    }
+  }
+
   test("describe renders sparse blobs; corrupt sparse blobs fail loudly") {
     val h = hllOf(0 until 50)
     assert(SketchCodec.describe(SketchCodec.encodeHll(h)).contains("HLLSketch"))

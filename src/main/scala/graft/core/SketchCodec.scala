@@ -62,13 +62,23 @@ object SketchCodec {
   //   - theta/KLL/t-digest/bottom-k: content-proportional payloads,
   //     written v1; v2 blobs from the earlier always-v2 build decode
   //     identically (the version byte never changed their layout).
+  //   - HLL sparse, t-digest and weighted bottom-k: COMPACT layouts
+  //     (varint index gaps, varint weights, no stored key hash), stamped
+  //     v5. v5, NOT v3 or v4: every earlier reader accepts versions up
+  //     to 4 and would misparse a compact blob as its older layout; v5
+  //     is above its max version, so it fails fast. The older layouts of
+  //     these types (HLL sparse v2/v3, t-digest and weighted bottom-k
+  //     v1–v4) still decode, so state written by an older build resumes
+  //     and is re-encoded compact on its first write. No other type
+  //     accepts v5.
   // Every layout choice is a pure function of the sketch state, so equal
   // sketches encode to equal bytes under any merge order (q33 and the
   // state-identity suites rely on it).
-  private val Version: Byte = 4 // max accepted by readers
+  private val Version: Byte = 5 // max accepted by readers
   private val BloomVersion: Byte = 2
   private val SparseVersion: Byte = 3
   private val BloomSparseVersion: Byte = 4
+  private val CompactVersion: Byte = 5
   private val MinVersion: Byte = 1
 
   private def writer(typeId: Byte, payloadSize: Int, version: Byte): ByteBuffer = {
@@ -89,7 +99,9 @@ object SketchCodec {
     if (expectType != AnyType && t != expectType)
       fail(s"sketch type mismatch: expected $expectType, got $t")
     val v = bb.get()
-    if (v < MinVersion || v > Version) fail(s"unsupported sketch codec version $v")
+    if (v < MinVersion || v > Version ||
+        (v == CompactVersion && t != TypeId.Hll && t != TypeId.TDigest && t != TypeId.WeightedBottomK))
+      fail(s"unsupported sketch codec version $v")
     bb
   }
 
@@ -428,8 +440,9 @@ object SketchCodec {
                   at = bb.position()
                   x
                 }
+              // a varint above 2^63 reads as negative: compare before adding
+              if (!(d >= 0 && d < numBits - pos)) fail("corrupt sparse Bloom blob (offset)")
               pos += d
-              require(pos >= 0 && pos < numBits, "corrupt sparse Bloom blob (offset)")
               if (!check) words((pos >>> 6).toInt) |= 1L << (pos & 63)
               else {
                 if (d == 0 && i > 0) return false // positions strictly ascend
@@ -449,12 +462,15 @@ object SketchCodec {
               val z = getVarint(bb)
               val litAt = bb.position()
               val lit = getVarint(bb)
+              // the run and the literals end at or before the last word; a
+              // varint above 2^63 reads as negative, so compare, never add
+              if (!(z >= 0 && z <= nWords - wp && lit >= 0 && lit <= nWords - wp - z))
+                fail("corrupt sparse Bloom blob (RLE): a group past the last word")
               wp += z
-              require(wp + lit <= nWords, "corrupt sparse Bloom blob (RLE)")
               // maximal groups: zero words (none only before the first
               // group), then at least one nonzero word
               if (check && (!minimalVarint(bytes, zAt, litAt) ||
-                  !minimalVarint(bytes, litAt, bb.position()) || z > nWords || lit < 1 ||
+                  !minimalVarint(bytes, litAt, bb.position()) || lit < 1 ||
                   (z == 0 && n > 0) || lit > bb.remaining / 8)) return false
               var j = 0L
               while (j < lit) {
@@ -493,7 +509,8 @@ object SketchCodec {
     canonical
   }
 
-  // LEB128 unsigned varints (sparse Bloom and counting-Bloom bodies)
+  // LEB128 unsigned varints (sparse Bloom, counting-Bloom and the
+  // compact v5 bodies)
   private def varintSize(v: Long): Int = {
     var x = v; var n = 1
     while ((x & ~0x7fL) != 0L) { x >>>= 7; n += 1 }
@@ -509,14 +526,23 @@ object SketchCodec {
     out(i) = x.toByte
     i + 1
   }
+  /** A varint of at most 10 bytes whose value fits 64 bits: the tenth
+    * byte carries bit 63 only, and a longer one is refused, typed. */
   private def getVarint(bb: ByteBuffer): Long = {
     var x = 0L; var shift = 0; var b = 0
     do {
       b = bb.get() & 0xff
+      if (shift == 63 && b > 1) fail("corrupt sketch blob: a varint past 64 bits")
       x |= (b & 0x7fL) << shift
       shift += 7
     } while ((b & 0x80) != 0)
     x
+  }
+  /** A varint count, length or k, refused, typed, past the Int range. */
+  private def getIntVarint(bb: ByteBuffer, what: String): Int = {
+    val x = getVarint(bb)
+    if (x < 0 || x > Int.MaxValue) fail(s"corrupt $what blob: a varint field of $x")
+    x.toInt
   }
   /** Whether the varint in `bytes(from until until)` is one the encoder
     * writes: minimal (a longer one ends in a nonzero byte) and below
@@ -532,56 +558,75 @@ object SketchCodec {
 
   // -------------------------------------------------------------- HLL
   // v1/v2 (dense): p(4) registers(m bytes)
-  // v3 (sparse): p(4) count(4) packed(4*count) — packed int = idx<<6 | rank
-  //              (rank ≤ 64−p+1 ≤ 61 fits 6 bits; idx < 2^p ≤ 2^18 fits
-  //              the rest), ascending idx.
+  // v3 (sparse, legacy): p(4) count(4) packed(4*count) — packed int =
+  //              idx<<6 | rank, ascending idx.
+  // v5 (compact): p(4) count(varint), then per occupied register, in
+  //              ascending index order, one varint (gap << 6) | rank:
+  //              gap = index − previous index (−1 before the first), so
+  //              gap ≥ 1, and rank ≤ 64−p+1 ≤ 61 fits 6 bits. Adjacent
+  //              registers take one byte, gaps below 512 two (Heule et al.,
+  //              HyperLogLog in Practice, store sparse HLL as varint gaps).
   //
-  // Sparse iff strictly smaller (occupied < m/4 registers, minus the
-  // count field): a grouped sketch table at 10^6+ group cardinality is
-  // dominated by small groups, and a 16 KiB dense register file per
-  // group crossed every shuffle (a 100-distinct group encodes in ~0.4 KiB).
+  // Compact iff strictly smaller than dense: a grouped sketch table at
+  // 10^6+ group cardinality is dominated by small groups, and a 16 KiB
+  // dense register file per group crossed every shuffle (a 100-distinct
+  // group encodes in ~0.2 KiB).
   def encodeHll(s: HLLSketch): Array[Byte] = {
     val regs = s.registers
     val m = regs.length
-    val occupied = nonZeroBytes(regs, 0, m)
-    if (hllSparse(occupied, m)) {
-      val bb = writer(TypeId.Hll, 4 + 4 + 4 * occupied, SparseVersion).putInt(s.p).putInt(occupied)
-      // m = 2^p >= 16, so the registers read as whole 8-byte lanes
-      val lanes = ByteBuffer.wrap(regs)
-      var lane = 0
-      while (lane < m) {
-        if (lanes.getLong(lane) != 0L) {
-          var i = lane
-          while (i < lane + 8) {
-            if (regs(i) != 0) bb.putInt((i << 6) | (regs(i) & 0x3f))
-            i += 1
-          }
+    val compact = hllCompact(regs, 0, m)
+    if (compact < 0) return writer(TypeId.Hll, 4 + m, MinVersion).putInt(s.p).put(regs).array()
+    val bb = writer(TypeId.Hll, (compact >>> 20).toInt, CompactVersion).putInt(s.p)
+    val out = bb.array()
+    var at = putVarint(out, bb.position(), compact & 0xfffff)
+    var prev = -1
+    // m = 2^p >= 16, so the registers read as whole 8-byte lanes
+    val lanes = ByteBuffer.wrap(regs)
+    var lane = 0
+    while (lane < m) {
+      if (lanes.getLong(lane) != 0L) {
+        var i = lane
+        while (i < lane + 8) {
+          if (regs(i) != 0) { at = putVarint(out, at, (i - prev).toLong << 6 | regs(i)); prev = i }
+          i += 1
         }
-        lane += 8
       }
-      bb.array()
-    } else writer(TypeId.Hll, 4 + m, MinVersion).putInt(s.p).put(regs).array()
+      lane += 8
+    }
+    out
   }
 
-  /** The HLL layout rule: sparse iff strictly smaller than dense. */
-  private def hllSparse(occupied: Long, m: Int): Boolean = 4 + 4 * occupied < m
-
-  /** Nonzero bytes in `a(from until until)`, eight at a time; the span's
-    * length is a multiple of 8. */
-  private def nonZeroBytes(a: Array[Byte], from: Int, until: Int): Int = {
-    val lanes = ByteBuffer.wrap(a)
+  /** The HLL layout rule over the m registers at `regs(from)`: the
+    * compact payload as `payload << 20 | occupied` when it is strictly
+    * smaller than dense, else -1. A register outside 0..63 (only a
+    * damaged dense blob holds one) keeps the dense layout, which holds
+    * any byte. m is a multiple of 8. */
+  private def hllCompact(regs: Array[Byte], from: Int, m: Int): Long = {
+    val dense = 4L + m
+    val lanes = ByteBuffer.wrap(regs)
+    var body = 4L + 1 // p, and a count varint of at least one byte
     var n = 0
-    var i = from
-    while (i < until) {
-      val x = lanes.getLong(i)
-      // the top bit of each byte of t is set iff that byte of x is nonzero
-      if (x != 0L) {
-        val t = ((x & 0x7f7f7f7f7f7f7f7fL) + 0x7f7f7f7f7f7f7f7fL) | x
-        n += java.lang.Long.bitCount(t & 0x8080808080808080L)
+    var prev = -1
+    var lane = 0
+    while (lane < m) {
+      if (lanes.getLong(from + lane) != 0L) {
+        var i = lane
+        while (i < lane + 8) {
+          val r = regs(from + i)
+          if (r != 0) {
+            if (r < 0 || r > 63) return -1L
+            body += (if (i - prev == 1) 1 else varintSize((i - prev).toLong << 6))
+            prev = i
+            n += 1
+          }
+          i += 1
+        }
+        if (body >= dense) return -1L
       }
-      i += 8
+      lane += 8
     }
-    n
+    val payload = body - 1 + varintSize(n)
+    if (payload < dense) payload << 20 | n else -1L
   }
 
   def decodeHll(bytes: Array[Byte]): HLLSketch = decodeAs(bytes, TypeId.Hll).asInstanceOf[HLLSketch]
@@ -592,27 +637,46 @@ object SketchCodec {
     if (p < 4 || p > 18) fail(s"corrupt HLL blob: precision $p outside [4,18]")
     val m = 1 << p
     val regs = if (check) null else new Array[Byte](m)
-    // v1 is dense; v3 is sparse; v2 is AMBIGUOUS (one build stamped v2
-    // on dense payloads, another briefly wrote sparse payloads as v2) —
-    // but the sparse layout is only ever chosen when STRICTLY smaller
-    // than dense, so the blob length disambiguates v2 exactly
+    // v1 is dense; v3 (and v4, never written) sparse; v5 compact; v2 is
+    // AMBIGUOUS (one build stamped v2 on dense payloads, another briefly
+    // wrote sparse payloads as v2) — but the sparse layout is only ever
+    // chosen when STRICTLY smaller than dense, so the blob length
+    // disambiguates v2 exactly. Only v1 dense and v5 are canonical.
     val v = versionOf(bytes)
-    if (v >= SparseVersion || (v == 2 && bytes.length != 10 + m)) {
+    if (v == CompactVersion) {
+      val nAt = bb.position()
+      val n = getIntVarint(bb, "compact HLL")
+      if (!(n <= m && n <= bb.remaining))
+        fail(s"corrupt compact HLL blob: $n registers in ${bb.remaining} bytes")
+      if (check && !minimalVarint(bytes, nAt, bb.position())) return false
+      var prev = -1
+      var i = 0
+      while (i < n) {
+        val at = bb.position()
+        val e = getVarint(bb)
+        val gap = e >>> 6
+        if (!(gap >= 1 && gap < m - prev)) fail("corrupt compact HLL blob (index)")
+        prev += gap.toInt
+        if (!check) regs(prev) = (e & 0x3f).toByte
+        else if ((e & 0x3f) == 0 || !minimalVarint(bytes, at, bb.position())) return false
+        i += 1
+      }
+      if (check) return !bb.hasRemaining && bytes.length - 6L < 4 + m
+    } else if (v >= SparseVersion || (v == 2 && bytes.length != 10 + m)) {
+      if (check) return false
       val n = bb.getInt()
-      if (check && !(v == SparseVersion && hllSparse(n, m) && bytes.length == 14 + 4L * n)) return false
       var i = 0
       var prevIdx = -1
       while (i < n) {
         val packed = bb.getInt()
         val idx = packed >>> 6
         require(idx > prevIdx && idx < m, "corrupt sparse HLL blob")
-        if (!check) regs(idx) = (packed & 0x3f).toByte
-        else if ((packed & 0x3f) == 0) return false
+        regs(idx) = (packed & 0x3f).toByte
         prevIdx = idx
         i += 1
       }
     } else if (check) {
-      return v == MinVersion && bytes.length == 10 + m && !hllSparse(nonZeroBytes(bytes, 10, 10 + m), m)
+      return v == MinVersion && bytes.length == 10 + m && hllCompact(bytes, 10, m) < 0
     } else {
       bb.get(regs)
     }
@@ -701,32 +765,87 @@ object SketchCodec {
   }
 
   // -------------------------------------------------------------- TDigest
-  // payload: compression(8) min(8) max(8) n(4) [mean(8) weight(8)]*n
+  // v1: compression(8) min(8) max(8) n(4) [mean(8) weight(8)]*n
+  // v5 (compact): compression(8) min(8) max(8) n(varint)
+  //               [mean(8) weight(varint)]*n
+  // A centroid's weight is the number of points it holds (each update
+  // weighs 1, a merge adds weights), so every digest update and merge
+  // build is written v5, most tail weights in one byte. A digest with a
+  // weight that is not a whole number in [0, 2^53] (fromCentroids can
+  // build one, and a v1 blob can hold one) keeps the v1 layout, so
+  // encode(decode(b)) is exact for both.
   def encodeTDigest(s: TDigestSketch): Array[Byte] = {
     val (means, weights) = s.centroids
-    val bb = writer(TypeId.TDigest, 8 + 8 + 8 + 4 + 16 * means.length, MinVersion)
-      .putDouble(s.compression).putDouble(s.minValue).putDouble(s.maxValue).putInt(means.length)
+    val n = means.length
+    var body = 0L
     var i = 0
-    while (i < means.length) { bb.putDouble(means(i)); bb.putDouble(weights(i)); i += 1 }
-    bb.array()
+    while (i < n && body >= 0) {
+      val w = weights(i)
+      body = if (wholeWeight(w)) body + 8 + varintSize(w.toLong) else -1L
+      i += 1
+    }
+    if (body < 0) {
+      val bb = writer(TypeId.TDigest, 8 + 8 + 8 + 4 + 16 * n, MinVersion)
+        .putDouble(s.compression).putDouble(s.minValue).putDouble(s.maxValue).putInt(n)
+      i = 0
+      while (i < n) { bb.putDouble(means(i)); bb.putDouble(weights(i)); i += 1 }
+      return bb.array()
+    }
+    val bb = writer(TypeId.TDigest, (24 + varintSize(n) + body).toInt, CompactVersion)
+      .putDouble(s.compression).putDouble(s.minValue).putDouble(s.maxValue)
+    val out = bb.array()
+    var at = putVarint(out, bb.position(), n)
+    i = 0
+    while (i < n) {
+      bb.putDouble(at, means(i))
+      at = putVarint(out, at + 8, weights(i).toLong)
+      i += 1
+    }
+    out
   }
+
+  private val MaxWholeWeight = (1L << 53).toDouble
+
+  /** A weight the compact layout holds exactly: a whole number in [0, 2^53]. */
+  private def wholeWeight(w: Double): Boolean = w >= 0 && w <= MaxWholeWeight && w == Math.rint(w)
 
   def decodeTDigest(bytes: Array[Byte]): TDigestSketch =
     decodeAs(bytes, TypeId.TDigest).asInstanceOf[TDigestSketch]
 
   private def tdigestBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
+    val check = out == null
+    val compact = versionOf(bytes) == CompactVersion
     val compression = bb.getDouble()
     val minV = bb.getDouble()
     val maxV = bb.getDouble()
-    val n = bb.getInt()
-    if (!(n >= 0 && 16L * n <= bb.remaining))
+    val nAt = bb.position()
+    val n = if (compact) getIntVarint(bb, "t-digest") else bb.getInt()
+    // a centroid is mean(8) and a weight of 8 bytes, or of at least one
+    if (!(n >= 0 && (if (compact) 9L else 16L) * n <= bb.remaining))
       fail(s"corrupt t-digest blob: $n centroids in ${bb.remaining} bytes")
-    // TDigestSketch refuses a compression under 20
-    if (out == null) return versionOf(bytes) == MinVersion && 16L * n == bb.remaining && compression >= 20
-    val means = new Array[Double](n)
-    val weights = new Array[Double](n)
+    // TDigestSketch refuses a compression under 20; only v1 and v5 are
+    // written, and v1 only for a digest with a weight v5 cannot hold
+    if (check && (!(compression >= 20) || (if (compact) !minimalVarint(bytes, nAt, bb.position())
+        else versionOf(bytes) != MinVersion || 16L * n != bb.remaining))) return false
+    val means = if (check) null else new Array[Double](n)
+    val weights = if (check) null else new Array[Double](n)
     var i = 0
-    while (i < n) { means(i) = bb.getDouble(); weights(i) = bb.getDouble(); i += 1 }
+    while (i < n) {
+      val mean = bb.getDouble()
+      val w =
+        if (!compact) bb.getDouble()
+        else {
+          val at = bb.position()
+          val x = getVarint(bb)
+          if (!(x >= 0 && x <= (1L << 53))) fail(s"corrupt t-digest blob: weight $x")
+          if (check && !minimalVarint(bytes, at, bb.position())) return false
+          x.toDouble
+        }
+      if (!check) { means(i) = mean; weights(i) = w }
+      else if (!compact && !wholeWeight(w)) return true
+      i += 1
+    }
+    if (check) return compact && !bb.hasRemaining
     val t = TDigestSketch.fromCentroids(compression, means, weights)
     t.minValue = minV
     t.maxValue = maxV
@@ -909,17 +1028,28 @@ object SketchCodec {
   }
 
   // ------------------------------------------ weighted bottom-k (A-ES)
-  // payload: k(4) n(4) [race(8, IEEE double) keyHash(8) keyLen(4) key]*
-  // entries in race order — canonical (the retained set and its order
-  // are pure functions of the logical sample, independent of merge tree)
+  // v1: k(4) n(4) [race(8, IEEE double) keyHash(8) keyLen(4) key]*
+  // v5 (compact): k(varint) n(varint) [race(8) keyLen(varint) key]*
+  // The key hash is not stored: it is xxHash64(key, 0), as update makes
+  // it, and the decoder recomputes it (a v1 entry whose stored hash is
+  // not that hash is refused; no encoder wrote one). Entries in race
+  // order, ties in unsigned hash order — canonical (the retained set and
+  // its order are pure functions of the logical sample, independent of
+  // merge tree).
   def encodeWeightedBottomK(s: WeightedBottomKSketch): Array[Byte] = {
     val es = s.entriesSeq
-    val payload = 4 + 4 + es.map(e => 8 + 8 + 4 + e._3.length).sum
-    val bb = writer(TypeId.WeightedBottomK, payload, MinVersion).putInt(s.k).putInt(es.size)
-    es.foreach { case (r, h, kb) =>
-      bb.putDouble(r); bb.putLong(h); bb.putInt(kb.length); bb.put(kb)
+    var payload = varintSize(s.k) + varintSize(es.size)
+    es.foreach(e => payload += 8 + varintSize(e._3.length) + e._3.length)
+    val bb = writer(TypeId.WeightedBottomK, payload, CompactVersion)
+    val out = bb.array()
+    var at = putVarint(out, putVarint(out, bb.position(), s.k), es.size)
+    es.foreach { case (r, _, kb) =>
+      bb.putDouble(at, r)
+      at = putVarint(out, at + 8, kb.length)
+      System.arraycopy(kb, 0, out, at, kb.length)
+      at += kb.length
     }
-    bb.array()
+    out
   }
 
   def decodeWeightedBottomK(bytes: Array[Byte]): WeightedBottomKSketch =
@@ -927,39 +1057,58 @@ object SketchCodec {
 
   private def weightedBottomKBody(bytes: Array[Byte], bb: ByteBuffer, out: Decoded): Boolean = {
     val check = out == null
-    val k = bb.getInt()
-    val n = bb.getInt()
-    // an entry is race(8) keyHash(8) keyLen(4) key
-    requireEntries(n, 20, bb, "weighted bottom-k")
+    val compact = versionOf(bytes) == CompactVersion
+    val kAt = bb.position()
+    val k = if (compact) getIntVarint(bb, "weighted bottom-k") else bb.getInt()
+    val nAt = bb.position()
+    val n = if (compact) getIntVarint(bb, "weighted bottom-k") else bb.getInt()
+    // an entry is race(8) keyLen(1+) key, or v1 race(8) keyHash(8) keyLen(4) key
+    val minEntry = if (compact) 9 else 20
+    requireEntries(n, minEntry, bb, "weighted bottom-k")
     // fromEntries refuses k under 1, more than k entries, or a race that
-    // is not finite and >= 0; the encoder writes each (race, hash) once,
-    // in race order, ties in unsigned hash order
-    if (check && (versionOf(bytes) != MinVersion || k < 1 || n > k)) return false
+    // is not finite and >= 0; the encoder writes v5, minimal varints,
+    // each (race, hash) once, in race order, ties in unsigned hash order
+    if (check && (!compact || k < 1 || n > k || !minimalVarint(bytes, kAt, nAt) ||
+        !minimalVarint(bytes, nAt, bb.position()))) return false
     val es = new Array[(Double, Long, Array[Byte])](if (check) 0 else n)
     var prevR = 0.0
-    var prevH = 0L
+    var prevAt = 0
+    var prevLen = 0
     var i = 0
     while (i < n) {
       val r = bb.getDouble()
-      val h = bb.getLong()
-      val len = bb.getInt()
-      requireKey(len, 20L * (n - 1 - i), bb, "weighted bottom-k")
-      if (!check) es(i) = (r, h, take(bb, len))
-      else {
+      val stored = if (compact) 0L else bb.getLong()
+      val lenAt = bb.position()
+      val len = if (compact) getIntVarint(bb, "weighted bottom-k") else bb.getInt()
+      requireKey(len, minEntry.toLong * (n - 1 - i), bb, "weighted bottom-k")
+      val at = bb.position()
+      bb.position(at + len)
+      if (!check) {
+        val key = java.util.Arrays.copyOfRange(bytes, at, at + len)
+        val h = Hashing.xxHash64(key, 0L)
+        if (!compact && stored != h) fail("corrupt weighted bottom-k blob: a key hash that is not its key's")
+        es(i) = (r, h, key)
+      } else {
         val c = java.lang.Double.compare(prevR, r)
-        if (!java.lang.Double.isFinite(r) || r < 0.0 ||
-            (i > 0 && (c > 0 || (c == 0 && java.lang.Long.compareUnsigned(prevH, h) >= 0))))
+        // a tie in race is broken by the keys' hashes, computed only then
+        if (!java.lang.Double.isFinite(r) || r < 0.0 || !minimalVarint(bytes, lenAt, at) ||
+            (i > 0 && (c > 0 || (c == 0 && java.lang.Long.compareUnsigned(
+              keyHash(bytes, prevAt, prevLen), keyHash(bytes, at, len)) >= 0))))
           return false
-        bb.position(bb.position() + len)
       }
       prevR = r
-      prevH = h
+      prevAt = at
+      prevLen = len
       i += 1
     }
     if (check) return !bb.hasRemaining
     out.sketch = WeightedBottomKSketch.fromEntries(k, ArraySeq.unsafeWrapArray(es))
     true
   }
+
+  /** The key hash of a weighted sample entry whose key is `bytes(at until at + len)`. */
+  private def keyHash(bytes: Array[Byte], at: Int, len: Int): Long =
+    Hashing.xxHash64(java.util.Arrays.copyOfRange(bytes, at, at + len), 0L)
 
   // ----------------------------------------------------- Counting Bloom
   // v1: keyMode(1) hasherId(1) capacity(8) fpp(8) layout(1) body
@@ -1055,13 +1204,14 @@ object SketchCodec {
         while (i < nz) {
           val at = bb.position()
           val d = getVarint(bb)
-          idx += d
           // corrupt/truncated varint deltas must surface as the codec's
           // descriptive error, not a raw ArrayIndexOutOfBounds (the
-          // dense path validates its cell count the same way)
-          if (!(idx >= 0 && idx < config.totalBits))
-            fail(s"counting blob sparse cell index $idx outside configured " +
+          // dense path validates its cell count the same way); a varint
+          // above 2^63 reads as negative, so compare before adding
+          if (!(d >= 0 && d < config.totalBits - idx))
+            fail(s"counting blob sparse cell index $idx + $d outside configured " +
               s"${config.totalBits} cells — corrupt blob")
+          idx += d
           val cell = bb.get()
           if (!check) c(idx.toInt) = cell
           // minimal varints, strictly ascending cells, no zero count

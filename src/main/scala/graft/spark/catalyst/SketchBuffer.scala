@@ -16,6 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
 final class SketchBuffer[S <: AnyRef] private[catalyst] (
     private[catalyst] var bytes: Array[Byte],
     private[catalyst] var state: S) {
+  /** `bytes` has been found canonical: it passes without a second check. */
+  private[catalyst] var canonical: Boolean = false
   def isEmpty: Boolean = bytes == null && state == null
 }
 
@@ -91,15 +93,22 @@ abstract class SketchAggBase[S <: AnyRef] extends TypedImperativeAggregate[Sketc
       b
     }
 
+  /** Whether `b` holds a canonical blob; the verdict is kept with the
+    * blob, so a blob is checked once however often it is serialized. */
+  private def passes(b: SketchBuffer[S]): Boolean = b.bytes != null && {
+    if (!b.canonical) b.canonical = canonical(b.bytes)
+    b.canonical
+  }
+
   override def serialize(b: SketchBuffer[S]): Array[Byte] =
-    if (b.bytes != null && canonical(b.bytes)) b.bytes else encode(sketch(b))
+    if (passes(b)) b.bytes else encode(sketch(b))
 
   override def eval(b: SketchBuffer[S]): Any = serialize(b)
 
   /** `b`, its held blob checked now: passed when canonical, else decoded,
     * so a damaged blob fails here, typed, instead of at a later write. */
   final def checked(b: SketchBuffer[S]): SketchBuffer[S] = {
-    if (b.bytes != null && !canonical(b.bytes)) sketch(b)
+    if (b.bytes != null && !passes(b)) sketch(b)
     b
   }
 

@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Byte sizes of the windowed streaming state's sketch columns — the
-  * round-5 sparse-Bloom-codec evidence. The state schema
+  * evidence for the sparse Bloom and the compact HLL, t-digest and
+  * weighted-sample layouts. The state schema
   * (StreamingSketch.windowedSketches) carries one capacity-100k
   * p=0.001 Bloom filter per (window, tool) group; dense, that is
   * ~176 KiB per state row REGARDLESS of fill, shipped through every
@@ -21,9 +22,11 @@ import org.apache.spark.sql.functions._
 object StateSizeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    // sized like graft.tools.CheckQuery: SPARK_GRAFT_CPUS, else every core
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .appName("graft-state-size-bench")
       .getOrCreate()

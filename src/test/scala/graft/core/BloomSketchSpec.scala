@@ -322,6 +322,8 @@ class BloomSketchSpec extends AnyFunSuite {
     // dense); Bloom sparse (round 5) is v4 (NOT v3: the round-3/4
     // reader accepts v3 globally but has no Bloom sparse branch, so a
     // v3 sparse Bloom would misparse there instead of failing fast).
+    // The compact HLL sparse, t-digest and weighted-sample layouts are v5,
+    // above every earlier reader's max of 4.
     def versionByte(b: Array[Byte]): Byte = b(5)
     // a lightly-filled Bloom now encodes sparse = v4; a heavily-filled
     // one keeps the byte-identical dense v2 layout (SparseCodecSpec
@@ -331,12 +333,12 @@ class BloomSketchSpec extends AnyFunSuite {
     val bloomFull = KMBloomSketch(3000L, 0.001)
     (0 until 3000).foreach(i => bloomFull.insert(s"k$i"))
     assert(versionByte(SketchCodec.encodeBloom(bloomFull)) === 2)
-    // a near-full HLL encodes dense = v1; a near-empty one sparse = v2
+    // a near-full HLL encodes dense = v1; a near-empty one compact = v5
     val hllFull = HLLSketch()
     (0 until 200000).foreach(i => hllFull.updateHash(Hashing.xxHash64Long(i.toLong, 7L)))
     assert(versionByte(SketchCodec.encodeHll(hllFull)) === 1)
     val hllSmall = HLLSketch(); hllSmall.updateHash(42L)
-    assert(versionByte(SketchCodec.encodeHll(hllSmall)) === 3)
+    assert(versionByte(SketchCodec.encodeHll(hllSmall)) === 5)
     val cmsFull = CMSSketch(0.01, 0.01)
     (0 until 20000).foreach(i => cmsFull.updateHash(Hashing.xxHash64Long(i.toLong, 7L)))
     assert(versionByte(SketchCodec.encodeCms(cmsFull)) === 1)
@@ -345,7 +347,9 @@ class BloomSketchSpec extends AnyFunSuite {
     val theta = ThetaSketch(); theta.updateHash(42L)
     assert(versionByte(SketchCodec.encodeTheta(theta)) === 1)
     val td = TDigestSketch(); td.update(1.0)
-    assert(versionByte(SketchCodec.encodeTDigest(td)) === 1)
+    assert(versionByte(SketchCodec.encodeTDigest(td)) === 5)
+    val wbk = WeightedBottomKSketch(16); wbk.update(Hashing.utf8("a"), 1.0)
+    assert(versionByte(SketchCodec.encodeWeightedBottomK(wbk)) === 5)
     val kll = KLLSketch(); kll.update(1.0)
     assert(versionByte(SketchCodec.encodeKll(kll)) === 1)
     val bk = BottomKSketch(16); bk.update(Hashing.utf8("a"))

@@ -12,8 +12,8 @@ import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Damaged-blob fuzz over every codec type and version, dense and
-  * sparse: random valid blobs (current layouts and the legacy versions
-  * that still decode), then truncated, bit-flipped, overwritten,
+  * sparse: random valid blobs (current layouts, and the legacy layouts
+  * and versions that still decode), then truncated, bit-flipped, overwritten,
   * length-inflated or extended. Every outcome is typed: the blob
   * decodes, or decoding fails with IllegalArgumentException. A blob
   * that decodes is taken for canonical exactly when it re-encodes to
@@ -49,6 +49,9 @@ class CodecFuzzSpec extends AnyFunSuite {
   /** Current layout, or one of the older versions that still decode. */
   private def versions(b: Array[Byte], legacy: Int*): Gen[Array[Byte]] =
     Gen.frequency(3 -> Gen.const(b), 1 -> Gen.oneOf(legacy).map(stamped(b, _)))
+  /** Current layout, or the older layout `old` under one of its versions. */
+  private def layouts(b: Array[Byte], old: Array[Byte], legacy: Int*): Gen[Array[Byte]] =
+    Gen.frequency(3 -> Gen.const(b), 1 -> Gen.oneOf(legacy).map(stamped(old, _)))
 
   private val bloom: Gen[Array[Byte]] = for {
     cap <- Gen.choose(20L, 1500L); fpp <- Gen.oneOf(0.1, 0.01, 0.001)
@@ -63,8 +66,9 @@ class CodecFuzzSpec extends AnyFunSuite {
 
   private val hll: Gen[Array[Byte]] = for {
     p <- Gen.choose(4, 12); ks <- keys(2000)
-    b = { val s = HLLSketch(p); ks.foreach(s.update); encodeHll(s) }
-    out <- versions(b, 2)
+    s = { val s = HLLSketch(p); ks.foreach(s.update); s }
+    b = encodeHll(s)
+    out <- if (b(5) == 5) layouts(b, GoldenBlobs.hllV3Sparse(s), 2, 3) else versions(b, 2)
   } yield out
 
   private val cms: Gen[Array[Byte]] = for {
@@ -74,9 +78,15 @@ class CodecFuzzSpec extends AnyFunSuite {
   } yield out
 
   private val tdigest: Gen[Array[Byte]] = for {
-    c <- Gen.choose(20.0, 200.0); vs <- values(600)
-    b = { val s = TDigestSketch(c); vs.foreach(s.update); encodeTDigest(s) }
-    out <- versions(b, 2, 3, 4)
+    c <- Gen.choose(20.0, 200.0); vs <- values(600); fractional <- Gen.prob(0.1)
+    s = {
+      val s = TDigestSketch(c); vs.foreach(s.update)
+      // a weight no update or merge makes: the digest keeps the v1 layout
+      if (!fractional) s
+      else { val (m, w) = s.centroids; TDigestSketch.fromCentroids(c, m, w.map(_ + 0.25)) }
+    }
+    b = encodeTDigest(s)
+    out <- layouts(b, GoldenBlobs.tdigestV1(s), 1, 2, 3, 4)
   } yield out
 
   private val kll: Gen[Array[Byte]] = for {
@@ -105,11 +115,9 @@ class CodecFuzzSpec extends AnyFunSuite {
 
   private val weightedBottomK: Gen[Array[Byte]] = for {
     k <- Gen.choose(1, 32); ks <- Gen.listOf(Gen.zip(key, Gen.choose(0.01, 50.0)))
-    b = {
-      val s = WeightedBottomKSketch(k); ks.take(100).foreach { case (kb, w) => s.update(kb, w) }
-      encodeWeightedBottomK(s)
-    }
-    out <- versions(b, 2, 3, 4)
+    s = { val s = WeightedBottomKSketch(k); ks.take(100).foreach { case (kb, w) => s.update(kb, w) }; s }
+    b = encodeWeightedBottomK(s)
+    out <- layouts(b, GoldenBlobs.wbkV1(s), 1, 2, 3, 4)
   } yield out
 
   private val countingBloom: Gen[Array[Byte]] = for {

@@ -63,8 +63,41 @@ class GoldenBlobSpec extends AnyFunSuite {
     assert(out.indices.forall(i => i == 7 || out(i) == dense(i)))
     // an HLL aggregate never passes a blob of another type through
     val hll = HllSketchAgg(keys, 8)
-    val sparse = file("hll_v3_sparse")
+    val sparse = file("hll_v5_sparse")
     assert(hll.serialize(hll.deserialize(sparse)) eq sparse)
     intercept[IllegalArgumentException](hll.serialize(hll.deserialize(file("cms_v3_sparse"))))
+  }
+
+  test("a merge buffer holding a legacy HLL, t-digest or weighted sample emits what a fresh build writes") {
+    // the path a state store written by an older build takes on its first write
+    val fresh = Seq(
+      Seq("hll_v1_dense", "hll_v2_dense") -> SketchCodec.encodeHll(hll(200)),
+      Seq("hll_v3_sparse", "hll_v2_sparse", "hll_v1_dense_of_sparse") -> SketchCodec.encodeHll(hll(10)),
+      Seq("tdigest_v1", "tdigest_v2") -> SketchCodec.encodeTDigest(tdigest),
+      Seq("wbk_v1", "wbk_v2") -> SketchCodec.encodeWeightedBottomK(wbk))
+    for ((names, want) <- fresh; name <- names) {
+      assert(want(5) == 5, s"$name: a fresh build does not write the compact layout")
+      assert(passed(file(name)).sameElements(want), s"$name: a merge buffer did not emit the fresh v5 bytes")
+      val folded = merge.update(merge.createAggregationBuffer(), InternalRow(file(name)))
+      assert(merge.eval(merge.checked(folded)).asInstanceOf[Array[Byte]].sameElements(want), name)
+    }
+  }
+
+  test("a v1 weighted-sample entry whose stored hash is not its key's hash is refused, typed") {
+    val b = file("wbk_v1")
+    SketchCodec.decodeWeightedBottomK(b)
+    // header(6) k(4) n(4), then the first entry's race(8) and key hash(8)
+    val bad = b.clone()
+    bad(6 + 8 + 8) = (bad(6 + 8 + 8) ^ 1).toByte
+    val e = intercept[IllegalArgumentException](SketchCodec.decodeWeightedBottomK(bad))
+    assert(e.getMessage.contains("key hash"), e.getMessage)
+    assert(!SketchCodec.isCanonical(bad))
+    intercept[IllegalArgumentException](passed(bad))
+  }
+
+  test("a t-digest with a fractional weight keeps the v1 layout and passes through") {
+    val b = file("tdigest_v1_fractional")
+    assert(b(5) == 1 && SketchCodec.isCanonical(b) && passed(b).eq(b))
+    assert(SketchCodec.decodeTDigest(b).count == 4.5)
   }
 }

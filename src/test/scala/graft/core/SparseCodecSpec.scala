@@ -35,7 +35,7 @@ class SparseCodecSpec extends AnyFunSuite {
     for (n <- Seq(1, 10, 100, 1000)) {
       val s = hllOf(0 until n)
       val blob = SketchCodec.encodeHll(s)
-      assert(blob(5) === 3, s"n=$n should encode sparse")
+      assert(blob(5) === 5, s"n=$n should encode compact")
       val back = SketchCodec.decodeHll(blob)
       assert(back === s, s"n=$n round-trip")
       assert(back.estimate === s.estimate)
@@ -105,7 +105,7 @@ class SparseCodecSpec extends AnyFunSuite {
     // sparse blob is always strictly smaller than the dense layout would be
     for (n <- Seq(1, 50, 500, 3000)) {
       val blob = SketchCodec.encodeHll(hllOf(0 until n))
-      if (blob(5) == 3) assert(blob.length < 6 + 4 + (1 << HLLSketch.DefaultP))
+      if (blob(5) == 5) assert(blob.length < 6 + 4 + (1 << HLLSketch.DefaultP))
     }
     // CMS at production width (ε=0.001 ⇒ w=2719, d=5 ⇒ ~109 KB dense):
     // a 100-distinct group must encode at least 10× smaller
@@ -187,8 +187,9 @@ class SparseCodecSpec extends AnyFunSuite {
     // chosen when strictly smaller than dense), so restamping a v3
     // sparse blob as v2 must still decode as sparse
     val sp = hllOf(0 until 10)
-    val v2sparse = SketchCodec.encodeHll(sp).clone()
+    val v2sparse = GoldenBlobs.hllV3Sparse(sp)
     assert(v2sparse(5) === 3)
+    assert(SketchCodec.decodeHll(v2sparse) === sp, "sparse-layout v3 HLL")
     v2sparse(5) = 2
     assert(SketchCodec.decodeHll(v2sparse) === sp, "sparse-layout v2 HLL")
     val cs = cmsOf(0 until 10)
@@ -419,7 +420,7 @@ class SparseCodecSpec extends AnyFunSuite {
     // p sits right after the 6-byte header; sparse and dense (v1) bodies
     val blobs = Seq(SketchCodec.encodeHll(hllOf(0 until 50)),
       SketchCodec.encodeHll(hllOf(0 until 200000)))
-    assert(blobs.map(_(5).toInt) === Seq(3, 1))
+    assert(blobs.map(_(5).toInt) === Seq(5, 1))
     for (blob <- blobs; p <- Seq(31, 30, 19, 3, 0, -1, Int.MinValue)) {
       val e = intercept[IllegalArgumentException](SketchCodec.decodeHll(le(blob, 6, p, 4)))
       assert(e.getMessage.contains("precision"), s"p=$p: ${e.getMessage}")
@@ -462,10 +463,17 @@ class SparseCodecSpec extends AnyFunSuite {
     // t-digest: compression, min, max (8 each) after the header, then n(4)
     val td = TDigestSketch()
     (1 to 500).foreach(i => td.update(i * 0.37))
-    val tdBlob = SketchCodec.encodeTDigest(td)
+    val tdBlob = GoldenBlobs.tdigestV1(td)
     val tdN = (tdBlob.length - 34) / 16
     assert(SketchCodec.decodeTDigest(le(tdBlob, 30, tdN, 4)).count === td.count)
     counts(tdN).foreach(n => rejects(SketchCodec.decodeTDigest, le(tdBlob, 30, n, 4), s"t-digest n=$n"))
+    // v5: the count is a varint at the same offset, a centroid 9+ bytes
+    val compact = SketchCodec.encodeTDigest(td)
+    val cN = SketchCodec.decodeTDigest(compact).centroids._1.length
+    assert(compact(5) === 5)
+    counts((compact.length - 31) / 9).foreach(n =>
+      rejects(SketchCodec.decodeTDigest, varintAt(compact, 30, n), s"compact t-digest n=$n"))
+    assert(SketchCodec.decodeTDigest(varintAt(compact, 30, cN)).count === td.count)
     // theta: k(4) thetaU(8) after the header, then count(4)
     val theta = ThetaSketch()
     (0 until 300).foreach(i => theta.updateHash(Hashing.xxHash64Long(i.toLong, 7L)))
@@ -508,7 +516,7 @@ class SparseCodecSpec extends AnyFunSuite {
       // k(4), then n(4); entry hash(8) keyLen(4) key
       ("bottom-k", SketchCodec.encodeBottomK(bk), b => SketchCodec.decodeBottomK(b), 10, 12, 22, 0),
       // k(4), then n(4); entry race(8) keyHash(8) keyLen(4) key
-      ("weighted bottom-k", SketchCodec.encodeWeightedBottomK(wbk),
+      ("weighted bottom-k v1", GoldenBlobs.wbkV1(wbk),
         b => SketchCodec.decodeWeightedBottomK(b), 10, 20, 30, 0))
     for ((what, blob, decode, countAt, minEntry, lenAt, afterKey) <- cases) {
       val n = ByteBuffer.wrap(blob, countAt, 4).order(ByteOrder.LITTLE_ENDIAN).getInt()
@@ -520,6 +528,64 @@ class SparseCodecSpec extends AnyFunSuite {
       val keyFits = blob.length - lenAt - 4 - afterKey - minEntry.toLong * (n - 1)
       inflated(keyFits).foreach(l =>
         rejects(decode, le(blob, lenAt, l, 4), s"$what first key length=$l"))
+    }
+    // v5: varint k(1) and count(1), then race(8) keyLen(varint) key
+    val compact = SketchCodec.encodeWeightedBottomK(wbk)
+    assert(compact(5) === 5 && compact(6) === 16 && compact(7) === 16)
+    val decode = (b: Array[Byte]) => SketchCodec.decodeWeightedBottomK(b)
+    (inflated((compact.length - 8) / 9) :+ 17L).foreach(c =>
+      rejects(decode, varintAt(compact, 7, c), s"compact weighted bottom-k count=$c"))
+    inflated(compact.length - 17 - 9L * 15).foreach(l =>
+      rejects(decode, varintAt(compact, 16, l), s"compact weighted bottom-k first key length=$l"))
+  }
+
+  /** `blob` with the varint at `at` replaced by `v`'s minimal varint. */
+  private def varintAt(blob: Array[Byte], at: Int, v: Long): Array[Byte] =
+    blob.take(at) ++ varint(v) ++ blob.drop(varintEnd(blob, at))
+  private def varint(v: Long): Array[Byte] = {
+    val out = Array.newBuilder[Byte]
+    var x = v
+    while ((x & ~0x7fL) != 0L) { out += ((x & 0x7f) | 0x80).toByte; x >>>= 7 }
+    (out += x.toByte).result()
+  }
+  /** The index after the varint at `at`. */
+  private def varintEnd(blob: Array[Byte], at: Int): Int = {
+    var i = at
+    while ((blob(i) & 0x80) != 0) i += 1
+    i + 1
+  }
+  /** `v` as an 11-byte varint: past 64 bits, though its value is `v`. */
+  private def overlong(v: Long): Array[Byte] =
+    (0 until 10).map(i => (((v >>> (7 * i)) & 0x7f) | 0x80).toByte).toArray :+ 0.toByte
+
+  test("over-long varints in the compact HLL, t-digest and weighted sample layouts fail typed") {
+    val hll = SketchCodec.encodeHll(hllOf(0 until 50))
+    val td = TDigestSketch()
+    (1 to 150).foreach(i => td.update(i.toDouble))
+    val tdBlob = SketchCodec.encodeTDigest(td)
+    val wbk = WeightedBottomKSketch(16)
+    (0 until 40).foreach(i => wbk.update(Hashing.utf8(s"key-$i"), 1.0 + i))
+    val wbkBlob = SketchCodec.encodeWeightedBottomK(wbk)
+    assert(Seq(hll, tdBlob, wbkBlob).forall(_(5) == 5))
+    // each layout: its decoder and the offset of one varint field
+    val cases = Seq[(String, Array[Byte], Array[Byte] => Any, Int)](
+      ("HLL count", hll, b => SketchCodec.decodeHll(b), 10),
+      ("HLL first register", hll, b => SketchCodec.decodeHll(b), 11),
+      ("t-digest count", tdBlob, b => SketchCodec.decodeTDigest(b), 30),
+      ("t-digest first weight", tdBlob, b => SketchCodec.decodeTDigest(b), varintEnd(tdBlob, 30) + 8),
+      ("weighted bottom-k k", wbkBlob, b => SketchCodec.decodeWeightedBottomK(b), 6),
+      ("weighted bottom-k first key length", wbkBlob, b => SketchCodec.decodeWeightedBottomK(b), 16))
+    for ((what, blob, decode, at) <- cases) {
+      decode(blob)
+      val end = varintEnd(blob, at)
+      val value = blob.slice(at, end).zipWithIndex.map { case (b, i) => (b & 0x7fL) << (7 * i) }.sum
+      // eleven bytes, and ten whose last carries more than bit 63
+      for (bad <- Seq(overlong(value), overlong(value).take(9) :+ 2.toByte)) {
+        val b = blob.take(at) ++ bad ++ blob.drop(end)
+        val e = intercept[IllegalArgumentException](decode(b))
+        assert(e.getMessage.contains("corrupt"), s"$what: ${e.getMessage}")
+        assert(!SketchCodec.isCanonical(b), what)
+      }
     }
   }
 
@@ -602,12 +668,46 @@ class SparseCodecSpec extends AnyFunSuite {
     val c = cmsOf(0 until 50)
     assert(SketchCodec.describe(SketchCodec.encodeCms(c)).contains("CMSSketch"))
     // out-of-order sparse entries = corrupt
-    val blob = SketchCodec.encodeHll(h)
+    val blob = GoldenBlobs.hllV3Sparse(h)
     // payload starts at 6: p(4) count(4) packed... — swap first two entries
     val bad = blob.clone()
     val t = bad.slice(14, 18)
     Array.copy(bad, 18, bad, 14, 4)
     Array.copy(t, 0, bad, 18, 4)
     intercept[IllegalArgumentException](SketchCodec.decodeHll(bad))
+  }
+
+  test("compact HLL entries that do not ascend, or pass the last register, fail typed") {
+    // p = 4: 16 registers; count(varint) then (gap << 6 | rank) varints
+    def blob(entries: Long*): Array[Byte] =
+      Array[Byte]('G', 'S', 'K', '1', SketchCodec.TypeId.Hll, 5) ++
+        le(new Array[Byte](4), 0, 4, 4) ++ varint(entries.size) ++ entries.flatMap(varint)
+    val ok = blob(1L << 6 | 3, 2L << 6 | 1)
+    assert(SketchCodec.decodeHll(ok).registers.take(3).toSeq === Seq[Byte](3, 0, 1))
+    assert(SketchCodec.isCanonical(ok))
+    for (bad <- Seq(blob(1L << 6 | 3, 0L << 6 | 1), blob(17L << 6 | 1), blob(8L << 6 | 1, 9L << 6 | 1),
+        blob(-1L))) {
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeHll(bad))
+      assert(e.getMessage.contains("corrupt"), e.getMessage)
+      assert(!SketchCodec.isCanonical(bad))
+    }
+  }
+
+  test("word-RLE zero runs and literal counts past the last word fail typed") {
+    // the golden RLE filter's header (34 bytes), then one group whose zero
+    // run is 2^64 - 1 (FF x9 01): with one literal word it used to index
+    // word -1, and with none it decoded to a filter
+    val rle = SketchCodec.encodeBloom({
+      val s = KMBloomSketch(200L, 0.01); (0 until 200).foreach(i => s.insert(s"key-$i".getBytes("UTF-8"))); s
+    })
+    assert(rle(5) === 4 && rle(33) === 1)
+    val run = Array.fill[Byte](9)(-1) :+ 1.toByte
+    for (body <- Seq(run ++ Array[Byte](1) ++ new Array[Byte](8), run :+ 0.toByte,
+        Array[Byte](0) ++ varint(1L << 20) ++ new Array[Byte](8))) {
+      val bad = rle.take(34) ++ body
+      val e = intercept[IllegalArgumentException](SketchCodec.decodeBloom(bad))
+      assert(e.getMessage.contains("corrupt"), e.getMessage)
+      assert(!SketchCodec.isCanonical(bad))
+    }
   }
 }

@@ -7,6 +7,9 @@ import graft.core._
 import graft.spark.catalyst._
 import graft.streaming.StreamingSketch
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -146,5 +149,26 @@ class SketchBufferSpec extends AnyFunSuite {
       assert(SketchCodec.decodeKll(r.getAs[Array[Byte]]("kll_turns")).count == n)
       assert(SketchCodec.decodeMg(r.getAs[Array[Byte]]("mg_convs")).processedCount == n)
     }
+  }
+
+  test("a held blob is checked once: checked, then serialize, walk it once") {
+    var checks = 0
+    val agg = new SketchMergeAgg(BoundReference(0, BinaryType, nullable = true)) {
+      override protected def canonical(bytes: Array[Byte]): Boolean = { checks += 1; super.canonical(bytes) }
+    }
+    def fold(blob: Array[Byte]) =
+      agg.checked(agg.update(agg.createAggregationBuffer(), InternalRow(blob)))
+    val h = HLLSketch()
+    (0 until 100).foreach(i => h.update(s"k$i"))
+    val blob = SketchCodec.encodeHll(h)
+    val held = fold(blob)
+    assert(checks == 1)
+    assert((agg.serialize(held) eq blob) && (agg.eval(held).asInstanceOf[AnyRef] eq blob))
+    assert(checks == 1, "serialize checked a blob that checked had passed")
+    // a blob that is not canonical is checked once, decoded, then re-encoded
+    val legacy = GoldenBlobs.hllV3Sparse(h)
+    val decoded = fold(legacy)
+    assert(checks == 2)
+    assert(agg.serialize(decoded).sameElements(blob) && checks == 2)
   }
 }

@@ -809,8 +809,9 @@ object SparkEntry {
     // HIGH-GROUP-CARDINALITY sketch table — the 100 TB shape where the
     // shuffle cost is per-GROUP blob size, not input size: one HLL + one
     // CMS per conversation (thousands of tiny groups, vs 3 roles in q07).
-    // The canonical sparse codec (SketchCodec v3, SparseCodecSpec) must
-    // kick in for every group: a 30-turn conversation encodes its HLL in
+    // The canonical sparse codec (SketchCodec: HLL compact v5, CMS sparse
+    // v3; SparseCodecSpec) must kick in for every group: a 30-turn
+    // conversation encodes its HLL in
     // ~a hundred bytes instead of the 16 KiB dense register file, and its
     // tool-frequency CMS in ~1 KiB instead of the ~109 KiB dense grid —
     // this query gates that every blob IS sparse (version byte, checked
@@ -827,7 +828,9 @@ object SparkEntry {
       val cmsDense = 23L + 8L * math.ceil(math.log(1.0 / cmsDelta)).toLong *
         math.ceil(math.E / cmsEps).toLong
       val estUdf = udf((b: Array[Byte]) => math.round(SketchCodec.decodeHll(b).estimate))
-      val sparseV3 = lit(Array[Byte](3))
+      // the version byte of a sparse blob: HLL compact v5, CMS sparse v3
+      val hllSparse = lit(Array[Byte](5))
+      val cmsSparse = lit(Array[Byte](3))
       val groups = t.groupBy(col("conv_id"))
         .agg(hllAggNative(col("turn_idx")).as("hsk"),
           cmsAggNative(cmsEps, cmsDelta)(col("tool")).as("csk"),
@@ -837,8 +840,8 @@ object SparkEntry {
         (coalesce(sum(when(abs(estUdf(col("hsk")) - col("exact"))
           <= lit(rse) * col("exact") + 1, 0L).otherwise(1L)), lit(0L)) === 0)
           .as("all_within_bound"),
-        (coalesce(sum(when(substring(col("hsk"), 6, 1) === sparseV3 &&
-          substring(col("csk"), 6, 1) === sparseV3, 0L).otherwise(1L)), lit(0L)) === 0)
+        (coalesce(sum(when(substring(col("hsk"), 6, 1) === hllSparse &&
+          substring(col("csk"), 6, 1) === cmsSparse, 0L).otherwise(1L)), lit(0L)) === 0)
           .as("all_blobs_sparse"),
         (sum(length(col("hsk"))) * 10 < count(lit(1)) * lit(hllDense) &&
           sum(length(col("csk"))) * 10 < count(lit(1)) * lit(cmsDense))
